@@ -30,7 +30,7 @@ class GKSketch:
     """Tuples kept value-sorted in parallel lists ``vs`` / ``gs`` /
     ``ds``. ``n`` is the total insert count."""
 
-    __slots__ = ("eps", "vs", "gs", "ds", "n", "_since_compress")
+    __slots__ = ("eps", "vs", "gs", "ds", "n")
 
     def __init__(self, eps: float = 0.01, vs=None, gs=None, ds=None, n: int = 0):
         if not 0.0 < eps < 0.5:
@@ -40,7 +40,6 @@ class GKSketch:
         self.gs = [int(g) for g in gs] if gs is not None else []
         self.ds = [int(d) for d in ds] if ds is not None else []
         self.n = int(n)
-        self._since_compress = 0
 
     def insert(self, v: float) -> None:
         import bisect
@@ -55,10 +54,11 @@ class GKSketch:
         self.gs.insert(i, 1)
         self.ds.insert(i, delta)
         self.n += 1
-        self._since_compress += 1
-        if self._since_compress >= int(1.0 / (2.0 * self.eps)):
+        # the schedule is keyed on n, not on inserts since construction,
+        # so a sketch restored from (vs, gs, ds, n) compresses exactly
+        # where the uninterrupted one would
+        if self.n % int(1.0 / (2.0 * self.eps)) == 0:
             self._compress()
-            self._since_compress = 0
 
     def _compress(self) -> None:
         cap = int(math.floor(2.0 * self.eps * self.n))

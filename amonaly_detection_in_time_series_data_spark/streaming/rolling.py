@@ -2,23 +2,54 @@
 the batch operators are naturally incremental per key, so the engine
 exposes streaming variants).
 
-- :func:`replay_events_stream` — replays an events parquet directory as a
-  file stream (the standard backfill/replay harness; in production the
-  source would be Kafka/files landing continuously).
-- :func:`streaming_windowed_stats` — watermarked sliding-window mean/std
-  per user: the streaming analogue of the F3 rolling aggregates, with
-  late data beyond the watermark dropped (watermark-discard semantics —
-  the batch reference has no late-data concept).
-- :func:`streaming_zscore_flags` — stateful per-user anomaly flags via
-  ``applyInPandasWithState``: keeps the last N values per user and emits
-  a z-score flag per event — the exact rolling-zscore contract, online.
+Sources and native aggregates: :func:`replay_table_stream` /
+:func:`replay_events_stream` replay a testdata table as a file stream
+(the backfill/replay harness; in production the source would be
+Kafka/files landing continuously); :func:`streaming_windowed_stats`,
+:func:`sessionized_stats`, :func:`streaming_hist`,
+:func:`streaming_dedup` and :func:`streaming_enrich` are plain
+Structured Streaming operators with Spark-managed state.
+
+Stateful twins: every ``streaming_*`` function whose batch operator is a
+per-key recursion (z-score, Page-Hinkley, EWMA, Hampel, trend-OLS,
+Kalman, episodes, ADWIN, GK quantiles, throttle, KMV, theta, Croston,
+transitions, attribution, funnel, journey paths, SAX — and
+``streaming.sequences.streaming_sequences``) runs on ONE runner,
+:func:`_keyed_fold`. The runner owns all of the
+``applyInPandasWithState`` plumbing: the 2-hour watermark, the
+``groupBy`` on the key, the idle-key timeout (a timed-out key's state is
+removed and nothing is emitted), joining ALL of a key's Arrow chunks in
+a micro-batch and sorting them ONCE with a stable sort on the twin's
+order columns (a key whose rows span several chunks, e.g. past
+``spark.sql.execution.arrow.maxRecordsPerBatch`` in a backfill, is still
+folded in order), the state read/write, the timeout re-arm and the
+output frame. A twin holds only its parameter checks and a fold::
+
+    fold(state, rows) -> (state, out_rows)
+
+- ``state`` is the twin's state tuple as the state store hands it back
+  (arrays as lists), or the twin's ``init`` for a key with no state;
+- ``rows`` iterates once over the micro-batch's rows of the twin's
+  input columns as plain tuples, in order, with SQL NULL as ``None`` —
+  never ``NaN``;
+- each out row holds the output columns AFTER the key columns, which
+  the runner prepends.
+
+A fold is a pure function of (state, rows), so folding any in-order
+split of a series through a state round trip equals one pass (pinned
+for every fold by ``tests/test_streaming_folds.py``); the replay-parity
+tests in ``tests/slow/test_streaming.py`` pin each twin against its
+batch operator.
 """
 
 from __future__ import annotations
 
+import math
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Iterable, Sequence
+from functools import partial
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -146,6 +177,139 @@ def sessionized_stats(
     )
 
 
+Fold = Callable[[tuple, Iterable[tuple]], tuple[tuple, list]]
+
+
+def _fold_handler(
+    fold: Fold,
+    *,
+    cols: Sequence[str],
+    order: Sequence[str],
+    init: tuple,
+    out_cols: Sequence[str],
+    timeout_minutes: int | None,
+):
+    """The per-key ``(key, pdf_iter, state)`` function that
+    :func:`_keyed_fold` hands to ``applyInPandasWithState``."""
+    cols, order, out_cols = list(cols), list(order), list(out_cols)
+
+    def handle(key, pdf_iter, state):
+        # ProcessingTimeTimeout fired for an idle key: evict its state
+        # and emit nothing. Without this, the handler would run on the
+        # empty iterator, re-save the state and re-arm the timeout, so
+        # per-key state would never be evicted (unbounded with key
+        # cardinality).
+        if state.hasTimedOut:
+            state.remove()
+            return
+        # one stable sort over ALL of the key's chunks: sorting each
+        # Arrow chunk on its own folds a key that spans chunks out of order
+        pdf = pd.concat(list(pdf_iter), ignore_index=True)
+        if order:
+            pdf = pdf.sort_values(order, kind="stable")
+        pdf = pdf[cols]
+        # Spark hands a NULL double to pandas as NaN; folds see None
+        rows = pdf.astype(object).where(pdf.notna(), None)
+        new_state, out = fold(
+            state.get if state.exists else init,
+            rows.itertuples(index=False, name=None),
+        )
+        state.update(new_state)
+        if timeout_minutes is not None:
+            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
+        yield pd.DataFrame([(*key, *r) for r in out], columns=out_cols)
+
+    return handle
+
+
+def _keyed_fold(
+    events: DataFrame,
+    fold: Fold,
+    *,
+    cols: Sequence[str],
+    init: tuple,
+    state_schema: str,
+    out_schema: str,
+    timeout_minutes: int | None,
+    keys: Sequence[str] = ("user_id",),
+    order: Sequence[str] = ("ts", "event_id"),
+    ts_col: str = "ts",
+) -> DataFrame:
+    """Run ``fold`` per key over a stream (the module docstring has the
+    fold contract). ``cols`` are the input columns of each row tuple,
+    ``order`` the sort columns (``()`` leaves rows unsorted), and
+    ``out_schema`` the full output DDL, key columns first.
+    ``timeout_minutes=None`` keeps idle keys' state forever."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.types import StructType
+
+    out_type = StructType.fromDDL(out_schema)
+    handle = _fold_handler(
+        fold,
+        cols=cols,
+        order=order,
+        init=init,
+        out_cols=out_type.fieldNames(),
+        timeout_minutes=timeout_minutes,
+    )
+    return (
+        events.select(*dict.fromkeys([*keys, ts_col, *order, *cols]))
+        .withWatermark(ts_col, "2 hours")
+        .groupBy(*keys)
+        .applyInPandasWithState(
+            handle,
+            outputStructType=out_type,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=(
+                GroupStateTimeout.ProcessingTimeTimeout
+                if timeout_minutes is not None
+                else GroupStateTimeout.NoTimeout
+            ),
+        )
+    )
+
+
+def _ddl(df: DataFrame, cols: Sequence[str]) -> str:
+    """DDL of ``cols`` as typed in ``df`` (key/order columns of twins
+    whose keys are caller-chosen)."""
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in df.select(*cols).schema.fields
+    )
+
+
+def _mean_std(vals: Sequence) -> tuple[float, float] | None:
+    """Mean and sample std of the non-null ``vals`` (the batch
+    ``avg``/``stddev_samp`` pair); None below two values."""
+    xs = [x for x in vals if x is not None]
+    n = len(xs)
+    if n < 2:
+        return None
+    mu = sum(xs) / n
+    return mu, math.sqrt(sum((x - mu) ** 2 for x in xs) / (n - 1))
+
+
+def _us(ts) -> int:
+    """Epoch microseconds of a timestamp value."""
+    return int(pd.Timestamp(ts).value // 1000)
+
+
+def _zscore_fold(state, rows, *, window_rows, threshold):
+    buf = list(state[0])
+    out = []
+    for event_id, ts, v in rows:
+        ms = _mean_std(buf[-window_rows:])
+        z = None
+        if ms is not None and v is not None and ms[1] > 0:
+            z = (v - ms[0]) / ms[1]
+        out.append((event_id, ts, v, z, int(z is not None and abs(z) > threshold)))
+        # a NULL keeps its row position in the window, like the batch
+        # rowsBetween frame, and is skipped by the statistics
+        buf.append(v)
+    return (buf[-window_rows:],), out
+
+
 def streaming_zscore_flags(
     events: DataFrame,
     window_rows: int = 24,
@@ -157,82 +321,47 @@ def streaming_zscore_flags(
     State = the last ``window_rows`` values per user (a bounded deque);
     each incoming batch is scored against the state *then* appended —
     reproducing the batch past-only frame [t-w, t-1] when events arrive
-    in order. The Arrow-batched ``applyInPandasWithState`` keeps Python
-    work vectorized per key-batch.
+    in order. A NULL value scores NULL (flag 0) and occupies its slot
+    in the deque, exactly as in the batch row frame.
     """
-    import pandas as pd  # noqa: F401 (used inside the state fn)
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "zscore double, is_anomaly int"
+    return _keyed_fold(
+        events,
+        partial(_zscore_fold, window_rows=window_rows, threshold=threshold),
+        cols=("event_id", "ts", "value"),
+        init=([],),
+        state_schema="values array<double>",
+        out_schema=(
+            "user_id bigint, event_id bigint, ts timestamp, value double, "
+            "zscore double, is_anomaly int"
+        ),
+        timeout_minutes=timeout_minutes,
     )
-    state_schema = "values array<double>"
 
-    def score(key, pdf_iter, state):
-        import math
 
-        import pandas as pd
-
-        # ProcessingTimeTimeout fired for an idle key: evict its state
-        # and emit nothing. Without this, the handler would run on the
-        # empty iterator, re-save the state and re-arm the timeout, so
-        # per-key state would never be evicted (unbounded with key
-        # cardinality).
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        buf = list(state.get[0]) if state.exists else []
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                hist = buf[-window_rows:]
-                n = len(hist)
-                if n >= 2:
-                    mu = sum(hist) / n
-                    var = sum((x - mu) ** 2 for x in hist) / (n - 1)
-                    sd = math.sqrt(var)
-                    z = (r["value"] - mu) / sd if sd > 0 else None
-                else:
-                    z = None
-                rows.append(
-                    (
-                        user_id,
-                        int(r["event_id"]),
-                        r["ts"],
-                        float(r["value"]) if r["value"] is not None else None,
-                        z,
-                        int(z is not None and abs(z) > threshold),
-                    )
-                )
-                if r["value"] is not None:
-                    buf.append(float(r["value"]))
-        state.update((buf[-window_rows:],))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "event_id", "ts", "value", "zscore", "is_anomaly"],
+def _page_hinkley_fold(state, rows, *, scale, delta_i, lam_i):
+    n, s, u, minu, d, maxd = state
+    out = []
+    for event_id, ts, value in rows:
+        m = int(round(float(value) * scale))
+        n += 1
+        s += m
+        # Python // floors toward -inf — identical to the batch
+        # side's F.floor((2S+n)/(2n)) for any sign of S
+        xbar = (2 * s + n) // (2 * n)
+        dev = m - xbar
+        u += dev - delta_i
+        d += dev + delta_i
+        if n == 1:
+            minu, maxd = u, d
+        else:
+            minu = min(minu, u)
+            maxd = max(maxd, d)
+        inc, dec = u - minu, maxd - d
+        out.append(
+            (event_id, ts, float(value), inc / scale, dec / scale,
+             int(inc > lam_i or dec > lam_i))
         )
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            score,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+    return (n, s, u, minu, d, maxd), out
 
 
 def streaming_page_hinkley(
@@ -255,86 +384,51 @@ def streaming_page_hinkley(
     Python ints are arbitrary-precision, so the running sums cannot
     overflow the state's bigint before the batch side would.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     scale = 10**unit_digits
-    delta_i = int(round(delta * scale))
-    lam_i = int(round(lam * scale))
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "ph_inc double, ph_dec double, ph_alarm int"
+    return _keyed_fold(
+        events,
+        partial(
+            _page_hinkley_fold,
+            scale=scale,
+            delta_i=int(round(delta * scale)),
+            lam_i=int(round(lam * scale)),
+        ),
+        cols=("event_id", "ts", "value"),
+        init=(0, 0, 0, 0, 0, 0),
+        state_schema=(
+            "n bigint, s bigint, u bigint, minu bigint, d bigint, maxd bigint"
+        ),
+        out_schema=(
+            "user_id bigint, event_id bigint, ts timestamp, value double, "
+            "ph_inc double, ph_dec double, ph_alarm int"
+        ),
+        timeout_minutes=timeout_minutes,
     )
-    state_schema = "n bigint, s bigint, u bigint, minu bigint, d bigint, maxd bigint"
 
-    def detect(key, pdf_iter, state):
-        import pandas as pd
 
-        # idle-key timeout: evict state, emit nothing (see score()).
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        n, s, u, minu, d, maxd = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0)
+def _ewma_fold(state, rows, *, window_rows, alpha, threshold):
+    buf = list(state[0])
+    out = []
+    for event_id, ts, v in rows:
+        hist = buf[-window_rows:]
+        num = den = 0.0
+        for j, x in enumerate(reversed(hist), start=1):
+            if x is not None:
+                wt = (1.0 - alpha) ** (j - 1)
+                num += x * wt
+                den += wt
+        ewma = num / den if den > 0 else None
+        ms = _mean_std(hist)
+        # batch contract: ewma_dev is the rstd-NORMALIZED
+        # deviation, NULL when no ewma or zero/undefined spread
+        dev = None
+        if v is not None and ewma is not None and ms is not None and ms[1] != 0.0:
+            dev = (v - ewma) / ms[1]
+        out.append(
+            (event_id, ts, v, ewma, dev, int(dev is not None and abs(dev) > threshold))
         )
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                m = int(round(float(r["value"]) * scale))
-                n += 1
-                s += m
-                # Python // floors toward -inf — identical to the batch
-                # side's F.floor((2S+n)/(2n)) for any sign of S
-                xbar = (2 * s + n) // (2 * n)
-                dev = m - xbar
-                u += dev - delta_i
-                d += dev + delta_i
-                if n == 1:
-                    minu, maxd = u, d
-                else:
-                    minu = min(minu, u)
-                    maxd = max(maxd, d)
-                inc, dec = u - minu, maxd - d
-                rows.append(
-                    (
-                        user_id,
-                        int(r["event_id"]),
-                        r["ts"],
-                        float(r["value"]),
-                        inc / scale,
-                        dec / scale,
-                        int(inc > lam_i or dec > lam_i),
-                    )
-                )
-        state.update((n, s, u, minu, d, maxd))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "user_id", "event_id", "ts", "value",
-                "ph_inc", "ph_dec", "ph_alarm",
-            ],
-        )
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            detect,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+        buf.append(v)
+    return (buf[-window_rows:],), out
 
 
 def streaming_ewma_deviation(
@@ -356,91 +450,50 @@ def streaming_ewma_deviation(
     sum accumulates most-recent-first with the same ``(1-alpha)^lag``
     literals as the batch flat-codegen form, so parity holds to float
     summation order (replay-asserted at rel 1e-6, the z-score twin's
-    contract).
+    contract). A NULL keeps its lag slot and adds no weight, as in the
+    batch ``zip_with`` fold.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "ewma double, ewma_dev double, ewma_alarm int"
+    return _keyed_fold(
+        events,
+        partial(
+            _ewma_fold, window_rows=window_rows, alpha=alpha, threshold=threshold
+        ),
+        cols=("event_id", "ts", "value"),
+        init=([],),
+        state_schema="values array<double>",
+        out_schema=(
+            "user_id bigint, event_id bigint, ts timestamp, value double, "
+            "ewma double, ewma_dev double, ewma_alarm int"
+        ),
+        timeout_minutes=timeout_minutes,
     )
-    state_schema = "values array<double>"
 
-    def score(key, pdf_iter, state):
-        import math
 
-        import pandas as pd
+def _median(sorted_vals: list) -> float:
+    m = len(sorted_vals)
+    return (sorted_vals[(m + 1) // 2 - 1] + sorted_vals[(m + 2) // 2 - 1]) / 2.0
 
-        if state.hasTimedOut:
-            state.remove()
-            return
 
-        (user_id,) = key
-        buf = list(state.get[0]) if state.exists else []
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                hist = buf[-window_rows:]
-                n = len(hist)
-                num = den = 0.0
-                for j, x in enumerate(reversed(hist), start=1):
-                    wt = (1.0 - alpha) ** (j - 1)
-                    num += x * wt
-                    den += wt
-                ewma = num / den if den > 0 else None
-                if n >= 2:
-                    mu = sum(hist) / n
-                    var = sum((x - mu) ** 2 for x in hist) / (n - 1)
-                    rstd = math.sqrt(var)
-                else:
-                    rstd = None
-                v = float(r["value"]) if r["value"] is not None else None
-                # batch contract: ewma_dev is the rstd-NORMALIZED
-                # deviation, NULL when no ewma or zero/undefined spread
-                dev = (
-                    (v - ewma) / rstd
-                    if (
-                        v is not None
-                        and ewma is not None
-                        and rstd is not None
-                        and rstd != 0.0
-                    )
-                    else None
-                )
-                alarm = int(dev is not None and abs(dev) > threshold)
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], v, ewma, dev, alarm)
-                )
-                if v is not None:
-                    buf.append(v)
-        state.update((buf[-window_rows:],))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "user_id", "event_id", "ts", "value",
-                "ewma", "ewma_dev", "ewma_alarm",
-            ],
-        )
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            score,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+def _hampel_fold(state, rows, *, window_rows, k):
+    buf = list(state[0])
+    out = []
+    for event_id, ts, v in rows:
+        hist = sorted(x for x in buf[-window_rows:] if x is not None)
+        if hist:
+            m = _median(hist)
+            mad = _median(sorted(abs(x - m) for x in hist))
+            if v is None:
+                flag = 0
+            elif mad == 0.0:
+                flag = int(v != m)
+            else:
+                flag = int(abs(v - m) > k * 1.4826 * mad)
+        else:
+            m = mad = None
+            flag = 0
+        out.append((event_id, ts, v, m, mad, flag))
+        buf.append(v)
+    return (buf[-window_rows:],), out
 
 
 def streaming_hampel_flags(
@@ -458,81 +511,60 @@ def streaming_hampel_flags(
     against the previous ``window_rows`` values' exact interpolated
     median/MAD (identical formulas to the batch operator, so replay
     parity is exact — order statistics, nothing accumulates), then
-    appended.
+    appended. A NULL keeps its slot and is left out of the median, as
+    the batch ``collect_list`` frame does.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "hampel_median double, hampel_mad double, hampel_flag int"
+    return _keyed_fold(
+        events,
+        partial(_hampel_fold, window_rows=window_rows, k=k),
+        cols=("event_id", "ts", "value"),
+        init=([],),
+        state_schema="values array<double>",
+        out_schema=(
+            "user_id bigint, event_id bigint, ts timestamp, value double, "
+            "hampel_median double, hampel_mad double, hampel_flag int"
+        ),
+        timeout_minutes=timeout_minutes,
     )
-    state_schema = "values array<double>"
 
-    def score(key, pdf_iter, state):
-        import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        def med(sorted_vals):
-            m = len(sorted_vals)
-            return (
-                sorted_vals[(m + 1) // 2 - 1] + sorted_vals[(m + 2) // 2 - 1]
-            ) / 2.0
-
-        (user_id,) = key
-        buf = list(state.get[0]) if state.exists else []
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                hist = buf[-window_rows:]
-                v = float(r["value"]) if r["value"] is not None else None
-                if hist:
-                    m = med(sorted(hist))
-                    mad = med(sorted(abs(x - m) for x in hist))
-                    if v is None:
-                        flag = 0
-                    elif mad == 0.0:
-                        flag = int(v != m)
-                    else:
-                        flag = int(abs(v - m) > k * 1.4826 * mad)
-                else:
-                    m = mad = None
-                    flag = 0
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], v, m, mad, flag)
-                )
-                if v is not None:
-                    buf.append(v)
-        state.update((buf[-window_rows:],))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "user_id", "event_id", "ts", "value",
-                "hampel_median", "hampel_mad", "hampel_flag",
-            ],
+def _trend_ols_fold(state, rows, *, scale, threshold, min_points):
+    rn, n_i, sx_i, sy_i, sxx_i, sxy_i, syy_i = state
+    out = []
+    for event_id, ts, y in rows:
+        x = rn  # 0-based row index, null y rows included
+        m = int(round(float(y) * scale)) if y is not None else None
+        # score vs the PAST fit — same IEEE expression order as
+        # the batch columns (floats from the same exact ints)
+        slope = fit = z = alarm = None
+        n = float(n_i)
+        sx, sy = float(sx_i), float(sy_i)
+        sxx, sxy, syy = float(sxx_i), float(sxy_i), float(syy_i)
+        vx = n * sxx - sx * sx
+        if n >= min_points and vx > 0:
+            b = (n * sxy - sx * sy) / vx
+            a = (sy - b * sx) / n
+            sse = max(0.0, syy - sy * sy / n - b * b * (sxx - sx * sx / n))
+            s = math.sqrt(sse / (n - 2)) if n > 2 else None
+            fit_i = a + b * float(x)
+            slope = b / scale
+            fit = fit_i / scale
+            if m is not None and s is not None and s != 0.0:
+                z = (float(m) - fit_i) / s
+                alarm = int(abs(z) > threshold)
+        out.append(
+            (event_id, ts, float(y) if y is not None else None,
+             slope, fit, z, alarm)
         )
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            score,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+        rn += 1
+        if m is not None:
+            n_i += 1
+            sx_i += x
+            sy_i += m
+            sxx_i += x * x
+            sxy_i += x * m
+            syy_i += m * m
+    return (rn, n_i, sx_i, sy_i, sxx_i, sxy_i, syy_i), out
 
 
 def streaming_trend_ols(
@@ -558,110 +590,49 @@ def streaming_trend_ols(
     arbitrary-precision, so the sums cannot overflow before the batch
     side's BIGINT would.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    scale = 10**unit_digits
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "trend_run_slope double, trend_run_fit double, "
-        "trend_run_z double, trend_run_alarm int"
+    return _keyed_fold(
+        events,
+        partial(
+            _trend_ols_fold,
+            scale=10**unit_digits,
+            threshold=threshold,
+            min_points=min_points,
+        ),
+        cols=("event_id", "ts", "value"),
+        init=(0, 0, 0, 0, 0, 0, 0),
+        state_schema=(
+            "rn bigint, n bigint, sx bigint, sy bigint, "
+            "sxx bigint, sxy bigint, syy bigint"
+        ),
+        out_schema=(
+            "user_id bigint, event_id bigint, ts timestamp, value double, "
+            "trend_run_slope double, trend_run_fit double, "
+            "trend_run_z double, trend_run_alarm int"
+        ),
+        timeout_minutes=timeout_minutes,
     )
-    state_schema = (
-        "rn bigint, n bigint, sx bigint, sy bigint, "
-        "sxx bigint, sxy bigint, syy bigint"
-    )
 
-    def detect(key, pdf_iter, state):
-        import math
 
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        rn, n_i, sx_i, sy_i, sxx_i, sxy_i, syy_i = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0, 0)
-        )
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                x = rn  # 0-based row index, null y rows included
-                y_raw = r["value"]
-                y_ok = y_raw is not None and not (
-                    isinstance(y_raw, float) and math.isnan(y_raw)
-                )
-                m = int(round(float(y_raw) * scale)) if y_ok else None
-                # score vs the PAST fit — same IEEE expression order as
-                # the batch columns (floats from the same exact ints)
-                slope = fit = z = alarm = None
-                n = float(n_i)
-                sx, sy = float(sx_i), float(sy_i)
-                sxx, sxy, syy = float(sxx_i), float(sxy_i), float(syy_i)
-                vx = n * sxx - sx * sx
-                if n >= min_points and vx > 0:
-                    b = (n * sxy - sx * sy) / vx
-                    a = (sy - b * sx) / n
-                    sse = max(
-                        0.0, syy - sy * sy / n - b * b * (sxx - sx * sx / n)
-                    )
-                    s = math.sqrt(sse / (n - 2)) if n > 2 else None
-                    fit_i = a + b * float(x)
-                    slope = b / scale
-                    fit = fit_i / scale
-                    if m is not None and s is not None and s != 0.0:
-                        z = (float(m) - fit_i) / s
-                        alarm = int(abs(z) > threshold)
-                rows.append(
-                    (
-                        user_id,
-                        int(r["event_id"]),
-                        r["ts"],
-                        float(y_raw) if y_ok else None,
-                        slope,
-                        fit,
-                        z,
-                        alarm,
-                    )
-                )
-                rn += 1
-                if m is not None:
-                    n_i += 1
-                    sx_i += x
-                    sy_i += m
-                    sxx_i += x * x
-                    sxy_i += x * m
-                    syy_i += m * m
-        state.update((rn, n_i, sx_i, sy_i, sxx_i, sxy_i, syy_i))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "user_id", "event_id", "ts", "value",
-                "trend_run_slope", "trend_run_fit",
-                "trend_run_z", "trend_run_alarm",
-            ],
-        )
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            detect,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+def _kalman_fold(state, rows, *, Q, R, thr):
+    a, P = state  # (None, None) until the first observation
+    out = []
+    for event_id, ts, y in rows:
+        y = float(y)
+        if a is None:
+            a, P = y, R
+            out.append((event_id, ts, y, None, a, None, None, None))
+            continue
+        a_pred = a
+        p_pred = P + Q
+        F_t = p_pred + R
+        v = y - a_pred
+        K = p_pred / F_t
+        a = a_pred + K * v
+        P = (1.0 - K) * p_pred
+        sd = math.sqrt(F_t)
+        score = v / sd
+        out.append((event_id, ts, y, a_pred, a, sd, score, abs(score) > thr))
+    return (a, P), out
 
 
 def streaming_kalman_level(
@@ -687,91 +658,44 @@ def streaming_kalman_level(
     operator BIT-FOR-BIT on in-order replay — asserted exactly in the
     parity test.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     if q_var is None or r_var is None:
         raise ValueError(
             "streaming_kalman_level: q_var and r_var must be explicit — "
             "a stream cannot estimate R from the full series"
         )
-    Q, R = float(q_var), float(r_var)
-    thr = float(threshold)
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "kf_pred double, kf_level double, kf_innov_sd double, "
-        "kf_score double, kf_flag boolean"
+    return _keyed_fold(
+        events,
+        partial(_kalman_fold, Q=float(q_var), R=float(r_var), thr=float(threshold)),
+        cols=("event_id", "ts", "value"),
+        init=(None, None),
+        state_schema="level double, var double",
+        out_schema=(
+            "user_id bigint, event_id bigint, ts timestamp, value double, "
+            "kf_pred double, kf_level double, kf_innov_sd double, "
+            "kf_score double, kf_flag boolean"
+        ),
+        timeout_minutes=timeout_minutes,
     )
-    state_schema = "level double, var double"
 
-    def filt(key, pdf_iter, state):
-        import math
 
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        if state.exists:
-            a, P = state.get
-            have = True
-        else:
-            a, P = 0.0, 0.0
-            have = False
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                y = float(r["value"])
-                if not have:
-                    a, P = y, R
-                    have = True
-                    rows.append(
-                        (user_id, int(r["event_id"]), r["ts"], y,
-                         None, a, None, None, None)
-                    )
-                    continue
-                a_pred = a
-                p_pred = P + Q
-                F_t = p_pred + R
-                v = y - a_pred
-                K = p_pred / F_t
-                a = a_pred + K * v
-                P = (1.0 - K) * p_pred
-                sd = math.sqrt(F_t)
-                score = v / sd
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], y,
-                     a_pred, a, sd, score, abs(score) > thr)
-                )
-        state.update((a, P))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "user_id", "event_id", "ts", "value",
-                "kf_pred", "kf_level", "kf_innov_sd", "kf_score", "kf_flag",
-            ],
-        )
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            filt,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+def _episode_fold(state, rows, *, gap_us):
+    # last_us = -1 is the "no alert seen yet" sentinel (a typed
+    # state column cannot hold null)
+    last_us, counter = state
+    out = []
+    for event_id, ts, value, flag in rows:
+        v = float(value) if value is not None else None
+        if flag is None or int(flag) == 0:
+            out.append(
+                (event_id, ts, v, int(flag) if flag is not None else None, None)
+            )
+            continue
+        t_us = _us(ts)
+        if last_us < 0 or t_us - last_us > gap_us:
+            counter += 1
+        last_us = t_us
+        out.append((event_id, ts, v, int(flag), counter))
+    return (last_us, counter), out
 
 
 def streaming_episode_assign(
@@ -791,71 +715,35 @@ def streaming_episode_assign(
     recurrence the batch operator evaluates, so replay equals the batch
     ``attach=True`` assignment BIT-for-bit (asserted in the parity
     test). Non-alert rows pass through with a null episode_id and do
-    not touch the gap clock.
+    not touch the gap clock; a NULL flag counts as non-alert.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_us = int(round(float(gap_seconds) * 1_000_000))
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        f"{flag_col} int, episode_id bigint"
+    return _keyed_fold(
+        events,
+        partial(_episode_fold, gap_us=int(round(float(gap_seconds) * 1_000_000))),
+        cols=("event_id", "ts", "value", flag_col),
+        init=(-1, 0),
+        state_schema="last_us long, counter long",
+        out_schema=(
+            "user_id bigint, event_id bigint, ts timestamp, value double, "
+            f"{flag_col} int, episode_id bigint"
+        ),
+        timeout_minutes=timeout_minutes,
     )
-    state_schema = "last_us long, counter long"
 
-    def assign(key, pdf_iter, state):
-        import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
+def _adwin_fold(state, rows, *, delta, max_buckets):
+    from ..operators.adwin import AdwinState
 
-        (user_id,) = key
-        # last_us = -1 is the "no alert seen yet" sentinel (a typed
-        # state column cannot hold null)
-        last_us, counter = state.get if state.exists else (-1, 0)
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                flag = r[flag_col]
-                v = float(r["value"]) if r["value"] is not None else None
-                if flag is None or int(flag) == 0:
-                    rows.append(
-                        (user_id, int(r["event_id"]), r["ts"], v,
-                         int(flag) if flag is not None else None, None)
-                    )
-                    continue
-                t_us = int(pd.Timestamp(r["ts"]).value // 1000)
-                if last_us < 0 or t_us - last_us > gap_us:
-                    counter += 1
-                last_us = t_us
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], v, int(flag), counter)
-                )
-        state.update((last_us, counter))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "event_id", "ts", "value", flag_col, "episode_id"],
-        )
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            assign,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    sums, sqs, counts = state
+    st = AdwinState(
+        delta=delta, max_buckets=max_buckets, sums=sums, sqs=sqs, counts=counts
     )
+    out = []
+    for event_id, ts, value in rows:
+        v = float(value)
+        changed = st.add(v)
+        out.append((event_id, ts, v, st.n, st.mean(), changed))
+    return (list(st.sums), list(st.sqs), list(st.counts)), out
 
 
 def streaming_adwin(
@@ -872,65 +760,31 @@ def streaming_adwin(
     round-tripped float64/int64 arrays, so replay equals the batch
     operator BIT-for-bit (asserted exactly in the parity test).
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..operators.adwin import AdwinState
-
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        "adwin_n bigint, adwin_mean double, adwin_change boolean"
+    return _keyed_fold(
+        events,
+        partial(_adwin_fold, delta=delta, max_buckets=max_buckets),
+        cols=("event_id", "ts", "value"),
+        init=([], [], []),
+        state_schema="sums array<double>, sqs array<double>, counts array<long>",
+        out_schema=(
+            "user_id bigint, event_id bigint, ts timestamp, value double, "
+            "adwin_n bigint, adwin_mean double, adwin_change boolean"
+        ),
+        timeout_minutes=timeout_minutes,
     )
-    state_schema = "sums array<double>, sqs array<double>, counts array<long>"
 
-    def run(key, pdf_iter, state):
-        import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
+def _quantiles_fold(state, rows, *, eps, qs):
+    from ..operators.gk import GKSketch
 
-        (user_id,) = key
-        if state.exists:
-            sums, sqs, counts = state.get
-            st = AdwinState(delta=delta, max_buckets=max_buckets,
-                            sums=sums, sqs=sqs, counts=counts)
-        else:
-            st = AdwinState(delta=delta, max_buckets=max_buckets)
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                v = float(r["value"])
-                changed = st.add(v)
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], v,
-                     st.n, st.mean(), changed)
-                )
-        state.update((list(st.sums), list(st.sqs), list(st.counts)))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "event_id", "ts", "value",
-                     "adwin_n", "adwin_mean", "adwin_change"],
-        )
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            run,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+    vs, gs, ds, n = state
+    sk = GKSketch(eps=eps, vs=vs, gs=gs, ds=ds, n=n)
+    out = []
+    for event_id, ts, value in rows:
+        v = float(value)
+        sk.insert(v)
+        out.append((event_id, ts, v, *[sk.query(q) for q in qs]))
+    return (list(sk.vs), list(sk.gs), list(sk.ds), sk.n), out
 
 
 def streaming_quantiles(
@@ -947,64 +801,39 @@ def streaming_quantiles(
     the sketch's tuple arrays, O((1/eps) log(eps n)) per key with the
     paper's rank-error guarantee (asserted against exact quantiles on
     replay in the parity test)."""
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..operators.gk import GKSketch
-
     qs = [float(q) for q in quantiles]
     qcols = [f"q{str(q).replace('.', '_')}" for q in qs]
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, value double, "
-        + ", ".join(f"{c} double" for c in qcols)
+    return _keyed_fold(
+        events,
+        partial(_quantiles_fold, eps=eps, qs=qs),
+        cols=("event_id", "ts", "value"),
+        init=([], [], [], 0),
+        state_schema="vs array<double>, gs array<long>, ds array<long>, n long",
+        out_schema=(
+            "user_id bigint, event_id bigint, ts timestamp, value double, "
+            + ", ".join(f"{c} double" for c in qcols)
+        ),
+        timeout_minutes=timeout_minutes,
     )
-    state_schema = "vs array<double>, gs array<long>, ds array<long>, n long"
 
-    def run(key, pdf_iter, state):
-        import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        if state.exists:
-            vs, gs, ds, n = state.get
-            sk = GKSketch(eps=eps, vs=vs, gs=gs, ds=ds, n=n)
-        else:
-            sk = GKSketch(eps=eps)
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                v = float(r["value"])
-                sk.insert(v)
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], v,
-                     *[sk.query(q) for q in qs])
-                )
-        state.update((list(sk.vs), list(sk.gs), list(sk.ds), sk.n))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows, columns=["user_id", "event_id", "ts", "value", *qcols]
-        )
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            run,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+def _throttle_fold(state, rows, *, cooldown_seconds, policy):
+    last_alert, last_delivered = state
+    out = []
+    for event_id, ts, flag in rows:
+        flag = int(flag) if flag is not None else 0
+        delivered = 0
+        if flag == 1:
+            t = ts.timestamp()
+            if policy == "quiet-period":
+                if last_alert is None or t - last_alert > cooldown_seconds:
+                    delivered = 1
+                last_alert = t
+            elif last_delivered is None or t - last_delivered > cooldown_seconds:
+                delivered = 1
+                last_delivered = t
+        out.append((event_id, ts, flag, delivered))
+    return (last_alert, last_delivered), out
 
 
 def streaming_throttle_alerts(
@@ -1026,81 +855,24 @@ def streaming_throttle_alerts(
     timestamp comparisons, no float accumulation).
 
     Input: a scored stream carrying ``user_id, event_id, ts`` and the
-    flag column. Output: same grain plus ``alert_delivered``.
+    flag column (a NULL flag is no alert). Output: same grain plus
+    ``alert_delivered``.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     if policy not in ("quiet-period", "fixed-cooldown"):
         raise ValueError(
             f"streaming_throttle_alerts: unknown policy {policy!r}"
         )
-    out_schema = (
-        "user_id bigint, event_id bigint, ts timestamp, "
-        f"{flag_col} int, alert_delivered int"
-    )
-    state_schema = "last_alert double, last_delivered double"
-
-    def throttle(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        (user_id,) = key
-        last_alert, last_delivered = (
-            state.get if state.exists else (None, None)
-        )
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                flag = int(r[flag_col]) if r[flag_col] is not None else 0
-                delivered = 0
-                if flag == 1:
-                    t = r["ts"].timestamp()
-                    if policy == "quiet-period":
-                        if last_alert is None or t - last_alert > cooldown_seconds:
-                            delivered = 1
-                        last_alert = t
-                    else:
-                        if (
-                            last_delivered is None
-                            or t - last_delivered > cooldown_seconds
-                        ):
-                            delivered = 1
-                            last_delivered = t
-                rows.append(
-                    (user_id, int(r["event_id"]), r["ts"], flag, delivered)
-                )
-        state.update(
-            (
-                float(last_alert) if last_alert is not None else None,
-                float(last_delivered) if last_delivered is not None else None,
-            )
-        )
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "event_id", "ts", flag_col, "alert_delivered"],
-        )
-
-    return (
-        flagged.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            throttle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_fold(
+        flagged,
+        partial(_throttle_fold, cooldown_seconds=cooldown_seconds, policy=policy),
+        cols=("event_id", "ts", flag_col),
+        init=(None, None),
+        state_schema="last_alert double, last_delivered double",
+        out_schema=(
+            "user_id bigint, event_id bigint, ts timestamp, "
+            f"{flag_col} int, alert_delivered int"
+        ),
+        timeout_minutes=timeout_minutes,
     )
 
 
@@ -1134,6 +906,18 @@ def streaming_enrich(events: DataFrame, dim: DataFrame, on: str = "user_id") -> 
     return events.join(F.broadcast(dim), on)
 
 
+def _kmv_fold(state, rows, *, k, u_off, u_div):
+    seen = set(state[0])
+    seen.update(int(h) for (h,) in rows if h is not None)
+    mins = sorted(seen)[:k]
+    if len(mins) < k:
+        est = float(len(mins))
+    else:
+        # same IEEE sequence as operators.kmv.kmv_estimate
+        est = (k - 1) / ((float(mins[k - 1]) + u_off) / u_div)
+    return (mins,), [(mins, len(mins), est)]
+
+
 def streaming_kmv(
     events: DataFrame,
     value_col: str = "value",
@@ -1164,24 +948,10 @@ def streaming_kmv(
         raise ValueError(f"streaming_kmv: k must be >= 2, got {k}")
     if hash_fn not in _U_DIV:
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     keys = list(key_cols)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    out_schema = (
-        f"{key_schema}, kmv array<bigint>, kmv_size int, kmv_est double"
-    )
-    state_schema = "mins array<bigint>"
-    kk = int(k)
-    u_off, u_div = _U_OFF[hash_fn], _U_DIV[hash_fn]
-
     # NULLs must be dropped BEFORE hashing, mirroring kmv_build's
     # isNotNull filter: xxhash64(NULL) is the seed 42 (never NULL), so
-    # the pd.isna guard downstream cannot catch it and a NULL value
+    # the None guard in the fold cannot catch it and a NULL value
     # would inject hash 42 into the sketch, inflating below-k counts
     # and breaking the documented array-equality with the batch build.
     keyed = events.filter(F.col(value_col).isNotNull()).select(
@@ -1189,49 +959,57 @@ def streaming_kmv(
         ts_col,
         _kmv_hash(F.col(value_col), hash_fn).alias("__h"),
     )
-
-    def run(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        mins = list(state.get[0]) if state.exists else []
-        seen = set(mins)
-        for pdf in pdf_iter:
-            for h in pdf["__h"]:
-                if h is not None and not pd.isna(h):
-                    seen.add(int(h))
-        mins = sorted(seen)[:kk]
-        state.update((mins,))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        if len(mins) < kk:
-            est = float(len(mins))
-        else:
-            # same IEEE sequence as operators.kmv.kmv_estimate
-            est = (kk - 1) / ((float(mins[kk - 1]) + u_off) / u_div)
-        yield pd.DataFrame(
-            [(*key, mins, len(mins), est)],
-            columns=[*keys, "kmv", "kmv_size", "kmv_est"],
-        )
-
-    return (
-        keyed.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            run,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_fold(
+        keyed,
+        partial(_kmv_fold, k=int(k), u_off=_U_OFF[hash_fn], u_div=_U_DIV[hash_fn]),
+        keys=keys,
+        order=(),
+        ts_col=ts_col,
+        cols=("__h",),
+        init=([],),
+        state_schema="mins array<bigint>",
+        out_schema=(
+            f"{_ddl(events, keys)}, kmv array<bigint>, kmv_size int, kmv_est double"
+        ),
+        timeout_minutes=timeout_minutes,
     )
+
+
+def _theta_fold(state, rows, *, a, mp):
+    cnt, sx, sy, sxx, sxy, ses, err_sum, err_n = state
+    out = []
+    for ts, yv in rows:
+        if yv is None:
+            raise ValueError("streaming_theta: null values in series (fill first)")
+        y_t = float(yv)
+        t = cnt
+        if cnt == 0:
+            ses = y_t  # batch init: ses = y[0] BEFORE the loop
+        fc = None
+        err = None
+        if cnt >= mp:
+            det = cnt * sxx - sx * sx
+            if det > 0:
+                b = (cnt * sxy - sx * sy) / det
+                a0 = (sy - b * sx) / cnt
+                line_t = a0 + b * t
+                fc = 0.5 * (line_t + ses)
+                err = abs(y_t - fc)
+                err_sum += err
+                err_n += 1
+                z_t = 2.0 * y_t - line_t
+            else:
+                z_t = y_t
+        else:
+            z_t = y_t
+        ses = a * z_t + (1.0 - a) * ses
+        sx += t
+        sy += y_t
+        sxx += t * t
+        sxy += t * y_t
+        cnt += 1
+        out.append((ts, y_t, fc, err, (err_sum / err_n) if err_n else None))
+    return (cnt, sx, sy, sxx, sxy, ses, err_sum, err_n), out
 
 
 def streaming_theta(
@@ -1261,110 +1039,64 @@ def streaming_theta(
     ADVICE): the key portion of the output and state schemas is derived
     from the INPUT schema, so any key arity/type works.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"streaming_theta: alpha must be in (0,1), got {alpha}")
     if min_points < 3:
         raise ValueError(
             f"streaming_theta: min_points must be >= 3, got {min_points}"
         )
-    a = float(alpha)
-    mp = int(min_points)
     keys = list(key_cols)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    out_schema = (
-        f"{key_schema}, {ts_col} timestamp, {value_col} double, "
-        "theta_forecast double, abs_err double, theta_mae double"
-    )
-    state_schema = (
-        "cnt bigint, sx double, sy double, sxx double, sxy double, "
-        "ses double, err_sum double, err_n bigint"
+    return _keyed_fold(
+        events,
+        partial(_theta_fold, a=float(alpha), mp=int(min_points)),
+        keys=keys,
+        order=(ts_col,),
+        ts_col=ts_col,
+        cols=(ts_col, value_col),
+        init=(0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0),
+        state_schema=(
+            "cnt bigint, sx double, sy double, sxx double, sxy double, "
+            "ses double, err_sum double, err_n bigint"
+        ),
+        out_schema=(
+            f"{_ddl(events, keys)}, {ts_col} timestamp, {value_col} double, "
+            "theta_forecast double, abs_err double, theta_mae double"
+        ),
+        timeout_minutes=timeout_minutes,
     )
 
-    def run(key, pdf_iter, state):
-        import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        if state.exists:
-            cnt, sx, sy, sxx, sxy, ses, err_sum, err_n = state.get
-        else:
-            cnt, sx, sy, sxx, sxy, ses, err_sum, err_n = (
-                0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0,
-            )
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(ts_col)
-            for _, r in pdf.iterrows():
-                yv = r[value_col]
-                if pd.isna(yv):
-                    raise ValueError(
-                        "streaming_theta: null values in series (fill first)"
-                    )
-                y_t = float(yv)
-                t = cnt
-                if cnt == 0:
-                    ses = y_t  # batch init: ses = y[0] BEFORE the loop
-                fc = None
-                err = None
-                if cnt >= mp:
-                    det = cnt * sxx - sx * sx
-                    if det > 0:
-                        b = (cnt * sxy - sx * sy) / det
-                        a0 = (sy - b * sx) / cnt
-                        line_t = a0 + b * t
-                        fc = 0.5 * (line_t + ses)
-                        err = abs(y_t - fc)
-                        err_sum += err
-                        err_n += 1
-                        z_t = 2.0 * y_t - line_t
-                    else:
-                        z_t = y_t
-                else:
-                    z_t = y_t
-                ses = a * z_t + (1.0 - a) * ses
-                sx += t
-                sy += y_t
-                sxx += t * t
-                sxy += t * y_t
-                cnt += 1
-                rows.append(
-                    (*key, r[ts_col], y_t, fc, err,
-                     (err_sum / err_n) if err_n else None)
-                )
-        state.update((cnt, sx, sy, sxx, sxy, ses, err_sum, err_n))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                *keys, ts_col, value_col,
-                "theta_forecast", "abs_err", "theta_mae",
-            ],
-        )
-
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            run,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+def _croston_fold(state, rows, *, a, factor):
+    z, p, has_z, has_p, gap, err_sum, err_n = state
+    out = []
+    for ts, yv in rows:
+        if yv is None:
+            raise ValueError("streaming_croston: null values in series (fill first)")
+        y_t = float(yv)
+        if y_t < 0:
+            raise ValueError("streaming_croston: negative demand")
+        fc = None
+        err = None
+        if has_z and has_p and p > 0:
+            fc = factor * z / p
+            err = abs(y_t - fc)
+            err_sum += err
+            err_n += 1
+        gap += 1
+        if y_t > 0:
+            if not has_z:
+                z = y_t  # first demand initializes the size
+                has_z = True
+            elif not has_p:
+                p = float(gap)
+                has_p = True
+                z = a * y_t + (1.0 - a) * z
+            else:
+                z = a * y_t + (1.0 - a) * z
+                p = a * gap + (1.0 - a) * p
+            gap = 0
+        out.append((ts, y_t, fc, err, (err_sum / err_n) if err_n else None))
+    return (z, p, has_z, has_p, gap, err_sum, err_n), out
 
 
 def streaming_croston(
@@ -1393,101 +1125,27 @@ def streaming_croston(
     ADVICE): the key portion of the output and state schemas is derived
     from the INPUT schema, so any key arity/type works.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"streaming_croston: alpha must be in (0,1), got {alpha}")
     a = float(alpha)
-    factor = (1.0 - a / 2.0) if sba else 1.0
     keys = list(key_cols)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    out_schema = (
-        f"{key_schema}, {ts_col} timestamp, {value_col} double, "
-        "croston_forecast double, abs_err double, croston_mae double"
-    )
-    state_schema = (
-        "z double, p double, has_z boolean, has_p boolean, "
-        "gap bigint, err_sum double, err_n bigint"
-    )
-
-    def run(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        if state.exists:
-            z, p, has_z, has_p, gap, err_sum, err_n = state.get
-        else:
-            z, p, has_z, has_p, gap, err_sum, err_n = (
-                0.0, 0.0, False, False, 0, 0.0, 0,
-            )
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(ts_col)
-            for _, r in pdf.iterrows():
-                yv = r[value_col]
-                if pd.isna(yv):
-                    raise ValueError(
-                        "streaming_croston: null values in series (fill first)"
-                    )
-                y_t = float(yv)
-                if y_t < 0:
-                    raise ValueError("streaming_croston: negative demand")
-                fc = None
-                err = None
-                if has_z and has_p and p > 0:
-                    fc = factor * z / p
-                    err = abs(y_t - fc)
-                    err_sum += err
-                    err_n += 1
-                gap += 1
-                if y_t > 0:
-                    if not has_z:
-                        z = y_t  # first demand initializes the size
-                        has_z = True
-                    elif not has_p:
-                        p = float(gap)
-                        has_p = True
-                        z = a * y_t + (1.0 - a) * z
-                    else:
-                        z = a * y_t + (1.0 - a) * z
-                        p = a * gap + (1.0 - a) * p
-                    gap = 0
-                rows.append(
-                    (*key, r[ts_col], y_t, fc, err,
-                     (err_sum / err_n) if err_n else None)
-                )
-        state.update((z, p, has_z, has_p, gap, err_sum, err_n))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                *keys, ts_col, value_col,
-                "croston_forecast", "abs_err", "croston_mae",
-            ],
-        )
-
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            run,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_fold(
+        events,
+        partial(_croston_fold, a=a, factor=(1.0 - a / 2.0) if sba else 1.0),
+        keys=keys,
+        order=(ts_col,),
+        ts_col=ts_col,
+        cols=(ts_col, value_col),
+        init=(0.0, 0.0, False, False, 0, 0.0, 0),
+        state_schema=(
+            "z double, p double, has_z boolean, has_p boolean, "
+            "gap bigint, err_sum double, err_n bigint"
+        ),
+        out_schema=(
+            f"{_ddl(events, keys)}, {ts_col} timestamp, {value_col} double, "
+            "croston_forecast double, abs_err double, croston_mae double"
+        ),
+        timeout_minutes=timeout_minutes,
     )
 
 
@@ -1523,6 +1181,17 @@ def streaming_hist(
     )
 
 
+def _transitions_fold(state, rows):
+    has_last, last_type = state
+    out = []
+    for *ords, cur in rows:
+        cur = None if cur is None else str(cur)
+        if has_last and last_type is not None:
+            out.append((*ords, last_type, cur))
+        has_last, last_type = True, cur
+    return (has_last, last_type), out
+
+
 def streaming_transitions(
     events: DataFrame,
     session_cols: Sequence[str] = ("user_id",),
@@ -1551,65 +1220,86 @@ def streaming_transitions(
     CURRENT type is emitted as a transition to null and becomes the
     next row's (suppressed) predecessor.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    keys = list(session_cols)
-    order = list(order_cols)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
+    keys, order = list(session_cols), list(order_cols)
+    return _keyed_fold(
+        events,
+        _transitions_fold,
+        keys=keys,
+        order=order,
+        ts_col=ts_col,
+        cols=(*order, type_col),
+        init=(False, None),
+        state_schema="has_last boolean, last_type string",
+        out_schema=(
+            f"{_ddl(events, keys)}, {_ddl(events, order)}, "
+            "from_type string, to_type string"
+        ),
+        timeout_minutes=timeout_minutes,
     )
-    order_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*order).schema.fields
-    )
-    out_schema = (
-        f"{key_schema}, {order_schema}, from_type string, to_type string"
-    )
-    state_schema = "has_last boolean, last_type string"
 
-    def walk(key, pdf_iter, state):
-        import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
+def _attribution_credits(touches, cus, *, lookback_us, half_life_us, models):
+    """(model, channel, ppm) rows for one conversion — the batch
+    integer math, verbatim."""
+    elig = sorted((t, c) for t, c in touches if cus - lookback_us <= t < cus)
+    out = []
+    if not elig:
+        return [(m, "(direct)", 1_000_000) for m in models]
+    n = len(elig)
+    for m in models:
+        if m == "first":
+            out.append((m, elig[0][1], 1_000_000))
+        elif m == "last":
+            out.append((m, elig[-1][1], 1_000_000))
+        elif m == "linear":
+            ppm = 1_000_000 // n
+            out.extend((m, c, ppm) for _, c in elig)
+        elif m == "position":
+            if n == 1:
+                out.append((m, elig[0][1], 1_000_000))
+            elif n == 2:
+                out.append((m, elig[0][1], 500_000))
+                out.append((m, elig[1][1], 500_000))
+            else:
+                out.append((m, elig[0][1], 400_000))
+                mid = 200_000 // (n - 2)
+                out.extend((m, c, mid) for _, c in elig[1:-1])
+                out.append((m, elig[-1][1], 400_000))
+        else:  # decay
+            ks = [(cus - t) // half_life_us for t, _ in elig]
+            kmin = min(ks)
+            ws = [1 << (40 - min(k - kmin, 40)) for k in ks]
+            sumw = sum(ws)
+            out.extend(
+                (m, c, (1_000_000 * w) // sumw) for (_, c), w in zip(elig, ws)
+            )
+    return out
 
-        has_last, last_type = state.get if state.exists else (False, None)
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(order)
-            for _, r in pdf.iterrows():
-                cur = r[type_col]
-                cur = None if pd.isna(cur) else str(cur)
-                if has_last and last_type is not None:
-                    rows.append(
-                        (*key, *(r[c] for c in order), last_type, cur)
-                    )
-                has_last, last_type = True, cur
-        state.update((has_last, last_type))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows, columns=[*keys, *order, "from_type", "to_type"]
-        )
 
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            walk,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+def _attribution_fold(state, rows, *, touch_set, conv_set, lookback_us, **credit):
+    tus, chs = state
+    touches = list(zip(tus, chs))
+    out = []
+    for ts, et in rows:
+        us = _us(ts)
+        if et in conv_set:
+            # prune on conversion arrival too: a user whose
+            # traffic turns conversion-only must not retain
+            # touches beyond the lookback indefinitely (the
+            # state contract is pruned-on-ANY-arrival; safe —
+            # entries below us - lookback are ineligible for
+            # this and every future conversion)
+            touches = [(t, c) for t, c in touches if t >= us - lookback_us]
+            for m, c, ppm in _attribution_credits(
+                touches, us, lookback_us=lookback_us, **credit
+            ):
+                out.append((ts, m, c, ppm))
+        if et in touch_set:
+            touches.append((us, str(et)))
+            # prune: older than us - lookback can never credit
+            # a future conversion (future cus >= us)
+            touches = [(t, c) for t, c in touches if t >= us - lookback_us]
+    return ([t for t, _ in touches], [c for _, c in touches]), out
 
 
 def streaming_attribution(
@@ -1646,9 +1336,6 @@ def streaming_attribution(
     conversion row that is also a touch credits later conversions but
     never itself, matching the strict-earlier frame.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     known = ("first", "last", "linear", "position", "decay")
     bad = [m for m in models if m not in known]
     if bad:
@@ -1658,115 +1345,49 @@ def streaming_attribution(
             f"streaming_attribution: duplicate models in {list(models)!r}"
         )
     keys = list(key_cols)
-    model_list = list(models)
-    touch_set = set(touch_types)
-    conv_set = set(conversion_types)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
+    return _keyed_fold(
+        events,
+        partial(
+            _attribution_fold,
+            touch_set=set(touch_types),
+            conv_set=set(conversion_types),
+            lookback_us=lookback_us,
+            half_life_us=half_life_us,
+            models=list(models),
+        ),
+        keys=keys,
+        order=(ts_col,),
+        ts_col=ts_col,
+        cols=(ts_col, channel_col),
+        init=([], []),
+        state_schema="tus array<bigint>, chs array<string>",
+        out_schema=(
+            f"{_ddl(events, keys)}, {ts_col} timestamp, model string, "
+            "channel string, ppm bigint"
+        ),
+        timeout_minutes=timeout_minutes,
     )
-    out_schema = (
-        f"{key_schema}, {ts_col} timestamp, model string, "
-        "channel string, ppm bigint"
-    )
-    state_schema = "tus array<bigint>, chs array<string>"
 
-    def credits_for(touches: list, cus: int) -> list:
-        """(model, channel, ppm) rows for one conversion — the batch
-        integer math, verbatim."""
-        elig = sorted((t, c) for t, c in touches if cus - lookback_us <= t < cus)
-        out = []
-        if not elig:
-            return [(m, "(direct)", 1_000_000) for m in model_list]
-        n = len(elig)
-        for m in model_list:
-            if m == "first":
-                out.append((m, elig[0][1], 1_000_000))
-            elif m == "last":
-                out.append((m, elig[-1][1], 1_000_000))
-            elif m == "linear":
-                ppm = 1_000_000 // n
-                out.extend((m, c, ppm) for _, c in elig)
-            elif m == "position":
-                if n == 1:
-                    out.append((m, elig[0][1], 1_000_000))
-                elif n == 2:
-                    out.append((m, elig[0][1], 500_000))
-                    out.append((m, elig[1][1], 500_000))
-                else:
-                    out.append((m, elig[0][1], 400_000))
-                    mid = 200_000 // (n - 2)
-                    out.extend((m, c, mid) for _, c in elig[1:-1])
-                    out.append((m, elig[-1][1], 400_000))
-            else:  # decay
-                ks = [(cus - t) // half_life_us for t, _ in elig]
-                kmin = min(ks)
-                ws = [1 << (40 - min(k - kmin, 40)) for k in ks]
-                sumw = sum(ws)
-                out.extend(
-                    (m, c, (1_000_000 * w) // sumw)
-                    for (_, c), w in zip(elig, ws)
-                )
-        return out
 
-    def walk(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        tus, chs = state.get if state.exists else ([], [])
-        touches = list(zip(list(tus), list(chs)))
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(ts_col, kind="mergesort")
-            for _, r in pdf.iterrows():
-                et = r[channel_col]
-                us = int(pd.Timestamp(r[ts_col]).value // 1000)
-                if et in conv_set:
-                    # prune on conversion arrival too: a user whose
-                    # traffic turns conversion-only must not retain
-                    # touches beyond the lookback indefinitely (the
-                    # state contract is pruned-on-ANY-arrival; safe —
-                    # entries below us - lookback are ineligible for
-                    # this and every future conversion)
-                    touches = [
-                        (t, c) for t, c in touches if t >= us - lookback_us
-                    ]
-                    for m, c, ppm in credits_for(touches, us):
-                        rows.append((*key, r[ts_col], m, c, ppm))
-                if et in touch_set:
-                    touches.append((us, str(et)))
-                    # prune: older than us - lookback can never credit
-                    # a future conversion (future cus >= us)
-                    touches = [
-                        (t, c) for t, c in touches if t >= us - lookback_us
-                    ]
-        state.update((
-            [t for t, _ in touches], [c for _, c in touches],
-        ))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows, columns=[*keys, ts_col, "model", "channel", "ppm"]
-        )
-
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            walk,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+def _funnel_fold(state, rows, *, steps, within_us):
+    done, anchor, last = state
+    out = []
+    for ts, ev in rows:
+        if done >= len(steps):
+            break
+        if ev not in steps:  # the batch isin(steps) filter
+            continue
+        us = _us(ts)
+        ok = str(ev) == steps[done] and (done == 0 or us > last)
+        if within_us is not None and done > 0:
+            ok = ok and us <= anchor + within_us
+        if ok:
+            if done == 0:
+                anchor = us
+            done += 1
+            last = us
+            out.append((ts, done))
+    return (done, anchor, last), out
 
 
 def streaming_funnel(
@@ -1814,9 +1435,6 @@ def streaming_funnel(
     ``timeout_minutes=None``; the default trades that guarantee for
     bounded state on funnels slower than the timeout.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     k = len(steps)
     if k < 1:
         raise ValueError("streaming_funnel: need at least one step")
@@ -1825,61 +1443,31 @@ def streaming_funnel(
             f"streaming_funnel: steps must be distinct, got {list(steps)!r}"
         )
     keys = list(key_cols)
-    step_list = [str(s) for s in steps]
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
+    return _keyed_fold(
+        events,
+        partial(_funnel_fold, steps=[str(s) for s in steps], within_us=within_us),
+        keys=keys,
+        order=(ts_col, event_col),
+        ts_col=ts_col,
+        cols=(ts_col, event_col),
+        init=(0, 0, 0),
+        state_schema="done int, anchor bigint, last bigint",
+        out_schema=f"{_ddl(events, keys)}, {ts_col} timestamp, funnel_depth int",
+        timeout_minutes=timeout_minutes,
     )
-    out_schema = f"{key_schema}, {ts_col} timestamp, funnel_depth int"
-    state_schema = "done int, anchor bigint, last bigint"
 
-    def walk(key, pdf_iter, state):
-        import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        done, anchor, last = state.get if state.exists else (0, 0, 0)
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf[pdf[event_col].isin(step_list)]
-            pdf = pdf.sort_values([ts_col, event_col], kind="mergesort")
-            for _, r in pdf.iterrows():
-                if done >= k:
-                    break
-                us = int(pd.Timestamp(r[ts_col]).value // 1000)
-                ok = str(r[event_col]) == step_list[done] and (
-                    done == 0 or us > last
-                )
-                if within_us is not None and done > 0:
-                    ok = ok and us <= anchor + within_us
-                if ok:
-                    if done == 0:
-                        anchor = us
-                    done += 1
-                    last = us
-                    rows.append((*key, r[ts_col], done))
-        state.update((done, anchor, last))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(rows, columns=[*keys, ts_col, "funnel_depth"])
-
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            walk,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+def _journey_fold(state, rows, *, k, sep):
+    vals, nulls = state
+    prev = [None if isnull else v for v, isnull in zip(vals, nulls)]
+    out = []
+    for *ords, cur in rows:
+        cur = None if cur is None else str(cur)
+        run = prev + [cur]
+        if len(run) == k and all(t is not None for t in run):
+            out.append((*ords, sep.join(run)))
+        prev = run[-(k - 1):]
+    return (["" if t is None else t for t in prev], [t is None for t in prev]), out
 
 
 def streaming_journey_paths(
@@ -1913,71 +1501,68 @@ def streaming_journey_paths(
     replay (asserted in the parity test), and share = cnt/total
     downstream.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     if k < 2:
         raise ValueError(f"streaming_journey_paths: k must be >= 2, got {k}")
-    keys = list(session_cols)
-    order = list(order_cols)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
+    keys, order = list(session_cols), list(order_cols)
+    return _keyed_fold(
+        events,
+        partial(_journey_fold, k=k, sep=sep),
+        keys=keys,
+        order=order,
+        ts_col=ts_col,
+        cols=(*order, type_col),
+        init=([], []),
+        state_schema="vals array<string>, nulls array<boolean>",
+        out_schema=f"{_ddl(events, keys)}, {_ddl(events, order)}, path string",
+        timeout_minutes=timeout_minutes,
     )
-    order_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*order).schema.fields
-    )
-    out_schema = f"{key_schema}, {order_schema}, path string"
-    state_schema = "vals array<string>, nulls array<boolean>"
 
-    def walk(key, pdf_iter, state):
-        import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
+def _sax_word(xs: list[int], *, window_rows, word_len, bps) -> str:
+    seg_rows = window_rows // word_len
+    s_all = sum(xs)
+    s2_all = sum(x * x for x in xs)
+    n = window_rows
+    disc = n * s2_all - s_all * s_all
+    out = []
+    for s in range(word_len):
+        seg = xs[s * seg_rows:(s + 1) * seg_rows]
+        if disc == 0:
+            z = 0.0
+        else:
+            z = (sum(seg) / seg_rows - s_all / n) / (math.sqrt(float(disc)) / n)
+        c = chr(97 + len(bps))
+        for i, b in enumerate(bps):
+            if z < b:
+                c = chr(97 + i)
+                break
+        out.append(c)
+    return "".join(out)
 
-        vals, nulls = state.get if state.exists else ([], [])
-        prev = [
-            (None if isnull else v)
-            for v, isnull in zip(list(vals), list(nulls))
-        ]
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(order)
-            for _, r in pdf.iterrows():
-                cur = r[type_col]
-                cur = None if pd.isna(cur) else str(cur)
-                run = prev + [cur]
-                if len(run) == k and all(t is not None for t in run):
-                    rows.append(
-                        (*key, *(r[c] for c in order), sep.join(run))
-                    )
-                prev = (prev + [cur])[-(k - 1):]
-        state.update((
-            ["" if t is None else t for t in prev],
-            [t is None for t in prev],
-        ))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(rows, columns=[*keys, *order, "path"])
 
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            walk,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
+def _sax_fold(state, rows, *, window_rows, word_len, scale, bps):
+    win, seen, poisoned, xs, tss = state
+    xs, tss = list(xs), list(tss)
+    out = []
+    for ts, v in rows:
+        seen += 1
+        if v is None:
+            # batch row_number runs BEFORE the null filter: the
+            # NULL keeps its position (poisons this window) and
+            # window indices keep counting
+            poisoned = True
+        else:
+            xs.append(int(round(float(v) * scale)))
+            tss.append(_us(ts))
+        if seen == window_rows:
+            if not poisoned:
+                word = _sax_word(
+                    xs, window_rows=window_rows, word_len=word_len, bps=bps
+                )
+                out.append((win, pd.Timestamp(min(tss) * 1000), word))
+            win += 1
+            seen, poisoned, xs, tss = 0, False, [], []
+    return (win, seen, poisoned, xs, tss), out
 
 
 def streaming_sax(
@@ -2032,11 +1617,6 @@ def streaming_sax(
     counter, so a revived key re-numbers from win 0; replay parity
     holds unconditionally only with ``timeout_minutes=None``.
     """
-    import math
-
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from amonaly_detection_in_time_series_data_spark.operators.sax import SAX_BREAKPOINTS
 
     if alphabet_size not in SAX_BREAKPOINTS:
@@ -2050,102 +1630,24 @@ def streaming_sax(
             f"divisible by word_len ({word_len})"
         )
     keys = list(series_cols)
-    order = [ts_col, *order_tiebreak]
-    scale = 10 ** int(unit_digits)
-    seg_rows = window_rows // word_len
-    bps = [float(repr(b)) for b in SAX_BREAKPOINTS[alphabet_size]]
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in events.select(*keys).schema.fields
-    )
-    out_schema = (
-        f"{key_schema}, win bigint, win_start timestamp, word string"
-    )
-    state_schema = (
-        "win bigint, seen int, poisoned boolean, "
-        "xs array<bigint>, tss array<bigint>"
-    )
-
-    def word_of(xs: list[int]) -> str:
-        s_all = sum(xs)
-        s2_all = sum(x * x for x in xs)
-        n = window_rows
-        disc = n * s2_all - s_all * s_all
-        out = []
-        for s in range(word_len):
-            seg = xs[s * seg_rows:(s + 1) * seg_rows]
-            if disc == 0:
-                z = 0.0
-            else:
-                z = (sum(seg) / seg_rows - s_all / n) / (
-                    math.sqrt(float(disc)) / n
-                )
-            c = chr(97 + len(bps))
-            for i, b in enumerate(bps):
-                if z < b:
-                    c = chr(97 + i)
-                    break
-            out.append(c)
-        return "".join(out)
-
-    def walk(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        win, seen, poisoned, xs, tss = (
-            state.get if state.exists else (0, 0, False, [], [])
-        )
-        xs, tss = list(xs), list(tss)
-        rows = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(order, kind="mergesort")
-            for _, r in pdf.iterrows():
-                v = r[value_col]
-                seen += 1
-                if pd.isna(v):
-                    # batch row_number runs BEFORE the null filter: the
-                    # NULL keeps its position (poisons this window) and
-                    # window indices keep counting
-                    poisoned = True
-                else:
-                    xs.append(int(round(float(v) * scale)))
-                    tss.append(
-                        int(pd.Timestamp(r[ts_col]).value // 1000)
-                    )
-                if seen == window_rows:
-                    if not poisoned:
-                        rows.append(
-                            (
-                                *key,
-                                win,
-                                pd.Timestamp(min(tss) * 1000),
-                                word_of(xs),
-                            )
-                        )
-                    win += 1
-                    seen, poisoned, xs, tss = 0, False, [], []
-        state.update((win, seen, poisoned, xs, tss))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            rows, columns=[*keys, "win", "win_start", "word"]
-        )
-
-    return (
-        events.withWatermark(ts_col, "2 hours")
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            walk,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_fold(
+        events,
+        partial(
+            _sax_fold,
+            window_rows=window_rows,
+            word_len=word_len,
+            scale=10 ** int(unit_digits),
+            bps=[float(repr(b)) for b in SAX_BREAKPOINTS[alphabet_size]],
+        ),
+        keys=keys,
+        order=(ts_col, *order_tiebreak),
+        ts_col=ts_col,
+        cols=(ts_col, value_col),
+        init=(0, 0, False, [], []),
+        state_schema=(
+            "win bigint, seen int, poisoned boolean, "
+            "xs array<bigint>, tss array<bigint>"
+        ),
+        out_schema=f"{_ddl(events, keys)}, win bigint, win_start timestamp, word string",
+        timeout_minutes=timeout_minutes,
     )

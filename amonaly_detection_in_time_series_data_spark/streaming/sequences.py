@@ -8,13 +8,33 @@ L, emits the completed sequence tagged with its start timestamp —
 exactly the batch output when the stream is replayed in order.
 
 State is bounded (L values + timestamps per key), so this scales to any
-key cardinality; Arrow-batched ``applyInPandasWithState`` keeps the
-per-key work in pandas.
+key cardinality; it runs on the shared keyed-state runner
+(``streaming.rolling._keyed_fold``), which also evicts idle keys.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
+
+from .rolling import _keyed_fold
+
+
+def _sequences_fold(state, rows, *, seq_len):
+    vals, tss = list(state[0]), list(state[1])
+    out = []
+    for ts, v in rows:
+        vals.append(float(v) if v is not None else None)
+        tss.append(ts)
+        if len(vals) >= seq_len:
+            vals = vals[-seq_len:]
+            tss = tss[-seq_len:]
+            out.append((tss[0], tss[-1], list(vals)))
+    # Keep the last L-1 rows; for L=1 keep NOTHING — vals[-0:] is the
+    # whole list, which would grow per-key state without bound.
+    keep = seq_len - 1 if seq_len > 1 else 0
+    return (vals[-keep:] if keep else [], tss[-keep:] if keep else []), out
 
 
 def streaming_sequences(
@@ -27,56 +47,18 @@ def streaming_sequences(
 
     Output: one row per completed sequence — (user_id, start_ts, end_ts,
     seq array<double>) — matching the batch ``create_sequences`` rows
-    whose window is full.
+    whose window is full. A NULL value keeps its step as a null element,
+    as the batch sequence array does.
     """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        "user_id bigint, start_ts timestamp, end_ts timestamp, "
-        "seq array<double>"
-    )
-    state_schema = "vals array<double>, tss array<timestamp>"
-
-    def assemble(key, pdf_iter, state):
-        import pandas as pd
-
-        (user_id,) = key
-        if state.exists:
-            vals, tss = list(state.get[0]), list(state.get[1])
-        else:
-            vals, tss = [], []
-        out = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for _, r in pdf.iterrows():
-                v = r[value_col]
-                vals.append(float(v) if v is not None else None)
-                tss.append(r["ts"])
-                if len(vals) >= seq_len:
-                    vals = vals[-seq_len:]
-                    tss = tss[-seq_len:]
-                    out.append((user_id, tss[0], tss[-1], list(vals)))
-        # Keep the last L-1 rows; for L=1 keep NOTHING — vals[-0:] is the
-        # whole list, which would grow per-key state without bound.
-        keep = seq_len - 1 if seq_len > 1 else 0
-        state.update((vals[-keep:] if keep else [], tss[-keep:] if keep else []))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(out, columns=["user_id", "start_ts", "end_ts", "seq"])
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            assemble,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _keyed_fold(
+        events,
+        partial(_sequences_fold, seq_len=seq_len),
+        cols=("ts", value_col),
+        init=([], []),
+        state_schema="vals array<double>, tss array<timestamp>",
+        out_schema=(
+            "user_id bigint, start_ts timestamp, end_ts timestamp, "
+            "seq array<double>"
+        ),
+        timeout_minutes=timeout_minutes,
     )

@@ -1874,3 +1874,76 @@ class TestStreamingSax:
             streaming_sax(ev, alphabet_size=17)
         with _pytest.raises(ValueError, match="divisible"):
             streaming_sax(ev, window_rows=10, word_len=4)
+
+
+class TestStreamingKeyedRunner:
+    """The shared keyed-state runner (``streaming.rolling._keyed_fold``)
+    end to end: a key's rows are folded in event order even when one
+    micro-batch hands them to Python in several Arrow chunks, and a
+    NULL value does not switch the z-score twin off for a window."""
+
+    SCHEMA = "user_id bigint, event_id bigint, ts timestamp, value double"
+
+    def _stream_vs_batch(self, spark, rows, tmp_path, name):
+        path = str(tmp_path / name)
+        # one file, rows in the given (possibly shuffled) order
+        spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.parquet(path)
+        stream = spark.readStream.schema(self.SCHEMA).parquet(path)
+        flags = streaming_zscore_flags(
+            stream, window_rows=24, threshold=3.0, timeout_minutes=None
+        )
+        _run_stream_to_memory(flags, name, "append")
+        streamed = {
+            r["event_id"]: (r["zscore"], r["is_anomaly"])
+            for r in spark.sql(f"SELECT * FROM {name}").collect()
+        }
+        batch = {
+            r["event_id"]: (r["value_zscore"], r["is_anomaly"])
+            for r in rolling_zscore(
+                spark.createDataFrame(rows, self.SCHEMA), "value", 24,
+                ["user_id"], ["ts", "event_id"], 3.0,
+            ).collect()
+        }
+        assert streamed.keys() == batch.keys()
+        for eid, (z, flag) in batch.items():
+            sz, sflag = streamed[eid]
+            if z is None:
+                assert sz is None, eid
+            else:
+                assert sz == pytest.approx(z, rel=1e-9), eid
+            assert sflag == flag, eid
+        return streamed
+
+    def test_key_split_across_arrow_chunks_folds_in_order(self, spark, tmp_path):
+        import datetime as dt
+        import random
+
+        rng = random.Random(11)
+        B = dt.datetime(2024, 1, 1)
+        rows = [
+            (1, j, B + dt.timedelta(hours=j), rng.randint(0, 2000) / 100)
+            for j in range(60)
+        ]
+        rng.shuffle(rows)
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "7")  # the key's 60 rows arrive in 9 chunks
+        try:
+            self._stream_vs_batch(spark, rows, tmp_path, "z_arrow_chunks")
+        finally:
+            spark.conf.set(key, old)
+
+    def test_null_then_spike_matches_batch(self, spark, tmp_path):
+        import datetime as dt
+        import random
+
+        rng = random.Random(5)
+        B = dt.datetime(2024, 1, 1)
+        vals = [10.0 + rng.randint(-100, 100) / 100 for _ in range(40)]
+        vals[10], vals[30] = None, 60.0
+        rows = [
+            (1, j, B + dt.timedelta(hours=j), v) for j, v in enumerate(vals)
+        ]
+        streamed = self._stream_vs_batch(spark, rows, tmp_path, "z_null_spike")
+        assert streamed[30][1] == 1
+        assert all(streamed[j][0] is not None for j in range(11, 35))
