@@ -9,6 +9,7 @@ range join (no per-row candidate explosion at 100 TB).
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -602,6 +603,22 @@ def hw_numpy(y, m: int, a: float, b_: float, g: float, ph: float):
     return fc, err, mae, level, trend, seas
 
 
+def _check_hw_params(
+    name: str, season_rows: int, alpha: float, beta: float, gamma: float,
+    phi: float,
+) -> None:
+    """Driver-side parameter checks of every Holt-Winters caller, so a bad
+    value raises before a job runs instead of inside the executor's
+    :func:`hw_numpy` (``season_rows=0`` divides by zero there)."""
+    if season_rows < 2:
+        raise ValueError(f"{name}: season_rows must be >= 2, got {season_rows}")
+    for p, v in (("alpha", alpha), ("beta", beta), ("gamma", gamma)):
+        if not 0.0 < v < 1.0:
+            raise ValueError(f"{name}: {p} must be in (0,1), got {v}")
+    if not 0.0 < phi <= 1.0:
+        raise ValueError(f"{name}: phi must be in (0,1], got {phi}")
+
+
 def holt_winters(
     df: DataFrame,
     ts_col: str,
@@ -651,15 +668,9 @@ def holt_winters(
     per-key operator here scales on; state is O(season_rows) per series
     regardless of length.
     """
-    if season_rows < 2:
-        raise ValueError(f"holt_winters: season_rows must be >= 2, got {season_rows}")
+    _check_hw_params("holt_winters", season_rows, alpha, beta, gamma, phi)
     if horizon < 0:
         raise ValueError(f"holt_winters: horizon must be >= 0, got {horizon}")
-    for p, v in (("alpha", alpha), ("beta", beta), ("gamma", gamma)):
-        if not 0.0 < v < 1.0:
-            raise ValueError(f"holt_winters: {p} must be in (0,1), got {v}")
-    if not 0.0 < phi <= 1.0:
-        raise ValueError(f"holt_winters: phi must be in (0,1], got {phi}")
     keys = list(series_cols)
     ts_field = df.schema[ts_col]
     val_field = df.schema[value_col]
@@ -945,6 +956,7 @@ def forecast_selector(
     MAE is the expanding mean at the series' last row, which is exactly
     what ``max_by(mae, ts)`` over the per-row frame selected.
     """
+    _check_hw_params("forecast_selector", season_rows, alpha, beta, gamma, phi)
     keys = list(series_cols)
     nv = seasonal_naive_forecast(df, ts_col, value_col, keys, season_rows)
     nv_final = nv.groupBy(*keys).agg(
@@ -953,6 +965,10 @@ def forecast_selector(
 
     m = int(season_rows)
     a_, b2, g_, ph = float(alpha), float(beta), float(gamma), float(phi)
+    # theta_forecast's own defaults: the composed selector always called
+    # it without overrides
+    theta = inspect.signature(theta_forecast).parameters
+    th_a, th_mp = theta["alpha"].default, theta["min_points"].default
     finals_schema = (
         ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
         + ", hw_mae double, hw_damped_mae double, theta_mae double"
@@ -970,9 +986,7 @@ def forecast_selector(
             )
         _fc, _err, hw_mae, _l, _t, _s = hw_numpy(y, m, a_, b2, g_, 1.0)
         _fc, _err, dm_mae, _l, _t, _s = hw_numpy(y, m, a_, b2, g_, ph)
-        # theta_forecast's own defaults (alpha=0.2, min_points=3): the
-        # composed selector always called it without overrides
-        _fc, _err, th_mae = theta_numpy(y, 0.2, 3)
+        _fc, _err, th_mae = theta_numpy(y, th_a, th_mp)
         return pd.DataFrame(
             {
                 **{k: [pdf[k].iloc[0]] for k in keys},

@@ -25,18 +25,29 @@ logical plan; nothing materializes until the caller acts.
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.anomaly import ensemble_flags, rolling_zscore
-from ..operators.esd import gesd_numpy, seasonal_resid
-from ..operators.kalman import kalman_numpy
-from ..operators.spectral import sr_numpy
+from ..operators.esd import esd_anomalies, gesd_numpy, seasonal_resid
+from ..operators.kalman import kalman_level, kalman_numpy
+from ..operators.spectral import spectral_residual, sr_numpy
 from ..operators.timeseries import resample_grid
 
 __all__ = ["detector_suite"]
+
+
+def _defaults(fn) -> dict:
+    """A public operator's keyword defaults: the fused kernel runs each
+    detector exactly as its operator does when called without overrides."""
+    return {
+        k: p.default
+        for k, p in inspect.signature(fn).parameters.items()
+        if p.default is not inspect.Parameter.empty
+    }
 
 
 def detector_suite(
@@ -79,6 +90,10 @@ def detector_suite(
     # grid recomputes + Arrow round trips + joins down to one each.
     snr = kalman_snr
     m = int(season_rows) if season_rows else 0
+    kf, esd, sr = (
+        _defaults(kalman_level), _defaults(esd_anomalies),
+        _defaults(spectral_residual),
+    )
     model_schema = (
         ", ".join(
             f"`{c}` {filled.schema[c].dataType.simpleString()}" for c in keys
@@ -103,15 +118,20 @@ def detector_suite(
         r = kalman_numpy(y, snr=snr)
         kf_score = r["score"]
         kf_flag = pd.array(
-            np.where(np.isnan(kf_score), None, np.abs(kf_score) > 3.0),
+            np.where(
+                np.isnan(kf_score), None, np.abs(kf_score) > kf["threshold"]
+            ),
             dtype="boolean",
         )
         resid = seasonal_resid(y, m)
         esd_flags, _rank = gesd_numpy(
-            resid, max_outliers=int(math.floor(0.05 * n)), alpha=0.05,
-            hybrid=True,
+            resid, max_outliers=int(math.floor(esd["max_anoms"] * n)),
+            alpha=esd["alpha"], hybrid=esd["hybrid"],
         )
-        _sal, sr_score = sr_numpy(y, q=3, score_window=21, extend=5)
+        _sal, sr_score = sr_numpy(
+            y, q=sr["q"], score_window=sr["score_window"],
+            extend=sr["extend"],
+        )
         return pd.DataFrame(
             {
                 **{c: pdf[c].to_numpy() for c in keys},
@@ -121,7 +141,7 @@ def detector_suite(
                 "esd_resid": resid,
                 "esd_flag": esd_flags,
                 "sr_score": sr_score,
-                "sr_flag": sr_score > 3.0,
+                "sr_flag": sr_score > sr["threshold"],
             }
         )
 

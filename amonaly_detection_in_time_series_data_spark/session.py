@@ -13,6 +13,16 @@ for scale-out behavior:
 - ``spark.sql.shuffle.partitions`` defaults to 32 for local[32] testing;
   on a real cluster this should be ~2-3x total cores (or left to AQE with
   ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` high).
+- DataFrame debugging off (``spark.python.sql.dataFrameDebugging.enabled``).
+  With it on, PySpark wraps every ``F.*``/``Column`` call to record its
+  Python call site in the JVM, six py4j round trips per call: building
+  ``plans.pipeline.anomaly_pipeline`` made 1,442 round trips with it and
+  612 without (sf0.001, 4-core host), and on small inputs plan building
+  is a large share of a query's wall time. Errors still raise with the
+  same class and message; what is lost is the Python file/line fragment
+  in an error's query context. PySpark reads the setting once per
+  process, from the first active session, so re-enable it through
+  ``extra_conf`` on the process's first session when debugging a plan.
 """
 
 from __future__ import annotations
@@ -52,6 +62,8 @@ _DEFAULTS = {
     # Keep planning quiet and deterministic in tests.
     "spark.ui.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # No Python call-site capture around every Column call (module doc).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

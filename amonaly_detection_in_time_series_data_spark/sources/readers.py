@@ -24,6 +24,7 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -79,20 +80,56 @@ def select_dtypes(df: DataFrame, include=("numeric",)) -> DataFrame:
     return df.select(*cols)
 
 
-def _nanos_timestamp_cols(path: str) -> set[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — one footer read."""
-    try:
-        import pyarrow.parquet as pq
-        import pyarrow as pa
+def _parquet_footer(
+    spark: SparkSession, path: str
+) -> tuple[set[str], T.StructType | None]:
+    """One parquet file's TIMESTAMP(NANOS) columns and its Spark read
+    schema, both from one ``pyarrow`` footer read.
 
-        schema = pq.read_schema(path)
-        return {
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        }
-    except Exception:
-        return set()
+    The schema is what ``spark.read.parquet`` would infer: a ns timestamp
+    column is ``LongType`` (what ``nanosAsLong`` reads it as), the other
+    columns map as ``from_arrow_schema`` maps them, with tz-naive
+    timestamps as ``TimestampNTZType`` when the session infers NTZ. It is
+    None where the footer does not settle Spark's mapping: INT96
+    timestamps (Spark reads them as timestamps, arrow as ns), ns
+    timestamps nested in a list/struct/map, and arrow types Spark does
+    not convert. Both are empty when the footer cannot be read, e.g. for
+    a directory.
+    """
+    try:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        parquet = pq.read_metadata(path).schema
+        arrow = parquet.to_arrow_schema()
+    except (ImportError, OSError, ValueError):  # no pyarrow, no file, no footer
+        return set(), None
+
+    def is_ns(t) -> bool:
+        return pa.types.is_timestamp(t) and t.unit == "ns"
+
+    def leaves(t):
+        if pa.types.is_nested(t):
+            for i in range(t.num_fields):
+                yield from leaves(t.field(i).type)
+        else:
+            yield t
+
+    ns = {f.name for f in arrow if is_ns(f.type)}
+    int96 = any(parquet.column(i).physical_type == "INT96" for i in range(len(parquet)))
+    nested_ns = any(is_ns(t) for f in arrow if f.name not in ns for t in leaves(f.type))
+    if int96 or nested_ns:
+        return ns, None
+    try:
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+        return ns, from_arrow_schema(
+            pa.schema([f.with_type(pa.int64()) if f.name in ns else f for f in arrow]),
+            prefer_timestamp_ntz=ntz.lower() == "true",
+        )
+    except TypeError:  # an arrow type Spark does not convert
+        return ns, None
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -103,9 +140,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TimestampType by integer-dividing to µs (truncation — matching how
     DuckDB/Spark both narrow ns). Session timezone is pinned UTC so the
     values equal the tz-naive pandas reference's.
+
+    The read schema comes from the file's parquet footer
+    (:func:`_parquet_footer`, ~1 ms) and is handed to ``spark.read.schema``,
+    so building the DataFrame runs no Spark job; ``spark.read.parquet``
+    alone runs a schema-inference job on every call (the call took 64 ms
+    with it and 22 ms without in perfbench's traced ``pipeline`` run on a
+    4-core host). Where the footer does not settle the schema (a
+    directory, an unreadable footer, the types :func:`_parquet_footer`
+    lists), Spark infers it as before.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_timestamp_cols(path)
+    ns_cols, schema = _parquet_footer(spark, path)
     if ns_cols:
         # Must hold on ANY session we're handed (e.g. a harness-built one),
         # not just our own session.py factory: without it the vectorized
@@ -115,7 +161,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass  # conf removed/immutable -> fall through; read may still work
-    df = spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     for f in df.schema.fields:
         if f.name in ns_cols and isinstance(f.dataType, T.LongType):
             df = df.withColumn(
@@ -191,6 +238,34 @@ def load_csv(
     return normalize_columns(df)
 
 
+def _planned_partitions(plan, adaptive: bool) -> int | None:
+    """The partition count a physical plan will run with, read from the
+    plan alone (no ``execute()``: that runs a plan's scalar subqueries on
+    the driver), or None where only running it would tell.
+
+    Walks down the chain of single-child nodes, which keep their child's
+    partitioning: a file scan's splits are planned on the driver, an
+    exchange declares its count, except that under AQE an exchange the
+    caller did not size is re-sized at run time.
+    """
+    while True:
+        name = plan.getClass().getSimpleName()
+        if name == "ShuffleExchangeExec":
+            if adaptive and plan.shuffleOrigin().toString() != "REPARTITION_BY_NUM":
+                return None
+            return plan.numPartitions()
+        if name == "FileSourceScanExec":
+            try:
+                return plan.inputRDD().getNumPartitions()
+            except IllegalArgumentException:  # its filters need a subquery's result
+                return None
+        n = plan.outputPartitioning().numPartitions()
+        children = plan.children()
+        if children.size() != 1 or n == 1 or name == "CoalesceExec":
+            return n or None
+        plan = children.apply(0)
+
+
 def spread_small(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """Round-robin repartition an under-split scan across the cluster.
 
@@ -200,24 +275,24 @@ def spread_small(df: DataFrame, partitions: int | None = None) -> DataFrame:
     Only safe where downstream results don't depend on row order
     within a partition (aggregates of min/max/int, per-row maps, joins).
 
-    The repartition is GUARDED on the input's actual partition count
-    (r15, closing the r14 verdict's scale-killer item): when the scan
-    already arrives with >= the target partitions — the normal case for
-    any data-sized table at cluster scale, where a 100 TB scan shows up
-    in thousands of splits — the input is returned unchanged, so no
+    The repartition is GUARDED on the input's partition count: when the
+    input already arrives with >= the target partitions — the normal
+    case for any data-sized table at cluster scale, where a 100 TB scan
+    shows up in thousands of splits — it is returned unchanged, so no
     full-table round-robin shuffle (and no accidental COALESCE to
-    ``defaultParallelism``) is ever planned. The probe reads the
-    physical plan's partitioning driver-side without running a job;
-    plans that AQE wraps (i.e. that already contain an exchange) skip
-    the probe and keep the explicit repartition, because executing an
-    adaptive plan's RDD would materialize its shuffle stages.
+    ``defaultParallelism``) is ever planned. The count is read from the
+    physical plan without running anything (:func:`_planned_partitions`;
+    for an AQE plan, from its plan before any stage runs). Where the plan
+    alone does not tell — e.g. a shuffle AQE may coalesce, a join or a
+    union — the input is repartitioned.
     """
     sc = df.sparkSession.sparkContext
     target = partitions or sc.defaultParallelism
     plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
-        if plan.execute().getNumPartitions() >= target:
-            return df
+    adaptive = plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+    n = _planned_partitions(plan.initialPlan() if adaptive else plan, adaptive)
+    if n is not None and n >= target:
+        return df
     return df.repartition(target)
 
 

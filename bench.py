@@ -10,7 +10,9 @@ work being measured).
 Since r8 the headline "value" is the sum of per-query MEDIANS of
 (wall - JVM GC time) over 5 in-session repetitions — best-of-3 was not
 noise-robust on this host (SCALING.md §11). "queries_detail" carries
-median/best/gc plus the driver-side plan time per query.
+median/best/gc plus the driver-side plan time per query. A query that
+raises is reported there as {"error": ...} (traceback on stderr) and is
+left out of "value" and the other per-query maps; the run goes on.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ import os
 import re
 import sys
 import time
+import traceback
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -201,35 +204,45 @@ def main() -> None:
     # fingerprint is "plans", so cross-round drift can be attributed:
     # fingerprint unchanged -> host noise, changed -> the plan changed.
     timings: dict[str, float] = {}
-    detail: dict[str, dict[str, float]] = {}
+    detail: dict[str, dict] = {}
     cold: dict[str, float] = {}
     plans: dict[str, str] = {}
-    for name in HEADLINE:
+
+    def time_query(name: str) -> None:
         fn = qs[name]
-        plans[name] = plan_fingerprint(fn(spark, sf_dir))
+        fingerprint = plan_fingerprint(fn(spark, sf_dir))
         t0 = time.perf_counter()
         fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
         plan_sec = time.perf_counter() - t0
         reps: list[float] = []
         minus_gc: list[float] = []
-        for i in range(5):
+        for _ in range(5):
             gc0 = jvm_gc_ms()
             start = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             elapsed = time.perf_counter() - start
             gc_sec = (jvm_gc_ms() - gc0) / 1000.0
-            if i == 0:
-                cold[name] = round(elapsed, 3)
             reps.append(elapsed)
             minus_gc.append(elapsed - gc_sec)
-        med = sorted(minus_gc)[len(minus_gc) // 2]
-        timings[name] = round(med, 3)
+        plans[name] = fingerprint
+        cold[name] = round(reps[0], 3)
+        timings[name] = round(sorted(minus_gc)[len(minus_gc) // 2], 3)
         detail[name] = {
             "median": round(sorted(reps)[len(reps) // 2], 3),
             "best": round(min(reps), 3),
             "gc": round(sum(r - m for r, m in zip(reps, minus_gc)), 3),
             "plan": round(plan_sec, 3),
         }
+
+    # One raising query must not lose the artifact: it gets
+    # {"error": ...} in "queries_detail" and no entry in the other maps,
+    # so "value" sums the queries that ran.
+    for name in HEADLINE:
+        try:
+            time_query(name)
+        except Exception as e:
+            traceback.print_exc()
+            detail[name] = {"error": f"{type(e).__name__}: {e}"[:2000]}
 
     # long-document scale ladder (NOT part of the headline total, which
     # is the cross-round comparable series): quality_rules +

@@ -8,6 +8,8 @@ keep the r14 behavior: repartition to full parallelism."""
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import functions as F
 
 from amonaly_detection_in_time_series_data_spark.sources.readers import (
@@ -62,3 +64,33 @@ def test_values_unchanged_either_way(spark):
     under = spark.range(0, 100, 1, 1)
     assert sorted(r.id for r in spread_small(pre).collect()) == list(range(100))
     assert sorted(r.id for r in spread_small(under).collect()) == list(range(100))
+
+
+def test_post_shuffle_input_sized_by_caller_is_kept(spark):
+    # an explicit repartition(n) is one AQE never re-sizes, so its count
+    # is known from the plan: enough partitions -> returned unchanged
+    pre = spark.range(0, 1000, 1, 2).repartition(16)
+    assert spread_small(pre, partitions=8) is pre
+    out = spread_small(pre.withColumn("v", F.col("id") + 1), partitions=32)
+    assert "RoundRobinPartitioning(32" in _plan(out)
+
+
+def test_probe_runs_no_job_even_with_a_scalar_subquery(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
+    avg_chars = docs.select(F.avg("n_chars"))
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        for enabled in ("true", "false"):
+            spark.conf.set("spark.sql.adaptive.enabled", enabled)
+            q = docs.filter(F.col("n_chars") > avg_chars.scalar())
+            group = f"spread-probe-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "probe")
+            try:
+                out = spread_small(q, partitions=64)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+            assert "RoundRobinPartitioning(64" in _plan(out)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
