@@ -27,9 +27,9 @@ and the window is cut at a bucket boundary whenever
 tracking would cost O(n)) — the paper's own approximation.
 
 Execution: sequential per series (the window state is the algorithm),
-so numpy/python inside ONE ``applyInPandas`` per series group; the
-streaming twin persists the bucket arrays and replays BIT-exactly
-(same code path, losslessly round-tripped state).
+so one Python loop, :func:`adwin_kernel`, inside ONE ``applyInPandas``
+per series group; the streaming twin folds the same kernel over
+losslessly round-tripped bucket arrays and replays BIT-exactly.
 """
 
 from __future__ import annotations
@@ -141,6 +141,44 @@ class AdwinState:
         return self.total / n if n else float("nan")
 
 
+ADWIN_INIT = ([], [], [])  # bucket sums, sums of squares, counts
+
+
+def adwin_kernel(state, xs, *, delta: float, max_buckets: int):
+    """The ADWIN pass, resumable: ``state`` is the exponential
+    histogram's ``(sums, sqs, counts)`` lists after the values already
+    seen (:data:`ADWIN_INIT` before any), ``xs`` the next values in
+    time order. Returns the new state and, per value, ``(window length,
+    window mean, changed)`` after folding it in. :func:`adwin_numpy`
+    and the streaming twin both run it."""
+    st = AdwinState(delta, max_buckets, *state)
+    out = []
+    for x in xs:
+        if x is None or x != x:
+            raise ValueError("adwin_changes: null values in series (fill first)")
+        changed = st.add(x)
+        out.append((st.n, st.mean(), changed))
+    return (st.sums, st.sqs, st.counts), out
+
+
+def adwin_numpy(y, delta: float, max_buckets: int):
+    """:func:`adwin_kernel` over one whole series from its initial
+    state, as :func:`adwin_changes` runs it. Returns ``(n, mean,
+    change)`` arrays (int64, float64, bool)."""
+    import numpy as np
+
+    _, rows = adwin_kernel(
+        ADWIN_INIT, np.asarray(y, dtype="float64").tolist(),
+        delta=delta, max_buckets=max_buckets,
+    )
+    n, mean, change = zip(*rows) if rows else ((), (), ())
+    return (
+        np.array(n, dtype="int64"),
+        np.array(mean, dtype="float64"),
+        np.array(change, dtype=bool),
+    )
+
+
 def adwin_changes(
     df: DataFrame,
     ts_col: str,
@@ -166,25 +204,18 @@ def adwin_changes(
     )
 
     def run(pdf):
-        import numpy as np
         import pandas as pd
 
         pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        if np.isnan(y).any():
-            raise ValueError("adwin_changes: null values in series (fill first)")
-        st = AdwinState(delta=delta, max_buckets=max_buckets)
-        ns, means, flags = [], [], []
-        for x in y:
-            flags.append(st.add(x))
-            ns.append(st.n)
-            means.append(st.mean())
+        ns, means, flags = adwin_numpy(
+            pdf[value_col].to_numpy(dtype="float64"), delta, max_buckets
+        )
         return pd.DataFrame(
             {
                 **{k: pdf[k].to_numpy() for k in keys},
                 ts_col: pdf[ts_col].to_numpy(),
                 value_col: pdf[value_col].to_numpy(),
-                "adwin_n": pd.array(ns, dtype="int64"),
+                "adwin_n": ns,
                 "adwin_mean": means,
                 "adwin_change": flags,
             }

@@ -24,6 +24,7 @@ The engine ships three tiers:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -1069,6 +1070,39 @@ def seasonal_decompose(
     )
 
 
+def cooldown_kernel(last, times, cooldown_s: float):
+    """Fixed-cooldown delivery, resumable: ``last`` is the time (epoch
+    seconds) of the last DELIVERED alert, None before any, and ``times``
+    are the next alerts' times in order. An alert is delivered when it
+    comes more than ``cooldown_s`` after the last delivery. Returns the
+    new ``last`` and one delivered flag per alert. The fixed-cooldown
+    policy of :func:`throttle_alerts` and its streaming twin both run
+    it."""
+    out = []
+    for t in times:
+        delivered = last is None or t - last > cooldown_s
+        if delivered:
+            last = t
+        out.append(delivered)
+    return last, out
+
+
+def _fixed_cooldown_pick(pdf, *, keys, ts_col, tie):
+    """One key's alert rows -> its delivered ``(*keys, __dts, __d)``
+    rows under the fixed-cooldown policy; the cooldown in seconds is the
+    constant ``__cd`` column."""
+    import pandas as pd
+
+    pdf = pdf.sort_values([ts_col, *tie]).reset_index(drop=True)
+    _, picks = cooldown_kernel(
+        None, [t.timestamp() for t in pdf[ts_col]], float(pdf["__cd"].iloc[0])
+    )
+    d = pdf.loc[picks]
+    return pd.DataFrame(
+        {**{k: d[k].to_numpy() for k in keys}, "__dts": d[ts_col].to_numpy(), "__d": 1}
+    )
+
+
 def throttle_alerts(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -1094,7 +1128,9 @@ def throttle_alerts(
       sequential recursion (the suppression decision feeds its own
       predicate), so it runs per key in Arrow ``applyInPandas`` — over
       ALERT ROWS ONLY, which are a sliver of the stream, so the Python
-      stage sees alert-cardinality data, never the raw 100 TB.
+      stage sees alert-cardinality data, never the raw 100 TB. The
+      recursion is :func:`cooldown_kernel`, shared with the streaming
+      twin ``streaming.rolling.streaming_throttle_alerts``.
 
     The two differ exactly when a burst outlasts the cooldown: a
     20-minute burst with a 5-minute cooldown delivers 1 alert under
@@ -1124,33 +1160,23 @@ def throttle_alerts(
             .select(*keys, F.col(ts_col).alias("__dts"), F.lit(1).alias("__d"))
         )
     else:
+        # the cooldown in seconds under Spark's interval semantics, as a
+        # constant-folded column of the grouped input: no job at build time
         sec = F.unix_timestamp(
             F.to_timestamp(F.lit("1970-01-01 00:00:00"))
             + F.expr(f"INTERVAL {cooldown}")
         ).cast("double")
-        cooldown_s = alerts.sparkSession.range(1).select(sec).collect()[0][0]
         tie = list(order_tiebreak)
         schema = ", ".join(
             f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys
         ) + f", `__dts` {df.schema[ts_col].dataType.simpleString()}, __d int"
-
-        def pick(pdf):
-            pdf = pdf.sort_values([ts_col, *tie]).reset_index(drop=True)
-            out_rows = []
-            last = None
-            for _, r in pdf.iterrows():
-                t = r[ts_col].timestamp()
-                if last is None or t - last > cooldown_s:
-                    out_rows.append([r[k] for k in keys] + [r[ts_col], 1])
-                    last = t
-            import pandas as pd
-
-            return pd.DataFrame(out_rows, columns=[*keys, "__dts", "__d"])
-
         delivered = (
-            alerts.select(*keys, ts_col, *tie)
+            alerts.select(*keys, ts_col, *tie, sec.alias("__cd"))
             .groupBy(*keys)
-            .applyInPandas(pick, schema)
+            .applyInPandas(
+                partial(_fixed_cooldown_pick, keys=keys, ts_col=ts_col, tie=tie),
+                schema,
+            )
         )
     joined = df.join(
         delivered.withColumnRenamed("__dts", ts_col),

@@ -24,18 +24,53 @@ Defaults: R from the Hall difference estimator ``mean(diff(y)^2)/2``
 Initialization is the standard exact-diffuse step: the first
 observation initializes the level (its innovation/score are null).
 
-Execution: the recursion is sequential per series — numpy inside ONE
-Arrow-batched ``applyInPandas`` per series group; O(1) state per
-series for the filter, O(n) for the smoother's stored gains.
+Execution: the recursion is sequential per series — one Python loop
+inside ONE Arrow-batched ``applyInPandas`` per series group; O(1) state
+per series for the filter, O(n) for the smoother's stored gains. The
+filter loop is :func:`kalman_kernel`, the same kernel the streaming
+twin ``streaming.rolling.streaming_kalman_level`` folds.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
 __all__ = ["kalman_level", "kalman_numpy"]
+
+KALMAN_INIT = (None, None)  # (level, variance) before the first observation
+
+
+def kalman_kernel(state, ys, Q, R):
+    """The filter recursion, resumable: ``state`` is the ``(level,
+    variance)`` pair after the rows already seen (:data:`KALMAN_INIT`
+    before any), ``ys`` the next values in time order. Returns the new
+    state and, per value, ``(pred, pred_var, innov, innov_var, score,
+    level, var)``; the first observation of a series pins the level
+    (exact diffuse init) and has no prediction, so its first five are
+    None. The batch :func:`kalman_numpy` and the streaming twin both
+    run this loop."""
+    a, P = state
+    out = []
+    for y in ys:
+        if y is None or y != y:
+            raise ValueError("kalman_level: null values in series (fill first)")
+        y = float(y)
+        if a is None:
+            a, P = y, R
+            out.append((None, None, None, None, None, a, P))
+            continue
+        a_pred = a
+        p_pred = P + Q
+        F = p_pred + R
+        v = y - a_pred
+        K = p_pred / F
+        a = a_pred + K * v
+        P = (1.0 - K) * p_pred
+        out.append((a_pred, p_pred, v, F, v / math.sqrt(F), a, P))
+    return (a, P), out
 
 
 def kalman_numpy(y, q_var=None, r_var=None, snr=0.01):
@@ -46,12 +81,11 @@ def kalman_numpy(y, q_var=None, r_var=None, snr=0.01):
 
     y = np.asarray(y, dtype="float64")
     n = len(y)
-    out = {
-        k: np.full(n, np.nan)
-        for k in ("pred", "level", "innov", "innov_var", "score", "smooth")
-    }
     if n == 0:
-        return out
+        return {
+            k: np.full(0, np.nan)
+            for k in ("pred", "level", "innov", "innov_var", "score", "smooth")
+        }
     if r_var is None:
         if n >= 3:
             d = np.diff(y)
@@ -61,36 +95,17 @@ def kalman_numpy(y, q_var=None, r_var=None, snr=0.01):
         r_var = max(r_var, 1e-12)
     if q_var is None:
         q_var = float(snr) * r_var
-    R, Q = float(r_var), float(q_var)
-
-    a = np.empty(n)  # filtered level
-    P = np.empty(n)  # filtered variance
-    a_pred = np.empty(n)
-    P_pred = np.empty(n)
-    # exact diffuse init: first observation pins the level
-    a[0], P[0] = y[0], R
-    a_pred[0], P_pred[0] = np.nan, np.nan
-    for t in range(1, n):
-        a_pred[t] = a[t - 1]
-        P_pred[t] = P[t - 1] + Q
-        F = P_pred[t] + R
-        v = y[t] - a_pred[t]
-        K = P_pred[t] / F
-        a[t] = a_pred[t] + K * v
-        P[t] = (1.0 - K) * P_pred[t]
-        out["pred"][t] = a_pred[t]
-        out["innov"][t] = v
-        out["innov_var"][t] = F
-        out["score"][t] = v / np.sqrt(F)
-    out["level"] = a
+    _, rows = kalman_kernel(KALMAN_INIT, y.tolist(), float(q_var), float(r_var))
+    pred, p_pred, innov, innov_var, score, a, P = zip(*rows)
     # RTS backward pass: C_t = P_t / P_pred_{t+1}
-    sm = np.empty(n)
+    sm = [0.0] * n
     sm[n - 1] = a[n - 1]
     for t in range(n - 2, -1, -1):
-        C = P[t] / P_pred[t + 1]
-        sm[t] = a[t] + C * (sm[t + 1] - a_pred[t + 1])
-    out["smooth"] = sm
-    return out
+        C = P[t] / p_pred[t + 1]
+        sm[t] = a[t] + C * (sm[t + 1] - pred[t + 1])
+    cols = dict(pred=pred, level=a, innov=innov, innov_var=innov_var,
+                score=score, smooth=sm)
+    return {k: np.array(v, dtype="float64") for k, v in cols.items()}
 
 
 def kalman_level(
@@ -131,10 +146,10 @@ def kalman_level(
         import pandas as pd
 
         pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        if np.isnan(y).any():
-            raise ValueError("kalman_level: null values in series (fill first)")
-        r = kalman_numpy(y, q_var=q_var, r_var=r_var, snr=snr)
+        r = kalman_numpy(
+            pdf[value_col].to_numpy(dtype="float64"),
+            q_var=q_var, r_var=r_var, snr=snr,
+        )
         score = r["score"]
         flag = pd.array(
             np.where(np.isnan(score), None, np.abs(score) > thr), dtype="boolean"

@@ -1029,48 +1029,63 @@ def forecast_selector(
     )
 
 
-def theta_numpy(y, a: float, mp: int):
-    """The causal two-line theta recursion on one series — the exact
-    loop :func:`theta_forecast` always ran, extracted so the fused
-    :func:`forecast_selector` kernel calls the identical code
-    (bit-equal backtests). Returns ``(fc, err, mae)``."""
-    import numpy as np
+# (count, sum t, sum y, sum t^2, sum t*y, SES level, error sum, error count)
+THETA_INIT = (0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0)
 
-    y = np.asarray(y, dtype="float64")
-    n = len(y)
-    fc = np.full(n, np.nan)
-    err = np.full(n, np.nan)
-    mae = np.full(n, np.nan)
-    sx = sy = sxx = sxy = 0.0
-    cnt = 0
-    ses = y[0] if n else 0.0
-    err_sum = 0.0
-    err_n = 0
-    for t in range(n):
+
+def theta_kernel(state, ys, a: float, mp: int):
+    """The causal two-line theta recursion, resumable: ``state`` holds
+    the expanding-OLS sums, the SES level and the backtest accumulators
+    after the values already seen (:data:`THETA_INIT` before any), and
+    ``ys`` are the next values in time order. Returns the new state and,
+    per value, ``(forecast, abs_err, mae)`` (None before the line
+    exists). :func:`theta_numpy` and the streaming twin both run it."""
+    cnt, sx, sy, sxx, sxy, ses, err_sum, err_n = state
+    out = []
+    for y in ys:
+        if y is None or y != y:
+            raise ValueError("theta_forecast: null values in series (fill first)")
+        y = float(y)
+        t = cnt
+        if cnt == 0:
+            ses = y
+        fc = err = None
+        z = y
         if cnt >= mp:
             det = cnt * sxx - sx * sx
             if det > 0:
                 b = (cnt * sxy - sx * sy) / det
                 a0 = (sy - b * sx) / cnt
                 line_t = a0 + b * t
-                fc[t] = 0.5 * (line_t + ses)
-                err[t] = abs(y[t] - fc[t])
-                err_sum += err[t]
+                fc = 0.5 * (line_t + ses)
+                err = abs(y - fc)
+                err_sum += err
                 err_n += 1
-                z_t = 2.0 * y[t] - line_t
-            else:
-                z_t = y[t]
-        else:
-            z_t = y[t]
-        ses = a * z_t + (1.0 - a) * ses
+                z = 2.0 * y - line_t
+        ses = a * z + (1.0 - a) * ses
         sx += t
-        sy += y[t]
+        sy += y
         sxx += t * t
-        sxy += t * y[t]
+        sxy += t * y
         cnt += 1
-        if err_n:
-            mae[t] = err_sum / err_n
-    return fc, err, mae
+        out.append((fc, err, err_sum / err_n if err_n else None))
+    return (cnt, sx, sy, sxx, sxy, ses, err_sum, err_n), out
+
+
+def _whole_series(kernel, init, y, *params):
+    """``kernel`` over one whole series from ``init``: its per-row
+    ``(forecast, abs_err, mae)`` as three float64 arrays (None -> NaN)."""
+    import numpy as np
+
+    _, rows = kernel(init, np.asarray(y, dtype="float64").tolist(), *params)
+    return tuple(np.array(rows, dtype="float64").reshape(-1, 3).T)
+
+
+def theta_numpy(y, a: float, mp: int):
+    """:func:`theta_kernel` over one whole series, as
+    :func:`theta_forecast` and the fused :func:`forecast_selector`
+    kernel run it (bit-equal backtests). Returns ``(fc, err, mae)``."""
+    return _whole_series(theta_kernel, THETA_INIT, y, a, mp)
 
 
 def theta_forecast(
@@ -1100,7 +1115,9 @@ def theta_forecast(
     ``min_points`` rows — no line yet), ``abs_err``, ``theta_mae``
     (expanding backtest mean — directly comparable to ``naive_mae`` /
     ``hw_mae``). Sequential per series: one Arrow ``applyInPandas``
-    per group, O(1) state (five OLS sums + the SES scalar).
+    per group, O(1) state (five OLS sums + the SES scalar). The
+    recursion is :func:`theta_kernel`, which the streaming twin
+    ``streaming.rolling.streaming_theta`` folds too.
     """
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"theta_forecast: alpha must be in (0,1), got {alpha}")
@@ -1117,14 +1134,10 @@ def theta_forecast(
     mp = int(min_points)
 
     def fit(pdf):
-        import numpy as np
         import pandas as pd
 
         pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        if np.isnan(y).any():
-            raise ValueError("theta_forecast: null values in series (fill first)")
-        fc, err, mae = theta_numpy(y, a, mp)
+        fc, err, mae = theta_numpy(pdf[value_col].to_numpy(dtype="float64"), a, mp)
         return pd.DataFrame(
             {
                 **{k: pdf[k].to_numpy() for k in keys},
@@ -1141,6 +1154,55 @@ def theta_forecast(
         .groupBy(*keys)
         .applyInPandas(fit, out_schema)
     )
+
+
+# (size level, interval level, size seen, interval seen, periods since
+# the last demand, error sum, error count)
+CROSTON_INIT = (0.0, 0.0, False, False, 0, 0.0, 0)
+
+
+def croston_kernel(state, ys, a: float, factor: float):
+    """Croston's two demand-only SES recursions, resumable: ``state``
+    is :data:`CROSTON_INIT` before any value, ``ys`` the next periods'
+    demands in time order. Returns the new state and, per period,
+    ``(forecast, abs_err, mae)`` (None before the second demand).
+    :func:`croston_numpy` and the streaming twin both run it."""
+    z, p, has_z, has_p, gap, err_sum, err_n = state
+    out = []
+    for y in ys:
+        if y is None or y != y:
+            raise ValueError("croston_forecast: null values in series (fill first)")
+        y = float(y)
+        if y < 0:
+            raise ValueError("croston_forecast: negative demand")
+        fc = err = None
+        if has_z and has_p and p > 0:
+            fc = factor * z / p
+            err = abs(y - fc)
+            err_sum += err
+            err_n += 1
+        gap += 1
+        if y > 0:
+            if not has_z:
+                # the first demand initializes the size; the interval
+                # initializes on the SECOND demand
+                z, has_z = y, True
+            elif not has_p:
+                p, has_p = float(gap), True
+                z = a * y + (1.0 - a) * z
+            else:
+                z = a * y + (1.0 - a) * z
+                p = a * gap + (1.0 - a) * p
+            gap = 0
+        out.append((fc, err, err_sum / err_n if err_n else None))
+    return (z, p, has_z, has_p, gap, err_sum, err_n), out
+
+
+def croston_numpy(y, a: float, factor: float):
+    """:func:`croston_kernel` over one whole series, as
+    :func:`croston_forecast` runs it; ``factor`` is the SBA correction
+    ``1 - a/2`` (1.0 for plain Croston). Returns ``(fc, err, mae)``."""
+    return _whole_series(croston_kernel, CROSTON_INIT, y, a, factor)
 
 
 def croston_forecast(
@@ -1168,7 +1230,9 @@ def croston_forecast(
     from the previous period), ``abs_err``, ``croston_mae`` (expanding
     backtest over ALL periods, zeros included — directly comparable to
     ``naive_mae``). Sequential per series: one Arrow ``applyInPandas``
-    per group, O(1) state (two SES scalars + a gap counter).
+    per group, O(1) state (two SES scalars + a gap counter). The
+    recursion is :func:`croston_kernel`, which the streaming twin
+    ``streaming.rolling.streaming_croston`` folds too.
 
     Input contract: a regular grid with zeros filled in (compose after
     ``resample_grid`` + ``fill_zero``); negative demand raises.
@@ -1186,43 +1250,10 @@ def croston_forecast(
     factor = (1.0 - a / 2.0) if sba else 1.0
 
     def fit(pdf):
-        import numpy as np
         import pandas as pd
 
         pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        n = len(y)
-        if np.isnan(y).any():
-            raise ValueError("croston_forecast: null values in series (fill first)")
-        if (y < 0).any():
-            raise ValueError("croston_forecast: negative demand")
-        fc = np.full(n, np.nan)
-        err = np.full(n, np.nan)
-        mae = np.full(n, np.nan)
-        z = p = None  # SES states: demand size, inter-demand interval
-        gap = 0
-        err_sum = 0.0
-        err_n = 0
-        for t in range(n):
-            if z is not None and p is not None and p > 0:
-                fc[t] = factor * z / p
-                err[t] = abs(y[t] - fc[t])
-                err_sum += err[t]
-                err_n += 1
-            gap += 1
-            if y[t] > 0:
-                if z is None:
-                    z = y[t]  # first demand initializes the size
-                    # no interval yet — p initializes on the SECOND demand
-                elif p is None:
-                    p = float(gap)
-                    z = a * y[t] + (1.0 - a) * z
-                else:
-                    z = a * y[t] + (1.0 - a) * z
-                    p = a * gap + (1.0 - a) * p
-                gap = 0
-            if err_n:
-                mae[t] = err_sum / err_n
+        fc, err, mae = croston_numpy(pdf[value_col].to_numpy(dtype="float64"), a, factor)
         return pd.DataFrame(
             {
                 **{k: pdf[k].to_numpy() for k in keys},

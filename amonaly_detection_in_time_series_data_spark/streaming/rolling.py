@@ -40,6 +40,18 @@ split of a series through a state round trip equals one pass (pinned
 for every fold by ``tests/test_streaming_folds.py``); the replay-parity
 tests in ``tests/slow/test_streaming.py`` pin each twin against its
 batch operator.
+
+Where the batch operator is itself a per-key recursion, the arithmetic
+lives once, as a resumable kernel ``(state, values) -> (state,
+outputs)`` in the batch operator's module, and the twin's fold is only
+row plumbing around it: ``operators.kalman.kalman_kernel``,
+``operators.timeseries.theta_kernel`` / ``croston_kernel``,
+``operators.adwin.adwin_kernel`` and ``operators.anomaly.cooldown_kernel``
+(the fixed-cooldown throttle). The batch faces run the same kernel from
+its initial state, so batch == stream holds by construction (pinned
+without Spark in ``tests/test_streaming_folds.py``). The folds import
+their kernel lazily, so importing this module does not import the
+operators.
 """
 
 from __future__ import annotations
@@ -614,25 +626,17 @@ def streaming_trend_ols(
 
 
 def _kalman_fold(state, rows, *, Q, R, thr):
-    a, P = state  # (None, None) until the first observation
+    from ..operators.kalman import kalman_kernel
+
+    rows = list(rows)
+    state, res = kalman_kernel(state, [r[2] for r in rows], Q, R)
     out = []
-    for event_id, ts, y in rows:
-        y = float(y)
-        if a is None:
-            a, P = y, R
-            out.append((event_id, ts, y, None, a, None, None, None))
-            continue
-        a_pred = a
-        p_pred = P + Q
-        F_t = p_pred + R
-        v = y - a_pred
-        K = p_pred / F_t
-        a = a_pred + K * v
-        P = (1.0 - K) * p_pred
-        sd = math.sqrt(F_t)
-        score = v / sd
-        out.append((event_id, ts, y, a_pred, a, sd, score, abs(score) > thr))
-    return (a, P), out
+    for (event_id, ts, y), (pred, _, _, F_t, score, level, _) in zip(rows, res):
+        sd = flag = None
+        if pred is not None:  # the first observation has no prediction
+            sd, flag = math.sqrt(F_t), abs(score) > thr
+        out.append((event_id, ts, float(y), pred, level, sd, score, flag))
+    return state, out
 
 
 def streaming_kalman_level(
@@ -653,21 +657,23 @@ def streaming_kalman_level(
     from the whole series (Hall difference estimator), which a stream
     cannot see.
 
-    Both sides execute the identical IEEE expression sequence
-    (predict, innovate, gain, update), so the stream equals the batch
-    operator BIT-FOR-BIT on in-order replay — asserted exactly in the
-    parity test.
+    Both sides run the same kernel,
+    :func:`operators.kalman.kalman_kernel`, so the stream equals the
+    batch operator BIT-FOR-BIT on in-order replay — asserted exactly in
+    the parity test.
     """
     if q_var is None or r_var is None:
         raise ValueError(
             "streaming_kalman_level: q_var and r_var must be explicit — "
             "a stream cannot estimate R from the full series"
         )
+    from ..operators.kalman import KALMAN_INIT
+
     return _keyed_fold(
         events,
         partial(_kalman_fold, Q=float(q_var), R=float(r_var), thr=float(threshold)),
         cols=("event_id", "ts", "value"),
-        init=(None, None),
+        init=KALMAN_INIT,
         state_schema="level double, var double",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
@@ -732,18 +738,15 @@ def streaming_episode_assign(
 
 
 def _adwin_fold(state, rows, *, delta, max_buckets):
-    from ..operators.adwin import AdwinState
+    from ..operators.adwin import adwin_kernel
 
-    sums, sqs, counts = state
-    st = AdwinState(
-        delta=delta, max_buckets=max_buckets, sums=sums, sqs=sqs, counts=counts
+    rows = list(rows)
+    state, res = adwin_kernel(
+        state, [r[2] for r in rows], delta=delta, max_buckets=max_buckets
     )
-    out = []
-    for event_id, ts, value in rows:
-        v = float(value)
-        changed = st.add(v)
-        out.append((event_id, ts, v, st.n, st.mean(), changed))
-    return (list(st.sums), list(st.sqs), list(st.counts)), out
+    return state, [
+        (event_id, ts, float(v), *r) for (event_id, ts, v), r in zip(rows, res)
+    ]
 
 
 def streaming_adwin(
@@ -756,15 +759,17 @@ def streaming_adwin(
     :func:`operators.adwin.adwin_changes`. ADWIN is a streaming
     algorithm by construction: the persisted state IS its exponential
     histogram (O(max_buckets * log n) bucket (sum, count) pairs), and
-    both sides run the SAME ``AdwinState`` code path over losslessly
-    round-tripped float64/int64 arrays, so replay equals the batch
-    operator BIT-for-bit (asserted exactly in the parity test).
+    both sides run the same kernel, :func:`operators.adwin.adwin_kernel`,
+    over losslessly round-tripped float64/int64 arrays, so replay equals
+    the batch operator BIT-for-bit (asserted exactly in the parity test).
     """
+    from ..operators.adwin import ADWIN_INIT
+
     return _keyed_fold(
         events,
         partial(_adwin_fold, delta=delta, max_buckets=max_buckets),
         cols=("event_id", "ts", "value"),
-        init=([], [], []),
+        init=ADWIN_INIT,
         state_schema="sums array<double>, sqs array<double>, counts array<long>",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
@@ -819,20 +824,19 @@ def streaming_quantiles(
 
 def _throttle_fold(state, rows, *, cooldown_seconds, policy):
     last_alert, last_delivered = state
-    out = []
-    for event_id, ts, flag in rows:
-        flag = int(flag) if flag is not None else 0
-        delivered = 0
-        if flag == 1:
-            t = ts.timestamp()
-            if policy == "quiet-period":
-                if last_alert is None or t - last_alert > cooldown_seconds:
-                    delivered = 1
-                last_alert = t
-            elif last_delivered is None or t - last_delivered > cooldown_seconds:
-                delivered = 1
-                last_delivered = t
-        out.append((event_id, ts, flag, delivered))
+    rows = [(event_id, ts, 0 if f is None else int(f)) for event_id, ts, f in rows]
+    times = [ts.timestamp() for _, ts, f in rows if f == 1]
+    if policy == "quiet-period":
+        picks = []
+        for t in times:
+            picks.append(last_alert is None or t - last_alert > cooldown_seconds)
+            last_alert = t
+    else:
+        from ..operators.anomaly import cooldown_kernel
+
+        last_delivered, picks = cooldown_kernel(last_delivered, times, cooldown_seconds)
+    picks = iter(picks)
+    out = [(event_id, ts, f, int(f == 1 and next(picks))) for event_id, ts, f in rows]
     return (last_alert, last_delivered), out
 
 
@@ -852,7 +856,9 @@ def streaming_throttle_alerts(
     DELIVERED ts (fixed-cooldown re-arms on delivery) — O(1) however
     long the stream. Both batch policies reproduce exactly for in-order
     replay (asserted, not approximate: the decision rule is pure
-    timestamp comparisons, no float accumulation).
+    timestamp comparisons, no float accumulation); fixed-cooldown runs
+    the batch operator's own kernel,
+    :func:`operators.anomaly.cooldown_kernel`.
 
     Input: a scored stream carrying ``user_id, event_id, ts`` and the
     flag column (a NULL flag is no alert). Output: same grain plus
@@ -976,40 +982,11 @@ def streaming_kmv(
 
 
 def _theta_fold(state, rows, *, a, mp):
-    cnt, sx, sy, sxx, sxy, ses, err_sum, err_n = state
-    out = []
-    for ts, yv in rows:
-        if yv is None:
-            raise ValueError("streaming_theta: null values in series (fill first)")
-        y_t = float(yv)
-        t = cnt
-        if cnt == 0:
-            ses = y_t  # batch init: ses = y[0] BEFORE the loop
-        fc = None
-        err = None
-        if cnt >= mp:
-            det = cnt * sxx - sx * sx
-            if det > 0:
-                b = (cnt * sxy - sx * sy) / det
-                a0 = (sy - b * sx) / cnt
-                line_t = a0 + b * t
-                fc = 0.5 * (line_t + ses)
-                err = abs(y_t - fc)
-                err_sum += err
-                err_n += 1
-                z_t = 2.0 * y_t - line_t
-            else:
-                z_t = y_t
-        else:
-            z_t = y_t
-        ses = a * z_t + (1.0 - a) * ses
-        sx += t
-        sy += y_t
-        sxx += t * t
-        sxy += t * y_t
-        cnt += 1
-        out.append((ts, y_t, fc, err, (err_sum / err_n) if err_n else None))
-    return (cnt, sx, sy, sxx, sxy, ses, err_sum, err_n), out
+    from ..operators.timeseries import theta_kernel
+
+    rows = list(rows)
+    state, res = theta_kernel(state, [y for _, y in rows], a, mp)
+    return state, [(ts, float(y), *r) for (ts, y), r in zip(rows, res)]
 
 
 def streaming_theta(
@@ -1028,12 +1005,11 @@ def streaming_theta(
     (row counter, the four expanding-OLS sums, the SES level, and the
     backtest error accumulators) — O(1) regardless of stream length.
 
-    Both sides execute the identical IEEE float sequence (the batch
-    loop's update order is replicated statement-for-statement,
-    including the ``ses = y0`` init followed by the same-row SES
-    update), so the stream equals the batch operator BIT-FOR-BIT on
-    in-order replay. Input contract matches the batch operator: one
-    value per (key, ts) — compose after a grid resample.
+    Both sides run the same kernel,
+    :func:`operators.timeseries.theta_kernel`, so the stream equals the
+    batch operator BIT-FOR-BIT on in-order replay. Input contract
+    matches the batch operator: one value per (key, ts) — compose after
+    a grid resample.
 
     ``key_cols`` mirrors the batch operator's ``series_cols`` (r10,
     ADVICE): the key portion of the output and state schemas is derived
@@ -1046,6 +1022,8 @@ def streaming_theta(
             f"streaming_theta: min_points must be >= 3, got {min_points}"
         )
     keys = list(key_cols)
+    from ..operators.timeseries import THETA_INIT
+
     return _keyed_fold(
         events,
         partial(_theta_fold, a=float(alpha), mp=int(min_points)),
@@ -1053,7 +1031,7 @@ def streaming_theta(
         order=(ts_col,),
         ts_col=ts_col,
         cols=(ts_col, value_col),
-        init=(0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0),
+        init=THETA_INIT,
         state_schema=(
             "cnt bigint, sx double, sy double, sxx double, sxy double, "
             "ses double, err_sum double, err_n bigint"
@@ -1067,36 +1045,11 @@ def streaming_theta(
 
 
 def _croston_fold(state, rows, *, a, factor):
-    z, p, has_z, has_p, gap, err_sum, err_n = state
-    out = []
-    for ts, yv in rows:
-        if yv is None:
-            raise ValueError("streaming_croston: null values in series (fill first)")
-        y_t = float(yv)
-        if y_t < 0:
-            raise ValueError("streaming_croston: negative demand")
-        fc = None
-        err = None
-        if has_z and has_p and p > 0:
-            fc = factor * z / p
-            err = abs(y_t - fc)
-            err_sum += err
-            err_n += 1
-        gap += 1
-        if y_t > 0:
-            if not has_z:
-                z = y_t  # first demand initializes the size
-                has_z = True
-            elif not has_p:
-                p = float(gap)
-                has_p = True
-                z = a * y_t + (1.0 - a) * z
-            else:
-                z = a * y_t + (1.0 - a) * z
-                p = a * gap + (1.0 - a) * p
-            gap = 0
-        out.append((ts, y_t, fc, err, (err_sum / err_n) if err_n else None))
-    return (z, p, has_z, has_p, gap, err_sum, err_n), out
+    from ..operators.timeseries import croston_kernel
+
+    rows = list(rows)
+    state, res = croston_kernel(state, [y for _, y in rows], a, factor)
+    return state, [(ts, float(y), *r) for (ts, y), r in zip(rows, res)]
 
 
 def streaming_croston(
@@ -1116,7 +1069,8 @@ def streaming_croston(
     O(1) regardless of stream length; spare-parts/error-rate streams
     are the method's home turf.
 
-    Identical IEEE update order to the batch loop → BIT-FOR-BIT replay
+    Both sides run the same kernel,
+    :func:`operators.timeseries.croston_kernel` → BIT-FOR-BIT replay
     parity. Input contract matches the batch operator: a regular
     zero-filled grid per key (compose after ``resample_grid`` +
     zero-fill); negative demand raises.
@@ -1129,6 +1083,8 @@ def streaming_croston(
         raise ValueError(f"streaming_croston: alpha must be in (0,1), got {alpha}")
     a = float(alpha)
     keys = list(key_cols)
+    from ..operators.timeseries import CROSTON_INIT
+
     return _keyed_fold(
         events,
         partial(_croston_fold, a=a, factor=(1.0 - a / 2.0) if sba else 1.0),
@@ -1136,7 +1092,7 @@ def streaming_croston(
         order=(ts_col,),
         ts_col=ts_col,
         cols=(ts_col, value_col),
-        init=(0.0, 0.0, False, False, 0, 0.0, 0),
+        init=CROSTON_INIT,
         state_schema=(
             "z double, p double, has_z boolean, has_p boolean, "
             "gap bigint, err_sum double, err_n bigint"

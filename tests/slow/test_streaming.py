@@ -255,46 +255,6 @@ class TestStreamingParity:
         for k, seq in expected.items():
             assert streamed[k] == pytest.approx(seq, rel=1e-9), k
 
-    def test_tws_sequences_match_batch(self, spark, sf_dir):
-        """transformWithStateInPandas variant agrees with the batch
-        window on full replay (same contract as the
-        applyInPandasWithState implementation). TWS workers need
-        google.protobuf, which this environment lacks — skip cleanly
-        there; the applyInPandasWithState tier is always tested."""
-        pytest.importorskip("google.protobuf.descriptor")
-        from amonaly_detection_in_time_series_data_spark.streaming.tws import (
-            streaming_sequences_tws,
-        )
-
-        stream = replay_events_stream(spark, sf_dir)
-        seqs = streaming_sequences_tws(stream, value_col="value", seq_len=8)
-        _run_stream_to_memory(seqs, "tws_seqs", "append")
-        streamed = {
-            (r["user_id"], r["end_ts"]): r["seq"]
-            for r in spark.sql("SELECT * FROM tws_seqs").collect()
-        }
-
-        ev = load_table(spark, sf_dir, "events")
-        from pyspark.sql import Window as W
-
-        w_end = (
-            W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(0, 7)
-        )
-        batch = (
-            ev.select(
-                "user_id",
-                F.collect_list(F.col("value").cast("double")).over(w_end).alias("seq"),
-                F.last("ts").over(w_end).alias("end_ts"),
-            )
-            .filter(F.size("seq") == 8)
-        )
-        expected = {
-            (r["user_id"], r["end_ts"]): r["seq"] for r in batch.collect()
-        }
-        assert len(streamed) == len(expected) > 0
-        for k, seq in expected.items():
-            assert streamed[k] == pytest.approx(seq, rel=1e-9), k
-
     def test_streaming_dedup_matches_batch_distinct(self, spark, sf_dir):
         from amonaly_detection_in_time_series_data_spark.streaming.rolling import (
             streaming_dedup,

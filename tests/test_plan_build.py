@@ -6,6 +6,7 @@
   ``load_table`` takes a single parquet file's schema from its footer, and
   that schema is exactly what Spark's inference job would have returned.
 - A driver-side parameter check fires before any job runs.
+- The fixed-cooldown throttle's interval is evaluated inside the plan.
 - The session's debugging default drops only the Python call site from
   errors: they still raise with the same class.
 """
@@ -144,6 +145,25 @@ def test_forecast_selector_checks_season_rows_on_driver(spark):
         with pytest.raises(ValueError, match="phi"):
             forecast_selector(df, "t", "v", ["sid"], season_rows=4, phi=0.0)
     assert ids == []
+
+
+def test_fixed_cooldown_throttle_build_starts_no_job(spark):
+    from amonaly_detection_in_time_series_data_spark.operators.anomaly import (
+        throttle_alerts,
+    )
+
+    df = spark.createDataFrame(
+        [(1, i, 1) for i in range(4)], "uid int, t int, flag int"
+    ).selectExpr("uid", "timestamp_seconds(t * 120) AS ts", "flag")
+    with jobs_started(spark) as ids:
+        out = throttle_alerts(
+            df, ["uid"], "ts", cooldown="3 minutes", flag_col="flag",
+            policy="fixed-cooldown",
+        )
+        _plan(out)
+    assert ids == []
+    delivered = out.orderBy("ts").select("alert_delivered").collect()
+    assert [r[0] for r in delivered] == [1, 0, 1, 0]
 
 
 class TestSessionDebuggingDefault:

@@ -12,15 +12,26 @@ The per-operator plan assertions elsewhere pin what individual plans
 SHOULD contain; this sweep pins what no plan may EVER contain, so a
 future operator cannot quietly regress the discipline. Runs at the
 smallest SF — only the plan is inspected; nothing large executes.
+
+A source sweep pins the same for the package code: no ``iterrows``
+anywhere, and one stateful-streaming runner — the only
+``applyInPandasWithState`` / ``transformWithStateInPandas`` call is
+in ``streaming.rolling._keyed_fold``.
 """
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
 
 import __spark_entry__ as entrymod
+import amonaly_detection_in_time_series_data_spark as pkg
 
 QUERY_NAMES = list(entrymod.queries())
+PKG_DIR = pathlib.Path(pkg.__file__).parent
+STATEFUL_CALLS = {"applyInPandasWithState", "transformWithStateInPandas"}
 
 
 @pytest.fixture(scope="module")
@@ -50,6 +61,35 @@ def test_no_unbroadcast_cartesian_product(built_plans, name):
     assert "CartesianProduct" not in built_plans[name], (
         f"{name}: non-broadcast cartesian product in the plan"
     )
+
+
+def _attribute_calls(tree):
+    """(attribute name, enclosing function name) of every ``x.attr(...)``
+    call in a module's syntax tree."""
+    out = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            out.append((node.func.attr, func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, None)
+    return out
+
+
+def test_no_iterrows_and_one_stateful_runner():
+    found = []
+    for path in sorted(PKG_DIR.rglob("*.py")):
+        rel = path.relative_to(PKG_DIR).as_posix()
+        for attr, func in _attribute_calls(ast.parse(path.read_text())):
+            if attr == "iterrows" or attr in STATEFUL_CALLS:
+                found.append((rel, attr, func))
+    assert found == [
+        ("streaming/rolling.py", "applyInPandasWithState", "_keyed_fold")
+    ]
 
 
 class TestComposedTimeseriesLineage:

@@ -12,7 +12,11 @@ Python:
 - the runner's per-key handler, driven with a fake ``GroupState``:
   idle-key eviction, one stable sort over all Arrow chunks of a key,
   NULL reaching the fold as ``None``, and the state/timeout/output
-  protocol.
+  protocol;
+- batch == stream for the five recursions written once as a kernel in
+  the batch operator's module (Kalman, theta, Croston, ADWIN,
+  fixed-cooldown throttle): the fold over any split of a seeded series
+  equals the batch face exactly.
 
 The Spark replay-parity family (stream == batch operator) lives in
 ``tests/slow/test_streaming.py``.
@@ -400,3 +404,153 @@ def test_sequences_null_is_a_null_element(monkeypatch):
     handle = _twin_handler(monkeypatch, S.streaming_sequences, seq_len=3)
     (out,) = list(handle((7,), iter([pdf]), FakeState()))
     assert out["seq"].tolist() == [[1.0, None, 3.0]]
+
+
+# --- batch face == stream fold, for the kernels shared with the batch side
+
+
+SEEDS = st.integers(0, 2**16)
+SPLITS = st.lists(st.integers(0, 200), max_size=6)
+
+
+def _seeded_series(seed, n=200):
+    """Level shifts, noise and spikes on the 0.01 grid."""
+    rng = np.random.default_rng(seed)
+    level = np.repeat(rng.permutation([-20.0, -5.0, 10.0, 25.0]), n // 4)
+    y = level + rng.normal(0.0, 2.0, n)
+    y[rng.random(n) < 0.03] += 40.0
+    return np.round(y, 2)
+
+
+def _split_fold(fold, init, rows, cuts):
+    bounds = sorted({0, len(rows), *(c for c in cuts if c < len(rows))})
+    return _fold_batches(fold, init, [rows[a:b] for a, b in zip(bounds, bounds[1:])])
+
+
+def _column(out, i, dtype="float64"):
+    return np.array([r[i] for r in out], dtype=dtype)
+
+
+@settings(max_examples=25, deadline=None)
+@given(seed=SEEDS, cuts=SPLITS)
+def test_kalman_fold_equals_kalman_numpy(seed, cuts):
+    from amonaly_detection_in_time_series_data_spark.operators.kalman import (
+        kalman_numpy,
+    )
+
+    y = _seeded_series(seed)
+    rows = [(i, T0 + pd.Timedelta(hours=i), v) for i, v in enumerate(y.tolist())]
+    fold = partial(R._kalman_fold, Q=0.5, R=2.0, thr=3.0)
+    _, out = _split_fold(fold, (None, None), rows, cuts)
+    want = kalman_numpy(y, q_var=0.5, r_var=2.0)
+    np.testing.assert_array_equal(_column(out, 3), want["pred"])
+    np.testing.assert_array_equal(_column(out, 4), want["level"])
+    np.testing.assert_array_equal(_column(out, 5), np.sqrt(want["innov_var"]))
+    np.testing.assert_array_equal(_column(out, 6), want["score"])
+    assert [r[7] for r in out] == [None] + list(np.abs(want["score"][1:]) > 3.0)
+
+
+@settings(max_examples=25, deadline=None)
+@given(seed=SEEDS, cuts=SPLITS)
+def test_theta_fold_equals_theta_numpy(seed, cuts):
+    from amonaly_detection_in_time_series_data_spark.operators.timeseries import (
+        THETA_INIT,
+        theta_numpy,
+    )
+
+    y = _seeded_series(seed)
+    rows = [(T0 + pd.Timedelta(hours=i), v) for i, v in enumerate(y.tolist())]
+    _, out = _split_fold(partial(R._theta_fold, a=0.2, mp=3), THETA_INIT, rows, cuts)
+    for i, want in enumerate(theta_numpy(y, 0.2, 3), start=2):
+        np.testing.assert_array_equal(_column(out, i), want)
+
+
+@settings(max_examples=25, deadline=None)
+@given(seed=SEEDS, cuts=SPLITS)
+def test_croston_fold_equals_croston_numpy(seed, cuts):
+    from amonaly_detection_in_time_series_data_spark.operators.timeseries import (
+        CROSTON_INIT,
+        croston_numpy,
+    )
+
+    rng = np.random.default_rng(seed)
+    y = np.where(rng.random(200) < 0.7, 0.0, rng.integers(1, 20, 200).astype(float))
+    rows = [(T0 + pd.Timedelta(hours=i), v) for i, v in enumerate(y.tolist())]
+    fold = partial(R._croston_fold, a=0.1, factor=0.95)
+    _, out = _split_fold(fold, CROSTON_INIT, rows, cuts)
+    for i, want in enumerate(croston_numpy(y, 0.1, 0.95), start=2):
+        np.testing.assert_array_equal(_column(out, i), want)
+
+
+@settings(max_examples=25, deadline=None)
+@given(seed=SEEDS, cuts=SPLITS)
+def test_adwin_fold_equals_adwin_numpy(seed, cuts):
+    from amonaly_detection_in_time_series_data_spark.operators.adwin import (
+        ADWIN_INIT,
+        adwin_numpy,
+    )
+
+    y = _seeded_series(seed)
+    rows = [(i, T0 + pd.Timedelta(hours=i), v) for i, v in enumerate(y.tolist())]
+    fold = partial(R._adwin_fold, delta=0.002, max_buckets=5)
+    _, out = _split_fold(fold, ADWIN_INIT, rows, cuts)
+    n, mean, change = adwin_numpy(y, 0.002, 5)
+    assert change.any()  # the level shifts are detected
+    np.testing.assert_array_equal(_column(out, 3, "int64"), n)
+    np.testing.assert_array_equal(_column(out, 4), mean)
+    np.testing.assert_array_equal(_column(out, 5, bool), change)
+
+
+@settings(max_examples=25, deadline=None)
+@given(seed=SEEDS, cuts=SPLITS)
+def test_fixed_cooldown_fold_equals_batch_pick(seed, cuts):
+    from amonaly_detection_in_time_series_data_spark.operators.anomaly import (
+        _fixed_cooldown_pick,
+    )
+
+    rng = np.random.default_rng(seed)
+    ts = T0 + pd.to_timedelta(np.cumsum(rng.integers(1, 3600, 200)), unit="s")
+    flags = rng.choice([0, 1, 1, None], 200).tolist()
+    rows = list(zip(range(200), ts, flags))
+    fold = partial(R._throttle_fold, cooldown_seconds=7200.0, policy="fixed-cooldown")
+    _, out = _split_fold(fold, (None, None), rows, cuts)
+
+    alerts = pd.DataFrame(
+        [(7, t, i, 7200.0) for i, t, f in rows if f == 1],
+        columns=["user_id", "ts", "event_id", "__cd"],
+    )
+    got = _fixed_cooldown_pick(
+        alerts.sample(frac=1.0, random_state=seed), keys=["user_id"],
+        ts_col="ts", tie=["event_id"],
+    )
+    assert [r[1] for r in out if r[3]] == list(got["__dts"])
+    assert got["user_id"].tolist() == [7] * len(got)
+
+
+@pytest.mark.parametrize(
+    "fold,init",
+    [
+        (partial(R._kalman_fold, Q=0.5, R=2.0, thr=3.0), (None, None)),
+        (partial(R._adwin_fold, delta=0.002, max_buckets=5), ([], [], [])),
+    ],
+    ids=["kalman", "adwin"],
+)
+def test_kalman_and_adwin_folds_reject_null(fold, init):
+    rows = [(0, T0, 1.0), (1, T0 + pd.Timedelta(hours=1), None)]
+    with pytest.raises(ValueError, match="null values in series"):
+        fold(init, iter(rows))
+
+
+def test_batch_faces_share_the_null_check():
+    from amonaly_detection_in_time_series_data_spark.operators.adwin import (
+        adwin_numpy,
+    )
+    from amonaly_detection_in_time_series_data_spark.operators.kalman import (
+        kalman_numpy,
+    )
+
+    y = [1.0, 2.0, np.nan, 3.0]
+    with pytest.raises(ValueError, match="kalman_level: null values in series"):
+        kalman_numpy(y, q_var=0.5, r_var=2.0)
+    with pytest.raises(ValueError, match="adwin_changes: null values in series"):
+        adwin_numpy(y, 0.002, 5)
