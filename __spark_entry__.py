@@ -2236,7 +2236,7 @@ def q_embedding_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast QUERY table; the corpus explode (what a 100 TB index
     pays storage and shuffle for) DROPS 6x -> 3x and the per-vector
     projection count 36 -> 18. Measured frontier (recall@5 at
-    sf0.01+sf0.1 / warm seconds, tools/lsh_frontier.py): r9 6x6-bit
+    sf0.01+sf0.1 / warm seconds, SCALING §4 "Multiprobe"): r9 6x6-bit
     radius-1 0.84+0.90 / 1.73s+1.74s; this config 0.94+1.00 /
     1.10s+1.18s — better recall at HALF the corpus-side work.
     Oracle-checked — the 3 plane matrices AND the 22-mask xor probe

@@ -8,7 +8,6 @@ from .timefeat import TIME_FEATURES, add_time_features
 from .text import (
     punct_ratio,
     sha_fingerprint,
-    stopword_ratio,
     token_count_regex,
     tokenize,
 )
@@ -24,7 +23,6 @@ __all__ = [
     "tokenize",
     "token_count_regex",
     "punct_ratio",
-    "stopword_ratio",
     "sha_fingerprint",
     "cosine_similarity",
     "dot",

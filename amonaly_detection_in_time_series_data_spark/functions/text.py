@@ -48,13 +48,6 @@ def punct_ratio(text: Column | str) -> Column:
     return F.length(stripped) / F.nullif(F.length(c), F.lit(0))
 
 
-def stopword_ratio(tokens: Column, lang: str = "en") -> Column:
-    """Fraction of tokens in the language's stopword list."""
-    stops = LANG_STOPWORDS[lang]
-    hits = F.size(F.filter(tokens, lambda t: t.isin(*stops)))
-    return hits / F.nullif(F.size(tokens), F.lit(0))
-
-
 def sha_fingerprint(text: Column | str) -> Column:
     """Document fingerprint: sha256 of whitespace-normalized lowercase text.
 

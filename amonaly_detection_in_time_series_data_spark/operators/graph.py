@@ -355,12 +355,14 @@ def triangle_counts(
     # the deg/oriented/wedge/closer chain, so an un-pinned input lineage
     # is re-planned (and, past ReusedExchange's reach, re-executed) that
     # many times per action — q_minhash_pairs_md5's initial plan carried
-    # 154 redundant scans through exactly this operator. Same eager
-    # localCheckpoint idiom as connected_components' per-round edge pin;
-    # O(m) thin rows, values unchanged.
+    # 154 redundant scans through exactly this operator. ``persist()``
+    # plans the lineage once and every reference reads the cached
+    # relation; unlike an eager localCheckpoint it runs no job while the
+    # plan is built (the first action fills it) and a lost block is
+    # recomputed from lineage. O(m) thin rows, values unchanged.
     und = e.select(
         F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct().persist()
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -383,7 +385,7 @@ def triangle_counts(
         ),
         # pinned (r15): referenced 3x (both wedge sides + the closing
         # edge); see the ``und`` pin above
-    ).localCheckpoint(eager=True)
+    ).persist()
     w1 = oriented.select(
         "src", F.col("dst").alias("x"), F.col("deg_dst").alias("dx")
     )

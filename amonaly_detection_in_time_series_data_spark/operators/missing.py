@@ -121,12 +121,6 @@ def fill_zero(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     return df.na.fill(0, subset=list(cols) if cols else None)
 
 
-def drop_nulls(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """M6/M8: drop rows with nulls — per-column (M6,
-    src/preprocessing.py:160-163) or any-column (M8, main.py:149-153)."""
-    return df.na.drop(how="any", subset=list(cols) if cols else None)
-
-
 def fill_interpolate(
     df: DataFrame,
     cols: Sequence[str],

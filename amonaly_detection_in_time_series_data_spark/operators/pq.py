@@ -39,18 +39,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from amonaly_detection_in_time_series_data_spark.functions.vectors import (
+    l2_normalize,
     nested_double_literal,
 )
 
-__all__ = ["pq_train", "pq_encode", "pq_topk", "ivf_pq_topk", "l2_normalize"]
-
-
-def l2_normalize(vec: Column) -> Column:
-    """L2-normalize an array<float|double> column (zero vectors pass
-    through unscaled to avoid div-by-zero)."""
-    d = F.transform(vec, lambda x: x.cast("double"))
-    nrm = F.sqrt(F.aggregate(d, F.lit(0.0), lambda a, x: a + x * x))
-    return F.when(nrm > 0, F.transform(d, lambda x: x / nrm)).otherwise(d)
+__all__ = ["pq_train", "pq_encode", "pq_topk", "ivf_pq_topk"]
 
 
 def pq_train(

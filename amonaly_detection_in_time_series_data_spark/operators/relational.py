@@ -4,8 +4,6 @@ The reference implements no joins, limits, top-k, or set ops; these are
 Spark built-ins, and this module exists to pin down the engine's preferred
 PHYSICAL strategies so the declared capability queries demonstrate them:
 
-- dimension joins (nation/region/customer at testdata scale) broadcast —
-  no shuffle of the fact side;
 - top-k is ``row_number`` over a window, which Spark rewrites into a
   per-partition group-limit before the exchange (rank pushdown) — never a
   global sort + limit of the full table;
@@ -20,14 +18,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import local_rows_df
-
-
-def join_dim(
-    fact: DataFrame, dim: DataFrame, on, how: str = "inner", hint: str = "broadcast"
-) -> DataFrame:
-    """Fact-to-dimension join; dimensions broadcast by default."""
-    d = F.broadcast(dim) if hint == "broadcast" else dim
-    return fact.join(d, on, how)
 
 
 def top_k_per_group(

@@ -49,8 +49,7 @@ _DEFAULTS = {
     # Measured (r14 interleaved 3-arm A/B at sf0.1): 128k cut the
     # window-family queries 43-56% and the 8-query total 28%; 32k
     # over-splits the explode-heavy text shuffles (minhash +26%), so
-    # 128k is the default. Env override (SPARK_GRAFT_MIN_PARTITION) is
-    # resolved inside get_spark() like the other SPARK_GRAFT_* knobs.
+    # 128k is the default; override it through get_spark's extra_conf.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "128k",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -64,6 +63,12 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # No Python call-site capture around every Column call (module doc).
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Let AQE coalesce the final shuffle of a persisted plan. Spark keeps
+    # it at spark.sql.shuffle.partitions otherwise, and every later read
+    # of the cached frame runs that many tasks: triangle_counts' two
+    # persisted edge frames made q_minhash_pairs_md5 run 942 tasks per
+    # action instead of 198 (sf0.01, 4-core host).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 
@@ -86,9 +91,6 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    conf["spark.sql.adaptive.coalescePartitions.minPartitionSize"] = (
-        os.environ.get("SPARK_GRAFT_MIN_PARTITION", "128k")
-    )
     # Local mode runs driver == executor, and Spark's default driver heap
     # is 1 GiB — for 32 concurrent tasks that is ~32 MB of heap per task,
     # so any array-heavy operator (tokenized long documents, sort
@@ -104,7 +106,7 @@ def get_spark(
         "SPARK_GRAFT_DRIVER_MEM", "8g"
     )
     # Throughput collector for batch work: an interleaved A/B on the
-    # headline queries (tools/ab_gc.py) measured ParallelGC == G1 on
+    # headline queries (SCALING §14) measured ParallelGC == G1 on
     # wall, while the allocation-heavy longdoc ladder's GC share at the
     # 200k rung dropped 12.8% -> 3.7% of wall. Pauses don't matter in a
     # batch engine; on a real cluster mirror this in

@@ -13,6 +13,7 @@ noise-robust on this host (SCALING.md §11). "queries_detail" carries
 median/best/gc plus the driver-side plan time per query. A query that
 raises is reported there as {"error": ...} (traceback on stderr) and is
 left out of "value" and the other per-query maps; the run goes on.
+``tools/measure.py`` imports the protocol to time other query sets.
 """
 
 from __future__ import annotations
@@ -46,7 +47,6 @@ HEADLINE = [
     "sequence_scores",
 ]
 
-
 def plan_fingerprint(df) -> str:
     """Stable hash of the physical plan, for cross-round comparison.
 
@@ -72,36 +72,56 @@ def plan_fingerprint(df) -> str:
     return hashlib.md5(s.encode()).hexdigest()[:16]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    import __spark_entry__ as entrymod
-    from amonaly_detection_in_time_series_data_spark.session import get_spark
+def _median(xs: list[float]) -> float:
+    return sorted(xs)[len(xs) // 2]
 
-    spark = get_spark(app_name="bench")
-    # resolve q_<name> functions directly (not via queries()) so the
-    # headline set and its per-round timing series stay stable even when
-    # the declared-query dict merges/renames entries between rounds
-    qs = {name: getattr(entrymod, f"q_{name}") for name in HEADLINE}
 
-    # warm the JVM, file listings, page cache, and the noop committer
-    # once, outside timing — per-query numbers then measure engine work,
-    # not first-touch setup costs
+def jvm_gc_ms(spark) -> int:
+    """Total collection time of the driver JVM's collectors, in ms."""
+    beans = (
+        spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        .getGarbageCollectorMXBeans()
+    )
+    total, it = 0, beans.iterator()
+    while it.hasNext():
+        total += it.next().getCollectionTime()
+    return total
+
+
+def noop_save(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warm(spark, sf_dir: str) -> None:
+    """Warm the JVM, file listings, page cache, and the noop committer
+    once, outside timing — per-query numbers then measure engine work,
+    not first-touch setup costs."""
     for t in (
         "region nation customer supplier part orders lineitem "
         "events documents embeddings"
     ).split():
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
-    spark.range(1).write.format("noop").mode("overwrite").save()
+    noop_save(spark.range(1))
 
-    def jvm_gc_ms() -> int:
-        beans = (
-            spark.sparkContext._jvm.java.lang.management.ManagementFactory
-            .getGarbageCollectorMXBeans()
-        )
-        total, it = 0, beans.iterator()
-        while it.hasNext():
-            total += it.next().getCollectionTime()
-        return total
+
+def noop_reps(spark, build, reps: int = 5) -> tuple[list[float], list[float]]:
+    """The timed region, ``reps`` times: build, noop save, GC subtraction.
+    Returns the walls and the walls minus GC, in seconds."""
+    walls: list[float] = []
+    minus_gc: list[float] = []
+    for _ in range(reps):
+        gc0 = jvm_gc_ms(spark)
+        start = time.perf_counter()
+        noop_save(build())
+        elapsed = time.perf_counter() - start
+        minus_gc.append(elapsed - (jvm_gc_ms(spark) - gc0) / 1000.0)
+        walls.append(elapsed)
+    return walls, minus_gc
+
+
+def calibrate(spark, sf_dir: str) -> dict:
+    """The two host probes: ``calibration_s`` and ``calibration_io_s``."""
+    from pyspark.sql import functions as F
 
     # r11 drift calibration (r10 verdict task 3): a pinned, deterministic,
     # pure-JVM workload on GENERATED data — no IO, no Python, fixed plan —
@@ -112,8 +132,6 @@ def main() -> None:
     # measurement instead of an inference). 20M-row codegen'd project +
     # hash-aggregate over 9973 groups + 32-partition shuffle ~= the
     # headline's dominant physical shapes at ~0.5 s scale.
-    from pyspark.sql import functions as F
-
     def calibration_df():
         return (
             spark.range(0, 20_000_000, 1, 32)
@@ -131,25 +149,6 @@ def main() -> None:
                 F.max("h").alias("mx"),
             )
         )
-
-    calib_fp = plan_fingerprint(calibration_df())
-    calib_minus_gc: list[float] = []
-    calib_walls: list[float] = []
-    for _ in range(5):
-        gc0 = jvm_gc_ms()
-        start = time.perf_counter()
-        calibration_df().write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - start
-        gc_sec = (jvm_gc_ms() - gc0) / 1000.0
-        calib_walls.append(elapsed)
-        calib_minus_gc.append(elapsed - gc_sec)
-    calibration_s = round(sorted(calib_minus_gc)[len(calib_minus_gc) // 2], 3)
-    calibration_detail = {
-        "median_wall": round(sorted(calib_walls)[len(calib_walls) // 2], 3),
-        "best": round(min(calib_walls), 3),
-        "gc": round(sum(w - m for w, m in zip(calib_walls, calib_minus_gc)), 3),
-        "plan": calib_fp,
-    }
 
     # r12 second probe (r11 verdict task 3): SCALING §15's fourth
     # session showed the pure-CPU probe above under-tracks IO/py4j-
@@ -173,82 +172,92 @@ def main() -> None:
             )
         )
 
-    calib_io_fp = plan_fingerprint(calibration_io_df())
-    io_minus_gc: list[float] = []
-    io_walls: list[float] = []
-    for _ in range(5):
-        gc0 = jvm_gc_ms()
-        start = time.perf_counter()
-        calibration_io_df().write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - start
-        gc_sec = (jvm_gc_ms() - gc0) / 1000.0
-        io_walls.append(elapsed)
-        io_minus_gc.append(elapsed - gc_sec)
-    calibration_io_s = round(sorted(io_minus_gc)[len(io_minus_gc) // 2], 3)
-    calibration_io_detail = {
-        "median_wall": round(sorted(io_walls)[len(io_walls) // 2], 3),
-        "best": round(min(io_walls), 3),
-        "gc": round(sum(w - m for w, m in zip(io_walls, io_minus_gc)), 3),
-        "plan": calib_io_fp,
-    }
+    out: dict = {}
+    for key, build in (
+        ("calibration", calibration_df),
+        ("calibration_io", calibration_io_df),
+    ):
+        fingerprint = plan_fingerprint(build())
+        walls, minus_gc = noop_reps(spark, build)
+        out[f"{key}_s"] = round(_median(minus_gc), 3)
+        out[f"{key}_detail"] = {
+            "median_wall": round(_median(walls), 3),
+            "best": round(min(walls), 3),
+            "gc": round(sum(w - m for w, m in zip(walls, minus_gc)), 3),
+            "plan": fingerprint,
+        }
+    return out
 
-    # r8 noise protocol (the r7 drift investigation showed best-of-3 is
-    # not enough on this host — same-code runs spread >4x): 5 in-session
-    # repetitions per query, each with its JVM GC time measured, and the
-    # headline per-query number is the MEDIAN of (wall - gc). "queries"
-    # stays the cross-round comparable series; "queries_detail" carries
-    # {median, best, gc, plan} where "plan" is the driver-side
-    # analyze+optimize+physical-plan time (measured separately because
-    # wide-expression queries pay a real per-invocation planning cost).
-    # First-run times are "queries_cold", and a normalized physical-plan
-    # fingerprint is "plans", so cross-round drift can be attributed:
-    # fingerprint unchanged -> host noise, changed -> the plan changed.
+
+def time_queries(spark, sf_dir: str, fns: dict) -> dict:
+    """Time each ``{name: fn(spark, sf_dir)}`` entry; returns the
+    "queries"/"queries_detail"/"queries_cold"/"plans" maps.
+
+    r8 noise protocol (the r7 drift investigation showed best-of-3 is
+    not enough on this host — same-code runs spread >4x): 5 in-session
+    repetitions per query, each with its JVM GC time measured, and the
+    headline per-query number is the MEDIAN of (wall - gc). "queries"
+    stays the cross-round comparable series; "queries_detail" carries
+    {median, best, gc, plan} where "plan" is the driver-side
+    analyze+optimize+physical-plan time (measured separately because
+    wide-expression queries pay a real per-invocation planning cost).
+    First-run times are "queries_cold", and a normalized physical-plan
+    fingerprint is "plans", so cross-round drift can be attributed:
+    fingerprint unchanged -> host noise, changed -> the plan changed.
+
+    One raising query must not lose the artifact: it gets
+    {"error": ...} in "queries_detail" and no entry in the other maps,
+    so "value" sums the queries that ran.
+    """
     timings: dict[str, float] = {}
     detail: dict[str, dict] = {}
     cold: dict[str, float] = {}
     plans: dict[str, str] = {}
-
-    def time_query(name: str) -> None:
-        fn = qs[name]
-        fingerprint = plan_fingerprint(fn(spark, sf_dir))
-        t0 = time.perf_counter()
-        fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
-        plan_sec = time.perf_counter() - t0
-        reps: list[float] = []
-        minus_gc: list[float] = []
-        for _ in range(5):
-            gc0 = jvm_gc_ms()
-            start = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - start
-            gc_sec = (jvm_gc_ms() - gc0) / 1000.0
-            reps.append(elapsed)
-            minus_gc.append(elapsed - gc_sec)
+    for name, fn in fns.items():
+        try:
+            fingerprint = plan_fingerprint(fn(spark, sf_dir))
+            t0 = time.perf_counter()
+            fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+            plan_sec = time.perf_counter() - t0
+            reps, minus_gc = noop_reps(spark, lambda: fn(spark, sf_dir))
+        except Exception as e:
+            traceback.print_exc()
+            detail[name] = {"error": f"{type(e).__name__}: {e}"[:2000]}
+            continue
         plans[name] = fingerprint
         cold[name] = round(reps[0], 3)
-        timings[name] = round(sorted(minus_gc)[len(minus_gc) // 2], 3)
+        timings[name] = round(_median(minus_gc), 3)
         detail[name] = {
-            "median": round(sorted(reps)[len(reps) // 2], 3),
+            "median": round(_median(reps), 3),
             "best": round(min(reps), 3),
             "gc": round(sum(r - m for r, m in zip(reps, minus_gc)), 3),
             "plan": round(plan_sec, 3),
         }
+    return {"queries": timings, "queries_detail": detail,
+            "queries_cold": cold, "plans": plans}
 
-    # One raising query must not lose the artifact: it gets
-    # {"error": ...} in "queries_detail" and no entry in the other maps,
-    # so "value" sums the queries that ran.
-    for name in HEADLINE:
-        try:
-            time_query(name)
-        except Exception as e:
-            traceback.print_exc()
-            detail[name] = {"error": f"{type(e).__name__}: {e}"[:2000]}
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    import __spark_entry__ as entrymod
+    from amonaly_detection_in_time_series_data_spark.session import get_spark
+
+    spark = get_spark(app_name="bench")
+    # resolve q_<name> functions directly (not via queries()) so the
+    # headline set and its per-round timing series stay stable even when
+    # the declared-query dict merges/renames entries between rounds
+    qs = {name: getattr(entrymod, f"q_{name}") for name in HEADLINE}
+
+    warm(spark, sf_dir)
+    calib = calibrate(spark, sf_dir)
+    timed = time_queries(spark, sf_dir, qs)
 
     # long-document scale ladder (NOT part of the headline total, which
     # is the cross-round comparable series): quality_rules +
-    # minhash_signatures over 16 boilerplate docs at each token size.
-    # Linear per-doc operators should grow ~proportionally; a per-doc
-    # quadratic shows up as a superlinear jump at the 200k rung.
+    # minhash_signatures + span_dedup_stats over 16 boilerplate docs at
+    # each token size. Linear per-doc operators should grow
+    # ~proportionally; a per-doc quadratic shows up as a superlinear jump
+    # at the 200k rung.
     from amonaly_detection_in_time_series_data_spark.operators.corpus import (
         make_longdoc_corpus,
         quality_rules,
@@ -262,6 +271,11 @@ def main() -> None:
     from amonaly_detection_in_time_series_data_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents")
+    ops = (
+        lambda d: quality_rules(d, "text"),
+        lambda d: minhash_signatures(d, "text", "doc_id", n_hashes=8, shingle_n=3),
+        lambda d: span_dedup_stats(d, "text", "doc_id", span_len=8),
+    )
 
     # per-rung hygiene so the ladder measures the OPERATORS, not heap
     # history: unpersist each rung's checkpointed input before the next
@@ -273,16 +287,12 @@ def main() -> None:
     # operators' interpreted-HOF + codegen warmup (r10 bench showed the
     # 25k rung SLOWER than 100k for exactly this reason), which poisons
     # the growth-ratio reading
-    warm = make_longdoc_corpus(docs, 16, 5_000).select(
+    warm_docs = make_longdoc_corpus(docs, 16, 5_000).select(
         "doc_id", "text"
     ).localCheckpoint()
-    for op in (
-        lambda d: quality_rules(d, "text"),
-        lambda d: minhash_signatures(d, "text", "doc_id", n_hashes=8, shingle_n=3),
-        lambda d: span_dedup_stats(d, "text", "doc_id", span_len=8),
-    ):
-        op(warm).write.format("noop").mode("overwrite").save()
-    warm.unpersist(blocking=True)
+    for op in ops:
+        noop_save(op(warm_docs))
+    warm_docs.unpersist(blocking=True)
 
     longdoc: dict[str, dict[str, float]] = {}
     for tokens in (25_000, 50_000, 100_000, 200_000):
@@ -290,17 +300,12 @@ def main() -> None:
             "doc_id", "text"
         ).localCheckpoint()  # materialize the input; time the operators
         spark.sparkContext._jvm.System.gc()
-        gc0 = jvm_gc_ms()
+        gc0 = jvm_gc_ms(spark)
         start = time.perf_counter()
-        quality_rules(ld, "text").write.format("noop").mode("overwrite").save()
-        minhash_signatures(
-            ld, "text", "doc_id", n_hashes=8, shingle_n=3
-        ).write.format("noop").mode("overwrite").save()
-        span_dedup_stats(ld, "text", "doc_id", span_len=8).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        for op in ops:
+            noop_save(op(ld))
         wall = time.perf_counter() - start
-        gc_sec = (jvm_gc_ms() - gc0) / 1000.0
+        gc_sec = (jvm_gc_ms(spark) - gc0) / 1000.0
         longdoc[f"{tokens // 1000}k"] = {
             "wall": round(wall, 3),
             "gc": round(gc_sec, 3),
@@ -308,21 +313,15 @@ def main() -> None:
         }
         ld.unpersist(blocking=True)
 
-    total = round(sum(timings.values()), 3)
+    total = round(sum(timed["queries"].values()), 3)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     full = {
         "metric": "headline_query_wall_seconds",
         "value": total,
         "unit": "sec",
-        "queries": timings,
-        "queries_detail": detail,
-        "queries_cold": cold,
-        "plans": plans,
+        **timed,
         "longdoc_ladder_16docs": longdoc,
-        "calibration_s": calibration_s,
-        "calibration_detail": calibration_detail,
-        "calibration_io_s": calibration_io_s,
-        "calibration_io_detail": calibration_io_detail,
+        **calib,
         "sf": float(sf) if sf else sf_dir,
     }
     # The driver archives only a bounded stdout tail window; r9 lost the
@@ -347,10 +346,10 @@ def main() -> None:
                 "metric": "headline_query_wall_seconds",
                 "value": total,
                 "unit": "sec",
-                "queries": timings,
-                "n_queries": len(timings),
-                "calibration_s": calibration_s,
-                "calibration_io_s": calibration_io_s,
+                "queries": timed["queries"],
+                "n_queries": len(timed["queries"]),
+                "calibration_s": calib["calibration_s"],
+                "calibration_io_s": calib["calibration_io_s"],
                 "sf": float(sf) if sf else sf_dir,
                 "trailer": True,
             }

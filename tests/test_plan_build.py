@@ -7,6 +7,7 @@
   that schema is exactly what Spark's inference job would have returned.
 - A driver-side parameter check fires before any job runs.
 - The fixed-cooldown throttle's interval is evaluated inside the plan.
+- ``triangle_counts`` pins its shared edge frames lazily (``persist``).
 - The session's debugging default drops only the Python call site from
   errors: they still raise with the same class.
 """
@@ -164,6 +165,21 @@ def test_fixed_cooldown_throttle_build_starts_no_job(spark):
     assert ids == []
     delivered = out.orderBy("ts").select("alert_delivered").collect()
     assert [r[0] for r in delivered] == [1, 0, 1, 0]
+
+
+def test_triangle_counts_build_starts_no_job(spark):
+    from amonaly_detection_in_time_series_data_spark.operators.graph import (
+        triangle_counts,
+    )
+
+    edges = spark.range(2000).selectExpr(
+        "id % 500 AS id_a", "(id * 7 + 1) % 500 AS id_b"
+    )
+    with jobs_started(spark) as ids:
+        out = triangle_counts(edges)
+        _plan(out)
+    assert ids == []
+    assert out.count() == 500
 
 
 class TestSessionDebuggingDefault:

@@ -26,23 +26,7 @@ import urllib.request
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-HEADLINE = [
-    "anomaly_zscore",
-    "rolling_features",
-    "sequences",
-    "pricing_summary",
-    "revenue_by_nation",
-    "top_customers",
-    "events_hourly_join",
-    "doc_dedup_exact",
-    "token_counts",
-    "embedding_knn",
-    "embedding_knn_lsh",
-    "minhash_pairs",
-    "bucketed_rolling",
-    "salted_agg",
-    "sequence_scores",
-]
+from bench import HEADLINE, warm  # noqa: E402
 
 
 def main() -> None:
@@ -64,13 +48,7 @@ def main() -> None:
         with urllib.request.urlopen(base + path, timeout=20) as r:
             return json.loads(r.read())
 
-    # warm file listings + noop committer outside timing
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
-    spark.range(1).write.format("noop").mode("overwrite").save()
+    warm(spark, sf_dir)
 
     out: dict[str, dict] = {}
     for name in names:
