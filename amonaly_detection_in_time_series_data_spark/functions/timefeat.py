@@ -8,14 +8,17 @@ DatetimeIndex. Two pandas-vs-Spark conventions need explicit bridging:
 - pandas ``isocalendar().week`` is the ISO week; Spark ``weekofyear`` is
   also ISO — direct match.
 
-All nine features are plain Catalyst expressions added in ONE projection
-(the reference's per-column assignments collapse into a single select).
+All nine features are plain Catalyst expressions, written once as SQL
+text (:func:`time_feature_sql`) and added in ONE projection (the
+reference's per-column assignments collapse into a single select).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .sqltext import col_ref, with_columns
 
 TIME_FEATURES = (
     "hour",
@@ -30,23 +33,26 @@ TIME_FEATURES = (
 )
 
 
-def time_feature_exprs(ts: Column | str) -> dict[str, Column]:
-    t = F.col(ts) if isinstance(ts, str) else ts
-    pandas_dow = (F.dayofweek(t) + F.lit(5)) % F.lit(7)  # Monday=0..Sunday=6
-    return {
-        "hour": F.hour(t).cast("int"),
-        "dayofweek": pandas_dow.cast("int"),
-        "dayofmonth": F.dayofmonth(t).cast("int"),
-        "dayofyear": F.dayofyear(t).cast("int"),
-        "month": F.month(t).cast("int"),
-        "year": F.year(t).cast("int"),
-        "quarter": F.quarter(t).cast("int"),
-        "weekofyear": F.weekofyear(t).cast("int"),
-        # reference: (dayofweek >= 5).astype(int) — Sat/Sun
-        "is_weekend": (pandas_dow >= F.lit(5)).cast("int"),
+def time_feature_sql(ts: str) -> dict[str, str]:
+    """The 9 features of column ``ts`` as SQL text, by output name."""
+    t = col_ref(ts)
+    pandas_dow = f"(dayofweek({t}) + 5) % 7"  # Monday=0..Sunday=6
+    feats = {
+        name: f"cast({name}({t}) as int)"
+        for name in ("hour", "dayofmonth", "dayofyear", "month", "year",
+                     "quarter", "weekofyear")
     }
+    feats["dayofweek"] = f"cast({pandas_dow} as int)"
+    # reference: (dayofweek >= 5).astype(int) — Sat/Sun
+    feats["is_weekend"] = f"cast({pandas_dow} >= 5 as int)"
+    return {name: feats[name] for name in TIME_FEATURES}
+
+
+def time_feature_exprs(ts: str) -> dict[str, Column]:
+    """:func:`time_feature_sql` as Columns, for a caller's own select."""
+    return {k: F.expr(v) for k, v in time_feature_sql(ts).items()}
 
 
 def add_time_features(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Append the 9 reference time features derived from ``ts_col``."""
-    return df.withColumns(time_feature_exprs(ts_col))
+    return df.selectExpr(*with_columns(df.columns, time_feature_sql(ts_col)))

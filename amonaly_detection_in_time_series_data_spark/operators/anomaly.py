@@ -29,6 +29,51 @@ from functools import partial
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import (
+    RUNNING,
+    aliased,
+    col_ref,
+    ident,
+    over,
+    past_rows,
+    with_columns,
+)
+
+
+def zscore_window_sql(
+    target: str,
+    window_rows: int,
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+    prefix: str | None = None,
+) -> dict[str, str]:
+    """The rolling z-score's window layer as SQL text: ``{p}_roll_mean`` and
+    ``{p}_roll_std`` of ``target`` over the past ``window_rows`` rows."""
+    p = prefix or target
+    t = col_ref(target)
+    w = over(key_cols, order_cols, past_rows(window_rows))
+    return {
+        f"{p}_roll_mean": f"avg({t}) {w}",
+        f"{p}_roll_std": f"stddev_samp({t}) {w}",
+    }
+
+
+def zscore_flag_sql(
+    target: str, threshold: float = 3.0, prefix: str | None = None
+) -> dict[str, str]:
+    """The rolling z-score's scalar layer as SQL text, over the window
+    layer's materialized outputs: ``{p}_zscore`` and ``is_anomaly``
+    (``|z| > threshold``; an undefined z is not an anomaly)."""
+    p = prefix or target
+    z = (
+        f"({col_ref(target)} - {ident(p + '_roll_mean')})"
+        f" / nullif({ident(p + '_roll_std')}, 0.0D)"
+    )
+    return {
+        f"{p}_zscore": z,
+        "is_anomaly": f"coalesce(cast(abs({z}) > {float(threshold)!r}D as int), 0)",
+    }
+
 
 def rolling_zscore(
     df: DataFrame,
@@ -45,38 +90,16 @@ def rolling_zscore(
     anti-leakage convention, src/preprocessing.py:251-255). Rows with an
     undefined score (empty/1-row frame or zero variance) are NOT anomalies
     (flag 0), matching "can't score" != "anomalous".
+
+    Two ``selectExpr`` layers: the window aggregates, then the scalar z
+    and flag over them by NAME — rebuilding the window expression inside
+    z would make WindowExec evaluate each aggregate three times (verified
+    via explain).
     """
-    p = prefix or target
-    w = (
-        Window.partitionBy(*key_cols)
-        .orderBy(*[F.col(c).asc() for c in order_cols])
-        .rowsBetween(-window_rows, -1)
-    )
-    # derived columns reference the materialized window outputs by NAME —
-    # rebuilding the .over(w) expression inside z would make WindowExec
-    # evaluate each aggregate three times (verified via explain)
-    df = df.withColumns(
-        {
-            f"{p}_roll_mean": F.avg(target).over(w),
-            f"{p}_roll_std": F.stddev_samp(target).over(w),
-        }
-    )
-    # z re-derives only SCALAR arithmetic over the materialized window
-    # outputs (collapsed projects + CSE make that free), so zscore and
-    # is_anomaly batch into ONE withColumns — each withColumn call
-    # re-analyzes the whole accumulated tree, and planning time is a
-    # real per-query driver cost in the battery (measured ~0.9 s warm)
-    z = (F.col(target) - F.col(f"{p}_roll_mean")) / F.nullif(
-        F.col(f"{p}_roll_std"), F.lit(0.0)
-    )
-    return df.withColumns(
-        {
-            f"{p}_zscore": z,
-            "is_anomaly": F.coalesce(
-                (F.abs(z) > F.lit(threshold)).cast("int"), F.lit(0)
-            ),
-        }
-    )
+    windowed = zscore_window_sql(target, window_rows, key_cols, order_cols, prefix)
+    flags = zscore_flag_sql(target, threshold, prefix)
+    out = df.selectExpr(*with_columns(df.columns, windowed))
+    return out.selectExpr(*with_columns(out.columns, flags))
 
 
 def global_zscore_flags(
@@ -369,17 +392,8 @@ def ewma_deviation(
         .orderBy(*[F.col(c).asc() for c in order_cols])
         .rowsBetween(-window_rows, -1)
     )
-    part = (
-        "PARTITION BY "
-        + ", ".join(f"`{c}`" for c in key_cols)
-        + " ORDER BY "
-        + ", ".join(f"`{c}` ASC" for c in order_cols)
-    )
-    we = (
-        f"OVER ({part} ROWS BETWEEN {window_rows} PRECEDING"
-        " AND 1 PRECEDING)"
-    )
-    num, den = _ewma_num_den_sql(f"`{target}`", we, window_rows, alpha)
+    we = over(key_cols, order_cols, past_rows(window_rows))
+    num, den = _ewma_num_den_sql(col_ref(target), we, window_rows, alpha)
     # __rstd and the ewma num/den are window outputs over the input
     # frame — one layer; dev/alarm are scalar over them — one more layer
     # (batched withColumns: analysis cost, see rolling_zscore)
@@ -702,14 +716,10 @@ def _ols_stats_int(
     (residual std error), all in INTEGER y-units — callers divide by
     ``scale`` at output. Bounded: Σx² overflows int64 only past ~2e6
     rows per key; beyond that use the float path with ``x_col``."""
-    part = (
-        "PARTITION BY " + ", ".join(f"`{k}`" for k in keys)
-        + " ORDER BY " + ", ".join(f"`{c}` ASC" for c in order_cols)
-    )
     d = src.selectExpr(
-        *[f"`{k}`" for k in keys],
-        f"cast(round(`{target}` * {scale}) as bigint) AS __y",
-        f"cast(row_number() OVER ({part}) - 1 as bigint) AS __x",
+        *map(col_ref, keys),
+        f"cast(round({col_ref(target)} * {scale}) as bigint) AS __y",
+        f"cast(row_number() {over(keys, order_cols)} - 1 as bigint) AS __x",
     ).where("__y IS NOT NULL")
     stats = _ols_sums(d, keys, y_col="__y")
     return _ols_fit_from_sums(stats, keys)
@@ -1325,15 +1335,10 @@ def anomaly_battery(
     # analysis itself (~0.7 s of the 1.2 s composed build was pure
     # Column-object construction). String building is free Python; the
     # JVM parses each layer once.
-    t = f"`{target}`"
-    part = (
-        "PARTITION BY " + ", ".join(f"`{c}`" for c in keys)
-        + " ORDER BY " + ", ".join(f"`{c}` ASC" for c in order_cols)
-    )
-    wz = f"OVER ({part} ROWS BETWEEN {z_window} PRECEDING AND 1 PRECEDING)"
-    we = f"OVER ({part} ROWS BETWEEN {ewma_window} PRECEDING AND 1 PRECEDING)"
-    wrun = f"OVER ({part} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    word = f"OVER ({part})"
+    t = col_ref(target)
+    we = over(keys, order_cols, past_rows(ewma_window))
+    wrun = over(keys, order_cols, RUNNING)
+    word = over(keys, order_cols)
     mexp = f"cast(round({t} * {scale}) as bigint)"
 
     # EWMA numerator/denominator (r15): ONE collect_list window over the
@@ -1352,11 +1357,11 @@ def anomaly_battery(
     # planted nulls, plus the composition-equality and oracle pins).
     num, den = _ewma_num_den_sql(t, we, ewma_window, ewma_alpha)
 
-    p = target
+    z_cols = zscore_window_sql(target, z_window, keys, order_cols)
+    z_flags = zscore_flag_sql(target, z_threshold)
     l1 = [
         "*",
-        f"avg({t}) {wz} AS `{p}_roll_mean`",
-        f"stddev_samp({t}) {wz} AS `{p}_roll_std`",
+        *aliased(z_cols),
         f"stddev_samp({t}) {we} AS __rstd",
         f"{num} AS __ewma_num",
         f"{den} AS __ewma_den",
@@ -1371,13 +1376,11 @@ def anomaly_battery(
     # so the num/den window results are computed once and the division
     # is a plain scalar)
     ewma_expr = "CASE WHEN __ewma_den > 0.0D THEN __ewma_num / __ewma_den END"
-    z = f"({t} - `{p}_roll_mean`) / nullif(`{p}_roll_std`, 0.0D)"
     dv = f"({t} - ({ewma_expr})) / nullif(__rstd, 0.0D)"
     zt = repr(float(z_threshold))
     l2 = [
         "*",
-        f"{z} AS `{p}_zscore`",
-        f"coalesce(cast(abs({z}) > {zt}D as int), 0) AS is_anomaly",
+        *aliased(z_flags),
         f"{ewma_expr} AS ewma",
         f"{dv} AS ewma_dev",
         f"coalesce(cast(abs({dv}) > {zt}D as int), 0) AS ewma_alarm",
@@ -1401,7 +1404,7 @@ def anomaly_battery(
     # per-key order statistics + OLS sufficient statistics. Shared
     # arithmetic for both shapes below:
     pcts = f"percentile({mexp}, array(0.25, 0.5, 0.75))"
-    key_list = ", ".join(f"`{k}`" for k in keys)
+    key_list = ", ".join(col_ref(k) for k in keys)
     n, sx, sy = (
         "cast(__n as double)",
         "cast(__sx as double)",
@@ -1588,9 +1591,8 @@ def anomaly_battery(
                 f" cast(abs({tz}) > {tt}D as int) END AS trend_alarm",
             ]
         )
-    keep = [f"`{c}`" for c in df.columns] + [
-        f"`{p}_roll_mean`", f"`{p}_roll_std`", f"`{p}_zscore`",
-        "is_anomaly", "ewma", "ewma_dev", "ewma_alarm",
+    keep = [ident(c) for c in [*df.columns, *z_cols, *z_flags]] + [
+        "ewma", "ewma_dev", "ewma_alarm",
     ]
     # ONE spark.sql call for the whole battery (r9): the r8 layered
     # selectExpr form still paid ~0.6 s of DRIVER time per invocation

@@ -15,6 +15,22 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.sqltext import over, with_columns
+
+
+def dedup_row_number_sql(
+    key_cols: Sequence[str],
+    arrival_col: str,
+    keep: str = "first",
+) -> str:
+    """O3 as SQL text: each row's rank within its key in arrival order
+    (``keep="first"``) or reverse arrival order (``"last"``); the kept row
+    is number 1."""
+    if keep not in ("first", "last"):
+        raise ValueError(f"keep must be 'first' or 'last', got {keep!r}")
+    direction = "ASC" if keep == "first" else "DESC"
+    return f"row_number() {over(key_cols, [arrival_col], direction=direction)}"
+
 
 def dedup_keep_positional(
     df: DataFrame,
@@ -30,13 +46,10 @@ def dedup_keep_positional(
     ``dropDuplicates`` alone is non-deterministic; an explicit arrival key
     + ``row_number`` is the faithful translation.
     """
-    if keep not in ("first", "last"):
-        raise ValueError(f"keep must be 'first' or 'last', got {keep!r}")
-    order = F.col(arrival_col).asc() if keep == "first" else F.col(arrival_col).desc()
-    w = Window.partitionBy(*key_cols).orderBy(order)
+    rn = dedup_row_number_sql(key_cols, arrival_col, keep)
     return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        df.selectExpr(*with_columns(df.columns, {"_rn": rn}))
+        .where("_rn = 1")
         .drop("_rn")
     )
 

@@ -22,16 +22,52 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-ROLL_AGGS: dict[str, callable] = {
-    "mean": F.avg,
-    "std": F.stddev_samp,  # pandas rolling .std() is ddof=1 == stddev_samp
-    "min": F.min,
-    "max": F.max,
+from ..functions.sqltext import col_ref, over, past_rows, with_columns
+from ..functions.timefeat import TIME_FEATURES, time_feature_sql
+
+# rolling aggregate name -> SQL aggregate function
+ROLL_AGGS: dict[str, str] = {
+    "mean": "avg",
+    "std": "stddev_samp",  # pandas rolling .std() is ddof=1 == stddev_samp
+    "min": "min",
+    "max": "max",
 }
 
 
 def _order_cols(order_cols: Sequence[str]) -> list[Column]:
     return [F.col(c).asc() for c in order_cols]
+
+
+def lag_sql(
+    target: str,
+    lags: Sequence[int],
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+) -> dict[str, str]:
+    """F2 as SQL text: ``{target}_lag_{n}`` = ``target`` n rows earlier in
+    the series; non-positive lags are skipped."""
+    w = over(key_cols, order_cols)
+    t = col_ref(target)
+    return {f"{target}_lag_{n}": f"lag({t}, {n}) {w}" for n in lags if n > 0}
+
+
+def rolling_sql(
+    target: str,
+    windows: Sequence[int],
+    aggs: Sequence[str],
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+    suffix: str = "h",
+) -> dict[str, str]:
+    """F3 as SQL text: each of ``aggs`` over the past ``w`` rows, named
+    ``{target}_roll_{agg}_{w}{suffix}``."""
+    t = col_ref(target)
+    return {
+        f"{target}_roll_{agg}_{win}{suffix}":
+            f"{ROLL_AGGS[agg]}({t}) {over(key_cols, order_cols, past_rows(win))}"
+        for win in windows
+        for agg in aggs
+    }
 
 
 def add_lag_features(
@@ -47,11 +83,8 @@ def add_lag_features(
     non-positive lags are skipped (:213-215). First n rows per series are
     NULL (pandas NaN).
     """
-    w = Window.partitionBy(*key_cols).orderBy(*_order_cols(order_cols))
-    exprs = {
-        f"{target}_lag_{n}": F.lag(target, n).over(w) for n in lags if n > 0
-    }
-    return df.withColumns(exprs)
+    exprs = lag_sql(target, lags, key_cols, order_cols)
+    return df.selectExpr(*with_columns(df.columns, exprs))
 
 
 def add_rolling_features(
@@ -72,15 +105,8 @@ def add_rolling_features(
     empty frame (row 0) -> NULL, and 1-row frame under sample-std -> NULL.
     Column naming ``{target}_roll_{agg}_{w}{suffix}`` mirrors :249.
     """
-    w0 = Window.partitionBy(*key_cols).orderBy(*_order_cols(order_cols))
-    exprs: dict[str, Column] = {}
-    for win in windows:
-        frame = w0.rowsBetween(-win, -1)
-        for agg in aggs:
-            exprs[f"{target}_roll_{agg}_{win}{suffix}"] = ROLL_AGGS[agg](
-                F.col(target)
-            ).over(frame)
-    return df.withColumns(exprs)
+    exprs = rolling_sql(target, windows, aggs, key_cols, order_cols, suffix)
+    return df.selectExpr(*with_columns(df.columns, exprs))
 
 
 def featurize(
@@ -99,16 +125,24 @@ def featurize(
     (main.py:126-157): time features + lags + rolling aggs + dropna.
 
     The dropna drops the first max(lags) rows of each series (reference
-    main.py:149-153 drops 168 rows = max lag). All of it is one logical
-    plan; Catalyst fuses the projections and reuses one window exchange.
+    main.py:149-153 drops 168 rows = max lag). The three feature groups
+    are one ``selectExpr`` (one analysis pass, no per-Column py4j round
+    trips), with the same output as adding them group by group. The one
+    exception: where a time feature's name is also a column the lags or
+    rolling aggregates read, the time features go in a layer of their own
+    first, so those read the feature as they did when added group by group.
     """
-    from ..functions.timefeat import add_time_features
-
+    exprs = lag_sql(target, lags, key_cols, order_cols)
+    exprs.update(rolling_sql(target, windows, aggs, key_cols, order_cols))
     out = df
     if with_time_features:
-        out = add_time_features(out, ts_col)
-    out = add_lag_features(out, target, lags, key_cols, order_cols)
-    out = add_rolling_features(out, target, windows, aggs, key_cols, order_cols)
+        feats = time_feature_sql(ts_col)
+        read = {c.lower() for c in (target, *key_cols, *order_cols)}
+        if read & set(TIME_FEATURES):
+            out = out.selectExpr(*with_columns(out.columns, feats))
+        else:
+            exprs = {**feats, **exprs}
+    out = out.selectExpr(*with_columns(out.columns, exprs))
     if dropna:
         out = out.na.drop(how="any")
     return out
@@ -218,7 +252,8 @@ def bucketed_rolling(
         .rowsBetween(-window_rows, -1)
     )
     roll_cols = {
-        f"{target}_roll_{a}_{window_rows}h": ROLL_AGGS[a](F.col(target)).over(w)
+        f"{target}_roll_{a}_{window_rows}h":
+            F.call_function(ROLL_AGGS[a], F.col(target)).over(w)
         for a in aggs
     }
     if 0 < len(starts_list) <= 65536:

@@ -20,10 +20,24 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..functions.sqltext import RUNNING, col_ref, over, with_columns
 
 
 def _series_window(key_cols: Sequence[str], order_cols: Sequence[str]) -> Window:
     return Window.partitionBy(*key_cols).orderBy(*[F.col(c).asc() for c in order_cols])
+
+
+def ffill_sql(
+    cols: Sequence[str],
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+) -> dict[str, str]:
+    """M1 as SQL text: each column's last non-null value over the series'
+    unbounded-preceding row frame, by column name."""
+    w = over(key_cols, order_cols, RUNNING)
+    return {c: f"last({col_ref(c)}, true) {w}" for c in cols}
 
 
 def ffill(
@@ -37,12 +51,7 @@ def ffill(
     Reference: src/preprocessing.py:145-146 (``df[col].ffill()``).
     ``last(ignorenulls)`` over an unbounded-preceding row frame.
     """
-    w = _series_window(key_cols, order_cols).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return df.withColumns(
-        {c: F.last(F.col(c), ignorenulls=True).over(w) for c in cols}
-    )
+    return df.selectExpr(*with_columns(df.columns, ffill_sql(cols, key_cols, order_cols)))
 
 
 def bfill(
@@ -108,6 +117,19 @@ def fill_with_strategies(
     return out.drop(*[f"__stat_{c}" for c in strategies])
 
 
+def fill_zero_sql(expr: str, dtype: T.DataType) -> str | None:
+    """M5 as SQL text: the expression ``na.fill(0)`` puts in place of a
+    ``dtype`` column holding ``expr`` (NaN counts as missing in a float
+    column), or None where ``na.fill(0)`` leaves a column of that type
+    alone (it fills numeric columns only)."""
+    if not isinstance(dtype, T.NumericType):
+        return None
+    t = dtype.simpleString()
+    if isinstance(dtype, (T.DoubleType, T.FloatType)):
+        expr = f"nanvl({expr}, CAST(NULL AS {t}))"
+    return f"coalesce({expr}, CAST(0.0D AS {t}))"
+
+
 def fill_zero(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """M5 + M7: fill nulls with 0 (per-column strategy, and the residual
     whole-frame ``fillna(0)`` after ffill — reference
@@ -116,7 +138,9 @@ def fill_zero(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     Bug-compat note (M7): the reference's residual fill also stuffs the
     literal 0 into *non-numeric* columns. ``na.fill(0)`` only touches
     numeric columns; callers wanting bug-parity pass string columns through
-    ``na.fill("0", subset)`` explicitly.
+    ``na.fill("0", subset)`` explicitly. :func:`fill_zero_sql` writes the
+    expression ``na.fill`` generates, for callers that fold the fill into
+    a layer of their own.
     """
     return df.na.fill(0, subset=list(cols) if cols else None)
 

@@ -35,17 +35,35 @@ needed an exchange of its own); with 1 row in 5 a duplicate, perfbench's
 traced ``pipeline`` run still wrote 526 KB of shuffle per iteration
 instead of 873 KB. Building the plan runs no Spark job (``load_table``
 takes its schema from the parquet footer).
+
+Driver build: every expression is SQL text, written once by the operator
+that owns it (``dedup_row_number_sql``, ``ffill_sql``, ``fill_zero_sql``,
+``time_feature_sql``, ``lag_sql``/``rolling_sql``, ``zscore_window_sql``/
+``zscore_flag_sql``), and the plan is built in five analysis layers:
+
+  1. load (one projection) + the repartition;
+  2. the dedup's row number, and its filter;
+  3. ffill and the zero fill as one expression (the dedup's ``_rn`` drops
+     out of this layer's column list);
+  4. time, lag and rolling features in one layer, then the ``na.drop``;
+  5. the z-score window, then its scalar z/flag layer.
+
+Building it with a ``Column`` per ``F.*`` call made 612 py4j round trips;
+the SQL-text layers make 155 (``tests/test_plan_build.py`` caps it at
+200), and the median warm build on sf0.001 went from 135-151 ms to
+98-100 ms on a 4-core host (SCALING §12b).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.readers import load_table
-from ..operators.dedup import dedup_keep_positional
-from ..operators.missing import ffill, fill_zero
-from ..operators.features import featurize
+from ..functions.sqltext import with_columns
 from ..operators.anomaly import rolling_zscore
+from ..operators.dedup import dedup_row_number_sql
+from ..operators.features import featurize
+from ..operators.missing import ffill_sql, fill_zero_sql
+from ..sources.readers import load_table
 
 
 def anomaly_pipeline(
@@ -63,14 +81,25 @@ def anomaly_pipeline(
     generalized to many parallel series — SURVEY §1.1); ordering is
     ``(ts, event_id)`` with the unique event id as a deterministic
     tiebreaker for equal timestamps.
+
+    Equal to ``rolling_zscore(featurize(fill_zero(ffill(
+    dedup_keep_positional(load_table(...).repartition(key))))))`` —
+    built from the same expression builders in five layers (module doc).
     """
     key = ["user_id"]
     order = ["ts", "event_id"]
 
-    # the series exchange goes under the dedup (module doc)
+    # 1. load + the series exchange, under the dedup (module doc)
     events = load_table(spark, sf_dir, "events").repartition(*key)
-    deduped = dedup_keep_positional(events, key + ["ts"], arrival_col="event_id")
-    filled = fill_zero(ffill(deduped, [target], key, order), [target])
+    cols = events.columns
+    # 2. the dedup's row number and its filter; the fill layer drops _rn
+    rn = dedup_row_number_sql(key + ["ts"], arrival_col="event_id")
+    deduped = events.selectExpr(*with_columns(cols, {"_rn": rn})).where("_rn = 1")
+    # 3. forward fill and the zero fill as one expression
+    ffilled = ffill_sql([target], key, order)[target]
+    fill = fill_zero_sql(ffilled, events.schema[target].dataType) or ffilled
+    filled = deduped.selectExpr(*with_columns(cols, {target: fill}))
+    # 4. time, lag and rolling features in one layer, then the dropna
     feats = featurize(
         filled,
         target,
@@ -81,4 +110,5 @@ def anomaly_pipeline(
         aggs=("mean", "std", "min", "max"),
         dropna=True,
     )
+    # 5. the z-score window, then its scalar z/flag layer
     return rolling_zscore(feats, target, zscore_window, key, order, threshold)

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.sqltext import ident
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -47,9 +49,12 @@ def normalize_columns(df: DataFrame) -> DataFrame:
     """P1: strip whitespace from every column name.
 
     Reference: src/data_loader.py:28-33 (``df.columns.str.strip()``).
-    Pure metadata operation — no job, no shuffle.
+    Pure metadata operation — no job, no shuffle; a frame whose names are
+    already clean comes back as it is.
     """
-    return df.toDF(*[c.strip() for c in df.columns])
+    names = df.columns
+    stripped = [c.strip() for c in names]
+    return df if stripped == names else df.toDF(*stripped)
 
 
 _DTYPE_CATEGORIES = {
@@ -163,14 +168,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             pass  # conf removed/immutable -> fall through; read may still work
     reader = spark.read if schema is None else spark.read.schema(schema)
     df = reader.parquet(path)
-    for f in df.schema.fields:
+    fields = (schema if schema is not None else df.schema).fields
+    select = []
+    for f in fields:
+        c = ident(f.name)
         if f.name in ns_cols and isinstance(f.dataType, T.LongType):
-            df = df.withColumn(
-                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-            )
-        elif isinstance(f.dataType, (T.TimestampNTZType,)):
-            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
-    return normalize_columns(df)
+            c = f"timestamp_micros({c} div 1000)"
+        elif isinstance(f.dataType, T.TimestampNTZType):
+            c = f"cast({c} as timestamp)"
+        name = ident(f.name.strip())
+        select.append(c if c == name else f"{c} AS {name}")
+    # the conversions and the P1 name strip (normalize_columns) in ONE
+    # projection, and none where nothing changes
+    return df if select == [ident(f.name) for f in fields] else df.selectExpr(*select)
 
 
 def load_evolving_table(

@@ -2,6 +2,7 @@
 
 - ``anomaly_pipeline`` runs on ONE hash exchange and ONE sort: the series
   exchange sits under the dedup, whose row-number window it satisfies.
+- Building ``anomaly_pipeline`` makes at most 200 py4j round trips.
 - Building ``anomaly_pipeline`` or ``load_table`` starts no job:
   ``load_table`` takes a single parquet file's schema from its footer, and
   that schema is exactly what Spark's inference job would have returned.
@@ -62,6 +63,28 @@ class TestAnomalyPipelinePlan:
             df = anomaly_pipeline(spark, sf_dir)
             _plan(df)
         assert ids == []
+
+    def test_build_round_trip_budget(self, spark, sf_dir):
+        """Every expression ships as SQL text, one ``selectExpr`` per layer:
+        the build makes ~155 py4j round trips (612 when each expression was
+        a ``Column``). Deferred deletes of earlier objects (``m``
+        commands, sent whenever py4j flushes them) are not counted."""
+        anomaly_pipeline(spark, sf_dir)  # warm: first-use class lookups
+        client = spark.sparkContext._gateway._gateway_client
+        sent: list[str] = []
+        send = client.send_command
+
+        def counting(command, *args, **kwargs):
+            sent.append(command)
+            return send(command, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            anomaly_pipeline(spark, sf_dir)
+        finally:
+            del client.send_command
+        built = [c for c in sent if not c.startswith("m\n")]
+        assert len(built) <= 200, len(built)
 
 
 class TestLoadTableSchema:

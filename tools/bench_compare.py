@@ -19,32 +19,39 @@ import json
 import sys
 
 
+def load(path: str) -> tuple[dict, dict]:
+    """One bench artifact and its plans map.
+
+    Accepts bench.py's captured stdout (the artifact's JSON line, then
+    the trailer line: only the first JSON value is read), or a
+    BENCH_r{N}.json wrapper ({'parsed': ..., 'tail': ...}),
+    whose plans map is pulled out of the tail text when present. The
+    tail's plans value is parsed with raw_decode from the found offset
+    (r13 ADVICE) — a brace-bounded regex can't match a map whose values
+    contain nested braces."""
+    with open(path) as f:
+        text = f.read()
+    d, _ = json.JSONDecoder().raw_decode(text, len(text) - len(text.lstrip()))
+    plans = d.get("plans", {})
+    if "parsed" in d:
+        tail = d.get("tail", "")
+        key = '"plans":'
+        at = tail.find(key)
+        if at >= 0:
+            start = at + len(key)
+            while start < len(tail) and tail[start] in " \t\r\n":
+                start += 1
+            try:
+                plans, _ = json.JSONDecoder().raw_decode(tail, start)
+            except ValueError:
+                plans = {}
+        d = d["parsed"]
+    return d, plans
+
+
 def main() -> None:
     old_p, new_p = sys.argv[1], sys.argv[2]
     detail_p = sys.argv[3] if len(sys.argv) > 3 else None
-    def load(path):
-        """Accept either bench.py's own JSON line or the driver's
-        BENCH_r{N}.json wrapper ({'parsed': ..., 'tail': ...}); pull
-        the plans map out of the wrapper's tail text when present.
-        The tail's plans value is parsed with raw_decode from the
-        found offset (r13 ADVICE) — a brace-bounded regex can't match
-        a map whose values contain nested braces."""
-        d = json.load(open(path))
-        plans = d.get("plans", {})
-        if "parsed" in d:
-            tail = d.get("tail", "")
-            key = '"plans":'
-            at = tail.find(key)
-            if at >= 0:
-                start = at + len(key)
-                while start < len(tail) and tail[start] in " \t\r\n":
-                    start += 1
-                try:
-                    plans, _ = json.JSONDecoder().raw_decode(tail, start)
-                except ValueError:
-                    plans = {}
-            d = d["parsed"]
-        return d, plans
 
     old, old_plans = load(old_p)
     new, new_plans = load(new_p)

@@ -13,7 +13,8 @@ Usage:
   ``tools/bench_compare.py`` reads two sweeps. A decade ladder is two
   sweeps at two sf dirs, or at two ``SPARK_GRAFT_CPUS``.
 - ``audit`` plans every ``queries()`` entry (no action runs) and counts
-  exchanges, scans, windows, joins and Python nodes, flagging the
+  exchanges, scans, windows, joins and Python nodes (a cached plan once,
+  however many scans read it), flagging the
   scale-killers: ``BatchEvalPython``, ``CartesianProduct``, a Python-RDD
   local table, and a window fed by a single-partition exchange.
 - ``ab`` times the queries (default: bench.py's HEADLINE) in 10
@@ -90,12 +91,45 @@ def single_partition_windows(plan: str) -> int:
     return hits
 
 
+def distinct_cached(plan: str) -> str:
+    """The plan text with each cached plan printed once.
+
+    A persisted frame's whole plan is printed under its
+    ``InMemoryRelation`` below EVERY ``InMemoryTableScan`` that reads it,
+    though it runs once (the relation line's own attribute ids differ per
+    scan, the cached subtree does not). Repeats of a subtree already seen
+    are cut, relation line included."""
+    lines = plan.splitlines()
+    seen: set[tuple] = set()
+    kept: list[str] = []
+    i = 0
+    while i < len(lines):
+        if "InMemoryRelation" not in lines[i]:
+            kept.append(lines[i])
+            i += 1
+            continue
+        d = _depth(lines[i])
+        j = i + 1
+        while j < len(lines) and (_depth(lines[j]) > d or not lines[j].strip()):
+            j += 1
+        body = tuple((_depth(x) - d, x[_depth(x):]) for x in lines[i + 1 : j])
+        if body in seen:
+            i = j
+        else:  # read on into it: it may print other cached plans again
+            seen.add(body)
+            kept.append(lines[i])
+            i += 1
+    return "\n".join(kept)
+
+
 def audit_plan(plan: str) -> dict:
-    """Flags and node counts of one physical plan's text.
+    """Flags and node counts of one physical plan's text, each cached
+    plan counted once (:func:`distinct_cached`).
 
     ``python_rdd`` counts ``applySchemaToPythonRDD`` scans (a per-action
     Python-worker round trip, flagged); ``jvm_rdd`` counts the other
     ``Scan ExistingRDD`` nodes (checkpoint-pinned JVM rows, benign)."""
+    plan = distinct_cached(plan)
     python_rdd = plan.count("applySchemaToPythonRDD")
     sp_windows = single_partition_windows(plan)
     flags = [f for f in ("BatchEvalPython", "CartesianProduct") if f in plan]
