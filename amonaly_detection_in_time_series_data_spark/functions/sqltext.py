@@ -14,7 +14,7 @@ Identifier quoting lives here and nowhere else:
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Collection, Mapping, Sequence
 
 #: frame of a running aggregate: the partition's first row to this one
 RUNNING = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
@@ -80,6 +80,15 @@ def over(
     return f"OVER ({' '.join(spec + [frame] if frame else spec)})"
 
 
+def unit_snap(expr: str, scale: int | float) -> str:
+    """``expr`` snapped to integer units of ``1/scale`` as a BIGINT: the
+    integer-unit convention of the exact detectors (sums, medians and
+    fences of the snapped values are exact in any engine)."""
+    if isinstance(scale, float):
+        scale = f"{scale!r}D"
+    return f"cast(round({expr} * {scale}) as bigint)"
+
+
 def past_rows(n: int) -> str:
     """The past-only frame ``[t-n, t-1]``: the current row is excluded."""
     return f"ROWS BETWEEN {n} PRECEDING AND 1 PRECEDING"
@@ -90,18 +99,25 @@ def aliased(exprs: Mapping[str, str]) -> list[str]:
     return [f"{v} AS {ident(k)}" for k, v in exprs.items()]
 
 
-def with_columns(columns: Sequence[str], exprs: Mapping[str, str]) -> list[str]:
-    """The ``selectExpr`` list equivalent to ``df.withColumns(exprs)`` on a
-    frame whose columns are ``columns``: a column whose name matches a key
-    (case-insensitively, as the session's default resolver matches) is
-    replaced in place, the other keys are appended in order."""
+def with_columns(
+    columns: Sequence[str], exprs: Mapping[str, str], drop: Collection[str] = ()
+) -> list[str]:
+    """The ``selectExpr`` list equivalent to
+    ``df.withColumns(exprs).drop(*drop)`` on a frame whose columns are
+    ``columns``: a column whose name matches a key (case-insensitively, as
+    the session's default resolver matches) is replaced in place, the
+    other keys are appended in order, and the ``drop`` columns are left
+    out."""
     present = {c.lower() for c in columns}
+    gone = {c.lower() for c in drop} & present
     new = {k: v for k, v in exprs.items() if k.lower() not in present}
-    if len(new) == len(exprs):
+    if len(new) == len(exprs) and not gone:
         return ["*", *aliased(exprs)]
     by_lower = {k.lower(): k for k in exprs}
     out = []
     for c in columns:
+        if c.lower() in gone:
+            continue
         k = by_lower.get(c.lower())
         out.append(ident(c) if k is None else f"{exprs[k]} AS {ident(k)}")
     return out + aliased(new)

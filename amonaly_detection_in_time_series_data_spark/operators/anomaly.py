@@ -17,13 +17,38 @@ The engine ships three tiers:
    MLlib PCA projects features to k dims and back; squared reconstruction
    error per row. Deterministic, trainable at 100 TB (PCA fit is one
    tree-aggregated Gramian pass), same "reconstruction error" contract as
-   the LSTM-AE. A torch LSTM-AE can drop into the same scoring slot via an
-   Arrow-batched pandas UDF (plans.pipeline.score_with_model).
+   the LSTM-AE. The numpy LSTM autoencoder (:mod:`.lstm`) scores in the
+   same slot through Arrow-batched ``mapInPandas``
+   (:func:`.inference.sequence_reconstruction_scores`).
+
+Around them sits the model-free detector battery (:func:`anomaly_battery`:
+z-score, Page-Hinkley, EWMA, Tukey fences + MAD, OLS trend). Each battery
+statistic is written ONCE, as SQL text, by a pure-Python builder that takes
+column names and parameters and returns ``{output: expression}`` maps
+(``..._sql`` functions, a list of them where a statistic needs several
+analysis layers):
+
+- :func:`zscore_window_sql` / :func:`zscore_flag_sql` — rolling z-score;
+- :func:`page_hinkley_sql` — the PH running-mean/sum/min-max layers;
+- :func:`ewma_sql` — truncated EWMA window layer, deviation and alarm;
+- :func:`percentiles_sql`, :func:`order_stats_sql`, :func:`mad_sql`,
+  :func:`abs_dev_sql`, :func:`tukey_fence_sql`, :func:`robust_z_sql` —
+  quartiles/median, the MAD pass, Tukey's fences and the modified z;
+- :func:`ols_sums_sql`, :func:`ols_fit_sql`, :func:`trend_flag_sql` — the
+  OLS sufficient statistics, closed-form fit and residual scoring.
+
+The aggregate-style builders take an optional ``OVER`` clause, so the same
+text is a GROUP BY aggregate in a detector's face and a partition-window
+aggregate in the battery's fused plan. Each DataFrame face ships its
+builders' layers through one ``selectExpr`` per layer (and aggregates
+through one ``groupBy``); :func:`anomaly_battery` merges the same layers
+position by position into the CTEs of one ``spark.sql`` statement. The
+integer-unit snap is :func:`~..functions.sqltext.unit_snap`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 from functools import partial
 
 from pyspark.sql import DataFrame, Window
@@ -36,8 +61,14 @@ from ..functions.sqltext import (
     ident,
     over,
     past_rows,
+    unit_snap,
     with_columns,
 )
+
+
+def _dbl(x: float) -> str:
+    """``x`` as a DOUBLE literal (what ``F.lit`` of a Python float gives)."""
+    return f"{float(x)!r}D"
 
 
 def zscore_window_sql(
@@ -71,8 +102,324 @@ def zscore_flag_sql(
     )
     return {
         f"{p}_zscore": z,
-        "is_anomaly": f"coalesce(cast(abs({z}) > {float(threshold)!r}D as int), 0)",
+        "is_anomaly": f"coalesce(cast(abs({z}) > {_dbl(threshold)} as int), 0)",
     }
+
+
+def page_hinkley_sql(
+    target: str,
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+    delta: float = 0.0,
+    lam: float = 10.0,
+    unit_digits: int | None = None,
+) -> list[dict[str, str]]:
+    """Page-Hinkley as SQL-text layers, each over the previous layer's
+    materialized outputs: running mean, running deviation sums
+    ``__u``/``__d``, their distance from the running min/max, then the
+    alarm. Outputs ``ph_inc``, ``ph_dec``, ``ph_alarm``; the ``__``
+    columns are helpers. With ``unit_digits`` every stage is an exact
+    integer over the snapped value ``__m`` and the running mean is
+    ``floor((2S+n)/(2n))`` (see :func:`page_hinkley`)."""
+    t = col_ref(target)
+    run = over(key_cols, order_cols, RUNNING)
+    if unit_digits is None:
+        d, lam_t = _dbl(delta), _dbl(lam)
+        return [
+            {"__xbar": f"avg({t}) {run}"},
+            {
+                "__u": f"sum({t} - __xbar - {d}) {run}",
+                "__d": f"sum({t} - __xbar + {d}) {run}",
+            },
+            {
+                "ph_inc": f"__u - min(__u) {run}",
+                "ph_dec": f"max(__d) {run} - __d",
+            },
+            {"ph_alarm": f"cast(ph_inc > {lam_t} OR ph_dec > {lam_t} as int)"},
+        ]
+    scale = 10**unit_digits
+    m = unit_snap(t, scale)
+    d, lam_i = int(round(delta * scale)), int(round(lam * scale))
+    return [
+        {
+            "__m": m,
+            "__s_run": f"sum({m}) {run}",
+            "__n_run": f"count({m}) {run}",
+        },
+        {
+            "__xbar_i": "cast(floor((2 * __s_run + __n_run)"
+            " / (2 * __n_run)) as bigint)"
+        },
+        {
+            "__u": f"sum(__m - __xbar_i - {d}) {run}",
+            "__d": f"sum(__m - __xbar_i + {d}) {run}",
+        },
+        {
+            "__inc_i": f"__u - min(__u) {run}",
+            "__dec_i": f"max(__d) {run} - __d",
+        },
+        {
+            "ph_inc": f"__inc_i / {scale}",
+            "ph_dec": f"__dec_i / {scale}",
+            "ph_alarm": f"cast(__inc_i > {lam_i} OR __dec_i > {lam_i} as int)",
+        },
+    ]
+
+
+def ewma_sql(
+    target: str,
+    window_rows: int,
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+    alpha: float = 0.5,
+    threshold: float = 3.0,
+) -> list[dict[str, str]]:
+    """The truncated EWMA control chart as two SQL-text layers: the window
+    layer (``__rstd`` and the weighted-sum numerator/denominator over the
+    past-only frame), then ``ewma``, ``ewma_dev`` and ``ewma_alarm``.
+
+    The weighted sum is ONE ``collect_list`` window, reversed so lag 1 is
+    first, zipped against the literal weight vector and folded left to
+    right. That is bit-identical to a flat ``lag(t, j)`` chain: zip_with
+    pads the short start-of-partition arrays with NULL structs (the
+    out-of-frame lag) and ``aggregate`` adds the terms in the same
+    j = 1..w order. It replaces 2*w window expressions with one: measured
+    (interleaved, sf0.1 events with planted nulls, w = 32) replan
+    34 -> 16 ms and execution 0.72 -> 0.34 s."""
+    t = col_ref(target)
+    we = over(key_cols, order_cols, past_rows(window_rows))
+    wts = ", ".join(_dbl((1.0 - alpha) ** (j - 1)) for j in range(1, window_rows + 1))
+    terms = f"zip_with(reverse(collect_list(struct({t} AS v)) {we}), array({wts}), (s, w) ->"
+    ewma = "CASE WHEN __ewma_den > 0.0D THEN __ewma_num / __ewma_den END"
+    dev = f"({t} - ({ewma})) / nullif(__rstd, 0.0D)"
+    return [
+        {
+            "__rstd": f"stddev_samp({t}) {we}",
+            "__ewma_num": f"aggregate({terms} coalesce(s.v * w, 0.0D)),"
+            " 0.0D, (acc, x) -> acc + x)",
+            "__ewma_den": f"aggregate({terms} CASE WHEN s.v IS NOT NULL"
+            " THEN w ELSE 0.0D END), 0.0D, (acc, x) -> acc + x)",
+        },
+        {
+            "ewma": ewma,
+            "ewma_dev": dev,
+            "ewma_alarm": f"coalesce(cast(abs({dev}) > {_dbl(threshold)} as int), 0)",
+        },
+    ]
+
+
+def percentiles_sql(target: str, unit_digits: int | None = None) -> str:
+    """Quartiles and median of ``target`` (snapped to integer units with
+    ``unit_digits``) in ONE exact ``percentile`` buffer: the aggregate the
+    Tukey/MAD family reads its order statistics from."""
+    x = col_ref(target)
+    if unit_digits is not None:
+        x = unit_snap(x, 10**unit_digits)
+    return f"percentile({x}, array(0.25, 0.5, 0.75))"
+
+
+def order_stats_sql(pcts: str, unit_digits: int | None = None) -> dict[str, str]:
+    """``__q1``, ``__q3`` and the median out of the :func:`percentiles_sql`
+    array ``pcts`` (the aggregate itself, or a column holding it). Float:
+    the median is the public ``med``. Integer mode: ``4*q1``, ``4*q3`` and
+    ``2*median`` of integer units, exact BIGINTs (quartile weights are
+    quarters, median weights halves); the median is ``__med_2``."""
+    if unit_digits is None:
+        return {"__q1": f"{pcts}[0]", "__q3": f"{pcts}[2]", "med": f"{pcts}[1]"}
+    return {
+        "__q1": f"cast(round(4 * {pcts}[0]) as bigint)",
+        "__q3": f"cast(round(4 * {pcts}[2]) as bigint)",
+        "__med_2": f"cast(round(2 * {pcts}[1]) as bigint)",
+    }
+
+
+def abs_dev_sql(target: str, unit_digits: int | None = None) -> str:
+    """``|x - median|`` over a frame carrying :func:`order_stats_sql`'s
+    median; in integer mode in half-units (``|2m - __med_2|``)."""
+    t = col_ref(target)
+    if unit_digits is None:
+        return f"abs({t} - med)"
+    return f"abs(2 * {unit_snap(t, 10**unit_digits)} - __med_2)"
+
+
+def mad_sql(
+    target: str, unit_digits: int | None = None, window: str = ""
+) -> list[dict[str, str]]:
+    """The MAD pass as two layers: the absolute deviation (a scalar over
+    a frame carrying the median), then its median. Float: ``mad``;
+    integer mode: ``__mad_8``, the MAD in eighth-units (exact). The
+    second layer is an aggregate, or with ``window`` (an ``OVER``
+    clause) a window aggregate."""
+    over_w = f" {window}" if window else ""
+    if unit_digits is None:
+        return [
+            {"__dev": abs_dev_sql(target)},
+            {"mad": f"percentile(__dev, 0.5){over_w}"},
+        ]
+    return [
+        {"__sdev_2": abs_dev_sql(target, unit_digits)},
+        {"__mad_8": f"cast(round(4 * percentile(__sdev_2, 0.5){over_w}) as bigint)"},
+    ]
+
+
+def tukey_fence_sql(
+    target: str, k: float = 1.5, unit_digits: int | None = None
+) -> dict[str, str]:
+    """Tukey's fences over a frame carrying :func:`order_stats_sql`'s
+    ``__q1``/``__q3``: ``iqr_lo``, ``iqr_hi``, ``iqr_alarm``. Integer
+    mode (``k`` = 1.5) compares ``8m`` against the integer fences
+    ``5*q1_4 - 3*q3_4`` and ``5*q3_4 - 3*q1_4``: no float boundary."""
+    t = col_ref(target)
+    if unit_digits is None:
+        lo = f"__q1 - {_dbl(k)} * (__q3 - __q1)"
+        hi = f"__q3 + {_dbl(k)} * (__q3 - __q1)"
+        return {
+            "iqr_lo": lo,
+            "iqr_hi": hi,
+            "iqr_alarm": f"cast({t} < ({lo}) OR {t} > ({hi}) as int)",
+        }
+    scale = 10**unit_digits
+    m8 = f"8 * {unit_snap(t, scale)}"
+    lo, hi = "5 * __q1 - 3 * __q3", "5 * __q3 - 3 * __q1"
+    return {
+        "iqr_lo": f"({lo}) / {_dbl(8.0 * scale)}",
+        "iqr_hi": f"({hi}) / {_dbl(8.0 * scale)}",
+        "iqr_alarm": f"cast({m8} < {lo} OR {m8} > {hi} as int)",
+    }
+
+
+def robust_z_sql(
+    target: str, threshold: float = 3.5, unit_digits: int | None = None
+) -> dict[str, str]:
+    """The Iglewicz-Hoaglin modified z-score over a frame carrying the
+    median and the MAD. Float: ``dev``, ``robust_mz``, ``robust_alarm``.
+    Integer mode (``threshold`` = 3.5): ``med``, ``mad``, ``dev`` as exact
+    decimals and the alarm ``0.6745 * dev / mad > 3.5`` as an integer
+    cross-multiplication of the half-unit deviation and the eighth-unit
+    MAD (``0.6745 * 8/2`` against 3.5, both times 10^4)."""
+    dev = abs_dev_sql(target, unit_digits)
+    if unit_digits is None:
+        mz = f"0.6745D * {dev} / nullif(mad, 0.0D)"
+        return {
+            "dev": dev,
+            "robust_mz": mz,
+            "robust_alarm": f"coalesce(cast({mz} > {_dbl(threshold)} as int), 0)",
+        }
+    s2, s8 = _dbl(2.0 * 10**unit_digits), _dbl(8.0 * 10**unit_digits)
+    return {
+        "med": f"__med_2 / {s2}",
+        "mad": f"__mad_8 / {s8}",
+        "dev": f"{dev} / {s2}",
+        "robust_alarm": f"cast(__mad_8 > 0 AND 26980 * {dev} > 35000 * __mad_8 as int)",
+    }
+
+
+def ols_sums_sql(x: str, y: str, window: str = "") -> dict[str, str]:
+    """The six OLS sufficient statistics ``(n, Σx, Σy, Σx², Σxy, Σy²)``
+    of the rows where ``y`` is non-NULL (``x`` must be non-NULL there),
+    as aggregates (or window aggregates with ``window``, an ``OVER``
+    clause). Over BIGINT ``x``/``y`` every sum is exact in any combine
+    order."""
+    ok = f"{y} IS NOT NULL"
+    over_w = f" {window}" if window else ""
+    return {
+        "__n": f"count(CASE WHEN {ok} THEN 1 END){over_w}",
+        "__sx": f"sum(CASE WHEN {ok} THEN {x} END){over_w}",
+        "__sy": f"sum({y}){over_w}",
+        "__sxx": f"sum(CASE WHEN {ok} THEN {x} * {x} END){over_w}",
+        "__sxy": f"sum({x} * {y}){over_w}",
+        "__syy": f"sum({y} * {y}){over_w}",
+    }
+
+
+def ols_fit_sql(min_points: int = 3) -> list[dict[str, str]]:
+    """The closed-form OLS fit from :func:`ols_sums_sql`'s sums, as two
+    layers: slope ``__b`` (NULL below ``min_points`` points or at zero
+    x-variance), then intercept ``__a`` and residual standard error
+    ``__s`` (``SSE = Syy - Sy²/n - b²(Sxx - Sx²/n)``, so no second pass
+    over the rows)."""
+    n, sx, sy, sxx, sxy, syy = (
+        f"cast({c} as double)"
+        for c in ("__n", "__sx", "__sy", "__sxx", "__sxy", "__syy")
+    )
+    vx = f"{n} * {sxx} - {sx} * {sx}"
+    sse = (
+        f"greatest(0.0D, {syy} - {sy} * {sy} / {n}"
+        f" - __b * __b * ({sxx} - {sx} * {sx} / {n}))"
+    )
+    return [
+        {
+            "__b": f"CASE WHEN {n} >= {min_points} AND {vx} > 0"
+            f" THEN ({n} * {sxy} - {sx} * {sy}) / ({vx}) END"
+        },
+        {
+            "__a": f"({sy} - __b * {sx}) / {n}",
+            "__s": f"CASE WHEN {n} > 2 THEN sqrt({sse} / ({n} - 2)) END",
+        },
+    ]
+
+
+def trend_flag_sql(
+    y: str,
+    x: str,
+    threshold: float = 3.0,
+    round_digits: int | None = 6,
+    scale: int | None = None,
+) -> dict[str, str]:
+    """Scoring against an :func:`ols_fit_sql` fit over a frame carrying
+    ``__a``/``__b``/``__s``: ``trend_slope``, ``trend_intercept``,
+    ``trend_fit``, ``trend_resid``, ``trend_z`` and ``trend_alarm``
+    (NULL when z is). ``y``/``x`` are DOUBLE expressions; with ``scale``
+    the fit is in integer units and the outputs are divided back by it.
+    ``round_digits=None`` leaves every output unrounded."""
+
+    def out(e: str) -> str:
+        e = f"{e} / {scale}" if scale is not None else e
+        return e if round_digits is None else f"round({e}, {round_digits})"
+
+    fit = f"(__a + __b * {x})"
+    resid = f"({y} - {fit})"
+    z = f"{resid} / nullif(__s, 0.0D)"
+    if round_digits is not None:
+        z = f"round({z}, {round_digits})"
+    return {
+        "trend_slope": out("__b"),
+        "trend_intercept": out("__a"),
+        "trend_fit": out(fit),
+        "trend_resid": out(resid),
+        "trend_z": z,
+        "trend_alarm": f"CASE WHEN {z} IS NOT NULL THEN"
+        f" cast(abs({z}) > {_dbl(threshold)} as int) END",
+    }
+
+
+def _helpers(layers: Sequence[Mapping[str, str]]) -> list[str]:
+    """The ``__`` helper columns a layer list defines."""
+    return [c for layer in layers for c in layer if c.startswith("__")]
+
+
+def _layered(
+    df: DataFrame, layers: Sequence[Mapping[str, str]], drop: Sequence[str] = ()
+) -> DataFrame:
+    """Each layer through one ``selectExpr`` (``withColumns`` semantics);
+    the last one also leaves out the ``drop`` columns."""
+    for i, layer in enumerate(layers):
+        last = i == len(layers) - 1
+        df = df.selectExpr(*with_columns(df.columns, layer, drop if last else ()))
+    return df
+
+
+def _attach(frame: DataFrame, stats: DataFrame, keys: list[str]) -> DataFrame:
+    """Broadcast-join per-key (or, keyless, global) statistics back."""
+    if keys:
+        return frame.join(F.broadcast(stats), keys)
+    return frame.crossJoin(F.broadcast(stats))
+
+
+def _aggregate(src: DataFrame, keys: list[str], exprs: Mapping[str, str]) -> DataFrame:
+    """One (grouped, when ``keys``) aggregate of SQL-text expressions."""
+    aggs = [F.expr(e) for e in aliased(exprs)]
+    return src.groupBy(*keys).agg(*aggs) if keys else src.agg(*aggs)
 
 
 def rolling_zscore(
@@ -218,7 +565,11 @@ def page_hinkley(
     textbook CUSUM (max(0, ...) reset form) non-relational is exactly
     what the PH min-tracking form avoids — this is the standard
     streaming-friendly equivalent, and it is SQL-expressible, so the
-    detector is oracle-checkable.
+    detector is oracle-checkable. The stages are
+    :func:`page_hinkley_sql`'s layers, one ``selectExpr`` each: each
+    layer reads only the previous layer's materialized outputs
+    (re-deriving a window expression would make WindowExec evaluate it
+    twice).
 
     ``unit_digits``: when set, the whole statistic runs in EXACT integer
     micro-units (``10^-unit_digits``), the same convention as
@@ -233,120 +584,8 @@ def page_hinkley(
     threshold detector, and the float path stays available with
     ``unit_digits=None``.
     """
-    run = (
-        Window.partitionBy(*[F.col(c) for c in key_cols])
-        .orderBy(*[F.col(c).asc() for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # window stages are layered so each layer's columns depend only on
-    # the PREVIOUS layer's materialized outputs (re-deriving a window
-    # expr would make WindowExec evaluate it twice); within a layer,
-    # columns batch into one withColumns — chained withColumn calls
-    # each re-analyze the whole tree and planning time is a measured
-    # per-query driver cost in the battery
-    if unit_digits is None:
-        d = df.withColumn("__xbar", F.avg(target).over(run))
-        d = d.withColumns(
-            {
-                "__u": F.sum(
-                    F.col(target) - F.col("__xbar") - F.lit(delta)
-                ).over(run),
-                "__d": F.sum(
-                    F.col(target) - F.col("__xbar") + F.lit(delta)
-                ).over(run),
-            }
-        )
-        d = d.withColumns(
-            {
-                "ph_inc": F.col("__u") - F.min("__u").over(run),
-                "ph_dec": F.max("__d").over(run) - F.col("__d"),
-            }
-        )
-        inc, dec = F.col("ph_inc"), F.col("ph_dec")
-        lam_inc = lam_dec = F.lit(lam)
-    else:
-        scale = 10**unit_digits
-        m = F.round(F.col(target) * scale).cast("bigint")
-        delta_i = int(round(delta * scale))
-        d = df.withColumn("__m", m)
-        s_run = F.sum("__m").over(run)
-        n_run = F.count("__m").over(run)
-        d = d.withColumn(
-            "__xbar_i", F.floor((2 * s_run + n_run) / (2 * n_run)).cast("bigint")
-        )
-        d = d.withColumns(
-            {
-                "__u": F.sum(
-                    F.col("__m") - F.col("__xbar_i") - F.lit(delta_i)
-                ).over(run),
-                "__d": F.sum(
-                    F.col("__m") - F.col("__xbar_i") + F.lit(delta_i)
-                ).over(run),
-            }
-        )
-        d = d.withColumns(
-            {
-                "__inc_i": F.col("__u") - F.min("__u").over(run),
-                "__dec_i": F.max("__d").over(run) - F.col("__d"),
-            }
-        )
-        # integer threshold compare — exact (lam must sit on the grid)
-        lam_i = F.lit(int(round(lam * scale)))
-        d = d.withColumns(
-            {
-                "ph_inc": F.col("__inc_i") / scale,
-                "ph_dec": F.col("__dec_i") / scale,
-                "ph_alarm": (
-                    (F.col("__inc_i") > lam_i) | (F.col("__dec_i") > lam_i)
-                ).cast("int"),
-            }
-        )
-        return d.drop("__m", "__xbar_i", "__u", "__d", "__inc_i", "__dec_i")
-    d = d.withColumn(
-        "ph_alarm", ((inc > lam_inc) | (dec > lam_dec)).cast("int")
-    )
-    return d.drop("__xbar", "__u", "__d")
-
-
-def _ewma_num_den_sql(
-    t: str, we: str, window_rows: int, alpha: float
-) -> tuple[str, str]:
-    """Truncated-EWMA numerator/denominator as SQL text: ONE
-    ``collect_list`` window over the past-only frame ``we``, reversed so
-    lag-1 is first, zipped against the literal weight vector and folded
-    left-to-right (r15; shared by :func:`anomaly_battery` and
-    :func:`ewma_deviation`).
-
-    Bit-identical to the flat ``lag(t, j)`` chain it replaced: zip_with
-    pads the short start-of-partition arrays with NULL structs (the
-    out-of-frame lag), and ``aggregate``'s left fold adds terms in the
-    same j=1..w order, so float summation order is unchanged. Replaces
-    2*w window expressions with one — measured (r15, interleaved, sf0.1
-    events with planted nulls): replan 34 -> 16 ms and execution
-    0.72 -> 0.34 s for w=32. The per-row cost is w struct copies plus an
-    interpreted 2*w-step fold, vs 2*w per-row offset-frame advances in
-    WindowExec — the fold wins from small w upward, and above the 32-row
-    cap a flat chain would also blow codegen size (SCALING §1b).
-    """
-    wts = (
-        "array("
-        + ", ".join(
-            repr(float((1.0 - alpha) ** (j - 1))) + "D"
-            for j in range(1, window_rows + 1)
-        )
-        + ")"
-    )
-    clw = f"reverse(collect_list(struct({t} AS v)) {we})"
-    num = (
-        f"aggregate(zip_with({clw}, {wts}, (s, w) ->"
-        " coalesce(s.v * w, 0.0D)), 0.0D, (acc, x) -> acc + x)"
-    )
-    den = (
-        f"aggregate(zip_with({clw}, {wts}, (s, w) ->"
-        " CASE WHEN s.v IS NOT NULL THEN w ELSE 0.0D END), 0.0D,"
-        " (acc, x) -> acc + x)"
-    )
-    return num, den
+    layers = page_hinkley_sql(target, key_cols, order_cols, delta, lam, unit_digits)
+    return _layered(df, layers, _helpers(layers))
 
 
 def ewma_deviation(
@@ -375,45 +614,44 @@ def ewma_deviation(
     by round-at-output). The SQL-oracle form is the self-join on
     row_number with the same weights.
 
-    The weighted sum is ONE ``collect_list`` window + a literal-weights
-    zip folded left-to-right (r15, :func:`_ewma_num_den_sql` — replaces
-    the flat 2*w ``lag()`` chain: bit-identical including float
-    summation order, ~half the replan cost, and measured 2.1x faster to
-    execute at w=32). The 32-row cap stands — beyond it the truncated-
-    window model itself should be revisited, not the weight vector.
+    Two ``selectExpr`` layers, :func:`ewma_sql`'s: the window outputs,
+    then the scalar deviation and alarm over them. The 32-row cap
+    stands — beyond it the truncated-window model itself should be
+    revisited, not the weight vector.
     """
     if window_rows > 32:
         raise ValueError(
             "ewma_deviation: window_rows > 32 — use the seasonal/rolling "
             "family or extend with the HOF form (flat codegen blows up)"
         )
-    w = (
-        Window.partitionBy(*[F.col(c) for c in key_cols])
-        .orderBy(*[F.col(c).asc() for c in order_cols])
-        .rowsBetween(-window_rows, -1)
-    )
-    we = over(key_cols, order_cols, past_rows(window_rows))
-    num, den = _ewma_num_den_sql(col_ref(target), we, window_rows, alpha)
-    # __rstd and the ewma num/den are window outputs over the input
-    # frame — one layer; dev/alarm are scalar over them — one more layer
-    # (batched withColumns: analysis cost, see rolling_zscore)
-    d = df.withColumns(
-        {
-            "__rstd": F.stddev_samp(target).over(w),
-            "ewma": F.expr(
-                f"CASE WHEN ({den}) > 0.0D THEN ({num}) / ({den}) END"
-            ),
-        }
-    )
-    dev = (F.col(target) - F.col("ewma")) / F.nullif(F.col("__rstd"), F.lit(0.0))
-    return d.withColumns(
-        {
-            "ewma_dev": dev,
-            "ewma_alarm": F.coalesce(
-                (F.abs(dev) > F.lit(threshold)).cast("int"), F.lit(0)
-            ),
-        }
-    ).drop("__rstd")
+    layers = ewma_sql(target, window_rows, key_cols, order_cols, alpha, threshold)
+    return _layered(df, layers, _helpers(layers))
+
+
+def _order_stats_joined(
+    df: DataFrame,
+    target: str,
+    key_cols: Sequence[str] | None,
+    unit_digits: int | None,
+    stats_source: DataFrame | None,
+    names: Sequence[str],
+    mad: bool,
+) -> DataFrame:
+    """``df`` with the per-key (or global) order statistics ``names`` of
+    :func:`order_stats_sql` broadcast-joined back and, when ``mad``, the
+    MAD from a second aggregate over the stats frame joined to them. Both
+    aggregates read ``stats_source`` (default ``df``)."""
+    keys = list(key_cols) if key_cols else []
+    src = stats_source if stats_source is not None else df
+    pcts = percentiles_sql(target, unit_digits)
+    stats = order_stats_sql(pcts, unit_digits)
+    stats1 = _aggregate(src, keys, {c: stats[c] for c in names})
+    out = _attach(df, stats1, keys)
+    if not mad:
+        return out
+    dev, mad_agg = mad_sql(target, unit_digits)
+    stats2 = _aggregate(_layered(_attach(src, stats1, keys), [dev]), keys, mad_agg)
+    return _attach(out, stats2, keys)
 
 
 def iqr_flags(
@@ -428,11 +666,11 @@ def iqr_flags(
     q3 + k*IQR]`` with exact (interpolated) quartiles, per key or
     globally.
 
-    Per-key stats are one aggregate (4 doubles per key) broadcast
-    back — never a per-key window over the data. Exact ``percentile``
-    is a per-key sort of that key's values; at 100 TB swap
-    ``approx_percentile`` into the same slot (documented trade, same
-    fence logic).
+    Per-key stats are one aggregate (quartiles of one percentile buffer
+    per key) broadcast back — never a per-key window over the data.
+    Exact ``percentile`` is a per-key sort of that key's values; at
+    100 TB swap ``approx_percentile`` into the same slot (documented
+    trade, same fence logic).
 
     ``unit_digits``: exact integer-unit mode (requires ``k=1.5``) — the
     quartile interpolation weights are quarters, so ``4*percentile`` of
@@ -450,46 +688,12 @@ def iqr_flags(
     each stats pass would re-read every prior stats table; against the
     raw scan it is one column-pruned pass of the base table.
     """
-    src = stats_source if stats_source is not None else df
-    if unit_digits is None:
-        q1 = F.expr(f"percentile({target}, 0.25)").alias("__q1")
-        q3 = F.expr(f"percentile({target}, 0.75)").alias("__q3")
-        lo = F.col("__q1") - F.lit(k) * (F.col("__q3") - F.col("__q1"))
-        hi = F.col("__q3") + F.lit(k) * (F.col("__q3") - F.col("__q1"))
-        alarm = (F.col(target) < F.col("iqr_lo")) | (
-            F.col(target) > F.col("iqr_hi")
-        )
-    else:
-        if abs(k - 1.5) > 1e-12:
-            raise ValueError("iqr_flags integer mode supports k=1.5 only")
-        scale = 10**unit_digits
-        mexp = f"cast(round({target} * {scale}) as bigint)"
-        # 4*quantile(int units) is integer-valued exactly (weights are
-        # quarters); round() only strips float representation fuzz
-        q1 = F.expr(
-            f"cast(round(4 * percentile({mexp}, 0.25)) as bigint)"
-        ).alias("__q1")
-        q3 = F.expr(
-            f"cast(round(4 * percentile({mexp}, 0.75)) as bigint)"
-        ).alias("__q3")
-        lo = (5 * F.col("__q1") - 3 * F.col("__q3")) / F.lit(8.0 * scale)
-        hi = (5 * F.col("__q3") - 3 * F.col("__q1")) / F.lit(8.0 * scale)
-        m8 = F.expr(f"8 * {mexp}")
-        alarm = (m8 < 5 * F.col("__q1") - 3 * F.col("__q3")) | (
-            m8 > 5 * F.col("__q3") - 3 * F.col("__q1")
-        )
-    if key_cols:
-        stats = src.groupBy(*key_cols).agg(q1, q3)
-        joined = df.join(F.broadcast(stats), list(key_cols))
-    else:
-        stats = src.agg(q1, q3)
-        joined = df.crossJoin(F.broadcast(stats))
-    return (
-        joined.withColumn("iqr_lo", lo)
-        .withColumn("iqr_hi", hi)
-        .withColumn("iqr_alarm", alarm.cast("int"))
-        .drop("__q1", "__q3")
+    if unit_digits is not None and abs(k - 1.5) > 1e-12:
+        raise ValueError("iqr_flags integer mode supports k=1.5 only")
+    d = _order_stats_joined(
+        df, target, key_cols, unit_digits, stats_source, ("__q1", "__q3"), mad=False
     )
+    return _layered(d, [tukey_fence_sql(target, k, unit_digits)], ("__q1", "__q3"))
 
 
 def robust_zscore_flags(
@@ -511,11 +715,11 @@ def robust_zscore_flags(
     ``unit_digits``: exact integer-unit mode (requires the default
     ``threshold=3.5``). Medians of unit-grid data sit in half-units and
     MAD interpolation in eighth-units — both exact integers scaled up —
-    and the alarm becomes the integer cross-multiplication
-    ``26980 * dev_2 > 35000 * mad_8`` (26980 = 4*6745), so there is no
-    float comparison anywhere and any engine reproduces the flags
-    bit-for-bit. Outputs ``med``/``mad``/``dev`` are exact decimals
-    (<= 5 places). The float mode additionally emits ``robust_mz``.
+    and the alarm becomes an integer cross-multiplication of the two
+    (:func:`robust_z_sql`), so there is no float comparison anywhere and
+    any engine reproduces the flags bit-for-bit. Outputs
+    ``med``/``mad``/``dev`` are exact decimals (<= 5 places). The float
+    mode additionally emits ``robust_mz``.
 
     ``stats_source``: frame to aggregate median/MAD from (default
     ``df``) — same lineage-flattening rationale as :func:`iqr_flags`:
@@ -523,63 +727,14 @@ def robust_zscore_flags(
     against it, so composing detectors never re-drags prior joins into
     the aggregates.
     """
-    keys = list(key_cols) if key_cols else None
-    src = stats_source if stats_source is not None else df
-
-    def attach(frame: DataFrame, stats: DataFrame) -> DataFrame:
-        if keys:
-            return frame.join(F.broadcast(stats), keys)
-        return frame.crossJoin(F.broadcast(stats))
-
-    if unit_digits is None:
-        med_agg = F.expr(f"percentile({target}, 0.5)").alias("med")
-        stats1 = src.groupBy(*keys).agg(med_agg) if keys else src.agg(med_agg)
-        s = attach(src, stats1).withColumn(
-            "__dev", F.abs(F.col(target) - F.col("med"))
-        )
-        mad_agg = F.expr("percentile(__dev, 0.5)").alias("mad")
-        stats2 = s.groupBy(*keys).agg(mad_agg) if keys else s.agg(mad_agg)
-        d = attach(attach(df, stats1), stats2)
-        dev = F.abs(F.col(target) - F.col("med"))
-        d = d.withColumn("dev", dev)
-        mz = F.lit(0.6745) * F.col("dev") / F.nullif(F.col("mad"), F.lit(0.0))
-        return d.withColumn("robust_mz", mz).withColumn(
-            "robust_alarm",
-            F.coalesce((mz > F.lit(threshold)).cast("int"), F.lit(0)),
-        )
-
-    if abs(threshold - 3.5) > 1e-12:
+    if unit_digits is not None and abs(threshold - 3.5) > 1e-12:
         raise ValueError("robust_zscore_flags integer mode needs threshold=3.5")
-    scale = 10**unit_digits
-    mexp = f"cast(round({target} * {scale}) as bigint)"
-    med2_agg = F.expr(
-        f"cast(round(2 * percentile({mexp}, 0.5)) as bigint)"
-    ).alias("__med_2")
-    stats1 = src.groupBy(*keys).agg(med2_agg) if keys else src.agg(med2_agg)
-    s = attach(src, stats1).withColumn(
-        "__sdev_2", F.abs(F.expr(f"2 * {mexp}") - F.col("__med_2"))
+    med = "med" if unit_digits is None else "__med_2"
+    d = _order_stats_joined(
+        df, target, key_cols, unit_digits, stats_source, (med,), mad=True
     )
-    mad8_agg = F.expr(
-        "cast(round(4 * percentile(__sdev_2, 0.5)) as bigint)"
-    ).alias("__mad_8")
-    stats2 = s.groupBy(*keys).agg(mad8_agg) if keys else s.agg(mad8_agg)
-    d = attach(attach(df, stats1), stats2)
-    d = d.withColumn(
-        "__dev_2", F.abs(F.expr(f"2 * {mexp}") - F.col("__med_2"))
-    )
-    return (
-        d.withColumn("med", F.col("__med_2") / (2.0 * scale))
-        .withColumn("mad", F.col("__mad_8") / (8.0 * scale))
-        .withColumn("dev", F.col("__dev_2") / (2.0 * scale))
-        .withColumn(
-            "robust_alarm",
-            (
-                (F.col("__mad_8") > 0)
-                & (26980 * F.col("__dev_2") > 35000 * F.col("__mad_8"))
-            ).cast("int"),
-        )
-        .drop("__med_2", "__dev_2", "__mad_8")
-    )
+    out = robust_z_sql(target, threshold, unit_digits)
+    return _layered(d, [out], ("__med_2", "__mad_8"))
 
 
 def tukey_robust_flags(
@@ -598,9 +753,8 @@ def tukey_robust_flags(
     over ``stats_source`` (IQR quartiles; median; MAD of residuals).
     The quartiles and the median are order statistics of the SAME
     column, so pass 1 here computes ``percentile(m, array(0.25, 0.5,
-    0.75))`` in ONE groupBy aggregate — Catalyst deduplicates the three
-    references into a single percentile buffer, so the key's values are
-    buffered once, not three times. MAD keeps its inherent second pass
+    0.75))`` in ONE groupBy aggregate — the key's values are buffered
+    once, not three times. MAD keeps its inherent second pass
     (residuals need the median first). Net: the 5-FileScan battery plan
     becomes 3 scans (main + fused order-stats + MAD), plan-asserted in
     tests — at 100 TB every shaved scan compounds.
@@ -608,160 +762,27 @@ def tukey_robust_flags(
     Semantics, integer-exact mode, ``stats_source`` lineage-flattening
     rationale: see the two fused functions' docstrings.
     """
-    keys = list(key_cols) if key_cols else None
-    src = stats_source if stats_source is not None else df
-
-    def attach(frame: DataFrame, stats: DataFrame) -> DataFrame:
-        if keys:
-            return frame.join(F.broadcast(stats), keys)
-        return frame.crossJoin(F.broadcast(stats))
-
-    if unit_digits is None:
-        p = F.expr(f"percentile({target}, array(0.25, 0.5, 0.75))")
-        aggs = [
-            p[0].alias("__q1"),
-            p[2].alias("__q3"),
-            p[1].alias("med"),
-        ]
-        stats1 = src.groupBy(*keys).agg(*aggs) if keys else src.agg(*aggs)
-        s = attach(src, stats1).withColumn(
-            "__dev", F.abs(F.col(target) - F.col("med"))
-        )
-        mad_agg = F.expr("percentile(__dev, 0.5)").alias("mad")
-        stats2 = s.groupBy(*keys).agg(mad_agg) if keys else s.agg(mad_agg)
-        d = attach(attach(df, stats1), stats2)
-        lo = F.col("__q1") - F.lit(k) * (F.col("__q3") - F.col("__q1"))
-        hi = F.col("__q3") + F.lit(k) * (F.col("__q3") - F.col("__q1"))
-        dev = F.abs(F.col(target) - F.col("med"))
-        mz = F.lit(0.6745) * dev / F.nullif(F.col("mad"), F.lit(0.0))
-        # all scalar over the attached stats: one withColumns layer
-        return d.withColumns(
-            {
-                "iqr_lo": lo,
-                "iqr_hi": hi,
-                "iqr_alarm": (
-                    (F.col(target) < lo) | (F.col(target) > hi)
-                ).cast("int"),
-                "dev": dev,
-                "robust_mz": mz,
-                "robust_alarm": F.coalesce(
-                    (mz > F.lit(threshold)).cast("int"), F.lit(0)
-                ),
-            }
-        ).drop("__q1", "__q3")
-
-    if abs(k - 1.5) > 1e-12:
-        raise ValueError("tukey_robust_flags integer mode supports k=1.5 only")
-    if abs(threshold - 3.5) > 1e-12:
-        raise ValueError("tukey_robust_flags integer mode needs threshold=3.5")
-    scale = 10**unit_digits
-    mexp = f"cast(round({target} * {scale}) as bigint)"
-    # one percentile buffer serves q1/median/q3 (Catalyst dedupes the
-    # three identical percentile calls); 4*quartile and 2*median of
-    # integer units are exact integers (quarter/half interpolation)
-    aggs = [
-        F.expr(f"cast(round(4 * percentile({mexp}, array(0.25, 0.5, 0.75))[0]) as bigint)").alias("__q1"),
-        F.expr(f"cast(round(4 * percentile({mexp}, array(0.25, 0.5, 0.75))[2]) as bigint)").alias("__q3"),
-        F.expr(f"cast(round(2 * percentile({mexp}, array(0.25, 0.5, 0.75))[1]) as bigint)").alias("__med_2"),
-    ]
-    stats1 = src.groupBy(*keys).agg(*aggs) if keys else src.agg(*aggs)
-    s = attach(src, stats1).withColumn(
-        "__sdev_2", F.abs(F.expr(f"2 * {mexp}") - F.col("__med_2"))
+    if unit_digits is not None:
+        if abs(k - 1.5) > 1e-12:
+            raise ValueError("tukey_robust_flags integer mode supports k=1.5 only")
+        if abs(threshold - 3.5) > 1e-12:
+            raise ValueError("tukey_robust_flags integer mode needs threshold=3.5")
+    names = ("__q1", "__q3", "med" if unit_digits is None else "__med_2")
+    d = _order_stats_joined(
+        df, target, key_cols, unit_digits, stats_source, names, mad=True
     )
-    mad8_agg = F.expr(
-        "cast(round(4 * percentile(__sdev_2, 0.5)) as bigint)"
-    ).alias("__mad_8")
-    stats2 = s.groupBy(*keys).agg(mad8_agg) if keys else s.agg(mad8_agg)
-    d = attach(attach(df, stats1), stats2)
-    # every derived column is SCALAR over (target, __q1, __q3, __med_2,
-    # __mad_8): one withColumns layer, one analysis pass (CSE dedupes
-    # the repeated sub-expressions after project collapse)
-    m8 = F.expr(f"8 * {mexp}")
-    dev_2 = F.abs(F.expr(f"2 * {mexp}") - F.col("__med_2"))
-    return d.withColumns(
-        {
-            "iqr_lo": (5 * F.col("__q1") - 3 * F.col("__q3"))
-            / F.lit(8.0 * scale),
-            "iqr_hi": (5 * F.col("__q3") - 3 * F.col("__q1"))
-            / F.lit(8.0 * scale),
-            "iqr_alarm": (
-                (m8 < 5 * F.col("__q1") - 3 * F.col("__q3"))
-                | (m8 > 5 * F.col("__q3") - 3 * F.col("__q1"))
-            ).cast("int"),
-            "med": F.col("__med_2") / (2.0 * scale),
-            "mad": F.col("__mad_8") / (8.0 * scale),
-            "dev": dev_2 / (2.0 * scale),
-            "robust_alarm": (
-                (F.col("__mad_8") > 0)
-                & (26980 * dev_2 > 35000 * F.col("__mad_8"))
-            ).cast("int"),
-        }
-    ).drop("__q1", "__q3", "__med_2", "__mad_8")
+    out = {
+        **tukey_fence_sql(target, k, unit_digits),
+        **robust_z_sql(target, threshold, unit_digits),
+    }
+    return _layered(d, [out], ("__q1", "__q3", "__med_2", "__mad_8"))
 
 
-def _ols_stats_int(
-    src: DataFrame,
-    target: str,
-    keys: list[str],
-    order_cols: Sequence[str],
-    scale: int,
-) -> DataFrame:
-    """Exact-integer sufficient statistics for the per-key OLS fit:
-    ``y`` snapped to ``1/scale`` units (bigint), ``x`` = 0-based row
-    index — all six sums ``(n, Σx, Σy, Σx², Σxy, Σy²)`` are BIGINT, so
-    they are combine-order-proof and any engine derives bit-identical
-    slope/intercept/stderr doubles from them (the cross-engine
-    determinism convention of :func:`page_hinkley`). Returns one row per
-    key: ``__b`` (slope, y-units per step), ``__a`` (intercept), ``__s``
-    (residual std error), all in INTEGER y-units — callers divide by
-    ``scale`` at output. Bounded: Σx² overflows int64 only past ~2e6
-    rows per key; beyond that use the float path with ``x_col``."""
-    d = src.selectExpr(
-        *map(col_ref, keys),
-        f"cast(round({col_ref(target)} * {scale}) as bigint) AS __y",
-        f"cast(row_number() {over(keys, order_cols)} - 1 as bigint) AS __x",
-    ).where("__y IS NOT NULL")
-    stats = _ols_sums(d, keys, y_col="__y")
-    return _ols_fit_from_sums(stats, keys)
-
-
-def _ols_sums(d: DataFrame, keys: list[str], y_col: str) -> DataFrame:
-    """The six exact-BIGINT OLS sums per key over (__x, y_col) rows."""
-    return d.groupBy(*keys).agg(
-        F.expr("count(*)").alias("__n"),
-        F.expr("sum(__x)").alias("__sx"),
-        F.expr(f"sum({y_col})").alias("__sy"),
-        F.expr("sum(__x * __x)").alias("__sxx"),
-        F.expr(f"sum(__x * {y_col})").alias("__sxy"),
-        F.expr(f"sum({y_col} * {y_col})").alias("__syy"),
-    )
-
-
-def _ols_fit_from_sums(stats: DataFrame, keys: list[str]) -> DataFrame:
-    """Slope / intercept / residual-stderr from the exact integer sums —
-    identical IEEE expression shape to the SQL-oracle formulation."""
-    n, sx, sy = "cast(__n as double)", "cast(__sx as double)", "cast(__sy as double)"
-    sxx, sxy, syy = (
-        "cast(__sxx as double)",
-        "cast(__sxy as double)",
-        "cast(__syy as double)",
-    )
-    vx = f"{n} * {sxx} - {sx} * {sx}"
-    fitted = stats.selectExpr(
-        "*",
-        f"CASE WHEN {n} >= 3 AND {vx} > 0"
-        f" THEN ({n} * {sxy} - {sx} * {sy}) / ({vx}) END AS __b",
-    )
-    sse = (
-        f"greatest(0.0D, {syy} - {sy} * {sy} / {n}"
-        f" - __b * __b * ({sxx} - {sx} * {sx} / {n}))"
-    )
-    return fitted.selectExpr(
-        *[f"`{k}`" for k in keys],
-        "__b",
-        f"({sy} - __b * {sx}) / {n} AS __a",
-        f"CASE WHEN {n} > 2 THEN sqrt({sse} / ({n} - 2)) END AS __s",
-    )
+def _ols_fit(d: DataFrame, keys: list[str], x: str, y: str) -> DataFrame:
+    """Per-key ``__b``/``__a``/``__s`` fitted from ``d``'s (x, y) rows:
+    one aggregate of the sufficient statistics, then the closed form."""
+    sums = ols_sums_sql(x, y)
+    return _layered(_aggregate(d, keys, sums), ols_fit_sql(), list(sums))
 
 
 def trend_ols_flags(
@@ -788,11 +809,12 @@ def trend_ols_flags(
     required), i.e. equal spacing is ASSUMED.
 
     100 TB shape: the fit is the textbook closed form over the sufficient
-    statistics ``(n, Σx, Σy, Σx², Σxy, Σy²)`` — ONE partial-aggregated
-    groupBy pass per key, broadcast back, with SSE derived from the same
-    sums (``SSE = Syy − Sy²/n − b²·(Sxx − Sx²/n)``) so there is NO second
-    pass for the residual scale. With ``x_col`` given the whole detector
-    is aggregate + map: zero windows, zero sorts. Scoring is scalar.
+    statistics ``(n, Σx, Σy, Σx², Σxy, Σy²)`` (:func:`ols_sums_sql`,
+    :func:`ols_fit_sql`) — ONE partial-aggregated groupBy pass per key,
+    broadcast back, with SSE derived from the same sums so there is NO
+    second pass for the residual scale. With ``x_col`` given the whole
+    detector is aggregate + map: zero windows, zero sorts. Scoring is
+    scalar (:func:`trend_flag_sql`).
 
     Degenerate series (n < 3, or zero x-variance) yield NULL
     slope/z/flag — surfaced, not silently zeroed.
@@ -801,14 +823,19 @@ def trend_ols_flags(
     (fitted value), ``trend_resid``, ``trend_z``, ``trend_alarm``.
 
     ``unit_digits`` (requires ``x_col=None``): run the sufficient
-    statistics in EXACT integer units (:func:`_ols_stats_int`) so the
-    detector is cross-engine hash-exact. ``stats_source``: compute the
-    fit from this frame instead of ``df`` (same lineage-flattening
-    rationale as :func:`tukey_robust_flags` — keep the aggregate off a
-    battery-composed plan); the (keys, order) row sets must be
-    identical between the two frames.
+    statistics in EXACT integer units — ``y`` snapped to ``1/scale``
+    units, ``x`` the row index, all six sums BIGINT, so they are
+    combine-order-proof and any engine derives bit-identical doubles
+    from them. Bounded: Σx² overflows int64 only past ~2e6 rows per key;
+    beyond that use the float path with ``x_col``. ``stats_source``:
+    compute the fit from this frame instead of ``df`` (same
+    lineage-flattening rationale as :func:`tukey_robust_flags` — keep
+    the aggregate off a battery-composed plan); the (keys, order) row
+    sets must be identical between the two frames.
     """
     keys = list(key_cols)
+    t = col_ref(target)
+    helpers = ("__x", "__b", "__a", "__s")
     if unit_digits is not None:
         if x_col is not None:
             raise ValueError(
@@ -819,29 +846,18 @@ def trend_ols_flags(
             raise ValueError("trend_ols_flags: order_cols is required")
         scale = 10**unit_digits
         src = stats_source if stats_source is not None else df
-        fitted = _ols_stats_int(src, target, keys, order_cols, scale)
-        w = Window.partitionBy(*keys).orderBy(
-            *[F.col(c).asc() for c in order_cols]
+        rn = f"cast(row_number() {over(keys, order_cols)} - 1 as bigint)"
+        pairs = src.selectExpr(
+            *map(col_ref, keys), f"{unit_snap(t, scale)} AS __y", f"{rn} AS __x"
         )
-        d = df.withColumn(
-            "__x", (F.row_number().over(w) - 1).cast("bigint")
-        ).join(F.broadcast(fitted), keys, "left")
-        y_i = F.round(F.col(target) * scale).cast("bigint").cast("double")
-        fit_i = F.col("__a") + F.col("__b") * F.col("__x").cast("double")
-        resid_i = y_i - fit_i
-        z = F.round(resid_i / F.nullif(F.col("__s"), F.lit(0.0)), round_digits)
-        return d.withColumns(
-            {
-                "trend_slope": F.round(F.col("__b") / scale, round_digits),
-                "trend_intercept": F.round(F.col("__a") / scale, round_digits),
-                "trend_fit": F.round(fit_i / scale, round_digits),
-                "trend_resid": F.round(resid_i / scale, round_digits),
-                "trend_z": z,
-                "trend_alarm": F.when(
-                    z.isNotNull(), (F.abs(z) > threshold).cast("int")
-                ),
-            }
-        ).drop("__x", "__b", "__a", "__s")
+        fitted = _ols_fit(pairs, keys, "__x", "__y")
+        d = df.selectExpr(*with_columns(df.columns, {"__x": rn}))
+        d = d.join(F.broadcast(fitted), keys, "left")
+        out = trend_flag_sql(
+            f"cast({unit_snap(t, scale)} as double)", "cast(__x as double)",
+            threshold, round_digits, scale,
+        )
+        return _layered(d, [out], helpers)
     if stats_source is not None:
         raise ValueError(
             "trend_ols_flags: stats_source requires unit_digits (the "
@@ -852,54 +868,14 @@ def trend_ols_flags(
             raise ValueError(
                 "trend_ols_flags: order_cols is required when x_col is None"
             )
-        w = Window.partitionBy(*keys).orderBy(*order_cols)
-        d = df.withColumn(
-            "__x", (F.row_number().over(w) - 1).cast("double")
-        )
+        x = f"cast(row_number() {over(keys, order_cols)} - 1 as double)"
     else:
-        d = df.withColumn("__x", F.col(x_col).cast("double"))
-    y = F.col(target).cast("double")
-    base = d.filter(y.isNotNull() & F.col("__x").isNotNull())
-    stats = base.groupBy(*keys).agg(
-        F.count("*").cast("double").alias("__n"),
-        F.sum("__x").alias("__sx"),
-        F.sum(y).alias("__sy"),
-        F.sum(F.col("__x") * F.col("__x")).alias("__sxx"),
-        F.sum(F.col("__x") * y).alias("__sxy"),
-        F.sum(y * y).alias("__syy"),
-    )
-    n, sx, sy = F.col("__n"), F.col("__sx"), F.col("__sy")
-    sxx, sxy, syy = F.col("__sxx"), F.col("__sxy"), F.col("__syy")
-    vx = n * sxx - sx * sx  # n² · Var(x)
-    slope = F.when(
-        (n >= 3) & (vx > 0), (n * sxy - sx * sy) / vx
-    )
-    fitted = stats.withColumn("__b", slope).withColumn(
-        "__a", (sy - F.col("__b") * sx) / n
-    )
-    sse = F.greatest(
-        F.lit(0.0),
-        syy - sy * sy / n - F.col("__b") * F.col("__b") * (sxx - sx * sx / n),
-    )
-    fitted = fitted.withColumn(
-        "__s", F.when(n > 2, F.sqrt(sse / (n - 2)))
-    ).select(*keys, "__b", "__a", "__s")
-    out = d.join(F.broadcast(fitted), keys, "left")
-    fit = F.col("__a") + F.col("__b") * F.col("__x")
-    resid = y - fit
-    z = F.round(resid / F.nullif(F.col("__s"), F.lit(0.0)), round_digits)
-    return (
-        out.withColumn("trend_slope", F.round("__b", round_digits))
-        .withColumn("trend_intercept", F.round("__a", round_digits))
-        .withColumn("trend_fit", F.round(fit, round_digits))
-        .withColumn("trend_resid", F.round(resid, round_digits))
-        .withColumn("trend_z", z)
-        .withColumn(
-            "trend_alarm",
-            F.when(z.isNotNull(), (F.abs(z) > threshold).cast("int")),
-        )
-        .drop("__x", "__b", "__a", "__s")
-    )
+        x = f"cast({col_ref(x_col)} as double)"
+    d = df.selectExpr(*with_columns(df.columns, {"__x": x}))
+    y = f"cast({t} as double)"
+    fitted = _ols_fit(d, keys, "__x", f"CASE WHEN __x IS NOT NULL THEN {y} END")
+    d = d.join(F.broadcast(fitted), keys, "left")
+    return _layered(d, [trend_flag_sql(y, "__x", threshold, round_digits)], helpers)
 
 
 def trend_ols_expanding(
@@ -918,8 +894,8 @@ def trend_ols_expanding(
     row's residual against the past fit's standard error. This is the
     recursive-least-squares semantics a stream can carry with O(1)
     state, expressed relationally: SIX running sums over ONE
-    ``rowsBetween(unboundedPreceding, -1)`` frame on the shared (key,
-    order) exchange — no iteration, no Python.
+    ``[first, t-1]`` frame on the shared (key, order) exchange — no
+    iteration, no Python.
 
     Integer-exact by construction (``unit_digits``): y snaps to the
     unit grid (BIGINT), x is the 0-based row index, so every running
@@ -937,54 +913,23 @@ def trend_ols_expanding(
         raise ValueError("trend_ols_expanding: min_points must be >= 3")
     keys = list(key_cols)
     scale = 10**unit_digits
-    w_ord = Window.partitionBy(*[F.col(c) for c in keys]).orderBy(
-        *[F.col(c).asc() for c in order_cols]
+    past = over(keys, order_cols, "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING")
+    scored = trend_flag_sql(
+        "cast(__yi as double)", "cast(__x as double)", threshold, None, scale
     )
-    past = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    y_i = F.round(F.col(target) * scale).cast("bigint")
-    d = df.withColumns(
+    layers = [
         {
-            "__yi": y_i,
-            "__x": (F.row_number().over(w_ord) - 1).cast("bigint"),
-        }
-    )
-    xm = F.when(F.col("__yi").isNotNull(), F.col("__x"))
-    ym = F.col("__yi")
-    d = d.withColumns(
+            "__yi": unit_snap(col_ref(target), scale),
+            "__x": f"cast(row_number() {over(keys, order_cols)} - 1 as bigint)",
+        },
+        ols_sums_sql("__x", "__yi", past),
+        *ols_fit_sql(min_points),
         {
-            "__n": F.count(ym).over(past),
-            "__sx": F.sum(xm).over(past),
-            "__sy": F.sum(ym).over(past),
-            "__sxx": F.sum(xm * xm).over(past),
-            "__sxy": F.sum(xm * ym).over(past),
-            "__syy": F.sum(ym * ym).over(past),
-        }
-    )
-    n = F.col("__n").cast("double")
-    sx, sy = F.col("__sx").cast("double"), F.col("__sy").cast("double")
-    sxx = F.col("__sxx").cast("double")
-    sxy = F.col("__sxy").cast("double")
-    syy = F.col("__syy").cast("double")
-    vx = n * sxx - sx * sx
-    b = F.when((n >= min_points) & (vx > 0), (n * sxy - sx * sy) / vx)
-    a = (sy - b * sx) / n
-    sse = F.greatest(
-        F.lit(0.0),
-        syy - sy * sy / n - b * b * (sxx - sx * sx / n),
-    )
-    s = F.when(n > 2, F.sqrt(sse / (n - 2)))
-    fit_i = a + b * F.col("__x").cast("double")
-    z = (F.col("__yi").cast("double") - fit_i) / F.nullif(s, F.lit(0.0))
-    return d.withColumns(
-        {
-            "trend_run_slope": b / scale,
-            "trend_run_fit": fit_i / scale,
-            "trend_run_z": z,
-            "trend_run_alarm": F.when(
-                z.isNotNull(), (F.abs(z) > F.lit(threshold)).cast("int")
-            ),
-        }
-    ).drop("__yi", "__x", "__n", "__sx", "__sy", "__sxx", "__sxy", "__syy")
+            f"trend_run_{c}": scored[f"trend_{c}"]
+            for c in ("slope", "fit", "z", "alarm")
+        },
+    ]
+    return _layered(df, layers, _helpers(layers))
 
 
 def seasonal_decompose(
@@ -1055,8 +1000,7 @@ def seasonal_decompose(
             s, n = F.sum(int_col).over(w), F.count(int_col).over(w)
             return F.floor((2 * s + n) / (2 * n)).cast("bigint")
 
-        v_i = F.round(F.col(value_col) * scale).cast("bigint")
-        d = df.withColumn("__v_i", v_i)
+        d = df.withColumn("__v_i", F.expr(unit_snap(col_ref(value_col), scale)))
         d = d.withColumn("__trend_i", int_avg(F.col("__v_i"), w_frame))
         d = d.withColumn("__detr_i", F.col("__v_i") - F.col("__trend_i"))
         d = d.withColumn(
@@ -1291,22 +1235,23 @@ def anomaly_battery(
     :func:`ewma_deviation` + :func:`tukey_robust_flags` (+
     :func:`trend_ols_flags` when ``trend``), value-identical to the
     sequential composition (differential-tested) but built in the
-    MINIMUM number of analysis layers.
+    MINIMUM number of analysis layers, from the same SQL-text builders
+    the detectors ship.
 
     Why: executor-side the composed battery was already one (key,
     order) exchange + three FileScans — but DRIVER-side each
     ``withColumn(s)``/``join`` re-analyzes the whole accumulated tree,
     and the composed chain's ~17 passes over an ever-growing plan were
     measured at ~0.9 s warm per call (the dominant term of the
-    anomaly_zscore bench query). The fusion batches every
-    data-independent expression into one layer:
+    anomaly_zscore bench query). The fusion merges the detectors'
+    layers position by position:
 
     - L1: ALL window functions over the shared (key, order) exchange —
-      z-mean/std, the EWMA lag terms, the EWMA-deviation std, the PH
-      running sum/count, the trend row index — plus the integer-unit
-      snap; Page-Hinkley's running-mean → running-deviation-sum →
-      running-min/max chain forces exactly two more window layers (L3,
-      L4) because each stage windows over the previous stage's output;
+      z-mean/std, the EWMA window, the PH running sum/count, the trend
+      row index — plus the integer-unit snap; Page-Hinkley's
+      running-mean → running-deviation-sum → running-min/max chain
+      forces exactly two more window layers (L3, L4) because each stage
+      windows over the previous stage's output;
     - L2/L5: the scalar arithmetic between them;
     - the per-key order statistics (Tukey/MAD) and OLS sufficient
       statistics: on the default path (``stats_source is df``, every
@@ -1315,11 +1260,18 @@ def anomaly_battery(
       so the whole battery executes as 1 FileScan / 1 Exchange /
       0 joins; only a genuinely distinct ``stats_source``
       (fit-on-one-frame, score-on-another) keeps the separate
-      aggregate + broadcast-join shape.
+      aggregate + broadcast-join shape, where the order statistics,
+      the MAD and the trend fit all read that frame, as the composed
+      detectors' ``stats_source`` does.
 
-    Driver analysis is ~9 passes, most over small trees. Integer-exact
-    conventions (``unit_digits``) and thresholds follow the component
-    operators' docstrings.
+    The layers are CTEs of ONE ``spark.sql`` call (r9): layered
+    ``selectExpr`` calls still paid ~0.6 s of driver time per call,
+    because every DataFrame op runs an eager analysis pass over the
+    whole accumulated tree; one parameterized statement analyzes it
+    once (``{df}``/``{src}`` bind the input frames by reference, so no
+    view names and no global state). Integer-exact conventions
+    (``unit_digits``) and thresholds follow the component operators'
+    docstrings.
     """
     keys = list(key_cols)
     src = stats_source if stats_source is not None else df
@@ -1329,293 +1281,93 @@ def anomaly_battery(
     if abs(tukey_k - 1.5) > 1e-12:
         raise ValueError("anomaly_battery: integer mode supports k=1.5 only")
 
-    # Every expression is built as SQL TEXT and shipped through ONE
-    # selectExpr per layer: profiling showed the per-Column py4j round
-    # trips of the functions-API form cost more driver time than the
-    # analysis itself (~0.7 s of the 1.2 s composed build was pure
-    # Column-object construction). String building is free Python; the
-    # JVM parses each layer once.
-    t = col_ref(target)
-    we = over(keys, order_cols, past_rows(ewma_window))
-    wrun = over(keys, order_cols, RUNNING)
-    word = over(keys, order_cols)
-    mexp = f"cast(round({t} * {scale}) as bigint)"
-
-    # EWMA numerator/denominator (r15): ONE collect_list window over the
-    # truncated frame + a position-weights zip, replacing the flat
-    # 2x`ewma_window` lag() chain. The r14 replan profile attributed
-    # ~45% of the battery's per-action optimize+physical cost to those
-    # 64 window expressions, and an interleaved A/B measured the
-    # collect_list form 2.1x FASTER to execute as well (0.72 -> 0.34 s
-    # on 100k rows: 64 per-row offset-frame advances cost more than 32
-    # struct copies + an interpreted 32-step fold). Values bit-identical
-    # by construction: reverse() puts lag-1 first, zip_with pads the
-    # short start-of-partition arrays with NULL structs (-> coalesce 0,
-    # exactly the out-of-frame lag), and aggregate's left fold adds the
-    # terms in the SAME j=1..w order as the old chain, so even float
-    # summation order is unchanged (verified exact on 100k rows with
-    # planted nulls, plus the composition-equality and oracle pins).
-    num, den = _ewma_num_den_sql(t, we, ewma_window, ewma_alpha)
-
     z_cols = zscore_window_sql(target, z_window, keys, order_cols)
     z_flags = zscore_flag_sql(target, z_threshold)
-    l1 = [
-        "*",
-        *aliased(z_cols),
-        f"stddev_samp({t}) {we} AS __rstd",
-        f"{num} AS __ewma_num",
-        f"{den} AS __ewma_den",
-        f"{mexp} AS __m",
-        f"sum({mexp}) {wrun} AS __s_run",
-        f"count({mexp}) {wrun} AS __n_run",
+    ewma = ewma_sql(target, ewma_window, keys, order_cols, ewma_alpha, z_threshold)
+    ph = page_hinkley_sql(target, keys, order_cols, ph_delta, ph_lam, unit_digits)
+    layers = [
+        {**z_cols, **ewma[0], **ph[0]},
+        {**z_flags, **ewma[1], **ph[1]},
+        {**ph[2]},
+        {**ph[3]},
     ]
     if trend:
-        l1.append(f"cast(row_number() {word} - 1 as bigint) AS __x")
-
-    # L2: scalar over L1's materialized outputs (ewma moved here from L1
-    # so the num/den window results are computed once and the division
-    # is a plain scalar)
-    ewma_expr = "CASE WHEN __ewma_den > 0.0D THEN __ewma_num / __ewma_den END"
-    dv = f"({t} - ({ewma_expr})) / nullif(__rstd, 0.0D)"
-    zt = repr(float(z_threshold))
-    l2 = [
-        "*",
-        *aliased(z_flags),
-        f"{ewma_expr} AS ewma",
-        f"{dv} AS ewma_dev",
-        f"coalesce(cast(abs({dv}) > {zt}D as int), 0) AS ewma_alarm",
-        "cast(floor((2 * __s_run + __n_run) / (2 * __n_run)) as bigint)"
-        " AS __xbar_i",
-    ]
-
-    # L3/L4: Page-Hinkley's inherently sequential window stages
-    delta_i = int(round(ph_delta * scale))
-    l3 = [
-        "*",
-        f"sum(__m - __xbar_i - {delta_i}) {wrun} AS __u",
-        f"sum(__m - __xbar_i + {delta_i}) {wrun} AS __d",
-    ]
-    l4 = [
-        "*",
-        f"__u - min(__u) {wrun} AS __inc_i",
-        f"max(__d) {wrun} - __d AS __dec_i",
-    ]
-
-    # per-key order statistics + OLS sufficient statistics. Shared
-    # arithmetic for both shapes below:
-    pcts = f"percentile({mexp}, array(0.25, 0.5, 0.75))"
-    key_list = ", ".join(col_ref(k) for k in keys)
-    n, sx, sy = (
-        "cast(__n as double)",
-        "cast(__sx as double)",
-        "cast(__sy as double)",
-    )
-    sxx, sxy, syy = (
-        "cast(__sxx as double)",
-        "cast(__sxy as double)",
-        "cast(__syy as double)",
-    )
-    vx = f"{n} * {sxx} - {sx} * {sx}"
-    sse = (
-        f"greatest(0.0D, {syy} - {sy} * {sy} / {n}"
-        f" - __b * __b * ({sxx} - {sx} * {sx} / {n}))"
-    )
-    ctes: list[str] = []
+        layers[0]["__x"] = f"cast(row_number() {over(keys, order_cols)} - 1 as bigint)"
+    outputs = {
+        **ph[4],
+        **tukey_fence_sql(target, tukey_k, unit_digits),
+        **robust_z_sql(target, 3.5, unit_digits),
+    }
+    if trend:
+        outputs.update(trend_flag_sql(
+            f"cast({unit_snap(col_ref(target), scale)} as double)",
+            "cast(__x as double)", trend_threshold, 6, scale,
+        ))
+    key_list = ", ".join(map(col_ref, keys))
+    ctes = []
     if src is df:
-        # FUSED stats (r14): when the stats frame IS the scored frame
-        # (every in-repo caller), the per-key aggregates ride the main
-        # (key, order) exchange as partition-window aggregates instead
-        # of separate aggregate-plus-broadcast-join subtrees. The
-        # pre-r14 shape re-scanned the source 3 more times (order
-        # stats, MAD, OLS sums) and joined the results back — 4
-        # FileScans / 4 exchanges / 3 joins per action; this shape is
-        # ONE scan, ONE exchange, ZERO joins (plan-asserted in
-        # tests/test_operators.py). Values are bit-identical: the
-        # window aggregate evaluates the same percentile/BIGINT-sum
-        # functions over the same partition rows the GROUP BY saw, and
-        # the broadcast join only copied those per-key scalars back —
-        # pinned by test_fused_battery_equals_composition. Measured at
-        # sf0.1: anomaly_zscore 1.02 -> 0.7 s/action, and at 100 TB
-        # three full re-reads of the fact table simply disappear.
-        wpart = f"OVER (PARTITION BY {key_list})"
-        l1.append(f"{pcts} {wpart} AS __pcts")
-        l2.extend(
-            [
-                "cast(round(4 * __pcts[0]) as bigint) AS __q1",
-                "cast(round(4 * __pcts[2]) as bigint) AS __q3",
-                "cast(round(2 * __pcts[1]) as bigint) AS __med_2",
-            ]
-        )
-        # __sdev_2 references __med_2 (L2) and the MAD percentile
-        # references __sdev_2, so they slot into the PH layers that
-        # already exist for exactly this kind of dependency chain
-        l3.append(f"abs(2 * {mexp} - __med_2) AS __sdev_2")
-        l4.append(
-            f"cast(round(4 * percentile(__sdev_2, 0.5) {wpart}) as bigint)"
-            " AS __mad_8"
-        )
-        join_tail = " FROM __l4"
-        hint_tables: list[str] = []
+        # FUSED stats (r14): the per-key aggregates ride the main (key,
+        # order) exchange as partition-window aggregates instead of
+        # aggregate + broadcast-join subtrees, which re-scanned the
+        # source 3 more times (order stats, MAD, OLS sums): 4 FileScans /
+        # 4 exchanges / 3 joins per action became 1 / 1 / 0. Values are
+        # bit-identical: the window aggregate evaluates the same
+        # percentile/BIGINT-sum functions over the same partition rows
+        # the GROUP BY saw. Measured at sf0.1: anomaly_zscore 1.02 ->
+        # 0.7 s/action.
+        wpart = over(keys, ())
+        mad = mad_sql(target, unit_digits, wpart)
+        layers[0]["__pcts"] = f"{percentiles_sql(target, unit_digits)} {wpart}"
+        layers[1].update(order_stats_sql("__pcts", unit_digits))
+        layers[2].update(mad[0])
+        layers[3].update(mad[1])
         if trend:
-            # the WHERE __m IS NOT NULL of the aggregate form becomes
-            # CASE guards; sum/count already ignore NULLs identically
-            l2.extend(
-                [
-                    f"count(CASE WHEN __m IS NOT NULL THEN 1 END) {wpart}"
-                    " AS __n",
-                    f"sum(CASE WHEN __m IS NOT NULL THEN __x END) {wpart}"
-                    " AS __sx",
-                    f"sum(__m) {wpart} AS __sy",
-                    "sum(CASE WHEN __m IS NOT NULL THEN __x * __x END)"
-                    f" {wpart} AS __sxx",
-                    f"sum(__x * __m) {wpart} AS __sxy",
-                    f"sum(__m * __m) {wpart} AS __syy",
-                ]
-            )
-            l3.append(
-                f"CASE WHEN {n} >= 3 AND {vx} > 0"
-                f" THEN ({n} * {sxy} - {sx} * {sy}) / ({vx}) END AS __b"
-            )
-            # a key with zero non-null __m has __n = 0, so __b/__a/__s
-            # come out NULL exactly like the LEFT JOIN they replace
-            l4.extend(
-                [
-                    f"({sy} - __b * {sx}) / {n} AS __a",
-                    f"CASE WHEN {n} > 2 THEN sqrt({sse} / ({n} - 2))"
-                    " END AS __s",
-                ]
-            )
-        ctes.extend(
-            [
-                "__l1 AS (SELECT " + ", ".join(l1) + " FROM {df})",
-                "__l2 AS (SELECT " + ", ".join(l2) + " FROM __l1)",
-                "__l3 AS (SELECT " + ", ".join(l3) + " FROM __l2)",
-                "__l4 AS (SELECT " + ", ".join(l4) + " FROM __l3)",
-            ]
-        )
+            fit = ols_fit_sql()
+            layers[1].update(ols_sums_sql("__x", "__m", wpart))
+            layers[2].update(fit[0])
+            layers[3].update(fit[1])
+        tail, hints = " FROM __l4", []
     else:
         # distinct stats frame (fit-on-one-score-on-another): the
         # aggregate + broadcast-join shape is the only correct one
-        stats1_sql = (
-            f"SELECT {key_list},"
-            f" cast(round(4 * {pcts}[0]) as bigint) AS __q1,"
-            f" cast(round(4 * {pcts}[2]) as bigint) AS __q3,"
-            f" cast(round(2 * {pcts}[1]) as bigint) AS __med_2"
-            " FROM {src}" f" GROUP BY {key_list}"
-        )
-        stats2_sql = (
-            f"SELECT {key_list},"
-            " cast(round(4 * percentile(__sdev_2, 0.5)) as bigint) AS __mad_8"
-            " FROM (SELECT /*+ BROADCAST(__s1) */"
-            f" *, abs(2 * {mexp} - __med_2) AS __sdev_2"
-            " FROM {src}" f" JOIN __s1 USING ({key_list}))"
-            f" GROUP BY {key_list}"
-        )
-        ctes.extend(
-            [
-                "__l1 AS (SELECT " + ", ".join(l1) + " FROM {df})",
-                "__l2 AS (SELECT " + ", ".join(l2) + " FROM __l1)",
-                "__l3 AS (SELECT " + ", ".join(l3) + " FROM __l2)",
-                "__l4 AS (SELECT " + ", ".join(l4) + " FROM __l3)",
-                "__s1 AS (" + stats1_sql + ")",
-                "__s2 AS (" + stats2_sql + ")",
-            ]
-        )
-        join_tail = (
-            " FROM __l4"
-            f" JOIN __s1 USING ({key_list})"
-            f" JOIN __s2 USING ({key_list})"
-        )
-        hint_tables = ["__s1", "__s2"]
+        stats1 = order_stats_sql(percentiles_sql(target, unit_digits), unit_digits)
+        dev, mad = mad_sql(target, unit_digits)
+        ctes += [
+            f"__s1 AS (SELECT {key_list}, {', '.join(aliased(stats1))}"
+            f" FROM {{src}} GROUP BY {key_list})",
+            f"__s2 AS (SELECT {key_list}, {', '.join(aliased(mad))} FROM"
+            f" (SELECT /*+ BROADCAST(__s1) */ *, {', '.join(aliased(dev))}"
+            f" FROM {{src}} JOIN __s1 USING ({key_list})) GROUP BY {key_list})",
+        ]
+        tail = f" FROM __l4 JOIN __s1 USING ({key_list}) JOIN __s2 USING ({key_list})"
+        hints = ["__s1", "__s2"]
         if trend:
-            # OLS sufficient statistics off the L1 frame (pre-join
-            # lineage: scan→exchange→window only): __m IS y_i and __x
-            # is already materialized, so no second row_number window
-            # is planned.
-            ctes.extend(
-                [
-                    "__sums AS (SELECT "
-                    f"{key_list}, count(*) AS __n, sum(__x) AS __sx,"
-                    " sum(__m) AS __sy, sum(__x * __x) AS __sxx,"
-                    " sum(__x * __m) AS __sxy, sum(__m * __m) AS __syy"
-                    f" FROM __l1 WHERE __m IS NOT NULL GROUP BY {key_list})",
-                    "__fit0 AS (SELECT *,"
-                    f" CASE WHEN {n} >= 3 AND {vx} > 0"
-                    f" THEN ({n} * {sxy} - {sx} * {sy}) / ({vx}) END AS __b"
-                    " FROM __sums)",
-                    f"__fit AS (SELECT {key_list}, __b,"
-                    f" ({sy} - __b * {sx}) / {n} AS __a,"
-                    f" CASE WHEN {n} > 2 THEN sqrt({sse} / ({n} - 2))"
-                    " END AS __s"
-                    " FROM __fit0)",
-                ]
-            )
-            join_tail += f" LEFT JOIN __fit USING ({key_list})"
-            hint_tables.append("__fit")
-
-    # L5 + drop in one pass: the final select lists the input columns,
-    # the public L1/L2 outputs, and the scalar battery columns — the
-    # __-helpers fall away without a separate drop() analysis pass
-    lam_i = int(round(ph_lam * scale))
-    m8 = f"(8 * {mexp})"
-    dev2 = f"abs(2 * {mexp} - __med_2)"
-    s8 = repr(8.0 * scale)
-    s2 = repr(2.0 * scale)
-    l5 = [
-        f"__inc_i / {scale} AS ph_inc",
-        f"__dec_i / {scale} AS ph_dec",
-        f"cast(__inc_i > {lam_i} OR __dec_i > {lam_i} as int) AS ph_alarm",
-        f"(5 * __q1 - 3 * __q3) / {s8}D AS iqr_lo",
-        f"(5 * __q3 - 3 * __q1) / {s8}D AS iqr_hi",
-        f"cast({m8} < 5 * __q1 - 3 * __q3 OR {m8} > 5 * __q3 - 3 * __q1"
-        " as int) AS iqr_alarm",
-        f"__med_2 / {s2}D AS med",
-        f"__mad_8 / {s8}D AS mad",
-        f"{dev2} / {s2}D AS dev",
-        f"cast(__mad_8 > 0 AND 26980 * {dev2} > 35000 * __mad_8 as int)"
-        " AS robust_alarm",
-    ]
-    if trend:
-        fit_i = "(__a + __b * cast(__x as double))"
-        resid_i = f"(cast({mexp} as double) - {fit_i})"
-        tz = f"round({resid_i} / nullif(__s, 0.0D), 6)"
-        tt = repr(float(trend_threshold))
-        l5.extend(
-            [
-                f"round(__b / {scale}, 6) AS trend_slope",
-                f"round(__a / {scale}, 6) AS trend_intercept",
-                f"round({fit_i} / {scale}, 6) AS trend_fit",
-                f"round({resid_i} / {scale}, 6) AS trend_resid",
-                f"{tz} AS trend_z",
-                f"CASE WHEN {tz} IS NOT NULL THEN"
-                f" cast(abs({tz}) > {tt}D as int) END AS trend_alarm",
+            # the fit reads the stats frame too, as trend_ols_flags'
+            # stats_source does: its own row index and snapped y
+            fit = ols_fit_sql()
+            ctes += [
+                f"__xy AS (SELECT {key_list}, {layers[0]['__m']} AS __m,"
+                f" {layers[0]['__x']} AS __x FROM {{src}})",
+                f"__sums AS (SELECT {key_list},"
+                f" {', '.join(aliased(ols_sums_sql('__x', '__m')))}"
+                f" FROM __xy GROUP BY {key_list})",
+                f"__fit0 AS (SELECT *, {', '.join(aliased(fit[0]))} FROM __sums)",
+                f"__fit AS (SELECT {key_list}, __b, {', '.join(aliased(fit[1]))}"
+                " FROM __fit0)",
             ]
-        )
-    keep = [ident(c) for c in [*df.columns, *z_cols, *z_flags]] + [
-        "ewma", "ewma_dev", "ewma_alarm",
-    ]
-    # ONE spark.sql call for the whole battery (r9): the r8 layered
-    # selectExpr form still paid ~0.6 s of DRIVER time per invocation
-    # because every DataFrame op triggers an EAGER analysis pass over
-    # the whole accumulated tree (~13 passes, most over the big lineage;
-    # measured with QueryExecution phase timers: build 0.62 s, optimize
-    # 0.2 s, physical 0.05 s). Emitting the identical expression strings
-    # as CTE layers through a single parameterized spark.sql analyzes
-    # the tree ONCE. {df}/{src} bind the input frames by reference
-    # (PySpark SQL string formatting registers them — no view-name
-    # management, no global state).
-    hint = (
-        "/*+ BROADCAST(" + ", ".join(hint_tables) + ") */ "
-        if hint_tables
-        else ""
-    )
+            tail += f" LEFT JOIN __fit USING ({key_list})"
+            hints.append("__fit")
+    chain, prev = [], "{df}"
+    for i, layer in enumerate(layers, 1):
+        chain.append(f"__l{i} AS (SELECT *, {', '.join(aliased(layer))} FROM {prev})")
+        prev = f"__l{i}"
+    # the final select lists the input columns, the public outputs of
+    # L1/L2 and the L5 scalars: the __ helpers fall away with no drop()
+    keep = map(ident, [*df.columns, *z_cols, *z_flags, *ewma[1]])
+    hint = f"/*+ BROADCAST({', '.join(hints)}) */ " if hints else ""
     sql = (
-        "WITH "
-        + ",\n".join(ctes)
-        + "\nSELECT "
-        + hint
-        + ", ".join(keep + l5)
-        + join_tail
+        "WITH " + ",\n".join(chain + ctes)
+        + f"\nSELECT {hint}" + ", ".join([*keep, *aliased(outputs)]) + tail
     )
     if src is df:
         return df.sparkSession.sql(sql, df=df)

@@ -4,8 +4,8 @@
 Design: every window here uses the SAME WindowSpec family
 ``partitionBy(series).orderBy(ts, tiebreak)`` so Catalyst plans ONE
 exchange + ONE sort for the entire feature stage — lags, rolling aggs and
-ffill all ride the same shuffle. Verified via .explain in
-tests/test_plans.py.
+ffill all ride the same shuffle. Plan-asserted in tests/test_plan_build.py
+and tests/test_plan_hygiene.py.
 
 Scale notes: the reference's data is a single global series, which would
 put the whole table in one window partition. The engine takes the series
@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.sqltext import col_ref, over, past_rows, with_columns
+from ..functions.sqltext import col_ref, ident, over, past_rows, with_columns
 from ..functions.timefeat import TIME_FEATURES, time_feature_sql
 
 # rolling aggregate name -> SQL aggregate function
@@ -144,8 +144,22 @@ def featurize(
             exprs = {**feats, **exprs}
     out = out.selectExpr(*with_columns(out.columns, exprs))
     if dropna:
-        out = out.na.drop(how="any")
+        out = out.where(complete_rows_sql(out.schema))
     return out
+
+
+def complete_rows_sql(schema: T.StructType) -> str:
+    """The predicate ``na.drop(how="any")`` filters on, as SQL text: every
+    column non-NULL, and every float/double column also not NaN. Built
+    from the schema in Python, where ``na.drop`` without a subset sends
+    the whole column list through py4j one name at a time."""
+    conds = []
+    for f in schema.fields:
+        c = ident(f.name)
+        conds.append(f"{c} IS NOT NULL")
+        if isinstance(f.dataType, (T.FloatType, T.DoubleType)):
+            conds.append(f"NOT isnan({c})")
+    return " AND ".join(conds)
 
 
 def bucketed_rolling(
@@ -195,7 +209,7 @@ def bucketed_rolling(
     window) carrying n + w*n_buckets rows total — versus the
     single-partition global window this replaces, which is one task at
     any cluster size. At 100 TB that trade IS the operator. More than
-    2048 buckets falls back to the join+union form (a constant array
+    65536 buckets falls back to the join+union form (a constant array
     that large stops being a sane expression tree); at that point pick
     a wider bucket.
 

@@ -13,7 +13,7 @@ that puts it in the driver's oracle window, unlike the float-tier
 multivariate detectors `pca_anomaly` / `isolation_forest_score`).
 
 Cross-engine determinism (the repo's integer-unit convention, as in
-``page_hinkley`` / ``_ols_stats_int``): inputs are snapped to
+``page_hinkley`` / ``trend_ols_flags``): inputs are snapped to
 ``10^-digits`` units as BIGINT; the sufficient statistics
 ``(n, Σx, Σy, Σx², Σy², Σxy)`` and the scatter numerators
 ``A = nΣx²-(Σx)², B = nΣy²-(Σy)², C = nΣxy-ΣxΣy`` are exact integers,
@@ -23,7 +23,7 @@ hashes bit-identically. The squared distance is scale-invariant
 (units cancel between the quadratic form and the determinant), so no
 de-scaling is needed at output.
 
-Overflow contract (documented, same class as `_ols_stats_int`):
+Overflow contract (documented, same class as `trend_ols_flags`):
 ``n * Σx²`` must fit int64 — with x snapped to ``1/scale`` units,
 that bounds ``n * (scale * max|x|)² * n``; e.g. 1e6 rows of values up
 to 1e4 at 2 digits. Beyond that, reduce ``digits`` or use the float

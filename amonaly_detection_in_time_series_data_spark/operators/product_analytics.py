@@ -351,7 +351,6 @@ def basket_rules(
     max_basket_size: int | None = None,
     return_excluded: bool = False,
     apriori_prune: bool = False,
-    pair_strategy: str = "selfjoin",
 ):
     """Pairwise association rules (market-basket co-occurrence): for
     every item pair appearing together in at least ``min_pair_count``
@@ -415,21 +414,11 @@ def basket_rules(
     NOT TPC-H-shaped uniform keys, whose every item clears any small
     threshold. A no-op when ``min_pair_count == 1``.
 
-    ``pair_strategy`` selects the pair-generation shape:
-    ``'selfjoin'`` (default) is the basket-keyed equi-join;
-    ``'hof'`` assembles each basket's sorted item array in ONE
-    basket-keyed exchange and expands a<b pairs map-side via HOFs —
-    bit-identical output (brute-force + hypothesis + cap/prune
-    composition pinned), and default OFF by interleaved 60M-row
-    measurement (SCALING §10a0e-hof: selfjoin 29.3 vs hof 37.7 s
-    median, hof 0/3 rep-pairs — interpreted HOF lambdas over 15M
-    small baskets cost more than the second exchange they save). The
-    r14 regime-boundary control REFUTED the claimed few-large-baskets
-    win regime too: k=64 is a statistical tie and k=256 loses again
-    (0/2) — lambda interpretation scales with pair volume exactly
-    like the self-join's probe side, so no k favors it on this
-    engine (SCALING §10a0e-hof). Kept
-    as the recorded negative result.
+    Pair generation is the basket-keyed self-join. A single-exchange
+    form (each basket's sorted item array expanded map-side with HOFs)
+    was measured slower at every size tried, 60M small-basket rows and
+    the few-large-baskets controls alike (SCALING §10a0e-hof), and is
+    not kept.
     """
     if min_pair_count < 1:
         raise ValueError(
@@ -490,55 +479,13 @@ def basket_rules(
             F.col("__n_item") < min_pair_count
         ).select("__item")
         bp = b.join(infreq, "__item", "anti")
-    if pair_strategy == "hof":
-        # single-exchange pair generation (r14, the r13 verdict's #3):
-        # ONE basket-keyed groupBy assembles each basket's sorted item
-        # array, then a map-side HOF expansion (transform-with-index x
-        # slice x flatten) emits exactly the a<b pairs the self-join
-        # emits — the presence frame is exchanged ONCE instead of
-        # twice (lhs/rhs of the equi-join), and the O(k^2) pair rows
-        # are GENERATED post-shuffle instead of flowing through join
-        # machinery. Per-group memory is O(k) for the array + O(k^2)
-        # transient for the expansion — exactly what max_basket_size
-        # bounds. Bit-identical output pinned vs the self-join by the
-        # brute-force + hypothesis suites. NOT the default: measured
-        # LOSS at 60M small-basket rows (29.3 vs 37.7 s — interpreted
-        # HOF lambdas beat codegen out of the plan) AND at the
-        # few-large-baskets control (k=64 tie, k=256 loss 0/2): the
-        # win regime is empty on this engine; SCALING §10a0e-hof.
-        arr = bp.groupBy("__basket").agg(
-            F.sort_array(F.collect_list("__item")).alias("__its")
-        )
-        pairs_src = arr.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "__its",
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("__its"), i + F.lit(2), F.size("__its")
-                            ),
-                            lambda y: F.struct(
-                                x.alias("item_a"), y.alias("item_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("__p")
-        ).select("__p.item_a", "__p.item_b")
-    elif pair_strategy == "selfjoin":
-        lhs = bp.select("__basket", F.col("__item").alias("item_a"))
-        rhs = bp.select("__basket", F.col("__item").alias("item_b"))
-        pairs_src = (
-            lhs.join(rhs, "__basket")
-            .filter(F.col("item_a") < F.col("item_b"))
-            .select("item_a", "item_b")
-        )
-    else:
-        raise ValueError(
-            f"basket_rules: unknown pair_strategy {pair_strategy!r} "
-            "(expected 'selfjoin' or 'hof')"
-        )
+    lhs = bp.select("__basket", F.col("__item").alias("item_a"))
+    rhs = bp.select("__basket", F.col("__item").alias("item_b"))
+    pairs_src = (
+        lhs.join(rhs, "__basket")
+        .filter(F.col("item_a") < F.col("item_b"))
+        .select("item_a", "item_b")
+    )
     pairs = (
         pairs_src.groupBy("item_a", "item_b")
         .agg(F.count(F.lit(1)).alias("pair_n"))

@@ -22,7 +22,7 @@ Both are ONE grouped aggregate (map-side partials, one shuffle on the
 group key) + a broadcast-sized post-projection — the canonical
 profile-at-scale shape.
 
-Overflow contract (same class as ``_ols_stats_int``): ``Σx⁴`` must fit
+Overflow contract (same class as ``trend_ols_flags``): ``Σx⁴`` must fit
 int64 — with ``digits`` decimal digits kept and ``|x| <= X``,
 ``n * (X * 10^digits)^4 < 9.2e18``; e.g. 1e6 rows of |x| <= 250 at
 digits=1. Lower ``digits`` for wider-range columns.
@@ -35,6 +35,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.sqltext import ident, unit_snap
 
 __all__ = ["moment_features", "benford_report", "pearson_exact", "BENFORD_P"]
 
@@ -82,7 +84,7 @@ def moment_features(
     scale = 10 ** int(digits)
     d = df.selectExpr(
         *[f"`{k}`" for k in keys],
-        f"cast(round(`{value_col}` * {scale}) as bigint) AS __xi",
+        f"{unit_snap(ident(value_col), scale)} AS __xi",
     ).where("__xi IS NOT NULL")
     gb = d.groupBy(*keys) if keys else d.groupBy()
     stats = gb.agg(
@@ -137,7 +139,7 @@ def benford_report(
     scale = 10 ** int(digits)
     d = df.selectExpr(
         *[f"`{k}`" for k in keys],
-        f"cast(round(`{value_col}` * {scale}) as bigint) AS __xi",
+        f"{unit_snap(ident(value_col), scale)} AS __xi",
     ).where("__xi IS NOT NULL AND __xi > 0")
     # first digit of the decimal string of the exact integer — no
     # floating log10 anywhere near a power-of-ten boundary

@@ -17,6 +17,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import col_ref, unit_snap
 from ..sources.readers import local_rows_df
 
 
@@ -283,8 +284,8 @@ def band_join(
         raise ValueError(
             f"band_join: max_band_size must be >= 1, got {max_band_size}"
         )
-    lu = F.round(F.col(left_col) * scale).cast("bigint")
-    ru = F.round(F.col(right_col) * scale).cast("bigint")
+    lu = F.expr(unit_snap(col_ref(left_col), scale))
+    ru = F.expr(unit_snap(col_ref(right_col), scale))
     bucket = F.expr(
         f"(__u - pmod(__u, {eps_units}L)) div {eps_units}L"
     )

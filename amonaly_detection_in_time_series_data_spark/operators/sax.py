@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import ident, unit_snap
+
 __all__ = ["sax_words", "SAX_BREAKPOINTS"]
 
 # standard-normal quantiles at i/a, the classic SAX breakpoint table
@@ -94,7 +96,7 @@ def sax_words(
     d = df.selectExpr(
         *[f"`{k}`" for k in keys],
         f"`{ts_col}`",
-        f"cast(round(`{value_col}` * {scale}) as bigint) AS __xi",
+        f"{unit_snap(ident(value_col), scale)} AS __xi",
         f"cast(row_number() OVER ({part}) - 1 as bigint) AS __rn",
     ).where("__xi IS NOT NULL")
     d = d.selectExpr(

@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import col_ref, ident, unit_snap
+
 
 def minmax_scale(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Scale ``cols`` to [0, 1]; constant columns -> 0.0 (sklearn)."""
@@ -74,7 +76,7 @@ def standard_scale(
     """
     if unit_digits is not None:
         scale = 10**unit_digits
-        y = {c: F.round(F.col(c) * scale).cast("bigint") for c in cols}
+        y = {c: F.expr(unit_snap(col_ref(c), scale)) for c in cols}
         stats = df.agg(
             *[F.count(y[c]).alias(f"__n_{c}") for c in cols],
             *[F.sum(y[c]).alias(f"__s1_{c}") for c in cols],
@@ -138,10 +140,10 @@ def robust_scale(
     """
     if unit_digits is not None:
         scale = 10**unit_digits
-        y = {c: F.round(F.col(c) * scale).cast("bigint") for c in cols}
+        y = {c: F.expr(unit_snap(col_ref(c), scale)) for c in cols}
         pcts = {
             c: F.expr(
-                f"percentile(cast(round(`{c}` * {scale}) as bigint),"
+                f"percentile({unit_snap(ident(c), scale)},"
                 " array(0.25, 0.5, 0.75))"
             )
             for c in cols

@@ -1236,7 +1236,6 @@ def _ppjoin_tail(
     q: int,
     positional: bool,
     hot_grams: DataFrame | None = None,
-    fused: bool = False,
 ) -> DataFrame:
     """The order-agnostic back half of :func:`prefix_jaccard_join`:
     prefix explode → candidate equi-join (size band + positional
@@ -1247,23 +1246,13 @@ def _ppjoin_tail(
     rarest-first is only the efficiency heuristic. Shared by the
     inline path and the persisted ordered-tokens artifact path.
 
-    ``fused=True`` (r14, the r13 verdict's #2) joins ``ordered`` ONCE
-    per verify side, carrying the hash array AND the gram strings on
-    the same row — 4 logical scans instead of 6. Built as prescribed,
-    measured at sf10 (500k docs, SCALING §10a0g), and **defaulted OFF
-    by that measurement**: the r12 two-stage shape attaches 8-byte
-    hash arrays to the candidate bulk and lets the screen shrink it
-    to ~the result set BEFORE any gram string moves, while the fused
-    shape drags full string arrays through the sort-merge join for
-    EVERY candidate — interleaved rep 0 read 351 vs 41 s, and the
-    fused arm's second rep aborted the JVM with a disk-full spill
-    (SPILL_OUT_OF_MEMORY). The scans the fuse saves are cheap
-    columnar reads; the shuffle weight it adds is O(candidates x
-    strings). Codegen's left-to-right conjunct evaluation does keep
-    the string intersect off non-survivors, but the JOIN itself must
-    still materialize and sort the string-carrying rows — that, not
-    the intersect, is the cost. Kept behind the flag as the recorded
-    negative result (the apriori_prune precedent)."""
+    The screen and the verify are separate joins on purpose: the
+    screen attaches only 8-byte hash arrays to the candidate bulk and
+    shrinks it to ~the result set BEFORE any gram string moves. Joining
+    both arrays in one pass (4 scans of ``ordered`` instead of 6) drags
+    the string arrays through the sort-merge join for every candidate:
+    measured at sf10, 351 vs 41 s and a disk-full JVM abort (SCALING
+    §10a0g)."""
     plen = (
         F.col("sz")
         - F.floor((F.lit(p) * F.col("sz") + F.lit(q - 1)) / F.lit(q))
@@ -1329,47 +1318,6 @@ def _ppjoin_tail(
         )
         cand = cand.filter(ubound >= alpha)
     cand_ids = cand.select("id_a", "id_b").distinct()
-    if fused:
-        # one join per side: hash screen + exact verify share the row.
-        # The hash-intersect conjunct is listed FIRST so codegen's
-        # left-to-right conjunct evaluation keeps the cheap long-array
-        # screen in front of the string intersect for every candidate.
-        full_a = ordered.select(
-            F.col("id").alias("id_a"),
-            F.col("toks_h").alias("h_a"),
-            F.col("toks").alias("g_a"),
-            F.col("sz").alias("size_a"),
-        )
-        full_b = ordered.select(
-            F.col("id").alias("id_b"),
-            F.col("toks_h").alias("h_b"),
-            F.col("toks").alias("g_b"),
-            F.col("sz").alias("size_b"),
-        )
-        verified = (
-            cand_ids.join(full_a, "id_a")
-            .join(full_b, "id_b")
-            .filter(
-                F.size(F.array_intersect("h_a", "h_b")) * (p + q)
-                >= F.lit(p) * (F.col("size_a") + F.col("size_b"))
-            )
-            .withColumn("inter", F.size(F.array_intersect("g_a", "g_b")))
-            .filter(
-                F.col("inter") * (p + q)
-                >= F.lit(p) * (F.col("size_a") + F.col("size_b"))
-            )
-        )
-        return verified.select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter")
-                / (F.col("size_a") + F.col("size_b") - F.col("inter"))
-            ).alias("jaccard"),
-            F.col("inter").cast("bigint").alias("inter"),
-            F.col("size_a").cast("bigint").alias("size_a"),
-            F.col("size_b").cast("bigint").alias("size_b"),
-        )
     # stage 1: hash-intersect screen — inflate-only, so the >= filter
     # cannot drop a qualifying pair; longs compare ~an order of
     # magnitude cheaper than gram strings over the candidate bulk
@@ -1728,7 +1676,6 @@ def prefix_jaccard_join_indexed(
     threshold_num: int = 1,
     threshold_den: int = 2,
     positional: bool = True,
-    fused: bool = False,
     use_ids: bool | None = None,
     max_gram_df: int | None = None,
     gram_df_path: str | None = None,
@@ -1751,10 +1698,8 @@ def prefix_jaccard_join_indexed(
     ``use_ids`` (r14): ``None`` auto-detects — a with-ids artifact
     (``toks_id`` column, :func:`ordered_tokens_build` with
     ``gram_ids_path``) runs the string-free exact-id tail
-    (:func:`_ppjoin_tail_ids`); otherwise the hash tail. ``fused``
-    applies to the hash tail only (the recorded §10a0g negative
-    result) and forces it. ``positional`` applies to the hash tail
-    only as well: the id tail's aggregated bound IS its positional
+    (:func:`_ppjoin_tail_ids`); otherwise the hash tail.
+    ``positional`` applies to the hash tail only: the id tail's aggregated bound IS its positional
     filter (strictly tighter, pure pruning either way — the result
     set is identical by the exactness contract).
 
@@ -1805,8 +1750,6 @@ def prefix_jaccard_join_indexed(
                 "the hot list — a composed store's live index)"
             )
     art = spark.read.parquet(tokens_path)
-    if fused:
-        use_ids = False
     if use_ids is None:
         use_ids = "toks_id" in art.columns
     hot = None
@@ -1841,9 +1784,7 @@ def prefix_jaccard_join_indexed(
         )
     else:
         ordered = art.select("id", "sz", "toks", "toks_h")
-        pairs = _ppjoin_tail(
-            ordered, p, q, positional, hot_grams=hot, fused=fused
-        )
+        pairs = _ppjoin_tail(ordered, p, q, positional, hot_grams=hot)
     if return_excluded:
         return pairs, excluded
     return pairs

@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import col_ref, unit_snap
+
 
 def sessionize(
     df: DataFrame,
@@ -344,9 +346,7 @@ def seasonal_naive_forecast(
         d = d.withColumn("abs_err", F.abs(F.col(value_col) - F.col("forecast")))
         return d.withColumn("naive_mae", F.avg("abs_err").over(run))
     scale = 10**unit_digits
-    err_i = F.round(F.abs(F.col(value_col) - F.col("forecast")) * scale).cast(
-        "bigint"
-    )
+    err_i = F.expr(unit_snap(f"abs({col_ref(value_col)} - forecast)", scale))
     d = d.withColumn("__err_i", err_i)
     s_run = F.sum("__err_i").over(run)
     n_run = F.count("__err_i").over(run)
@@ -400,8 +400,8 @@ def xcorr_lags(
     w = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order_cols])
     if unit_digits is not None:
         scale = 10**unit_digits
-        a_in = F.round(F.col(a_col) * scale).cast("bigint")
-        b_in = F.round(F.col(b_col) * scale).cast("bigint")
+        a_in = F.expr(unit_snap(col_ref(a_col), scale))
+        b_in = F.expr(unit_snap(col_ref(b_col), scale))
     else:
         a_in = F.col(a_col).cast("double")
         b_in = F.col(b_col).cast("double")
@@ -894,7 +894,7 @@ def conformal_band(
                 "conformal_band: unit mode needs coverage on the 0.1 grid"
             )
         scale = 10**unit_digits
-        err_i = F.round(F.col(err_col) * scale).cast("bigint")
+        err_i = F.expr(unit_snap(col_ref(err_col), scale))
         q = forecast_df.groupBy(*keys).agg(
             (
                 F.round(10 * F.percentile(err_i, F.lit(coverage))).cast(

@@ -38,20 +38,23 @@ takes its schema from the parquet footer).
 
 Driver build: every expression is SQL text, written once by the operator
 that owns it (``dedup_row_number_sql``, ``ffill_sql``, ``fill_zero_sql``,
-``time_feature_sql``, ``lag_sql``/``rolling_sql``, ``zscore_window_sql``/
-``zscore_flag_sql``), and the plan is built in five analysis layers:
+``time_feature_sql``, ``lag_sql``/``rolling_sql``, ``complete_rows_sql``,
+``zscore_window_sql``/``zscore_flag_sql``), and the plan is built in five
+analysis layers:
 
   1. load (one projection) + the repartition;
   2. the dedup's row number, and its filter;
   3. ffill and the zero fill as one expression (the dedup's ``_rn`` drops
      out of this layer's column list);
-  4. time, lag and rolling features in one layer, then the ``na.drop``;
+  4. time, lag and rolling features in one layer, then the drop of
+     incomplete rows (``complete_rows_sql``, one ``where``);
   5. the z-score window, then its scalar z/flag layer.
 
 Building it with a ``Column`` per ``F.*`` call made 612 py4j round trips;
-the SQL-text layers make 155 (``tests/test_plan_build.py`` caps it at
-200), and the median warm build on sf0.001 went from 135-151 ms to
-98-100 ms on a 4-core host (SCALING §12b).
+the SQL-text layers made 155, and the median warm build on sf0.001 went
+from 135-151 ms to 98-100 ms on a 4-core host (SCALING §12b). With the
+drop as SQL text too (``na.drop`` sent the column list one name at a
+time) a build makes 115; ``tests/test_plan_build.py`` caps it at 125.
 """
 
 from __future__ import annotations

@@ -240,26 +240,8 @@ class TestMaxBasketSize:
             basket_rules(df, "basket", "item", 1, max_basket_size=0)
 
 
-class TestHofPairStrategy:
-    """pair_strategy='hof' (r14, the r13 verdict's #3): single-exchange
-    pair generation — groupBy basket -> sorted array -> HOF expansion —
-    must be bit-identical to the self-join shape on every fixture,
-    composed with the cap and the Apriori prune, and under the same
-    property suite."""
-
-    def test_hand_fixtures_identical(self, spark):
-        fixtures = [
-            [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "b"), (3, "c"),
-             (4, "c")],
-            [(1, "a"), (1, "a"), (1, "b"), (2, "a"), (2, "b")],
-            [(1, "a"), (1, None), (None, "b"), (1, "b"), (2, "a"),
-             (2, "b")],
-        ]
-        for rows in fixtures:
-            for mpc in (1, 2):
-                assert _run(
-                    spark, rows, mpc, pair_strategy="hof"
-                ) == _brute(rows, mpc)
+class TestCapAndPrune:
+    """The basket cap and the Apriori prune composed on one call."""
 
     def test_composes_with_cap_and_prune(self, spark):
         rows = (
@@ -267,41 +249,15 @@ class TestHofPairStrategy:
             + [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "b"), (3, "x")]
         )
         df = spark.createDataFrame(rows, ["basket", "item"])
-        for strat in ("selfjoin", "hof"):
-            rules, excluded = basket_rules(
-                df, "basket", "item", 2, max_basket_size=4,
-                return_excluded=True, apriori_prune=True,
-                pair_strategy=strat,
-            )
-            got = {
-                (r["item_a"], r["item_b"]): r["pair_n"]
-                for r in rules.collect()
-            }
-            assert got == {("a", "b"): 2}
-            assert [
-                (r["basket"], r["basket_size"]) for r in excluded.collect()
-            ] == [(0, 6)]
-
-    def test_unknown_strategy_raises(self, spark):
-        import pytest
-
-        df = spark.createDataFrame([(1, "a")], ["basket", "item"])
-        with pytest.raises(ValueError, match="pair_strategy"):
-            basket_rules(df, "basket", "item", 1, pair_strategy="nope")
-
-    @settings(max_examples=20, deadline=None)
-    @given(
-        rows=st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=6),
-                st.sampled_from(["a", "b", "c", "d", "e"]),
-            ),
-            min_size=2,
-            max_size=40,
-        ),
-        mpc=st.sampled_from([1, 2, 3]),
-    )
-    def test_property_equals_brute_force(self, spark, rows, mpc):
-        assert _run(
-            spark, rows, mpc, pair_strategy="hof"
-        ) == _brute(rows, mpc)
+        rules, excluded = basket_rules(
+            df, "basket", "item", 2, max_basket_size=4,
+            return_excluded=True, apriori_prune=True,
+        )
+        got = {
+            (r["item_a"], r["item_b"]): r["pair_n"]
+            for r in rules.collect()
+        }
+        assert got == {("a", "b"): 2}
+        assert [
+            (r["basket"], r["basket_size"]) for r in excluded.collect()
+        ] == [(0, 6)]

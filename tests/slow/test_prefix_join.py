@@ -555,15 +555,10 @@ class TestComposedSimilarityStore:
         assert got == want
 
 
-class TestFusedTail:
-    """r14 (the r13 verdict's #2): the fused screen+verify back half —
-    ordered table joined ONCE per side — must be result-identical to
-    the r12 two-stage shape, and the artifact plan must scan the
-    tokens parquet 4 times (prefix x2 + one per verify side), not 6.
-    The fuse is DEFAULT OFF: measured at sf10 it loses 8.5x and
-    spill-crashes (strings shipped for every candidate, SCALING
-    §10a0g); these tests pin that the recorded negative result stays
-    exact while it exists."""
+class TestIndexedHashTail:
+    """The artifact join's two-stage hash tail (hash screen, then the
+    exact string verify) equals brute force, and its plan scans the
+    tokens parquet 6 times: 2 for the prefix, 2 per stage."""
 
     CORPUS = TestGramDfIndex.CORPUS
 
@@ -580,47 +575,32 @@ class TestFusedTail:
         ordered_tokens_build(df, tpath, gpath)
         return tpath
 
-    def test_fused_equals_unfused_and_brute(self, spark, tmp_path):
+    def test_equals_brute(self, spark, tmp_path):
         from amonaly_detection_in_time_series_data_spark.operators.similarity import (
             prefix_jaccard_join_indexed,
         )
 
         tpath = self._store(spark, tmp_path)
-
-        def run(fused, p=1, q=2):
-            got = prefix_jaccard_join_indexed(
-                spark, tpath, p, q, fused=fused
-            ).collect()
-            return {
-                (r["id_a"], r["id_b"]): (r["inter"], r["size_a"], r["size_b"])
-                for r in got
-            }
-
         for p, q in [(1, 2), (1, 3), (2, 5)]:
-            fused, unfused = run(True, p, q), run(False, p, q)
-            assert fused == unfused == _brute(self.CORPUS, p, q)
+            got = {
+                (r["id_a"], r["id_b"]): (r["inter"], r["size_a"], r["size_b"])
+                for r in prefix_jaccard_join_indexed(spark, tpath, p, q).collect()
+            }
+            assert got == _brute(self.CORPUS, p, q)
 
-    def test_fused_plan_scans_artifact_less(self, spark, tmp_path):
+    def test_plan_scans_artifact_six_times(self, spark, tmp_path):
         from amonaly_detection_in_time_series_data_spark.operators.similarity import (
             prefix_jaccard_join_indexed,
         )
 
         tpath = self._store(spark, tmp_path)
-
-        def n_scans(fused):
-            plan = (
-                prefix_jaccard_join_indexed(spark, tpath, 1, 2, fused=fused)
-                ._jdf.queryExecution()
-                .optimizedPlan()
-                .toString()
-            )
-            return plan.count("Relation")
-
-        # the prefix-explode subtree appears ONCE PER CANDIDATE SIDE in
-        # the logical tree, so the counts are 2 (prefix) + 1 per verify
-        # side fused, vs 2 + 2 (hash) + 2 (string) unfused
-        assert n_scans(True) == 4
-        assert n_scans(False) == 6
+        plan = (
+            prefix_jaccard_join_indexed(spark, tpath, 1, 2)
+            ._jdf.queryExecution()
+            .optimizedPlan()
+            .toString()
+        )
+        assert plan.count("Relation") == 6
 
 
 class TestDeclaredIndexedQuery:

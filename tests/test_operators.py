@@ -752,6 +752,95 @@ class TestAnomalyTiers:
         got = [tuple(r) for r in fused.select(cols).orderBy("i").collect()]
         assert got == want
 
+    BATTERY_COLS = [
+        "user_id", "i", "value_roll_mean", "value_roll_std",
+        "value_zscore", "is_anomaly", "ph_inc", "ph_dec", "ph_alarm",
+        "ewma", "ewma_dev", "ewma_alarm", "iqr_lo", "iqr_hi",
+        "iqr_alarm", "med", "mad", "dev", "robust_alarm",
+        "trend_slope", "trend_intercept", "trend_fit", "trend_resid",
+        "trend_z", "trend_alarm",
+    ]
+
+    def test_battery_distinct_stats_source_equals_composition(self, spark):
+        """The aggregate + broadcast-join shape (a stats frame that is a
+        different frame over the same (key, order) rows) equals the
+        sequential composition fitted on that same frame, on all 25
+        columns."""
+        import random
+
+        from amonaly_detection_in_time_series_data_spark.operators.anomaly import (
+            anomaly_battery,
+            ewma_deviation,
+            page_hinkley,
+            rolling_zscore,
+            trend_ols_flags,
+            tukey_robust_flags,
+        )
+
+        rng = random.Random(9)
+        rows = [
+            (i % 4, i, None if i % 37 == 5 else round(rng.uniform(0, 100) + 0.05 * i, 2))
+            for i in range(600)
+        ]
+        df = spark.createDataFrame(rows, "user_id bigint, i bigint, value double")
+        stats = df.selectExpr("user_id", "i", "round(value * 1.5 + 7, 2) AS value")
+        keys, order = ["user_id"], ["i"]
+        composed = rolling_zscore(df, "value", 24, keys, order)
+        composed = page_hinkley(composed, "value", keys, order, unit_digits=2)
+        composed = ewma_deviation(composed, "value", 8, keys, order)
+        composed = tukey_robust_flags(
+            composed, "value", keys, unit_digits=2, stats_source=stats
+        )
+        composed = trend_ols_flags(
+            composed, "value", keys, order, unit_digits=2, stats_source=stats
+        )
+        fused = anomaly_battery(
+            df, "value", keys, order, unit_digits=2, stats_source=stats
+        )
+        assert "Join" in fused._jdf.queryExecution().executedPlan().toString()
+        cols = self.BATTERY_COLS
+        want = [tuple(r) for r in composed.select(cols).orderBy("i").collect()]
+        got = [tuple(r) for r in fused.select(cols).orderBy("i").collect()]
+        assert got == want
+
+    @pytest.mark.parametrize("unit_digits", [None, 2])
+    def test_faces_accept_spaced_target(self, spark, unit_digits):
+        """Every battery face reads a target whose name needs quoting
+        (``my value``) exactly as it reads ``value``."""
+        import random
+
+        from amonaly_detection_in_time_series_data_spark.operators import anomaly as A
+
+        rng = random.Random(4)
+        rows = [(i % 3, i, round(rng.uniform(0, 10), 2)) for i in range(90)]
+        df = spark.createDataFrame(rows, "user_id bigint, i bigint, value double")
+        spaced = df.withColumnRenamed("value", "my value")
+        keys, order, ud = ["user_id"], ["i"], unit_digits
+        faces = {
+            "page_hinkley": lambda d, t: A.page_hinkley(d, t, keys, order, unit_digits=ud),
+            "iqr_flags": lambda d, t: A.iqr_flags(d, t, keys, unit_digits=ud),
+            "robust_zscore_flags": lambda d, t: A.robust_zscore_flags(d, t, keys, unit_digits=ud),
+            "tukey_robust_flags": lambda d, t: A.tukey_robust_flags(d, t, keys, unit_digits=ud),
+            "trend_ols_flags": lambda d, t: A.trend_ols_flags(d, t, keys, order, unit_digits=ud),
+        }
+        if ud is None:
+            faces["ewma_deviation"] = lambda d, t: A.ewma_deviation(d, t, 8, keys, order)
+        else:
+            faces["trend_ols_expanding"] = lambda d, t: A.trend_ols_expanding(
+                d, t, keys, order, unit_digits=ud
+            )
+            faces["anomaly_battery"] = lambda d, t: A.anomaly_battery(
+                d, t, keys, order, unit_digits=ud
+            )
+        for name, face in faces.items():
+            want = face(df, "value")
+            got = face(spaced, "my value")
+            assert got.columns == [
+                "my value" if c == "value" else c.replace("value_", "my value_")
+                for c in want.columns
+            ], name
+            assert got.orderBy("i").collect() == want.orderBy("i").collect(), name
+
 
 class TestBucketedRolling:
     def test_matches_single_partition_window(self, spark):

@@ -6,7 +6,8 @@
   same schema, no row in one and not the other, on the test sf dir and on
   a small frame with planted NULL, NaN and duplicate-timestamp rows.
 - ``featurize``'s one layer equals adding the feature groups one by one,
-  also where a time feature replaces a column the lags are ordered by.
+  also where a time feature replaces a column the lags are ordered by,
+  and its drop keeps the rows ``na.drop`` keeps.
 - ``col_ref`` resolves what ``F.col`` resolves, ``with_columns`` lays out
   columns as ``withColumns`` does, and ``fill_zero_sql`` is the
   expression ``na.fill(0)`` generates.
@@ -122,6 +123,28 @@ def test_featurize_equals_group_by_group(spark, order):
     want = add_rolling_features(want, "value", [3], ["mean", "std"], key, order)
     got = featurize(df, "value", key, order, lags=(1, 2), windows=(3,), aggs=("mean", "std"))
     _assert_same(got, want.na.drop())
+
+
+def test_featurize_drop_is_na_drop(spark):
+    """``featurize``'s SQL-text drop keeps exactly the rows ``na.drop``
+    keeps: NULL in any column, or NaN in a float/double column, drops
+    the row; NaN text in a string column does not."""
+    df = spark.range(80).selectExpr(
+        "id % 2 AS user_id", "id AS i", "timestamp_seconds(id * 3600) AS ts",
+        "double(id % 9) AS value",
+        "CASE WHEN id % 10 = 4 THEN double('NaN') ELSE id / 3.0D END AS d",
+        "CASE WHEN id % 13 = 6 THEN float('NaN') ELSE float(id) END AS f",
+        "CASE WHEN id % 17 = 8 THEN NULL WHEN id % 5 = 1 THEN 'NaN' ELSE 'x' END AS s",
+        "CASE WHEN id % 19 = 2 THEN NULL ELSE int(id) END AS n",
+        "CASE WHEN id % 23 = 7 THEN NULL ELSE cast(id AS decimal(10, 2)) END AS dec",
+    )
+    key, order = ["user_id"], ["ts", "i"]
+    got = featurize(df, "value", key, order, lags=(1,), windows=(2,), aggs=("mean",))
+    want = featurize(
+        df, "value", key, order, lags=(1,), windows=(2,), aggs=("mean",), dropna=False
+    ).na.drop(how="any")
+    _assert_same(got, want)
+    assert 0 < got.count() < 70
 
 
 class TestColRef:

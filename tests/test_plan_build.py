@@ -2,7 +2,7 @@
 
 - ``anomaly_pipeline`` runs on ONE hash exchange and ONE sort: the series
   exchange sits under the dedup, whose row-number window it satisfies.
-- Building ``anomaly_pipeline`` makes at most 200 py4j round trips.
+- Building ``anomaly_pipeline`` makes at most 125 py4j round trips.
 - Building ``anomaly_pipeline`` or ``load_table`` starts no job:
   ``load_table`` takes a single parquet file's schema from its footer, and
   that schema is exactly what Spark's inference job would have returned.
@@ -65,10 +65,13 @@ class TestAnomalyPipelinePlan:
         assert ids == []
 
     def test_build_round_trip_budget(self, spark, sf_dir):
-        """Every expression ships as SQL text, one ``selectExpr`` per layer:
-        the build makes ~155 py4j round trips (612 when each expression was
-        a ``Column``). Deferred deletes of earlier objects (``m``
-        commands, sent whenever py4j flushes them) are not counted."""
+        """Every expression ships as SQL text, one ``selectExpr`` per layer,
+        and the feature stage's drop is one SQL-text ``where``: the build
+        makes ~115 py4j round trips (612 when each expression was a
+        ``Column``, 155 while the drop was ``na.drop``, which sends the
+        column list one name at a time). Deferred deletes of earlier
+        objects (``m`` commands, sent whenever py4j flushes them) are not
+        counted."""
         anomaly_pipeline(spark, sf_dir)  # warm: first-use class lookups
         client = spark.sparkContext._gateway._gateway_client
         sent: list[str] = []
@@ -84,7 +87,7 @@ class TestAnomalyPipelinePlan:
         finally:
             del client.send_command
         built = [c for c in sent if not c.startswith("m\n")]
-        assert len(built) <= 200, len(built)
+        assert len(built) <= 125, len(built)
 
 
 class TestLoadTableSchema:

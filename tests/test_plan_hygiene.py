@@ -16,13 +16,17 @@ smallest SF — only the plan is inspected; nothing large executes.
 A source sweep pins the same for the package code: no ``iterrows``
 anywhere, and one stateful-streaming runner — the only
 ``applyInPandasWithState`` / ``transformWithStateInPandas`` call is
-in ``streaming.rolling._keyed_fold``.
+in ``streaming.rolling._keyed_fold``. Another pins that the detector
+battery's shared arithmetic has one source: the robust-alarm constant,
+the OLS residual standard error and the integer-unit snap each appear
+once in the package.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 import pytest
 
@@ -90,6 +94,34 @@ def test_no_iterrows_and_one_stateful_runner():
     assert found == [
         ("streaming/rolling.py", "applyInPandasWithState", "_keyed_fold")
     ]
+
+
+#: formulas the detector battery shares, each written once as SQL text
+ONE_SOURCE = {
+    # the integer robust alarm 0.6745 * dev / mad > 3.5 cross-multiplied
+    "robust alarm": re.compile(r"\b26980\b"),
+    # OLS residual standard error sqrt(SSE / (n - 2)); the streaming
+    # twin's Python-int replay (math.sqrt) is the fold, not SQL text
+    "OLS stderr": re.compile(r"(?<!math\.)\bsqrt\((?:(?!sqrt\().)*?/ \(\{?n\}? - 2\)\)"),
+    # integer-unit snap round(x * scale) cast to BIGINT
+    "unit snap": re.compile(
+        r"round\((?:(?!round\().)*?\* \{?scale\}?\)\s*(?:as bigint|\.cast\(\s*\"bigint\")"
+    ),
+}
+
+
+def test_battery_formulas_have_one_source():
+    hits = {name: [] for name in ONE_SOURCE}
+    for path in sorted(PKG_DIR.rglob("*.py")):
+        rel = path.relative_to(PKG_DIR).as_posix()
+        text = " ".join(path.read_text().split())
+        for name, pattern in ONE_SOURCE.items():
+            hits[name] += [rel] * len(pattern.findall(text))
+    assert hits == {
+        "robust alarm": ["operators/anomaly.py"],
+        "OLS stderr": ["operators/anomaly.py"],
+        "unit snap": ["functions/sqltext.py"],
+    }
 
 
 class TestComposedTimeseriesLineage:
