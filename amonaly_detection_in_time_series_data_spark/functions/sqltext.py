@@ -83,10 +83,13 @@ def over(
 def unit_snap(expr: str, scale: int | float) -> str:
     """``expr`` snapped to integer units of ``1/scale`` as a BIGINT: the
     integer-unit convention of the exact detectors (sums, medians and
-    fences of the snapped values are exact in any engine)."""
+    fences of the snapped values are exact in any engine). NaN snaps to
+    NULL, as the streaming folds read it; ``nullif`` keeps ``expr``'s
+    own type, so integer and decimal inputs are not routed through a
+    double."""
     if isinstance(scale, float):
         scale = f"{scale!r}D"
-    return f"cast(round({expr} * {scale}) as bigint)"
+    return f"cast(round(nullif({expr}, double('NaN')) * {scale}) as bigint)"
 
 
 def past_rows(n: int) -> str:

@@ -409,11 +409,22 @@ def _layered(
     return df
 
 
-def _attach(frame: DataFrame, stats: DataFrame, keys: list[str]) -> DataFrame:
-    """Broadcast-join per-key (or, keyless, global) statistics back."""
+def _attach(
+    frame: DataFrame, stats: DataFrame, keys: list[str], how: str = "inner"
+) -> DataFrame:
+    """Broadcast-join per-key (or, keyless, global) statistics back. The
+    keyless statistics are one row, so a cross join serves every ``how``."""
     if keys:
-        return frame.join(F.broadcast(stats), keys)
+        return frame.join(F.broadcast(stats), keys, how)
     return frame.crossJoin(F.broadcast(stats))
+
+
+def _join_using(table: str, key_list: str, how: str = "") -> str:
+    """SQL text joining ``table`` on the ``key_list`` columns, or, with
+    no keys, cross-joining its one global row."""
+    if key_list:
+        return f" {how}JOIN {table} USING ({key_list})"
+    return f" CROSS JOIN {table}"
 
 
 def _aggregate(src: DataFrame, keys: list[str], exprs: Mapping[str, str]) -> DataFrame:
@@ -852,7 +863,7 @@ def trend_ols_flags(
         )
         fitted = _ols_fit(pairs, keys, "__x", "__y")
         d = df.selectExpr(*with_columns(df.columns, {"__x": rn}))
-        d = d.join(F.broadcast(fitted), keys, "left")
+        d = _attach(d, fitted, keys, "left")
         out = trend_flag_sql(
             f"cast({unit_snap(t, scale)} as double)", "cast(__x as double)",
             threshold, round_digits, scale,
@@ -874,7 +885,7 @@ def trend_ols_flags(
     d = df.selectExpr(*with_columns(df.columns, {"__x": x}))
     y = f"cast({t} as double)"
     fitted = _ols_fit(d, keys, "__x", f"CASE WHEN __x IS NOT NULL THEN {y} END")
-    d = d.join(F.broadcast(fitted), keys, "left")
+    d = _attach(d, fitted, keys, "left")
     return _layered(d, [trend_flag_sql(y, "__x", threshold, round_digits)], helpers)
 
 
@@ -1304,6 +1315,9 @@ def anomaly_battery(
             "cast(__x as double)", trend_threshold, 6, scale,
         ))
     key_list = ", ".join(map(col_ref, keys))
+    # the per-key CTEs' key columns and grouping; keyless, one global row
+    key_sel = key_list + ", " if keys else ""
+    group_by = f" GROUP BY {key_list}" if keys else ""
     ctes = []
     if src is df:
         # FUSED stats (r14): the per-key aggregates ride the main (key,
@@ -1333,29 +1347,32 @@ def anomaly_battery(
         stats1 = order_stats_sql(percentiles_sql(target, unit_digits), unit_digits)
         dev, mad = mad_sql(target, unit_digits)
         ctes += [
-            f"__s1 AS (SELECT {key_list}, {', '.join(aliased(stats1))}"
-            f" FROM {{src}} GROUP BY {key_list})",
-            f"__s2 AS (SELECT {key_list}, {', '.join(aliased(mad))} FROM"
+            f"__s1 AS (SELECT {key_sel}{', '.join(aliased(stats1))}"
+            f" FROM {{src}}{group_by})",
+            f"__s2 AS (SELECT {key_sel}{', '.join(aliased(mad))} FROM"
             f" (SELECT /*+ BROADCAST(__s1) */ *, {', '.join(aliased(dev))}"
-            f" FROM {{src}} JOIN __s1 USING ({key_list})) GROUP BY {key_list})",
+            f" FROM {{src}}{_join_using('__s1', key_list)}){group_by})",
         ]
-        tail = f" FROM __l4 JOIN __s1 USING ({key_list}) JOIN __s2 USING ({key_list})"
+        tail = (
+            " FROM __l4" + _join_using("__s1", key_list)
+            + _join_using("__s2", key_list)
+        )
         hints = ["__s1", "__s2"]
         if trend:
             # the fit reads the stats frame too, as trend_ols_flags'
             # stats_source does: its own row index and snapped y
             fit = ols_fit_sql()
             ctes += [
-                f"__xy AS (SELECT {key_list}, {layers[0]['__m']} AS __m,"
+                f"__xy AS (SELECT {key_sel}{layers[0]['__m']} AS __m,"
                 f" {layers[0]['__x']} AS __x FROM {{src}})",
-                f"__sums AS (SELECT {key_list},"
-                f" {', '.join(aliased(ols_sums_sql('__x', '__m')))}"
-                f" FROM __xy GROUP BY {key_list})",
+                f"__sums AS (SELECT {key_sel}"
+                f"{', '.join(aliased(ols_sums_sql('__x', '__m')))}"
+                f" FROM __xy{group_by})",
                 f"__fit0 AS (SELECT *, {', '.join(aliased(fit[0]))} FROM __sums)",
-                f"__fit AS (SELECT {key_list}, __b, {', '.join(aliased(fit[1]))}"
+                f"__fit AS (SELECT {key_sel}__b, {', '.join(aliased(fit[1]))}"
                 " FROM __fit0)",
             ]
-            tail += f" LEFT JOIN __fit USING ({key_list})"
+            tail += _join_using("__fit", key_list, "LEFT ")
             hints.append("__fit")
     chain, prev = [], "{df}"
     for i, layer in enumerate(layers, 1):

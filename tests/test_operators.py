@@ -841,6 +841,71 @@ class TestAnomalyTiers:
             ], name
             assert got.orderBy("i").collect() == want.orderBy("i").collect(), name
 
+    def test_integer_modes_read_nan_as_null(self, spark):
+        """The integer-unit snap reads a NaN target as NULL (it raised
+        ANSI ``CAST_OVERFLOW``): each integer-mode face on a frame with
+        planted NaN equals its output on the same frame with NULL
+        there."""
+        import random
+
+        from amonaly_detection_in_time_series_data_spark.operators import anomaly as A
+
+        rng = random.Random(6)
+        rows = [
+            (i % 3, i, float("nan") if i % 11 == 4 else round(rng.uniform(0, 10), 2))
+            for i in range(120)
+        ]
+        nan = spark.createDataFrame(rows, "user_id bigint, i bigint, value double")
+        null = nan.selectExpr("user_id", "i", "nullif(value, double('NaN')) AS value")
+        keys, order = ["user_id"], ["i"]
+        faces = {
+            "page_hinkley": lambda d: A.page_hinkley(d, "value", keys, order, unit_digits=2),
+            "tukey_robust_flags": lambda d: A.tukey_robust_flags(d, "value", keys, unit_digits=2),
+            "trend_ols_flags": lambda d: A.trend_ols_flags(
+                d, "value", keys, order, unit_digits=2
+            ),
+        }
+        for name, face in faces.items():
+            want = face(null).drop("value").orderBy("i").collect()
+            got = face(nan).drop("value").orderBy("i").collect()
+            assert got == want, name
+            assert any(v is not None for r in got for v in r[2:]), name
+
+    def test_keyless_faces_equal_constant_key(self, spark):
+        """``key_cols=[]`` (one global series) equals the keyed face over
+        a constant key: ``trend_ols_flags`` on its float, integer and
+        ``x_col`` paths, and ``anomaly_battery`` with a distinct
+        ``stats_source``."""
+        import random
+
+        from amonaly_detection_in_time_series_data_spark.operators import anomaly as A
+
+        rng = random.Random(10)
+        rows = [
+            (0, i, None if i % 29 == 3 else round(rng.uniform(0, 50) + 0.1 * i, 2))
+            for i in range(150)
+        ]
+        df = spark.createDataFrame(rows, "k int, i bigint, value double")
+        stats = df.selectExpr("k", "i", "round(value * 1.5 + 7, 2) AS value")
+        order = ["i"]
+        faces = {
+            "trend float": lambda d, ks, s: A.trend_ols_flags(d, "value", ks, order),
+            "trend integer": lambda d, ks, s: A.trend_ols_flags(
+                d, "value", ks, order, unit_digits=2, stats_source=s
+            ),
+            "trend x_col": lambda d, ks, s: A.trend_ols_flags(d, "value", ks, x_col="i"),
+            "battery stats_source": lambda d, ks, s: A.anomaly_battery(
+                d, "value", ks, order, unit_digits=2, stats_source=s
+            ),
+        }
+        for name, face in faces.items():
+            keyed = face(df, ["k"], stats).drop("k")
+            keyless = face(df.drop("k"), [], stats.drop("k"))
+            assert keyless.columns == keyed.columns, name
+            want = keyed.orderBy("i").collect()
+            assert keyless.orderBy("i").collect() == want, name
+            assert any(r["trend_alarm"] is not None for r in want), name
+
 
 class TestBucketedRolling:
     def test_matches_single_partition_window(self, spark):

@@ -19,7 +19,9 @@ anywhere, and one stateful-streaming runner — the only
 in ``streaming.rolling._keyed_fold``. Another pins that the detector
 battery's shared arithmetic has one source: the robust-alarm constant,
 the OLS residual standard error and the integer-unit snap each appear
-once in the package.
+once in the package. A last one pins that the package patches the
+standard library's ``zipimport`` in one function, installed only in
+PySpark worker processes.
 """
 
 from __future__ import annotations
@@ -122,6 +124,54 @@ def test_battery_formulas_have_one_source():
         "OLS stderr": ["operators/anomaly.py"],
         "unit snap": ["functions/sqltext.py"],
     }
+
+
+#: names of the standard-library import machinery the package patches
+ZIP_NAMES = {"zipimport", "invalidate_caches"}
+WORKER_CHECK = "_is_running_on_worker"
+
+
+def _zip_patch_sites():
+    """(file, top-level function) of every syntax node that names
+    ``zipimport``/``invalidate_caches``, and (file, enclosing ``if``
+    tests) of every call of the function holding them."""
+    named, calls = set(), []
+    for path in sorted(PKG_DIR.rglob("*.py")):
+        rel = path.relative_to(PKG_DIR).as_posix()
+
+        def visit(node, top, tests):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                top = top or node.name
+            names = {
+                getattr(node, "id", None), getattr(node, "attr", None),
+                getattr(node, "name", None),
+            }
+            if names & ZIP_NAMES:
+                named.add((rel, top))
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+                calls.append((rel, node.func.id, tests))
+            if isinstance(node, ast.If):
+                tests = tests + [ast.unparse(node.test)]
+            for child in ast.iter_child_nodes(node):
+                visit(child, top, tests)
+
+        visit(ast.parse(path.read_text()), None, [])
+    return named, calls
+
+
+def test_one_guarded_stdlib_zip_patch():
+    """The package patches ``zipimport`` in one function, and installs
+    it only under the PySpark worker check: every other process keeps
+    the standard library."""
+    named, calls = _zip_patch_sites()
+    assert named == {("__init__.py", "_stat_checked_zip_invalidation")}
+    installs = [
+        (rel, tests) for rel, func, tests in calls
+        if func == "_stat_checked_zip_invalidation"
+    ]
+    assert len(installs) == 1, installs
+    (rel, tests), = installs
+    assert rel == "__init__.py" and any(WORKER_CHECK in t for t in tests), tests
 
 
 class TestComposedTimeseriesLineage:
