@@ -219,11 +219,7 @@ def _build_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sufficient statistics run in EXACT integer centi-units (running
     # sums of grid data land on decimal half-boundaries constantly in
     # float mode; the OLS sums are combine-order-proof BIGINTs).
-    # stats_source=ev keeps each stats aggregate's lineage on the raw
-    # scan rather than re-dragging the composed joins into each pass.
-    scored = anomaly_battery(
-        ev, "value", KEY, ORDER, unit_digits=2, stats_source=ev
-    )
+    scored = anomaly_battery(ev, "value", KEY, ORDER, unit_digits=2)
     # selectExpr, not select: ~25 rounded Column objects would cost more
     # py4j round trips than the whole battery build (same rationale as
     # the battery's SQL-text layers). Fences are exact multiples of
@@ -2609,9 +2605,9 @@ def q_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sequence_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's stage-4/5 contract end-to-end, distributed:
-    sequence windows -> broadcast linear-AE (PCA) reconstruction error
-    via Arrow-batched mapInPandas -> 3-sigma flags (rows-only: 3-D
-    sequence input + driver-fit model).
+    sequence windows -> driver-fit linear-AE (PCA) reconstruction error
+    as Catalyst expressions (``score_linear_ae_sql``) -> 3-sigma flags
+    (rows-only: 3-D sequence input + driver-fit model).
 
     _plan_cache (r9): the builder FITS the model (a driver-side collect
     of the 512 deterministic fit rows) — a repeat caller reuses the
@@ -2641,9 +2637,10 @@ def _build_sequence_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned by q_sequences / q_sequences_digest.
     seqs = create_sequences(ev, ["value"], 12, KEY, ORDER, stride=12)
     # fit on the SAME lineage (the fit job materializes the exchange
-    # once; scoring/stats reuse those shuffle files — a filtered fit_df
-    # would add a second, non-reusable exchange, measured slower at
-    # sf0.1). order_cols pins the sample to a TakeOrderedAndProject:
+    # once; scoring/stats reuse those shuffle files — a fit on a
+    # filtered slice added a second, non-reusable exchange, measured
+    # slower at sf0.1). order_cols pins the sample to a
+    # TakeOrderedAndProject:
     # the fitted model — and therefore this query's output — cannot
     # shift when the session's shuffle-partition count or scheduling
     # order changes.
@@ -2651,11 +2648,10 @@ def _build_sequence_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         seqs, "seq", k=2, fit_rows=512,
         order_cols=["user_id", "seq_start_ts"],
     )
-    # r13: stats='collect' (the default) — mu/sigma computed once at
-    # build as a bounded 1-row collect (the audited exception class,
-    # like the fit collect above) and embedded as literals. The lazy
-    # broadcast-stats branch re-executed the whole Arrow scoring pass
-    # on EVERY action (column pruning cannot cross mapInPandas) — the
+    # r13: mu/sigma computed once at build as a bounded 1-row collect
+    # (the audited exception class, like the fit collect above) and
+    # embedded as literals. The lazy broadcast-stats branch it replaced
+    # re-executed the whole scoring pass on EVERY action — the
     # two-global-pass ceiling of SCALING §10a0d, now one pass/action.
     flagged = flag_sequence_anomalies(scored)
     return flagged.select(
@@ -2947,7 +2943,7 @@ def q_lstm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster explicitly — AQE coalesces the (byte-small) sequence
     # exchange to 1-2 partitions otherwise (181 s -> ~13 s at sf0.1)
     scored = sequence_reconstruction_scores(
-        seqs, "seq", scorer="pandas", model=model,
+        seqs, "seq", model=model,
         scoring_partitions=spark.sparkContext.defaultParallelism,
     )
     flagged = flag_sequence_anomalies(scored)

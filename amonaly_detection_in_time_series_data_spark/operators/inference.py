@@ -3,16 +3,16 @@
 The reference trains an LSTM autoencoder and (in spec, main.py:223-231)
 flags sequences whose reconstruction error exceeds a 3-sigma threshold.
 This module implements that contract with the Spark-idiomatic inference
-shape — a small model fit driver-side on a bounded sample, broadcast to
-executors, applied via Arrow-batched ``mapInPandas`` — using a linear
-autoencoder (PCA) as the model so the path is deterministic and
-dependency-free (torch is not available here; a torch model drops into
-the same ``score_fn`` slot, reloaded per executor from a broadcast
-state_dict).
+shape — a small model fit driver-side on a bounded sample, then applied
+row-wise — using a linear autoencoder (PCA) as the model so the path is
+deterministic and dependency-free. The model picks the scorer: the
+linear model is embedded as Catalyst expressions; any other model (the
+numpy LSTM autoencoder; a torch model would drop into the same slot) is
+broadcast to executors and applied via Arrow-batched ``mapInPandas``.
 
 At 100 TB: the fit sample is bounded (driver memory is O(sample));
 scoring is a pure map — no shuffle, no collect — and the model rides
-task broadcast (~KBs).
+the plan as literals or task broadcast (~KBs).
 """
 
 from __future__ import annotations
@@ -293,8 +293,6 @@ def sequence_reconstruction_scores(
     fit_rows: int = 2048,
     order_cols: list[str] | None = None,
     error_col: str = "recon_error",
-    fit_df: DataFrame | None = None,
-    scorer: str = "sql",
     model=None,
     scoring_partitions: int | None = None,
 ) -> DataFrame:
@@ -304,45 +302,26 @@ def sequence_reconstruction_scores(
     Input is the output of ``operators.sequences.create_sequences``
     (``seq``: array<array<double>>, L x f). Output adds ``error_col``.
 
-    ``fit_df``: optional cheaper source for the fit sample — e.g. the
-    sequence lineage filtered to a slice of the partition keys, which
-    Catalyst pushes below the window so the fit pass touches a fraction
-    of the data instead of the full assembly.
+    ``model``: skip the fit and score with this model instead. The model
+    picks the scorer: a :class:`LinearAEModel` (the fitted default or a
+    supplied one) is embedded as Catalyst expressions by
+    :func:`score_linear_ae_sql` — no Python per row; any other model,
+    such as the :class:`~.lstm.LSTMAEModel` (ML1 — the reference's LSTM
+    autoencoder as numpy inference math), is broadcast once and applied
+    through Arrow ``mapInPandas`` to 3-D (n, L, f) batches.
 
-    ``scorer``: 'sql' (default) embeds the linear model as Catalyst
-    expressions via :func:`score_linear_ae_sql` — no Python per row;
-    'pandas' uses the broadcast + Arrow ``mapInPandas`` path, which is
-    the slot a non-linear model drops into.
-
-    ``model``: skip the fit and score with this model instead. The
-    :class:`~.lstm.LSTMAEModel` (ML1 — the reference's LSTM autoencoder
-    as numpy inference math) goes through here with ``scorer='pandas'``;
-    it is broadcast once and consumes 3-D (n, L, f) batches. A
-    :class:`LinearAEModel` may also be passed (either scorer).
-
-    ``scoring_partitions``: explicit repartition before the pandas
+    ``scoring_partitions``: explicit repartition before the Arrow
     scorer. AQE's byte-based shuffle coalescing sizes the sequence
     window's output for its BYTES — a few MB of sequences collapse to
     1-2 partitions, which then starve a CPU-BOUND Arrow stage (the
     2-layer LSTM measured 181 s on 2 of 32 cores at sf0.1; ~13 s once
     spread). Set to the cluster's parallelism for expensive models; the
-    extra round-robin exchange is noise next to the model's FLOPs.
-    Leave None for cheap models (the linear tier), where the shuffle
-    would cost more than it buys.
+    extra round-robin exchange is noise next to the model's FLOPs. The
+    linear model's Catalyst scorer ignores it.
     """
-    if scorer not in ("sql", "pandas"):
-        raise ValueError(
-            f"scorer must be 'sql' or 'pandas', got {scorer!r}"
-        )
     if model is None:
-        model = fit_linear_ae(fit_df if fit_df is not None else df,
-                              seq_col, k, fit_rows, order_cols=order_cols)
-    if scorer == "sql":
-        if not isinstance(model, LinearAEModel):
-            raise ValueError(
-                "scorer='sql' supports only LinearAEModel (the Catalyst "
-                "expression form); use scorer='pandas' for LSTM models"
-            )
+        model = fit_linear_ae(df, seq_col, k, fit_rows, order_cols=order_cols)
+    if isinstance(model, LinearAEModel):
         return score_linear_ae_sql(df, model, seq_col, error_col)
 
     if scoring_partitions:
@@ -350,7 +329,6 @@ def sequence_reconstruction_scores(
     # broadcast the model object itself (a small dict of numpy arrays) —
     # one task-broadcast fetch per executor, reused across Arrow batches
     bc = df.sparkSession.sparkContext.broadcast(model)
-    is_3d = not isinstance(model, LinearAEModel)
     from pyspark.sql import types as T
 
     # fresh StructType — .add() would mutate the DataFrame's cached schema
@@ -361,9 +339,8 @@ def sequence_reconstruction_scores(
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         m = bc.value
-        stack = _stack_sequences_3d if is_3d else _stack_sequences
         for pdf in batches:
-            x = stack(pdf[seq_col])
+            x = _stack_sequences_3d(pdf[seq_col])
             pdf = pdf.copy()
             pdf[error_col] = m.reconstruction_errors(x) if len(x) else []
             yield pdf[out_fields]
@@ -375,42 +352,12 @@ def flag_sequence_anomalies(
     scored: DataFrame,
     error_col: str = "recon_error",
     threshold: float = 3.0,
-    persist: bool = False,
-    stats: str = "collect",
 ) -> DataFrame:
     """3-sigma flags over the reconstruction-error distribution — the
-    reference's ANOMALY_THRESHOLD = 3.0 contract (config.py:21).
-
-    ``stats`` picks how the global mu/sigma reaches the row scan:
-
-    - ``'collect'`` (default, r13): run the stats aggregate ONCE as a
-      bounded scalar collect (one row — the audited exception class)
-      and embed literals. The returned plan then costs ONE scoring
-      pass per action. This removed the second global pass that made
-      the operator ~3x/decade (SCALING §10a0d): the Arrow scorer sits
-      below the stats branch and column pruning cannot cross a
-      ``mapInPandas``, so the lazy form re-executes the full scoring
-      pass inside the broadcast subtree on EVERY action.
-    - ``'plan'``: the fully-lazy two-pass form (stats as a broadcast
-      subquery) — keeps the result a pure unexecuted plan, for callers
-      composing larger lazy pipelines that must not trigger jobs at
-      build time.
-
-    Results are value-identical under the same partitioning
-    (pytest-pinned — the stats aggregate is the identical physical
-    plan either way). ``persist=True`` remains available as a runtime
-    option for ``stats='plan'`` pipelines that take many actions:
-    cache the scored frame so each pass reads memory/disk; call
-    ``.unpersist()`` on the INPUT frame when done."""
-    if stats not in ("collect", "plan"):
-        raise ValueError(
-            f"flag_sequence_anomalies: stats must be 'collect' or 'plan', "
-            f"got {stats!r}"
-        )
+    reference's ANOMALY_THRESHOLD = 3.0 contract (config.py:21), through
+    :func:`~.anomaly.global_zscore_flags`: the global mu/sigma is one
+    bounded scalar collect, embedded as literals, so each action on the
+    result pays ONE scoring pass (r13, SCALING §10a0d)."""
     from .anomaly import global_zscore_flags
 
-    if persist:
-        scored = scored.persist()
-    return global_zscore_flags(
-        scored, error_col, threshold, collect_stats=(stats == "collect")
-    )
+    return global_zscore_flags(scored, error_col, threshold)

@@ -3,12 +3,14 @@ main.py:223-231: reconstruct new data with the TRAINED model, flag high
 reconstruction error) in Structured Streaming.
 
 A pre-fit model (driver-fit :class:`~..operators.inference.LinearAEModel`
-or the ML1 :class:`~..operators.lstm.LSTMAEModel`) is broadcast once and
-applied to the online sequence assembly
-(:func:`~.sequences.streaming_sequences`) through the SAME stateless
-Arrow ``mapInPandas`` slot the batch path uses — stateless maps compose
-with streaming DataFrames unchanged, so batch and stream scores are
-identical by construction (parity-tested in tests/test_streaming.py).
+or the ML1 :class:`~..operators.lstm.LSTMAEModel`) is applied to the
+online sequence assembly (:func:`~.sequences.streaming_sequences`)
+through the SAME scorer the batch path picks for that model — Catalyst
+expressions for the linear model, the broadcast Arrow ``mapInPandas``
+slot otherwise. Both are stateless maps, which compose with streaming
+DataFrames unchanged, so batch and stream scores are identical by
+construction (the LSTM path is parity-tested in
+tests/slow/test_streaming.py).
 
 Thresholding: serving uses a FIXED threshold computed at training time
 (the reference's ANOMALY_THRESHOLD, config.py:21) — a global 3-sigma
@@ -51,7 +53,7 @@ def streaming_sequence_scores(
         seq_col, F.transform(F.col(seq_col), lambda v: F.array(v))
     )
     scored = sequence_reconstruction_scores(
-        nested, seq_col, scorer="pandas", model=model, error_col=error_col
+        nested, seq_col, model=model, error_col=error_col
     )
     if threshold is not None:
         scored = scored.withColumn(

@@ -461,7 +461,7 @@ class TestStreamingModelScoring:
         ev = load_table(spark, sf_dir, "events")
         batch = sequence_reconstruction_scores(
             create_sequences(ev, ["value"], 6, ["user_id"], ["ts", "event_id"]),
-            "seq", scorer="pandas", model=model,
+            "seq", model=model,
         )
         expected = {
             (r["user_id"], r["seq_start_ts"]): r["recon_error"]

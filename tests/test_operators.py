@@ -602,7 +602,7 @@ class TestAnomalyTiers:
 
     def test_battery_fused_stats_three_scans(self, spark, tmp_path):
         # the detector-battery shape (window detectors + fused
-        # Tukey/robust with stats_source on the raw scan) must read the
+        # Tukey/robust over their output) must read the
         # source exactly 3 times in the FINAL adaptive plan: main pass,
         # fused order-stats pass (q1/median/q3 in one percentile
         # buffer), MAD pass — the duplicated order-stats subtree inside
@@ -624,9 +624,7 @@ class TestAnomalyTiers:
         ).write.parquet(src_path)
         ev = spark.read.parquet(src_path)
         scored = rolling_zscore(ev, "value", 24, ["user_id"], ["i"])
-        scored = tukey_robust_flags(
-            scored, "value", ["user_id"], unit_digits=2, stats_source=ev
-        )
+        scored = tukey_robust_flags(scored, "value", ["user_id"], unit_digits=2)
         scored.collect()  # materialize so AQE finalizes exchange reuse
         plan = scored._jdf.queryExecution().executedPlan().toString()
         final = plan.split("== Initial Plan ==")[0]
@@ -635,8 +633,7 @@ class TestAnomalyTiers:
         assert "ReusedExchange" in final, final[:4000]
 
     def test_fused_battery_plan_one_scan_with_trend(self, spark, tmp_path):
-        """r14 fused-stats contract: when the stats frame IS the scored
-        frame, the battery + trend tier reads the source exactly ONCE
+        """r14 fused-stats contract: the battery + trend tier reads the source exactly ONCE
         and shuffles exactly ONCE — the per-key order statistics, MAD
         and OLS sufficient statistics ride the main (key, order)
         exchange as partition-window aggregates, with ZERO joins (the
@@ -656,9 +653,7 @@ class TestAnomalyTiers:
             rows, "user_id bigint, i bigint, value double"
         ).write.parquet(src_path)
         ev = spark.read.parquet(src_path)
-        scored = anomaly_battery(
-            ev, "value", ["user_id"], ["i"], unit_digits=2, stats_source=ev
-        )
+        scored = anomaly_battery(ev, "value", ["user_id"], ["i"], unit_digits=2)
         scored.collect()
         plan = scored._jdf.queryExecution().executedPlan().toString()
         final = plan.split("== Initial Plan ==")[0]
@@ -669,33 +664,6 @@ class TestAnomalyTiers:
         for join in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
             assert join not in final, f"unexpected {join} in fused battery"
         assert "BatchEvalPython" not in final
-
-    def test_battery_distinct_stats_source_keeps_join_shape(self, spark):
-        """A genuinely different stats frame (fit-on-one-score-on-
-        another) must still aggregate THAT frame and broadcast-join
-        back — and produce the quartiles of the stats frame, not the
-        scored frame."""
-        from amonaly_detection_in_time_series_data_spark.operators.anomaly import (
-            anomaly_battery,
-        )
-
-        df = spark.createDataFrame(
-            [(0, i, float(i)) for i in range(40)],
-            "user_id bigint, i bigint, value double",
-        )
-        # stats frame: constant 5.0 -> med == 5.0 regardless of df's values
-        stats = spark.createDataFrame(
-            [(0, i, 5.0) for i in range(10)],
-            "user_id bigint, i bigint, value double",
-        )
-        scored = anomaly_battery(
-            df, "value", ["user_id"], ["i"], unit_digits=2,
-            stats_source=stats,
-        )
-        row = scored.select("med").distinct().collect()
-        assert [r["med"] for r in row] == [5.0]
-        plan = scored._jdf.queryExecution().executedPlan().toString()
-        assert "Join" in plan
 
     def test_fused_battery_equals_composition(self, spark):
         """anomaly_battery (one minimal-layer plan, built for driver
@@ -729,17 +697,12 @@ class TestAnomalyTiers:
             composed, "value", 8, ["user_id"], ["i"], alpha=0.5
         )
         composed = tukey_robust_flags(
-            composed, "value", ["user_id"], k=1.5, unit_digits=2,
-            stats_source=df,
+            composed, "value", ["user_id"], k=1.5, unit_digits=2
         )
         composed = trend_ols_flags(
-            composed, "value", ["user_id"], ["i"], unit_digits=2,
-            stats_source=df,
+            composed, "value", ["user_id"], ["i"], unit_digits=2
         )
-        fused = anomaly_battery(
-            df, "value", ["user_id"], ["i"], unit_digits=2,
-            stats_source=df,
-        )
+        fused = anomaly_battery(df, "value", ["user_id"], ["i"], unit_digits=2)
         cols = [
             "user_id", "i", "value_roll_mean", "value_roll_std",
             "value_zscore", "is_anomaly", "ph_inc", "ph_dec", "ph_alarm",
@@ -761,11 +724,9 @@ class TestAnomalyTiers:
         "trend_z", "trend_alarm",
     ]
 
-    def test_battery_distinct_stats_source_equals_composition(self, spark):
-        """The aggregate + broadcast-join shape (a stats frame that is a
-        different frame over the same (key, order) rows) equals the
-        sequential composition fitted on that same frame, on all 25
-        columns."""
+    def test_fused_battery_equals_composition_with_nulls(self, spark):
+        """With NULL targets in the series, the fused battery still
+        equals the sequential composition on all 25 columns."""
         import random
 
         from amonaly_detection_in_time_series_data_spark.operators.anomaly import (
@@ -783,21 +744,13 @@ class TestAnomalyTiers:
             for i in range(600)
         ]
         df = spark.createDataFrame(rows, "user_id bigint, i bigint, value double")
-        stats = df.selectExpr("user_id", "i", "round(value * 1.5 + 7, 2) AS value")
         keys, order = ["user_id"], ["i"]
         composed = rolling_zscore(df, "value", 24, keys, order)
         composed = page_hinkley(composed, "value", keys, order, unit_digits=2)
         composed = ewma_deviation(composed, "value", 8, keys, order)
-        composed = tukey_robust_flags(
-            composed, "value", keys, unit_digits=2, stats_source=stats
-        )
-        composed = trend_ols_flags(
-            composed, "value", keys, order, unit_digits=2, stats_source=stats
-        )
-        fused = anomaly_battery(
-            df, "value", keys, order, unit_digits=2, stats_source=stats
-        )
-        assert "Join" in fused._jdf.queryExecution().executedPlan().toString()
+        composed = tukey_robust_flags(composed, "value", keys, unit_digits=2)
+        composed = trend_ols_flags(composed, "value", keys, order, unit_digits=2)
+        fused = anomaly_battery(df, "value", keys, order, unit_digits=2)
         cols = self.BATTERY_COLS
         want = [tuple(r) for r in composed.select(cols).orderBy("i").collect()]
         got = [tuple(r) for r in fused.select(cols).orderBy("i").collect()]
@@ -874,8 +827,7 @@ class TestAnomalyTiers:
     def test_keyless_faces_equal_constant_key(self, spark):
         """``key_cols=[]`` (one global series) equals the keyed face over
         a constant key: ``trend_ols_flags`` on its float, integer and
-        ``x_col`` paths, and ``anomaly_battery`` with a distinct
-        ``stats_source``."""
+        ``x_col`` paths."""
         import random
 
         from amonaly_detection_in_time_series_data_spark.operators import anomaly as A
@@ -886,21 +838,17 @@ class TestAnomalyTiers:
             for i in range(150)
         ]
         df = spark.createDataFrame(rows, "k int, i bigint, value double")
-        stats = df.selectExpr("k", "i", "round(value * 1.5 + 7, 2) AS value")
         order = ["i"]
         faces = {
-            "trend float": lambda d, ks, s: A.trend_ols_flags(d, "value", ks, order),
-            "trend integer": lambda d, ks, s: A.trend_ols_flags(
-                d, "value", ks, order, unit_digits=2, stats_source=s
+            "trend float": lambda d, ks: A.trend_ols_flags(d, "value", ks, order),
+            "trend integer": lambda d, ks: A.trend_ols_flags(
+                d, "value", ks, order, unit_digits=2
             ),
-            "trend x_col": lambda d, ks, s: A.trend_ols_flags(d, "value", ks, x_col="i"),
-            "battery stats_source": lambda d, ks, s: A.anomaly_battery(
-                d, "value", ks, order, unit_digits=2, stats_source=s
-            ),
+            "trend x_col": lambda d, ks: A.trend_ols_flags(d, "value", ks, x_col="i"),
         }
         for name, face in faces.items():
-            keyed = face(df, ["k"], stats).drop("k")
-            keyless = face(df.drop("k"), [], stats.drop("k"))
+            keyed = face(df, ["k"]).drop("k")
+            keyless = face(df.drop("k"), [])
             assert keyless.columns == keyed.columns, name
             want = keyed.orderBy("i").collect()
             assert keyless.orderBy("i").collect() == want, name
@@ -1135,7 +1083,7 @@ class TestPlanShape:
 
 class TestSequenceInference:
     def test_reconstruction_errors_match_numpy(self, spark, sf_dir):
-        """mapInPandas scoring == pure-numpy PCA on the same fit sample."""
+        """Catalyst scoring == pure-numpy PCA on the same fit sample."""
         import numpy as np
 
         from amonaly_detection_in_time_series_data_spark.operators.inference import (
@@ -1148,16 +1096,11 @@ class TestSequenceInference:
         ev = load_table(spark, sf_dir, "events")
         seqs = create_sequences(ev, ["value"], 6, ["user_id"], ["ts", "event_id"])
         n = seqs.count()
-        got_by_scorer = {}
-        for scorer in ("sql", "pandas"):
-            scored = sequence_reconstruction_scores(
-                seqs, "seq", k=2, fit_rows=n, scorer=scorer
-            )
-            got_by_scorer[scorer] = {
-                (r["user_id"], r["seq_start_ts"]): r["recon_error"]
-                for r in scored.collect()
-            }
-        got = got_by_scorer["sql"]
+        scored = sequence_reconstruction_scores(seqs, "seq", k=2, fit_rows=n)
+        got = {
+            (r["user_id"], r["seq_start_ts"]): r["recon_error"]
+            for r in scored.collect()
+        }
 
         rows = seqs.orderBy("user_id", "seq_start_ts").collect()
         x = np.array([np.array(r["seq"], dtype=np.float64).ravel() for r in rows])
@@ -1173,19 +1116,18 @@ class TestSequenceInference:
             assert got[(r["user_id"], r["seq_start_ts"])] == pytest.approx(
                 w, rel=1e-9, abs=1e-12
             )
-        # the Catalyst-expression scorer and the Arrow mapInPandas slot
-        # agree on every sequence
-        for key, v in got_by_scorer["pandas"].items():
-            assert got[key] == pytest.approx(v, rel=1e-9, abs=1e-12)
 
     def test_sql_scorer_large_d_hof_path(self, spark, sf_dir):
         """d = L*f > 64 takes the higher-order (zip_with/aggregate)
         fallback instead of flat expansion; it must agree with the
-        Arrow mapInPandas scorer. Also guards the HOF path against the
-        free-expression-in-lambda quadratic: the projections are bound
-        columns, so a 70-wide sequence scores in the same pass shape as
-        a 6-wide one."""
+        numpy model on every sequence. Also guards the HOF path against
+        the free-expression-in-lambda quadratic: the projections are
+        bound columns, so a 70-wide sequence scores in the same pass
+        shape as a 6-wide one."""
+        import numpy as np
+
         from amonaly_detection_in_time_series_data_spark.operators.inference import (
+            fit_linear_ae,
             sequence_reconstruction_scores,
         )
         from amonaly_detection_in_time_series_data_spark.operators.sequences import (
@@ -1196,24 +1138,31 @@ class TestSequenceInference:
         seqs = create_sequences(ev, ["value"], 70, ["user_id"], ["ts", "event_id"])
         n = seqs.count()
         assert n > 0
-        by_scorer = {}
-        for scorer in ("sql", "pandas"):
-            scored = sequence_reconstruction_scores(
-                seqs, "seq", k=2, fit_rows=n, scorer=scorer
+        model = fit_linear_ae(seqs, "seq", 2, n)
+        rows = seqs.collect()
+        x = np.array([np.array(r["seq"], dtype=np.float64).ravel() for r in rows])
+        want = model.reconstruction_errors(x)
+        scored = sequence_reconstruction_scores(seqs, "seq", model=model)
+        got = {
+            (r["user_id"], r["seq_start_ts"]): r["recon_error"]
+            for r in scored.collect()
+        }
+        assert len(got) == len(rows)
+        for r, w in zip(rows, want):
+            assert got[(r["user_id"], r["seq_start_ts"])] == pytest.approx(
+                w, rel=1e-9, abs=1e-12
             )
-            by_scorer[scorer] = {
-                (r["user_id"], r["seq_start_ts"]): r["recon_error"]
-                for r in scored.collect()
-            }
-        assert by_scorer["sql"].keys() == by_scorer["pandas"].keys()
-        for key, v in by_scorer["pandas"].items():
-            assert by_scorer["sql"][key] == pytest.approx(v, rel=1e-9, abs=1e-12)
 
-    def test_scorer_validated(self, spark, sf_dir):
-        """A typo like scorer='SQL' must raise, not silently take the
-        slower Arrow path."""
+    def test_model_picks_scorer(self, spark, sf_dir):
+        """No selector: an LSTM model scores through the Arrow
+        ``mapInPandas`` slot, a ``LinearAEModel`` as Catalyst
+        expressions with no Python stage in its plan."""
         from amonaly_detection_in_time_series_data_spark.operators.inference import (
+            fit_linear_ae,
             sequence_reconstruction_scores,
+        )
+        from amonaly_detection_in_time_series_data_spark.operators.lstm import (
+            init_lstm_ae,
         )
         from amonaly_detection_in_time_series_data_spark.operators.sequences import (
             create_sequences,
@@ -1221,8 +1170,19 @@ class TestSequenceInference:
 
         ev = load_table(spark, sf_dir, "events")
         seqs = create_sequences(ev, ["value"], 6, ["user_id"], ["ts", "event_id"])
-        with pytest.raises(ValueError, match="scorer"):
-            sequence_reconstruction_scores(seqs, "seq", scorer="SQL")
+        lstm = init_lstm_ae(input_dim=1, hidden_dim=4, embedding_dim=2,
+                            n_layers=1, seed=5)
+        scored = sequence_reconstruction_scores(seqs, "seq", model=lstm)
+        plan = scored._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("MapInPandas") == 1, plan
+        errs = [r["recon_error"] for r in scored.collect()]
+        assert errs and all(e is not None and e >= 0 for e in errs)
+
+        linear = fit_linear_ae(seqs, "seq", 2, 64)
+        scored = sequence_reconstruction_scores(seqs, "seq", model=linear)
+        plan = scored._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInPandas" not in plan, plan
+        assert scored.count() == len(errs)
 
     def test_fit_order_cols_honored(self, spark, sf_dir):
         """An explicit order_cols takes the deterministic
@@ -1786,8 +1746,7 @@ class TestLSTMAutoencoder:
     def test_checkpoint_roundtrip_and_spark_scoring(self, spark, sf_dir, tmp_path):
         """npz round-trip (torch state_dict key names) is bit-exact; the
         broadcast mapInPandas scoring slot reproduces the driver-side
-        numpy scores on every sequence; the sql scorer refuses the
-        nonlinear model."""
+        numpy scores on every sequence."""
         import numpy as np
 
         from amonaly_detection_in_time_series_data_spark.operators.artifacts import (
@@ -1815,9 +1774,7 @@ class TestLSTMAutoencoder:
 
         ev = load_table(spark, sf_dir, "events")
         seqs = create_sequences(ev, ["value"], 6, ["user_id"], ["ts", "event_id"])
-        scored = sequence_reconstruction_scores(
-            seqs, "seq", scorer="pandas", model=back
-        )
+        scored = sequence_reconstruction_scores(seqs, "seq", model=back)
         got = {
             (r["user_id"], r["seq_start_ts"]): r["recon_error"]
             for r in scored.collect()
@@ -1833,9 +1790,6 @@ class TestLSTMAutoencoder:
             assert got[(r["user_id"], r["seq_start_ts"])] == pytest.approx(
                 w, rel=1e-9, abs=1e-12
             )
-
-        with pytest.raises(ValueError, match="LinearAEModel"):
-            sequence_reconstruction_scores(seqs, "seq", scorer="sql", model=back)
 
     def test_reference_dims_score_digest_pinned(self):
         """Determinism pin for the declared lstm_scores path: the
@@ -3089,8 +3043,7 @@ class TestTrendOlsFlags:
     def test_unit_mode_matches_float_on_grid_data(self, spark):
         """unit_digits (r8, cross-engine hash-exact BIGINT sums): on
         grid-valued data the integer-unit fit equals the float fit to
-        float tolerance; NULL contracts carry over; stats_source on the
-        raw frame gives the same answer."""
+        float tolerance; NULL contracts carry over."""
         df = self._df(spark).withColumn("v", F.round("v", 2))
         from amonaly_detection_in_time_series_data_spark.operators.anomaly import (
             trend_ols_flags,
@@ -3105,8 +3058,7 @@ class TestTrendOlsFlags:
         i = {
             (r.sid, r.t): (r.trend_slope, r.trend_z, r.trend_alarm)
             for r in trend_ols_flags(
-                df, "v", ["sid"], order_cols=["t"], unit_digits=2,
-                stats_source=df,
+                df, "v", ["sid"], order_cols=["t"], unit_digits=2
             ).collect()
         }
         assert set(f) == set(i)
@@ -4255,14 +4207,20 @@ class TestTrendOlsExpanding:
         assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-class TestFlagPersistKnob:
-    def test_persist_flag_is_value_identical(self, spark, sf_dir):
-        """flag_sequence_anomalies(persist=True) — the cluster answer to
-        the two-global-pass ceiling (SCALING §10a0c) — must be value-
-        identical to the pure two-pass plan."""
+class TestFlagSequenceAnomalies:
+    def test_plan_has_one_scoring_pass(self, spark, sf_dir):
+        """The 3-sigma flags collect the global mu/sigma once (r13), so
+        the flagged plan carries exactly one Arrow scoring stage and NO
+        stats subtree: column pruning cannot cross ``mapInPandas``, and a
+        lazy stats branch would re-run the whole scoring pass on every
+        action. Logical plan, since AQE hides the physical tree until
+        execution."""
         from amonaly_detection_in_time_series_data_spark.operators.inference import (
             flag_sequence_anomalies,
             sequence_reconstruction_scores,
+        )
+        from amonaly_detection_in_time_series_data_spark.operators.lstm import (
+            init_lstm_ae,
         )
         from amonaly_detection_in_time_series_data_spark.operators.sequences import (
             create_sequences,
@@ -4272,65 +4230,10 @@ class TestFlagPersistKnob:
         seqs = create_sequences(
             ev, ["value"], 12, ["user_id"], ["ts", "event_id"], stride=12
         )
-        scored = sequence_reconstruction_scores(
-            seqs, "seq", k=2, fit_rows=512,
-            order_cols=["user_id", "seq_start_ts"],
-        )
-        cols = ["user_id", "seq_start_ts", "recon_error", "is_anomaly"]
-        plain = flag_sequence_anomalies(scored, persist=False).select(*cols)
-        cached = flag_sequence_anomalies(scored, persist=True).select(*cols)
-        try:
-            assert plain.exceptAll(cached).count() == 0
-            assert cached.exceptAll(plain).count() == 0
-        finally:
-            scored.unpersist()
-
-    def test_collect_stats_mode_is_value_identical(self, spark, sf_dir):
-        """flag_sequence_anomalies(stats='collect') — the r13 fix for
-        the two-global-pass ceiling — must be value-identical to the
-        lazy stats='plan' form (same physical aggregate, same
-        partitioning), and its plan must carry NO stats subtree (no
-        second scoring pass per action)."""
-        from amonaly_detection_in_time_series_data_spark.operators.inference import (
-            flag_sequence_anomalies,
-            sequence_reconstruction_scores,
-        )
-        from amonaly_detection_in_time_series_data_spark.operators.sequences import (
-            create_sequences,
-        )
-
-        ev = load_table(spark, sf_dir, "events")
-        seqs = create_sequences(
-            ev, ["value"], 12, ["user_id"], ["ts", "event_id"], stride=12
-        )
-        # pandas scorer: the case the fix exists for — column pruning
-        # cannot cross mapInPandas, so the lazy stats subtree re-runs
-        # the whole Arrow scoring pass
-        scored = sequence_reconstruction_scores(
-            seqs, "seq", k=2, fit_rows=512,
-            order_cols=["user_id", "seq_start_ts"], scorer="pandas",
-        )
-        cols = ["user_id", "seq_start_ts", "recon_error", "is_anomaly"]
-        lazy = flag_sequence_anomalies(scored, stats="plan").select(*cols)
-        fused = flag_sequence_anomalies(scored, stats="collect").select(*cols)
-        assert lazy.exceptAll(fused).count() == 0
-        assert fused.exceptAll(lazy).count() == 0
-        # exactly one Arrow scoring stage in the fused plan (the lazy
-        # form carries a second one inside the stats subtree); logical
-        # plan, since AQE hides the physical tree until execution
-        fplan = fused._jdf.queryExecution().optimizedPlan().toString()
-        lplan = lazy._jdf.queryExecution().optimizedPlan().toString()
-        assert fplan.count("MapInPandas") == 1, fplan
-        assert lplan.count("MapInPandas") == 2, lplan
-        assert "stddev_samp" not in fplan
-
-    def test_stats_mode_validation(self, spark):
-        import pytest
-
-        from amonaly_detection_in_time_series_data_spark.operators.inference import (
-            flag_sequence_anomalies,
-        )
-
-        df = spark.range(3).withColumn("recon_error", F.col("id") * 1.0)
-        with pytest.raises(ValueError):
-            flag_sequence_anomalies(df, stats="bogus")
+        model = init_lstm_ae(input_dim=1, hidden_dim=4, embedding_dim=2,
+                             n_layers=1, seed=5)
+        scored = sequence_reconstruction_scores(seqs, "seq", model=model)
+        flagged = flag_sequence_anomalies(scored)
+        plan = flagged._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("MapInPandas") == 1, plan
+        assert "stddev_samp" not in plan

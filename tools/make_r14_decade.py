@@ -5,7 +5,7 @@
   were built on (well, 4x: the decade protocol names slopes per 10x by
   log-scaling whatever step the box affords).
 - /tmp/sf30: events only, 300 tiles (~30M events) for
-  sequence_scores(stats='collect'), 3x the sf10 events.
+  sequence_scores (its one collected mu/sigma pass), 3x the sf10 events.
 
 Distribution hygiene, continuing make_sf10.py's argument one decade
 further: its vowel(5) x consonant(21) rotation gives 105 pairwise-
