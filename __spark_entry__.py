@@ -655,17 +655,6 @@ def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _plan_cache(spark, "top_customers", sf_dir, build)
 
 
-def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = load_table(spark, sf_dir, "region")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    joined = _revenue_joined(spark, sf_dir).join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
-    )
-    return joined.rollup("r_name", "n_name").agg(
-        F.round(F.sum(rev), 2).alias("revenue")
-    )
-
-
 def q_orders_no_recent_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
     # left ANTI join: orders with no lineitem shipped after 2000-01-01
     orders = load_table(spark, sf_dir, "orders")
@@ -822,15 +811,6 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return name_rows.unionByName(band_rows)
 
 
-def q_select_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # P2 — type-based projection (reference main.py:112
-    # select_dtypes(include=[np.number])): keep only numeric columns.
-    from amonaly_detection_in_time_series_data_spark.sources.readers import select_dtypes
-
-    ev = _events(spark, sf_dir)
-    return select_dtypes(ev, include=("numeric",))
-
-
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.10 set ops, EXCEPT + INTERSECT over the same two legs, tagged
     # and unioned so one query checks both. The urgent/high legs give
@@ -978,11 +958,6 @@ def q_doc_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _plan_cache(spark, "doc_dedup_exact", sf_dir, build)
 
 
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", sha_fingerprint("text").alias("fingerprint"))
-
-
 def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged r9: the exact top-20 token counts now carry their
     Count-Min estimates (operators.cms — depth 4, width 256, the
@@ -1025,28 +1000,6 @@ def _build_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         weight_col="cnt",
     )
     return cm_estimate(top, sketch, "token", depth=4, width=256, hash_fn="md5")
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread_small(load_table(spark, sf_dir, "documents"))
-    toks = tokenize("text")
-    stops = LANG_STOPWORDS["en"]
-    stop_hits = F.size(F.filter(toks, lambda t: t.isin(*stops)))
-    return docs.select(
-        "doc_id",
-        F.length("text").cast("bigint").alias("n_chars_calc"),
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        token_count_regex("text").cast("bigint").alias("bpe_tokens"),
-        F.round(punct_ratio("text"), 4).alias("punct_ratio"),
-        F.round(stop_hits / F.nullif(F.size(toks), F.lit(0)), 4).alias(
-            "stopword_ratio_en"
-        ),
-    )
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread_small(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id", "lang", lang_id_expr("text").alias("lang_pred"))
 
 
 def q_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2042,24 +1995,6 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash document fingerprint (winnowing primitive): per-doc
-    k-gram Rabin-Karp hashes; fingerprint = (count, min, max) over the
-    gram-hash set — identical integer arithmetic in the DuckDB oracle."""
-    from amonaly_detection_in_time_series_data_spark.functions.text import (
-        rolling_hash_grams,
-    )
-
-    docs = spread_small(load_table(spark, sf_dir, "documents"))
-    hashes = rolling_hash_grams(F.col("text"), k=8)
-    return docs.select(
-        "doc_id",
-        F.size(hashes).cast("bigint").alias("n_grams"),
-        F.array_min(hashes).alias("fp_min"),
-        F.array_max(hashes).alias("fp_max"),
-    )
-
-
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged r3 (doc_fingerprint + doc_winnow), extended r6 with the
     full winnowing selection: one per-doc row carrying the
@@ -2694,11 +2629,6 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return minhash_lsh_pairs(sigs, n_bands=4, id_col="doc_id")
 
     return _plan_cache(spark, "minhash_pairs", sf_dir, build)
-
-
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread_small(load_table(spark, sf_dir, "documents"))
-    return simhash64(docs, "text", "doc_id")
 
 
 def q_minhash_pairs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,7 +9,10 @@ Identifier quoting lives here and nowhere else:
   from a schema;
 - :func:`col_ref` quotes a column reference so that it resolves exactly
   what ``F.col(name)`` resolves (dots outside backticks separate name
-  parts, a backticked part is literal).
+  parts, a backticked part is literal);
+- :func:`ddl` writes the schema DDL of an Arrow stage's output (a
+  ``StructType.fromDDL`` string), each field name quoted with
+  :func:`ident`, each type written by :func:`sql_type`.
 """
 
 from __future__ import annotations
@@ -61,6 +64,18 @@ def col_ref(name: str) -> str:
         raise ValueError(f"syntax error in attribute name: {name!r}")
     parts.append("".join(cur))
     return ".".join(ident(p) for p in parts)
+
+
+def sql_type(dtype) -> str:
+    """A Spark ``DataType`` as SQL type text (a DDL field, a ``CAST``)."""
+    return dtype.simpleString()
+
+
+def ddl(schema, cols: Sequence[str] | Mapping[str, str]) -> str:
+    """DDL of the fields ``cols`` of ``schema`` (a ``StructType``); a
+    mapping ``{name: field}`` writes ``name`` typed as ``field``."""
+    pairs = cols.items() if isinstance(cols, Mapping) else ((c, c) for c in cols)
+    return ", ".join(f"{ident(n)} {sql_type(schema[f].dataType)}" for n, f in pairs)
 
 
 def over(

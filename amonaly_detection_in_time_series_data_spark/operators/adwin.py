@@ -27,17 +27,21 @@ and the window is cut at a bucket boundary whenever
 tracking would cost O(n)) — the paper's own approximation.
 
 Execution: sequential per series (the window state is the algorithm),
-so one Python loop, :func:`adwin_kernel`, inside ONE ``applyInPandas``
-per series group; the streaming twin folds the same kernel over
-losslessly round-tripped bucket arrays and replays BIT-exactly.
+so one Python loop, :func:`adwin_kernel`, per series group in the
+shared Arrow stage :func:`~.series.per_series`; the streaming twin
+folds the same kernel over losslessly round-tripped bucket arrays and
+replays BIT-exactly.
 """
 
 from __future__ import annotations
 
 import math
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame
+
+from .series import per_series
 
 __all__ = ["AdwinState", "adwin_changes"]
 
@@ -179,6 +183,12 @@ def adwin_numpy(y, delta: float, max_buckets: int):
     )
 
 
+def adwin_columns(y, delta, max_buckets):
+    """:func:`adwin_changes`' columns for one sorted series ``y``."""
+    ns, means, flags = adwin_numpy(y, delta, max_buckets)
+    return {"adwin_n": ns, "adwin_mean": means, "adwin_change": flags}
+
+
 def adwin_changes(
     df: DataFrame,
     ts_col: str,
@@ -195,34 +205,9 @@ def adwin_changes(
     shrank on this row = drift detected). Row count preserved; nulls
     raise (fill first).
     """
-    keys = list(series_cols)
-    out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + f", `{ts_col}` {df.schema[ts_col].dataType.simpleString()}"
-        + f", `{value_col}` {df.schema[value_col].dataType.simpleString()}"
-        + ", adwin_n bigint, adwin_mean double, adwin_change boolean"
-    )
-
-    def run(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        ns, means, flags = adwin_numpy(
-            pdf[value_col].to_numpy(dtype="float64"), delta, max_buckets
-        )
-        return pd.DataFrame(
-            {
-                **{k: pdf[k].to_numpy() for k in keys},
-                ts_col: pdf[ts_col].to_numpy(),
-                value_col: pdf[value_col].to_numpy(),
-                "adwin_n": ns,
-                "adwin_mean": means,
-                "adwin_change": flags,
-            }
-        )
-
-    return (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(run, out_schema)
+    return per_series(
+        df, series_cols, ts_col, value_col,
+        partial(adwin_columns, delta=delta, max_buckets=max_buckets),
+        "adwin_n bigint, adwin_mean double, adwin_change boolean",
+        name="adwin_changes",
     )

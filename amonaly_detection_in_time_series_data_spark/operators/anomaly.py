@@ -58,6 +58,7 @@ from ..functions.sqltext import (
     RUNNING,
     aliased,
     col_ref,
+    ddl,
     ident,
     over,
     past_rows,
@@ -1065,9 +1066,7 @@ def throttle_alerts(
             + F.expr(f"INTERVAL {cooldown}")
         ).cast("double")
         tie = list(order_tiebreak)
-        schema = ", ".join(
-            f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys
-        ) + f", `__dts` {df.schema[ts_col].dataType.simpleString()}, __d int"
+        schema = f"{ddl(df.schema, keys)}, {ddl(df.schema, {'__dts': ts_col})}, __d int"
         delivered = (
             alerts.select(*keys, ts_col, *tie, sec.alias("__cd"))
             .groupBy(*keys)

@@ -29,6 +29,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from ..functions.sqltext import ddl
+
 __all__ = ["pelt_changepoints", "pelt_numpy", "opt_partition_numpy"]
 
 
@@ -207,9 +209,8 @@ def pelt_changepoints(
         raise ValueError(f"pelt_changepoints: min_size must be >= 1, got {min_size}")
     keys = list(series_cols)
     out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + f", seg_id int, seg_start_ts {df.schema[ts_col].dataType.simpleString()}"
-        + f", seg_end_ts {df.schema[ts_col].dataType.simpleString()}"
+        f"{ddl(df.schema, keys)}, seg_id int, "
+        + ddl(df.schema, {"seg_start_ts": ts_col, "seg_end_ts": ts_col})
         + ", seg_n int, seg_mean double, is_changepoint boolean"
     )
 

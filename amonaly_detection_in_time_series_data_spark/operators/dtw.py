@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import ddl
+
 __all__ = ["dtw_numpy", "dtw_match"]
 
 
@@ -122,10 +124,7 @@ def dtw_match(
         g = ref_pdf[ref_pdf[ref_key] == name].sort_values(rts)
         ref_arrays[str(name)] = g[rval].to_numpy(dtype="float64")
 
-    out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + ", ref string, dtw_dist double"
-    )
+    out_schema = ddl(df.schema, keys) + ", ref string, dtw_dist double"
 
     def match(pdf):
         import numpy as np

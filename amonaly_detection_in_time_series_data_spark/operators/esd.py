@@ -23,8 +23,9 @@ monotone CDF. Pinned against published t-table values in the tests.
 
 Execution: GESD is an iterative whole-series procedure (each removal
 changes the next test statistic) — inherently sequential per series,
-so numpy inside ONE Arrow-batched ``applyInPandas`` per series group;
-``max_outliers`` is a bounded fraction, parallelism = series count.
+so numpy per series group in the shared Arrow stage
+:func:`~.series.per_series`; ``max_outliers`` is a bounded fraction,
+parallelism = series count.
 """
 
 from __future__ import annotations
@@ -34,6 +35,8 @@ import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
+
+from .series import per_series
 
 __all__ = ["esd_anomalies", "gesd_numpy", "t_ppf", "esd_lambda"]
 
@@ -221,6 +224,16 @@ def seasonal_resid(y, season_rows: int):
     return resid
 
 
+def esd_columns(y, max_anoms, alpha, season_rows, hybrid):
+    """:func:`esd_anomalies`' columns for one sorted series ``y``."""
+    resid = seasonal_resid(y, season_rows)
+    flags, rank = gesd_numpy(
+        resid, max_outliers=int(math.floor(max_anoms * len(y))), alpha=alpha,
+        hybrid=hybrid,
+    )
+    return {"esd_resid": resid, "esd_flag": flags, "esd_rank": rank}
+
+
 def esd_anomalies(
     df: DataFrame,
     ts_col: str,
@@ -248,41 +261,10 @@ def esd_anomalies(
         raise ValueError(f"esd_anomalies: max_anoms must be in (0, 0.49], got {max_anoms}")
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"esd_anomalies: alpha must be in (0,1), got {alpha}")
-    keys = list(series_cols)
-    out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + f", `{ts_col}` {df.schema[ts_col].dataType.simpleString()}"
-        + f", `{value_col}` {df.schema[value_col].dataType.simpleString()}"
-        + ", esd_resid double, esd_flag boolean, esd_rank int"
-    )
-    m = int(season_rows) if season_rows else 0
-
-    def detect(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        if np.isnan(y).any():
-            raise ValueError("esd_anomalies: null values in series (fill first)")
-        n = len(y)
-        resid = seasonal_resid(y, m)
-        flags, rank = gesd_numpy(
-            resid, max_outliers=int(math.floor(max_anoms * n)), alpha=alpha, hybrid=hybrid
-        )
-        return pd.DataFrame(
-            {
-                **{k: pdf[k].to_numpy() for k in keys},
-                ts_col: pdf[ts_col].to_numpy(),
-                value_col: pdf[value_col].to_numpy(),
-                "esd_resid": resid,
-                "esd_flag": flags,
-                "esd_rank": rank,
-            }
-        )
-
-    return (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(detect, out_schema)
+    return per_series(
+        df, series_cols, ts_col, value_col,
+        functools.partial(esd_columns, max_anoms=max_anoms, alpha=alpha,
+                          season_rows=season_rows, hybrid=hybrid),
+        "esd_resid double, esd_flag boolean, esd_rank int",
+        name="esd_anomalies",
     )

@@ -23,17 +23,20 @@ Why it earns a place beside the battery: a 3σ rule on heavy-tailed
 data either floods (tail wider than Gaussian) or sleeps (threshold
 dragged up by the tail); POT calibrates the false-alarm RATE directly.
 
-Execution: per-series numpy inside ONE ``applyInPandas`` (the fit
-needs the excess set; O(n) per series), emitting per-row flags plus
-the fitted threshold columns so downstream jobs can apply ``z_q``
-as a stream filter without refitting.
+Execution: per-series numpy in the shared Arrow stage
+:func:`~.series.per_series` (the fit needs the excess set; O(n) per
+series), emitting per-row flags plus the fitted threshold columns so
+downstream jobs can apply ``z_q`` as a stream filter without refitting.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame
+
+from .series import per_series
 
 __all__ = ["pot_threshold", "gpd_fit_numpy", "pot_numpy"]
 
@@ -84,6 +87,21 @@ def pot_numpy(y, init_quantile=0.98, q=1e-4, min_excesses=10):
     return t, float(zq), float(gamma), float(sigma), nt
 
 
+def pot_columns(y, init_quantile, q, min_excesses):
+    """:func:`pot_threshold`'s columns for one sorted series ``y``."""
+    import numpy as np
+
+    t, zq, gamma, sigma, _ = pot_numpy(
+        y, init_quantile=init_quantile, q=q, min_excesses=min_excesses
+    )
+    n = len(y)
+    return {
+        "pot_t": np.full(n, t), "pot_z": np.full(n, zq),
+        "pot_gamma": np.full(n, gamma), "pot_sigma": np.full(n, sigma),
+        "pot_flag": y > zq,
+    }
+
+
 def pot_threshold(
     df: DataFrame,
     ts_col: str,
@@ -111,41 +129,11 @@ def pot_threshold(
         )
     if not 0.0 < q < 1.0:
         raise ValueError(f"pot_threshold: q must be in (0,1), got {q}")
-    keys = list(series_cols)
-    out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + f", `{ts_col}` {df.schema[ts_col].dataType.simpleString()}"
-        + f", `{value_col}` {df.schema[value_col].dataType.simpleString()}"
-        + ", pot_t double, pot_z double, pot_gamma double, pot_sigma double"
-        + ", pot_flag boolean"
-    )
-
-    def fit(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        if np.isnan(y).any():
-            raise ValueError("pot_threshold: null values in series (fill first)")
-        t, zq, gamma, sigma, _ = pot_numpy(
-            y, init_quantile=init_quantile, q=q, min_excesses=min_excesses
-        )
-        return pd.DataFrame(
-            {
-                **{k: pdf[k].to_numpy() for k in keys},
-                ts_col: pdf[ts_col].to_numpy(),
-                value_col: pdf[value_col].to_numpy(),
-                "pot_t": t,
-                "pot_z": zq,
-                "pot_gamma": gamma,
-                "pot_sigma": sigma,
-                "pot_flag": y > zq,
-            }
-        )
-
-    return (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(fit, out_schema)
+    return per_series(
+        df, series_cols, ts_col, value_col,
+        partial(pot_columns, init_quantile=init_quantile, q=q,
+                min_excesses=min_excesses),
+        "pot_t double, pot_z double, pot_gamma double, pot_sigma double, "
+        "pot_flag boolean",
+        name="pot_threshold",
     )

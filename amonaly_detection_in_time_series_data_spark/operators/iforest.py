@@ -34,6 +34,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from ..functions.sqltext import ddl, ident
+
 __all__ = ["IsolationForestModel", "isolation_forest_fit", "isolation_forest_score", "c_factor"]
 
 _EULER_GAMMA = 0.5772156649015329
@@ -186,10 +188,9 @@ def isolation_forest_score(
     features score null. Map-only Arrow pass — the forest rides the
     closure into the executors once per task."""
     cols = list(feature_cols)
-    out_fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema = out_fields + f", `{score_col}` double"
+    out_schema = f"{ddl(df.schema, df.columns)}, {ident(score_col)} double"
     if threshold is not None:
-        out_schema += f", `{flag_col}` boolean"
+        out_schema += f", {ident(flag_col)} boolean"
     thr = threshold
 
     def score(batches):

@@ -25,8 +25,9 @@ Initialization is the standard exact-diffuse step: the first
 observation initializes the level (its innovation/score are null).
 
 Execution: the recursion is sequential per series — one Python loop
-inside ONE Arrow-batched ``applyInPandas`` per series group; O(1) state
-per series for the filter, O(n) for the smoother's stored gains. The
+per series group in the shared Arrow stage :func:`~.series.per_series`;
+O(1) state per series for the filter, O(n) for the smoother's stored
+gains. The
 filter loop is :func:`kalman_kernel`, the same kernel the streaming
 twin ``streaming.rolling.streaming_kalman_level`` folds.
 """
@@ -35,8 +36,11 @@ from __future__ import annotations
 
 import math
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame
+
+from .series import per_series
 
 __all__ = ["kalman_level", "kalman_numpy"]
 
@@ -108,6 +112,27 @@ def kalman_numpy(y, q_var=None, r_var=None, snr=0.01):
     return {k: np.array(v, dtype="float64") for k, v in cols.items()}
 
 
+def kalman_columns(y, q_var, r_var, snr, threshold):
+    """:func:`kalman_level`'s columns for one sorted series ``y``."""
+    import numpy as np
+    import pandas as pd
+
+    r = kalman_numpy(y, q_var=q_var, r_var=r_var, snr=snr)
+    score = r["score"]
+    return {
+        "kf_pred": r["pred"],
+        "kf_level": r["level"],
+        "kf_smooth": r["smooth"],
+        "kf_innov": r["innov"],
+        "kf_innov_sd": np.sqrt(r["innov_var"]),
+        "kf_score": score,
+        "kf_flag": pd.array(
+            np.where(np.isnan(score), None, np.abs(score) > threshold),
+            dtype="boolean",
+        ),
+    }
+
+
 def kalman_level(
     df: DataFrame,
     ts_col: str,
@@ -131,46 +156,11 @@ def kalman_level(
     """
     if threshold <= 0:
         raise ValueError(f"kalman_level: threshold must be > 0, got {threshold}")
-    keys = list(series_cols)
-    thr = float(threshold)
-    out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + f", `{ts_col}` {df.schema[ts_col].dataType.simpleString()}"
-        + f", `{value_col}` {df.schema[value_col].dataType.simpleString()}"
-        + ", kf_pred double, kf_level double, kf_smooth double"
-        + ", kf_innov double, kf_innov_sd double, kf_score double, kf_flag boolean"
-    )
-
-    def filt(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        r = kalman_numpy(
-            pdf[value_col].to_numpy(dtype="float64"),
-            q_var=q_var, r_var=r_var, snr=snr,
-        )
-        score = r["score"]
-        flag = pd.array(
-            np.where(np.isnan(score), None, np.abs(score) > thr), dtype="boolean"
-        )
-        return pd.DataFrame(
-            {
-                **{k: pdf[k].to_numpy() for k in keys},
-                ts_col: pdf[ts_col].to_numpy(),
-                value_col: pdf[value_col].to_numpy(),
-                "kf_pred": r["pred"],
-                "kf_level": r["level"],
-                "kf_smooth": r["smooth"],
-                "kf_innov": r["innov"],
-                "kf_innov_sd": np.sqrt(r["innov_var"]),
-                "kf_score": score,
-                "kf_flag": flag,
-            }
-        )
-
-    return (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(filt, out_schema)
+    return per_series(
+        df, series_cols, ts_col, value_col,
+        partial(kalman_columns, q_var=q_var, r_var=r_var, snr=snr,
+                threshold=float(threshold)),
+        "kf_pred double, kf_level double, kf_smooth double, kf_innov double, "
+        "kf_innov_sd double, kf_score double, kf_flag boolean",
+        name="kalman_level",
     )

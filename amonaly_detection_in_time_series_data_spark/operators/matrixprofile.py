@@ -13,8 +13,8 @@ beyond-reference extension).
 
 Engine design (the repo rule: Python only where Catalyst can't go):
 the O(n^2) intra-series recurrence is inherently sequential per
-series, so it runs as numpy inside ONE Arrow-batched
-``applyInPandas`` per series group. Parallelism comes from the series
+series, so it runs as numpy per series group in the shared Arrow stage
+:func:`~.series.per_series`. Parallelism comes from the series
 count — the same axis every other per-key operator scales on; there
 is exactly one shuffle (the groupBy on the series key). State is
 O(n) per series; the driver never sees data.
@@ -39,9 +39,13 @@ from __future__ import annotations
 
 import math
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.sqltext import ddl
+from .series import per_series
 
 __all__ = [
     "matrix_profile",
@@ -65,6 +69,26 @@ def _sliding_dot(query, series):
     fq = np.fft.rfft(query[::-1], size)
     prod = np.fft.irfft(fs * fq, size)
     return prod[m - 1 : n]
+
+
+def _window_stats(y, m):
+    """Per length-``m`` window of ``y``: mean, sigma and flatness.
+
+    A TWO-PASS sliding computation, not the cumsum shortcut: E[x^2] -
+    mu^2 cancels catastrophically when the mean dominates the variance,
+    which (a) classified the same window differently after a constant
+    shift and (b) can zero the sigma of a non-flat window, poisoning
+    the STOMP division. O(n*m) vectorized — STOMP is O(n^2) anyway.
+    Flatness is the EXACT window max == min, affine-proof by
+    construction (property-tested); a flat window's sigma is 0."""
+    import numpy as np
+
+    windows = np.lib.stride_tricks.sliding_window_view(y, m)
+    mu = windows.mean(axis=1)
+    centered = windows - mu[:, None]
+    sig = np.sqrt(np.einsum("ij,ij->i", centered, centered) / m)
+    flat = (windows.max(axis=1) - windows.min(axis=1)) == 0.0
+    return mu, np.where(flat, 0.0, np.maximum(sig, 1e-300)), flat
 
 
 def stomp_numpy(y, m, exclusion=None, recompute_every=512):
@@ -91,20 +115,7 @@ def stomp_numpy(y, m, exclusion=None, recompute_every=512):
     if l < 2:
         return np.full(max(l, 0), np.nan), np.full(max(l, 0), -1, dtype="int64")
     excl = int(exclusion) if exclusion is not None else int(math.ceil(m / 2))
-
-    # window statistics via a TWO-PASS sliding computation, not the
-    # cumsum shortcut: E[x^2] - mu^2 cancels catastrophically when the
-    # mean dominates the variance, which (a) classified the same window
-    # differently after a constant shift and (b) can zero the sigma of
-    # a non-flat window, poisoning the division below. O(n*m)
-    # vectorized — STOMP is O(n^2) anyway. Flatness is the EXACT
-    # window max == min, affine-proof by construction (property-tested).
-    windows = np.lib.stride_tricks.sliding_window_view(y, m)
-    mu = windows.mean(axis=1)
-    centered = windows - mu[:, None]
-    sig = np.sqrt(np.einsum("ij,ij->i", centered, centered) / m)
-    flat = (windows.max(axis=1) - windows.min(axis=1)) == 0.0
-    sig = np.where(flat, 0.0, np.maximum(sig, 1e-300))
+    mu, sig, flat = _window_stats(y, m)
 
     qt_first = _sliding_dot(y[:m], y)  # QT row for i=0 (exact)
     qt = qt_first.copy()
@@ -138,6 +149,25 @@ def stomp_numpy(y, m, exclusion=None, recompute_every=512):
     return mp, mp_idx
 
 
+def _profile_columns(y, m, exclusion, max_series_len):
+    """:func:`matrix_profile`'s columns for one sorted series ``y``: one
+    row per subsequence start."""
+    import numpy as np
+
+    if len(y) > max_series_len:
+        raise ValueError(
+            f"matrix_profile: series of length {len(y)} exceeds "
+            f"max_series_len={max_series_len}; STOMP is O(n^2) per "
+            "series in a single task — use matrix_profile_chunked "
+            "(exact, distributed) or downsample (m4_downsample / "
+            "coarser resample_grid), or raise max_series_len "
+            "explicitly if you accept the cost"
+        )
+    l = max(len(y) - m + 1, 0)
+    mp, mp_idx = stomp_numpy(y, m, exclusion) if l else (np.zeros(0), np.zeros(0, "int64"))
+    return {"pos": np.arange(l, dtype="int32"), "mp": mp, "mp_pos": mp_idx.astype("int32")}
+
+
 def matrix_profile(
     df: DataFrame,
     ts_col: str,
@@ -169,57 +199,14 @@ def matrix_profile(
     chunk-pair tiles) or downsample first (``m4_downsample`` /
     ``resample_grid`` at a coarser grid).
     """
-    keys = list(series_cols)
-    m = int(window)
-    out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + f", `{ts_col}` {df.schema[ts_col].dataType.simpleString()}"
-        + ", pos int, mp double, mp_pos int"
-    )
-
-    def profile(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        if pdf[ts_col].duplicated().any():
-            raise ValueError("matrix_profile: duplicate timestamps in a series")
-        if len(pdf) > max_series_len:
-            raise ValueError(
-                f"matrix_profile: series of length {len(pdf)} exceeds "
-                f"max_series_len={max_series_len}; STOMP is O(n^2) per "
-                "series in a single task — use matrix_profile_chunked "
-                "(exact, distributed) or downsample (m4_downsample / "
-                "coarser resample_grid), or raise max_series_len "
-                "explicitly if you accept the cost"
-            )
-        y = pdf[value_col].to_numpy(dtype="float64")
-        l = max(len(y) - m + 1, 0)
-        if l == 0:
-            return pd.DataFrame(
-                {
-                    **{k: pdf[k].iloc[:0] for k in keys},
-                    ts_col: pdf[ts_col].iloc[:0],
-                    "pos": np.array([], dtype="int32"),
-                    "mp": np.array([], dtype="float64"),
-                    "mp_pos": np.array([], dtype="int32"),
-                }
-            )
-        mp, mp_idx = stomp_numpy(y, m, exclusion)
-        return pd.DataFrame(
-            {
-                **{k: pdf[k].iloc[:l].to_numpy() for k in keys},
-                ts_col: pdf[ts_col].iloc[:l].to_numpy(),
-                "pos": np.arange(l, dtype="int32"),
-                "mp": mp,
-                "mp_pos": mp_idx.astype("int32"),
-            }
-        )
-
-    return (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(profile, out_schema)
+    return per_series(
+        df, series_cols, ts_col, value_col,
+        partial(_profile_columns, m=int(window), exclusion=exclusion,
+                max_series_len=max_series_len),
+        "pos int, mp double, mp_pos int",
+        name="matrix_profile",
+        carry=(ts_col,),
+        distinct_ts=True,
     )
 
 
@@ -279,18 +266,6 @@ def top_motifs(
         .withColumn("motif_rank", F.row_number().over(w))
         .where(F.col("motif_rank") <= int(k))
     )
-
-
-def _window_stats(y, m):
-    """Two-pass sliding mean/sigma + exact flatness (see stomp_numpy)."""
-    import numpy as np
-
-    windows = np.lib.stride_tricks.sliding_window_view(y, m)
-    mu = windows.mean(axis=1)
-    centered = windows - mu[:, None]
-    sig = np.sqrt(np.einsum("ij,ij->i", centered, centered) / m)
-    flat = (windows.max(axis=1) - windows.min(axis=1)) == 0.0
-    return mu, np.where(flat, 0.0, np.maximum(sig, 1e-300)), flat
 
 
 def stomp_ab_numpy(query, ref, m, recompute_every=512):
@@ -399,8 +374,7 @@ def mp_shape_search(
         ref_arrays[str(name)] = g[rval].to_numpy(dtype="float64")
 
     out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + ", ref string, best_dist double, query_pos int, ref_pos int"
+        ddl(df.schema, keys) + ", ref string, best_dist double, query_pos int, ref_pos int"
     )
 
     def search(pdf):
@@ -607,10 +581,7 @@ def matrix_profile_chunked(
     # the filter to the cheap structural one (ref chunk has >= 1 window)
     tiles = tiles.where(F.size("__r_vals") >= m)
 
-    key_schema = ", ".join(
-        f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys
-    )
-    out_schema = key_schema + ", __pos int, __d double, __np bigint"
+    out_schema = ddl(df.schema, keys) + ", __pos int, __d double, __np bigint"
 
     def tile(pdf):
         import numpy as np

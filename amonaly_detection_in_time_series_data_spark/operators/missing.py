@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.sqltext import RUNNING, col_ref, over, with_columns
+from ..functions.sqltext import RUNNING, col_ref, over, sql_type, with_columns
 
 
 def _series_window(key_cols: Sequence[str], order_cols: Sequence[str]) -> Window:
@@ -124,7 +124,7 @@ def fill_zero_sql(expr: str, dtype: T.DataType) -> str | None:
     alone (it fills numeric columns only)."""
     if not isinstance(dtype, T.NumericType):
         return None
-    t = dtype.simpleString()
+    t = sql_type(dtype)
     if isinstance(dtype, (T.DoubleType, T.FloatType)):
         expr = f"nanvl({expr}, CAST(NULL AS {t}))"
     return f"coalesce({expr}, CAST(0.0D AS {t}))"

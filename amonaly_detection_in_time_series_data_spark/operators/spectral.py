@@ -25,16 +25,19 @@ does not ring at the right boundary where fresh anomalies live; the
 extension rows are dropped from the output.
 
 Execution: FFT per series — inherently whole-series, so numpy inside
-ONE Arrow-batched ``applyInPandas`` per series group (one shuffle on
-the series key; parallelism = series count; O(n log n) per series,
-scale-safe for many bounded series).
+the shared per-series Arrow stage :func:`~.series.per_series` (one
+shuffle on the series key; parallelism = series count; O(n log n) per
+series, scale-safe for many bounded series).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame
+
+from .series import per_series
 
 __all__ = ["spectral_residual", "sr_numpy"]
 
@@ -87,6 +90,12 @@ def sr_numpy(y, q=3, score_window=21, extend=5, grad_points=5):
     return sal, score
 
 
+def sr_columns(y, q, score_window, threshold, extend):
+    """:func:`spectral_residual`'s columns for one sorted series ``y``."""
+    sal, score = sr_numpy(y, q=q, score_window=score_window, extend=extend)
+    return {"sr_saliency": sal, "sr_score": score, "sr_flag": score > threshold}
+
+
 def spectral_residual(
     df: DataFrame,
     ts_col: str,
@@ -107,37 +116,10 @@ def spectral_residual(
     Input contract: regular, null-free grid per series (compose after
     ``resample_grid`` + a fill operator); nulls raise.
     """
-    keys = list(series_cols)
-    thr = float(threshold)
-    out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + f", `{ts_col}` {df.schema[ts_col].dataType.simpleString()}"
-        + f", `{value_col}` {df.schema[value_col].dataType.simpleString()}"
-        + ", sr_saliency double, sr_score double, sr_flag boolean"
-    )
-
-    def detect(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        if np.isnan(y).any():
-            raise ValueError("spectral_residual: null values in series (fill first)")
-        sal, score = sr_numpy(y, q=q, score_window=score_window, extend=extend)
-        return pd.DataFrame(
-            {
-                **{k: pdf[k].to_numpy() for k in keys},
-                ts_col: pdf[ts_col].to_numpy(),
-                value_col: pdf[value_col].to_numpy(),
-                "sr_saliency": sal,
-                "sr_score": score,
-                "sr_flag": score > thr,
-            }
-        )
-
-    return (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(detect, out_schema)
+    return per_series(
+        df, series_cols, ts_col, value_col,
+        partial(sr_columns, q=q, score_window=score_window,
+                threshold=float(threshold), extend=extend),
+        "sr_saliency double, sr_score double, sr_flag boolean",
+        name="spectral_residual",
     )

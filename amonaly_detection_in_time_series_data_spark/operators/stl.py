@@ -16,16 +16,19 @@ MA(period) x MA(period) x MA(3) cascade; defaults n_inner=2,
 n_outer=1 robustness pass — statsmodels' defaults). All numpy, O(n * q)
 per loess pass.
 
-Execution: whole-series iterative — numpy inside ONE Arrow-batched
-``applyInPandas`` per series group, parallel across series (the same
-axis as holt_winters). Input contract: regular null-free grid.
+Execution: whole-series iterative — numpy per series group in the
+shared Arrow stage :func:`~.series.per_series`, parallel across series
+(the same axis as holt_winters). Input contract: regular null-free grid.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame
+
+from .series import per_series
 
 __all__ = ["stl_decompose", "stl_numpy", "loess_numpy"]
 
@@ -142,6 +145,28 @@ def stl_numpy(y, period, seasonal_span=None, trend_span=None,
     return seasonal, trend, y - seasonal - trend
 
 
+def stl_columns(y, period, seasonal_span, trend_span, n_outer, threshold):
+    """:func:`stl_decompose`'s columns for one sorted series ``y``."""
+    import numpy as np
+    import pandas as pd
+
+    s, t, r = stl_numpy(
+        y, period, seasonal_span=seasonal_span, trend_span=trend_span,
+        n_outer=n_outer,
+    )
+    scale = 1.4826022185056018 * float(np.median(np.abs(r - np.median(r)))) if len(r) else 0.0
+    if scale > 0:
+        z = (r - np.median(r)) / scale
+        flag = pd.array(np.abs(z) > threshold, dtype="boolean")
+    else:
+        z = np.full(len(r), np.nan)
+        flag = pd.array([None] * len(r), dtype="boolean")
+    return {
+        "stl_seasonal": s, "stl_trend": t, "stl_resid": r, "stl_z": z,
+        "stl_flag": flag,
+    }
+
+
 def stl_decompose(
     df: DataFrame,
     ts_col: str,
@@ -162,50 +187,12 @@ def stl_decompose(
     0). Input contract: regular null-free grid (compose after
     ``resample_grid`` + a fill operator).
     """
-    keys = list(series_cols)
-    thr = float(threshold)
-    out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + f", `{ts_col}` {df.schema[ts_col].dataType.simpleString()}"
-        + f", `{value_col}` {df.schema[value_col].dataType.simpleString()}"
-        + ", stl_seasonal double, stl_trend double, stl_resid double"
-        + ", stl_z double, stl_flag boolean"
-    )
-
-    def fit(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        if np.isnan(y).any():
-            raise ValueError("stl_decompose: null values in series (fill first)")
-        s, t, r = stl_numpy(
-            y, period, seasonal_span=seasonal_span, trend_span=trend_span,
-            n_outer=n_outer,
-        )
-        scale = 1.4826022185056018 * float(np.median(np.abs(r - np.median(r)))) if len(r) else 0.0
-        if scale > 0:
-            z = (r - np.median(r)) / scale
-            flag = pd.array(np.abs(z) > thr, dtype="boolean")
-        else:
-            z = np.full(len(r), np.nan)
-            flag = pd.array([None] * len(r), dtype="boolean")
-        return pd.DataFrame(
-            {
-                **{k: pdf[k].to_numpy() for k in keys},
-                ts_col: pdf[ts_col].to_numpy(),
-                value_col: pdf[value_col].to_numpy(),
-                "stl_seasonal": s,
-                "stl_trend": t,
-                "stl_resid": r,
-                "stl_z": z,
-                "stl_flag": flag,
-            }
-        )
-
-    return (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(fit, out_schema)
+    return per_series(
+        df, series_cols, ts_col, value_col,
+        partial(stl_columns, period=period, seasonal_span=seasonal_span,
+                trend_span=trend_span, n_outer=n_outer,
+                threshold=float(threshold)),
+        "stl_seasonal double, stl_trend double, stl_resid double, "
+        "stl_z double, stl_flag boolean",
+        name="stl_decompose",
     )

@@ -11,11 +11,13 @@ from __future__ import annotations
 
 import inspect
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.sqltext import col_ref, unit_snap
+from ..functions.sqltext import col_ref, ddl, unit_snap
+from .series import per_series
 
 
 def sessionize(
@@ -672,14 +674,9 @@ def holt_winters(
     if horizon < 0:
         raise ValueError(f"holt_winters: horizon must be >= 0, got {horizon}")
     keys = list(series_cols)
-    ts_field = df.schema[ts_col]
-    val_field = df.schema[value_col]
     out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + f", `{ts_col}` {ts_field.dataType.simpleString()}"
-        + f", `{value_col}` {val_field.dataType.simpleString()}"
-        + ", hw_forecast double, abs_err double, hw_mae double,"
-        + " is_future boolean"
+        ddl(df.schema, [*keys, ts_col, value_col])
+        + ", hw_forecast double, abs_err double, hw_mae double, is_future boolean"
     )
     m, h = season_rows, horizon
     a, b_, g, ph = float(alpha), float(beta), float(gamma), float(phi)
@@ -946,11 +943,12 @@ def forecast_selector(
     default; between the two HW forms a tie goes to the damped one
     (fewer effective degrees of extrapolation).
 
-    Cost (r15): the three model backtests run FUSED as ONE
-    ``applyInPandas`` per series group that calls the exact
-    :func:`hw_numpy` (φ=1 and φ=damped) and :func:`theta_numpy` loops
-    on the same sorted array and emits the per-series FINAL MAEs
-    directly — one grid shuffle, one Arrow boundary, and a one-row-per-
+    Cost (r15): the three model backtests run FUSED as one column
+    function in the shared per-series stage (:func:`~.series.per_series`,
+    the runner every per-series detector composes through): it calls the
+    exact :func:`hw_numpy` (φ=1 and φ=damped) and :func:`theta_numpy`
+    loops on the same sorted array and returns the per-series FINAL MAEs
+    as one row — one grid shuffle, one Arrow boundary, and a one-row-per-
     series return instead of three full per-row frames reduced by
     ``max_by``. Bit-equal to the composed operators: the final backtest
     MAE is the expanding mean at the series' last row, which is exactly
@@ -963,43 +961,20 @@ def forecast_selector(
         F.max_by("naive_mae", F.col(ts_col)).alias("naive_mae")
     )
 
-    m = int(season_rows)
-    a_, b2, g_, ph = float(alpha), float(beta), float(gamma), float(phi)
     # theta_forecast's own defaults: the composed selector always called
     # it without overrides
     theta = inspect.signature(theta_forecast).parameters
-    th_a, th_mp = theta["alpha"].default, theta["min_points"].default
-    finals_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + ", hw_mae double, hw_damped_mae double, theta_mae double"
-    )
-
-    def finals(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        if np.isnan(y).any():
-            raise ValueError(
-                "holt_winters: null values in series — fill the grid first"
-            )
-        _fc, _err, hw_mae, _l, _t, _s = hw_numpy(y, m, a_, b2, g_, 1.0)
-        _fc, _err, dm_mae, _l, _t, _s = hw_numpy(y, m, a_, b2, g_, ph)
-        _fc, _err, th_mae = theta_numpy(y, th_a, th_mp)
-        return pd.DataFrame(
-            {
-                **{k: [pdf[k].iloc[0]] for k in keys},
-                "hw_mae": [hw_mae[-1]],
-                "hw_damped_mae": [dm_mae[-1]],
-                "theta_mae": [th_mae[-1]],
-            }
-        )
-
-    fused = (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(finals, finals_schema)
+    fused = per_series(
+        df, keys, ts_col, value_col,
+        partial(
+            _selector_finals,
+            hw=(int(season_rows), float(alpha), float(beta), float(gamma)),
+            phi=float(phi),
+            theta=(theta["alpha"].default, theta["min_points"].default),
+        ),
+        "hw_mae double, hw_damped_mae double, theta_mae double",
+        name="forecast_selector",
+        carry=(),
     )
     j = nv_final.join(fused, keys, "left")
     naive, hw_m, dm, th = (
@@ -1027,6 +1002,20 @@ def forecast_selector(
         .alias("chosen"),
         (chal / F.nullif(naive, F.lit(0.0))).alias("mae_ratio"),
     )
+
+
+def _selector_finals(y, hw, phi, theta):
+    """:func:`forecast_selector`'s fused backtests over one sorted series
+    ``y``: the final MAE of Holt-Winters (``hw`` = season rows, alpha,
+    beta, gamma) undamped and damped by ``phi``, and of theta (``theta``
+    = alpha, min_points), as one row."""
+    hw_mae = hw_numpy(y, *hw, 1.0)[2]
+    dm_mae = hw_numpy(y, *hw, phi)[2]
+    th_mae = theta_numpy(y, *theta)[2]
+    return {
+        "hw_mae": hw_mae[-1:], "hw_damped_mae": dm_mae[-1:],
+        "theta_mae": th_mae[-1:],
+    }
 
 
 # (count, sum t, sum y, sum t^2, sum t*y, SES level, error sum, error count)
@@ -1081,6 +1070,14 @@ def _whole_series(kernel, init, y, *params):
     return tuple(np.array(rows, dtype="float64").reshape(-1, 3).T)
 
 
+def _backtest_columns(numpy_fn, model, params, y):
+    """A backtested forecaster's columns for one sorted series ``y``:
+    ``{model}_forecast``, ``abs_err`` and ``{model}_mae`` from
+    ``numpy_fn(y, *params)``."""
+    return dict(zip((f"{model}_forecast", "abs_err", f"{model}_mae"),
+                    numpy_fn(y, *params)))
+
+
 def theta_numpy(y, a: float, mp: int):
     """:func:`theta_kernel` over one whole series, as
     :func:`theta_forecast` and the fused :func:`forecast_selector`
@@ -1114,8 +1111,9 @@ def theta_forecast(
     Output per row: ``theta_forecast`` (null for the first
     ``min_points`` rows — no line yet), ``abs_err``, ``theta_mae``
     (expanding backtest mean — directly comparable to ``naive_mae`` /
-    ``hw_mae``). Sequential per series: one Arrow ``applyInPandas``
-    per group, O(1) state (five OLS sums + the SES scalar). The
+    ``hw_mae``). Sequential per series: one pass per group in the
+    shared Arrow stage :func:`~.series.per_series`, O(1) state (five
+    OLS sums + the SES scalar). The
     recursion is :func:`theta_kernel`, which the streaming twin
     ``streaming.rolling.streaming_theta`` folds too.
     """
@@ -1123,36 +1121,11 @@ def theta_forecast(
         raise ValueError(f"theta_forecast: alpha must be in (0,1), got {alpha}")
     if min_points < 3:
         raise ValueError(f"theta_forecast: min_points must be >= 3, got {min_points}")
-    keys = list(series_cols)
-    out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + f", `{ts_col}` {df.schema[ts_col].dataType.simpleString()}"
-        + f", `{value_col}` {df.schema[value_col].dataType.simpleString()}"
-        + ", theta_forecast double, abs_err double, theta_mae double"
-    )
-    a = float(alpha)
-    mp = int(min_points)
-
-    def fit(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        fc, err, mae = theta_numpy(pdf[value_col].to_numpy(dtype="float64"), a, mp)
-        return pd.DataFrame(
-            {
-                **{k: pdf[k].to_numpy() for k in keys},
-                ts_col: pdf[ts_col].to_numpy(),
-                value_col: pdf[value_col].to_numpy(),
-                "theta_forecast": fc,
-                "abs_err": err,
-                "theta_mae": mae,
-            }
-        )
-
-    return (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(fit, out_schema)
+    return per_series(
+        df, series_cols, ts_col, value_col,
+        partial(_backtest_columns, theta_numpy, "theta", (float(alpha), int(min_points))),
+        "theta_forecast double, abs_err double, theta_mae double",
+        name="theta_forecast",
     )
 
 
@@ -1229,8 +1202,9 @@ def croston_forecast(
     Output per row: ``croston_forecast`` (the one-step-ahead rate held
     from the previous period), ``abs_err``, ``croston_mae`` (expanding
     backtest over ALL periods, zeros included — directly comparable to
-    ``naive_mae``). Sequential per series: one Arrow ``applyInPandas``
-    per group, O(1) state (two SES scalars + a gap counter). The
+    ``naive_mae``). Sequential per series: one pass per group in the
+    shared Arrow stage :func:`~.series.per_series`, O(1) state (two SES
+    scalars + a gap counter). The
     recursion is :func:`croston_kernel`, which the streaming twin
     ``streaming.rolling.streaming_croston`` folds too.
 
@@ -1239,34 +1213,11 @@ def croston_forecast(
     """
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"croston_forecast: alpha must be in (0,1), got {alpha}")
-    keys = list(series_cols)
-    out_schema = (
-        ", ".join(f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys)
-        + f", `{ts_col}` {df.schema[ts_col].dataType.simpleString()}"
-        + f", `{value_col}` {df.schema[value_col].dataType.simpleString()}"
-        + ", croston_forecast double, abs_err double, croston_mae double"
-    )
     a = float(alpha)
-    factor = (1.0 - a / 2.0) if sba else 1.0
-
-    def fit(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        fc, err, mae = croston_numpy(pdf[value_col].to_numpy(dtype="float64"), a, factor)
-        return pd.DataFrame(
-            {
-                **{k: pdf[k].to_numpy() for k in keys},
-                ts_col: pdf[ts_col].to_numpy(),
-                value_col: pdf[value_col].to_numpy(),
-                "croston_forecast": fc,
-                "abs_err": err,
-                "croston_mae": mae,
-            }
-        )
-
-    return (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(fit, out_schema)
+    return per_series(
+        df, series_cols, ts_col, value_col,
+        partial(_backtest_columns, croston_numpy, "croston",
+                (a, (1.0 - a / 2.0) if sba else 1.0)),
+        "croston_forecast double, abs_err double, croston_mae double",
+        name="croston_forecast",
     )

@@ -15,10 +15,12 @@ reference's single-detector ``run_pipeline``, main.py:58-233):
 
 Execution shape: stages 2 and 3 are independent lineages over the same
 key — the battery stays entirely JVM-side; the three model-based grid
-detectors run fused as ONE ``applyInPandas`` per series group (r15):
-the individual operator wrappers all sort the same grid by ts and call
-a numpy kernel, so one fused kernel calls the same three kernels on the
-same sorted array (bit-equal scores) with a single grid recompute,
+detectors run fused in ONE pass of the shared per-series stage
+(``operators.series.per_series``, the runner every per-series detector
+composes through): each detector contributes its column function
+(``kalman_columns``, ``esd_columns``, ``sr_columns``) and the suite's
+column function calls all three on the same sorted array — the same
+scores and flags as the three operators, with a single grid recompute,
 Arrow round trip, and join instead of three. Everything stays one
 logical plan; nothing materializes until the caller acts.
 """
@@ -27,17 +29,26 @@ from __future__ import annotations
 
 import inspect
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.anomaly import ensemble_flags, rolling_zscore
-from ..operators.esd import esd_anomalies, gesd_numpy, seasonal_resid
-from ..operators.kalman import kalman_level, kalman_numpy
-from ..operators.spectral import spectral_residual, sr_numpy
+from ..operators.esd import esd_anomalies, esd_columns
+from ..operators.kalman import kalman_columns, kalman_level
+from ..operators.series import per_series
+from ..operators.spectral import spectral_residual, sr_columns
 from ..operators.timeseries import resample_grid
 
 __all__ = ["detector_suite"]
+
+
+#: the model columns the suite keeps of its three detectors, typed
+MODEL_COLUMNS = {
+    "kf_score": "double", "kf_flag": "boolean", "esd_resid": "double",
+    "esd_flag": "boolean", "sr_score": "double", "sr_flag": "boolean",
+}
 
 
 def _defaults(fn) -> dict:
@@ -48,6 +59,15 @@ def _defaults(fn) -> dict:
         for k, p in inspect.signature(fn).parameters.items()
         if p.default is not inspect.Parameter.empty
     }
+
+
+def _model_columns(y, kf: dict, esd: dict, sr: dict) -> dict:
+    """The Kalman, S-H-ESD and spectral-residual columns of one sorted
+    series ``y``, each detector run with its keyword arguments."""
+    out = {
+        **kalman_columns(y, **kf), **esd_columns(y, **esd), **sr_columns(y, **sr),
+    }
+    return {c: out[c] for c in MODEL_COLUMNS}
 
 
 def detector_suite(
@@ -83,72 +103,25 @@ def detector_suite(
         F.col("is_anomaly").cast("boolean").alias("z_flag"),
     )
     # The three model detectors (Kalman / S-H-ESD / spectral residual)
-    # run as ONE applyInPandas per series group (r15, guide §4): each
-    # wrapper operator was the same sort-by-ts → numpy-kernel shape on
-    # the same key, so fusing them calls the identical kernels on the
-    # identical sorted array — bit-equal scores — while cutting three
+    # run fused in one per-series pass (r15, guide §4): each operator is
+    # a column function over the same sorted grid on the same key, so
+    # one pass calls all three — bit-equal scores — while cutting three
     # grid recomputes + Arrow round trips + joins down to one each.
-    snr = kalman_snr
-    m = int(season_rows) if season_rows else 0
     kf, esd, sr = (
         _defaults(kalman_level), _defaults(esd_anomalies),
         _defaults(spectral_residual),
     )
-    model_schema = (
-        ", ".join(
-            f"`{c}` {filled.schema[c].dataType.simpleString()}" for c in keys
-        )
-        + f", `{gts}` {filled.schema[gts].dataType.simpleString()}"
-        + ", kf_score double, kf_flag boolean"
-        + ", esd_resid double, esd_flag boolean"
-        + ", sr_score double, sr_flag boolean"
-    )
-
-    def model_detectors(pdf):
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(gts).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        if np.isnan(y).any():
-            raise ValueError("detector_suite: null values in series (fill first)")
-        n = len(y)
-        r = kalman_numpy(y, snr=snr)
-        kf_score = r["score"]
-        kf_flag = pd.array(
-            np.where(
-                np.isnan(kf_score), None, np.abs(kf_score) > kf["threshold"]
-            ),
-            dtype="boolean",
-        )
-        resid = seasonal_resid(y, m)
-        esd_flags, _rank = gesd_numpy(
-            resid, max_outliers=int(math.floor(esd["max_anoms"] * n)),
-            alpha=esd["alpha"], hybrid=esd["hybrid"],
-        )
-        _sal, sr_score = sr_numpy(
-            y, q=sr["q"], score_window=sr["score_window"],
-            extend=sr["extend"],
-        )
-        return pd.DataFrame(
-            {
-                **{c: pdf[c].to_numpy() for c in keys},
-                gts: pdf[gts].to_numpy(),
-                "kf_score": kf_score,
-                "kf_flag": kf_flag,
-                "esd_resid": resid,
-                "esd_flag": esd_flags,
-                "sr_score": sr_score,
-                "sr_flag": sr_score > sr["threshold"],
-            }
-        )
-
-    models = (
-        filled.select(*keys, gts, value_col)
-        .groupBy(*keys)
-        .applyInPandas(model_detectors, model_schema)
+    models = per_series(
+        filled, keys, gts, value_col,
+        partial(
+            _model_columns,
+            kf={**kf, "snr": kalman_snr},
+            esd={**esd, "season_rows": season_rows},
+            sr=sr,
+        ),
+        ", ".join(f"{c} {t}" for c, t in MODEL_COLUMNS.items()),
+        name="detector_suite",
+        carry=(gts,),
     )
     on = keys + [gts]
     joined = zs.join(models, on)

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import ddl, ident
+
 DECODED_FIELDS = (
     "width bigint, height bigint, n_channels bigint, "
     "n_frames bigint, sample_rate bigint, byte_len bigint, sha256 string"
@@ -83,10 +85,7 @@ def decode_media(
             "use set_decoder(...) or strict=False for the deterministic stub"
         )
     decoder = _DECODER
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    out_schema += ", " + DECODED_FIELDS
+    out_schema = f"{ddl(df.schema, df.columns)}, {DECODED_FIELDS}"
 
     meta_cols = [s.split()[0] for s in DECODED_FIELDS.split(", ")]
 
@@ -145,9 +144,7 @@ def extract_media_features(
     Arrow batch).
     """
     extractor = _FEATURE_EXTRACTOR
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {feature_col} array<double>"
+    out_schema = f"{ddl(df.schema, df.columns)}, {ident(feature_col)} array<double>"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -217,7 +214,7 @@ def sample_frames(
             "the deterministic stub"
         )
     sampler = _FRAME_SAMPLER
-    out_schema = f"{id_col} bigint, frame_idx bigint, frame_sha string"
+    out_schema = f"{ident(id_col)} bigint, frame_idx bigint, frame_sha string"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

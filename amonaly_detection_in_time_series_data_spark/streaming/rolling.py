@@ -65,6 +65,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import ddl, ident
+
 
 def replay_table_stream(
     spark: SparkSession,
@@ -279,15 +281,6 @@ def _keyed_fold(
                 else GroupStateTimeout.NoTimeout
             ),
         )
-    )
-
-
-def _ddl(df: DataFrame, cols: Sequence[str]) -> str:
-    """DDL of ``cols`` as typed in ``df`` (key/order columns of twins
-    whose keys are caller-chosen)."""
-    return ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.select(*cols).schema.fields
     )
 
 
@@ -975,7 +968,7 @@ def streaming_kmv(
         init=([],),
         state_schema="mins array<bigint>",
         out_schema=(
-            f"{_ddl(events, keys)}, kmv array<bigint>, kmv_size int, kmv_est double"
+            f"{ddl(events.schema, keys)}, kmv array<bigint>, kmv_size int, kmv_est double"
         ),
         timeout_minutes=timeout_minutes,
     )
@@ -1037,7 +1030,7 @@ def streaming_theta(
             "ses double, err_sum double, err_n bigint"
         ),
         out_schema=(
-            f"{_ddl(events, keys)}, {ts_col} timestamp, {value_col} double, "
+            f"{ddl(events.schema, keys)}, {ident(ts_col)} timestamp, {ident(value_col)} double, "
             "theta_forecast double, abs_err double, theta_mae double"
         ),
         timeout_minutes=timeout_minutes,
@@ -1098,7 +1091,7 @@ def streaming_croston(
             "gap bigint, err_sum double, err_n bigint"
         ),
         out_schema=(
-            f"{_ddl(events, keys)}, {ts_col} timestamp, {value_col} double, "
+            f"{ddl(events.schema, keys)}, {ident(ts_col)} timestamp, {ident(value_col)} double, "
             "croston_forecast double, abs_err double, croston_mae double"
         ),
         timeout_minutes=timeout_minutes,
@@ -1187,7 +1180,7 @@ def streaming_transitions(
         init=(False, None),
         state_schema="has_last boolean, last_type string",
         out_schema=(
-            f"{_ddl(events, keys)}, {_ddl(events, order)}, "
+            f"{ddl(events.schema, keys)}, {ddl(events.schema, order)}, "
             "from_type string, to_type string"
         ),
         timeout_minutes=timeout_minutes,
@@ -1318,7 +1311,7 @@ def streaming_attribution(
         init=([], []),
         state_schema="tus array<bigint>, chs array<string>",
         out_schema=(
-            f"{_ddl(events, keys)}, {ts_col} timestamp, model string, "
+            f"{ddl(events.schema, keys)}, {ident(ts_col)} timestamp, model string, "
             "channel string, ppm bigint"
         ),
         timeout_minutes=timeout_minutes,
@@ -1408,7 +1401,7 @@ def streaming_funnel(
         cols=(ts_col, event_col),
         init=(0, 0, 0),
         state_schema="done int, anchor bigint, last bigint",
-        out_schema=f"{_ddl(events, keys)}, {ts_col} timestamp, funnel_depth int",
+        out_schema=f"{ddl(events.schema, keys)}, {ident(ts_col)} timestamp, funnel_depth int",
         timeout_minutes=timeout_minutes,
     )
 
@@ -1469,7 +1462,7 @@ def streaming_journey_paths(
         cols=(*order, type_col),
         init=([], []),
         state_schema="vals array<string>, nulls array<boolean>",
-        out_schema=f"{_ddl(events, keys)}, {_ddl(events, order)}, path string",
+        out_schema=f"{ddl(events.schema, keys)}, {ddl(events.schema, order)}, path string",
         timeout_minutes=timeout_minutes,
     )
 
@@ -1604,6 +1597,6 @@ def streaming_sax(
             "win bigint, seen int, poisoned boolean, "
             "xs array<bigint>, tss array<bigint>"
         ),
-        out_schema=f"{_ddl(events, keys)}, win bigint, win_start timestamp, word string",
+        out_schema=f"{ddl(events.schema, keys)}, win bigint, win_start timestamp, word string",
         timeout_minutes=timeout_minutes,
     )

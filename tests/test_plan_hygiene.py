@@ -16,7 +16,11 @@ smallest SF — only the plan is inspected; nothing large executes.
 A source sweep pins the same for the package code: no ``iterrows``
 anywhere, and one stateful-streaming runner — the only
 ``applyInPandasWithState`` / ``transformWithStateInPandas`` call is
-in ``streaming.rolling._keyed_fold``. Another pins that the detector
+in ``streaming.rolling._keyed_fold``. Its batch counterpart: the only
+``applyInPandas`` calls are the per-series runner
+``operators.series.per_series`` and the operators whose output has
+another shape, and ``simpleString()`` (the type half of an output DDL)
+is called in ``functions.sqltext`` alone. Another pins that the detector
 battery's shared arithmetic has one source: the robust-alarm constant,
 the OLS residual standard error and the integer-unit snap each appear
 once in the package. A last one pins that the package patches the
@@ -96,6 +100,36 @@ def test_no_iterrows_and_one_stateful_runner():
     assert found == [
         ("streaming/rolling.py", "applyInPandasWithState", "_keyed_fold")
     ]
+
+
+#: the grouped-map Arrow stages: the per-series runner, and the
+#: operators whose output is not "a series' first n rows + columns"
+#: (future rows, one row per segment / reference / tile, a join key)
+GROUPED_MAP_SITES = {
+    ("operators/series.py", "per_series"),
+    ("operators/timeseries.py", "holt_winters"),
+    ("operators/changepoint.py", "pelt_changepoints"),
+    ("operators/dtw.py", "dtw_match"),
+    ("operators/matrixprofile.py", "mp_shape_search"),
+    ("operators/matrixprofile.py", "matrix_profile_chunked"),
+    ("operators/anomaly.py", "throttle_alerts"),
+}
+
+
+def test_one_per_series_runner_and_one_ddl_builder():
+    """Every per-series detector composes through ``per_series``; the
+    grouped-map calls outside it are the named exceptions. Output DDL
+    is written by ``sqltext`` alone, so every field name is quoted."""
+    grouped, types = [], []
+    for path in sorted(PKG_DIR.rglob("*.py")):
+        rel = path.relative_to(PKG_DIR).as_posix()
+        for attr, func in _attribute_calls(ast.parse(path.read_text())):
+            if attr == "applyInPandas":
+                grouped.append((rel, func))
+            elif attr == "simpleString":
+                types.append(rel)
+    assert sorted(grouped) == sorted(GROUPED_MAP_SITES)
+    assert types == ["functions/sqltext.py"]
 
 
 #: formulas the detector battery shares, each written once as SQL text
