@@ -42,7 +42,6 @@ from amonaly_detection_in_time_series_data_spark.functions.cleaning import (
 )
 from amonaly_detection_in_time_series_data_spark.functions.timefeat import time_feature_exprs
 from amonaly_detection_in_time_series_data_spark.functions.text import (
-    BPE_ISH_PATTERN,
     LANG_STOPWORDS,
     lang_id_expr,
     punct_ratio,
@@ -68,7 +67,6 @@ from amonaly_detection_in_time_series_data_spark.operators.features import (
 )
 from amonaly_detection_in_time_series_data_spark.operators.scaling import minmax_scale
 from amonaly_detection_in_time_series_data_spark.operators.sequences import create_sequences
-from amonaly_detection_in_time_series_data_spark.operators.anomaly import rolling_zscore
 from amonaly_detection_in_time_series_data_spark.operators.relational import (
     top_k_global,
     top_k_per_group,
@@ -82,7 +80,6 @@ from amonaly_detection_in_time_series_data_spark.operators.similarity import (
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
-    shingles,
     simhash64,
 )
 from amonaly_detection_in_time_series_data_spark.sources.readers import load_csv, spread_small

@@ -12,11 +12,12 @@ pattern): the REFERENCE set (named template series: golden runs, known
 failure signatures, class exemplars) is collected driver-side with an
 enforced bound and shipped in the Arrow closure; the (large) series
 side stays distributed, each series group computing its distances to
-every reference in ONE ``applyInPandas`` pass. No pairwise self-join —
-all-pairs DTW over N series is O(N^2) series pairs and is exactly the
-kind of cartesian this engine refuses (for all-pairs near-dup use the
-LSH/MinHash family; DTW is for matching against a bounded template
-library, the common production use).
+every reference in ONE pass of the template stage
+:func:`~.series.per_template` (shared with ``mp_shape_search``). No
+pairwise self-join — all-pairs DTW over N series is O(N^2) series pairs
+and is exactly the kind of cartesian this engine refuses (for all-pairs
+near-dup use the LSH/MinHash family; DTW is for matching against a
+bounded template library, the common production use).
 
 Z-normalization per series (default on) makes the match amplitude- and
 offset-invariant, the UCR-suite convention.
@@ -25,11 +26,11 @@ offset-invariant, the UCR-suite convention.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.sqltext import ddl
+from .series import per_template
 
 __all__ = ["dtw_numpy", "dtw_match"]
 
@@ -106,51 +107,19 @@ def dtw_match(
     ``dtw_dist``, plus ``is_best`` marking each series' 1-NN reference
     (deterministic: smallest distance, then lexicographic ref).
     """
-    keys = list(series_cols)
-    rts = ref_ts_col or ts_col
-    rval = ref_value_col or value_col
-    ref_pdf = refs.select(ref_key, rts, rval).toPandas()
-    ref_names = sorted(ref_pdf[ref_key].unique().tolist())
-    if len(ref_names) == 0:
-        raise ValueError("dtw_match: refs is empty")
-    if len(ref_names) > int(max_refs):
-        raise ValueError(
-            f"dtw_match: {len(ref_names)} reference series exceeds max_refs="
-            f"{max_refs} — DTW against an unbounded set is an all-pairs scan; "
-            "raise max_refs deliberately or use the LSH family"
-        )
-    ref_arrays = {}
-    for name in ref_names:
-        g = ref_pdf[ref_pdf[ref_key] == name].sort_values(rts)
-        ref_arrays[str(name)] = g[rval].to_numpy(dtype="float64")
-
-    out_schema = ddl(df.schema, keys) + ", ref string, dtw_dist double"
-
-    def match(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        if np.isnan(y).any():
-            raise ValueError("dtw_match: null values in series (fill first)")
-        first = pdf[keys].iloc[0]
-        rows = [
-            {
-                **{k: first[k] for k in keys},
-                "ref": name,
-                "dtw_dist": dtw_numpy(y, arr, band=band, znorm=znorm),
-            }
-            for name, arr in ref_arrays.items()
-        ]
-        return pd.DataFrame(rows)
-
-    dists = (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(match, out_schema)
+    return per_template(
+        df, series_cols, ts_col, value_col, refs, ref_key, ref_ts_col, ref_value_col,
+        partial(_dtw_columns, band=band, znorm=znorm),
+        "dtw_dist double",
+        name="dtw_match",
+        max_refs=max_refs,
+        refusal="{count} reference series exceeds max_refs={max_refs} — DTW against "
+        "an unbounded set is an all-pairs scan; raise max_refs deliberately or use "
+        "the LSH family",
+        best_by="dtw_dist",
     )
-    from pyspark.sql import Window as W
 
-    w = W.partitionBy(*keys).orderBy(F.col("dtw_dist").asc(), F.col("ref").asc())
-    return dists.withColumn("is_best", F.row_number().over(w) == 1)
+
+def _dtw_columns(y, template, band, znorm):
+    """:func:`dtw_match`'s columns for one (series, template) pair."""
+    return {"dtw_dist": dtw_numpy(y, template, band=band, znorm=znorm)}

@@ -28,6 +28,13 @@ self-join: total work is still O(n^2), but wall-clock divides by the
 cluster instead of sitting in one task), or downsample / use the
 anomaly battery's O(n) detectors when approximate is enough.
 
+One recurrence: :func:`stomp_ab_excl_numpy` is the package's only
+STOMP loop. The self-join (:func:`stomp_numpy`), the AB-join
+(:func:`stomp_ab_numpy`, which :func:`mp_shape_search` ranks through
+the template stage :func:`~.series.per_template`) and the tiles of
+:func:`matrix_profile_chunked` are calls of it with different sides,
+offsets and exclusion.
+
 Numerics: the STOMP dot-product recurrence drifts in float64 over
 long series, so the sliding dot product is re-anchored with an exact
 FFT correlation every ``recompute_every`` rows (drift is then bounded
@@ -45,7 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.sqltext import ddl
-from .series import per_series
+from .series import per_series, per_template
 
 __all__ = [
     "matrix_profile",
@@ -91,6 +98,12 @@ def _window_stats(y, m):
     return mu, np.where(flat, 0.0, np.maximum(sig, 1e-300)), flat
 
 
+def _exclusion(m, exclusion):
+    """The self-join trivial-match half-width: ``exclusion``, else
+    ceil(m/2)."""
+    return int(exclusion) if exclusion is not None else int(math.ceil(m / 2))
+
+
 def stomp_numpy(y, m, exclusion=None, recompute_every=512):
     """Self-join matrix profile of 1-D array ``y`` with window ``m``.
 
@@ -101,52 +114,23 @@ def stomp_numpy(y, m, exclusion=None, recompute_every=512):
 
     Constant-subsequence convention (both std == 0): distance 0 if both
     flat, sqrt(m) if exactly one is flat — the standard z-norm limit
-    used by the public SCAMP/stumpy implementations.
+    used by the public SCAMP/stumpy implementations. The recurrence is
+    :func:`stomp_ab_excl_numpy` with ``y`` on both sides at offset 0.
     """
     import numpy as np
 
     y = np.asarray(y, dtype="float64")
-    n = len(y)
     if m < 3:
         raise ValueError(f"matrix_profile: window must be >= 3, got {m}")
     if np.isnan(y).any():
         raise ValueError("matrix_profile: null values in series (fill first)")
-    l = n - m + 1
+    l = len(y) - m + 1
     if l < 2:
         return np.full(max(l, 0), np.nan), np.full(max(l, 0), -1, dtype="int64")
-    excl = int(exclusion) if exclusion is not None else int(math.ceil(m / 2))
-    mu, sig, flat = _window_stats(y, m)
-
-    qt_first = _sliding_dot(y[:m], y)  # QT row for i=0 (exact)
-    qt = qt_first.copy()
-    mp = np.full(l, np.inf)
-    mp_idx = np.full(l, -1, dtype="int64")
-    j_idx = np.arange(l)
-
-    for i in range(l):
-        if i > 0:
-            if recompute_every and i % recompute_every == 0:
-                qt = _sliding_dot(y[i : i + m], y)
-            else:
-                # QT_i[j] = QT_{i-1}[j-1] - y[j-1]*y[i-1] + y[j+m-1]*y[i+m-1]
-                qt[1:] = qt[:-1] - y[: l - 1] * y[i - 1] + y[m : m + l - 1] * y[i + m - 1]
-                qt[0] = qt_first[i]
-        if flat[i]:
-            d = np.where(flat, 0.0, math.sqrt(m))
-        else:
-            with np.errstate(divide="ignore", invalid="ignore"):
-                corr = (qt - m * mu[i] * mu) / (m * sig[i] * sig)
-            d2 = 2.0 * m * (1.0 - corr)
-            d = np.sqrt(np.maximum(d2, 0.0))
-            d = np.where(flat, math.sqrt(m), d)
-        lo, hi = max(0, i - excl + 1), min(l, i + excl)
-        d[lo:hi] = np.inf
-        j = int(np.argmin(d))
-        if np.isfinite(d[j]):
-            mp[i] = d[j]
-            mp_idx[i] = j_idx[j]
-    mp = np.where(np.isfinite(mp), mp, np.nan)
-    return mp, mp_idx
+    mp, mp_idx = stomp_ab_excl_numpy(
+        y, y, m, 0, 0, _exclusion(m, exclusion), recompute_every=recompute_every
+    )
+    return np.where(np.isfinite(mp), mp, np.nan), mp_idx
 
 
 def _profile_columns(y, m, exclusion, max_series_len):
@@ -226,17 +210,10 @@ def top_discords(
     rows (series too short) are excluded. One extra window pass on the
     same series key — no new shuffle axis.
     """
-    from pyspark.sql import Window as W
-
     prof = matrix_profile(
         df, ts_col, value_col, series_cols, window, exclusion, max_series_len
     )
-    w = W.partitionBy(*series_cols).orderBy(F.col("mp").desc(), F.col("pos").asc())
-    return (
-        prof.where(F.col("mp").isNotNull())
-        .withColumn("discord_rank", F.row_number().over(w))
-        .where(F.col("discord_rank") <= int(k))
-    )
+    return _ranked(prof, series_cols, F.col("mp").desc(), "discord_rank", k)
 
 
 def top_motifs(
@@ -255,16 +232,23 @@ def top_motifs(
     Ranked 1..k with deterministic ties (earlier ``pos`` wins), null
     profiles excluded; same single-shuffle plan as the discord query.
     """
-    from pyspark.sql import Window as W
-
     prof = matrix_profile(
         df, ts_col, value_col, series_cols, window, exclusion, max_series_len
     )
-    w = W.partitionBy(*series_cols).orderBy(F.col("mp").asc(), F.col("pos").asc())
+    return _ranked(prof, series_cols, F.col("mp").asc(), "motif_rank", k)
+
+
+def _ranked(prof, series_cols, by, rank_col, k):
+    """The first ``k`` non-null rows of each series of profile ``prof``
+    in ``by`` order (ties to the earlier ``pos``), ranked 1..k in
+    ``rank_col``."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy(*series_cols).orderBy(by, F.col("pos").asc())
     return (
         prof.where(F.col("mp").isNotNull())
-        .withColumn("motif_rank", F.row_number().over(w))
-        .where(F.col("motif_rank") <= int(k))
+        .withColumn(rank_col, F.row_number().over(w))
+        .where(F.col(rank_col) <= int(k))
     )
 
 
@@ -274,55 +258,20 @@ def stomp_ab_numpy(query, ref, m, recompute_every=512):
     subsequence of ``ref`` (Matrix Profile I's join variant — no
     exclusion zone, the series are different). Returns (dist, ref_pos)
     arrays of length len(query) - m + 1; ``stomp_ab_numpy(y, y, m)``
-    is identically zero by construction."""
+    is zero up to float rounding by construction. The recurrence is
+    :func:`stomp_ab_excl_numpy` with no exclusion."""
     import numpy as np
 
     q = np.asarray(query, dtype="float64")
-    r = np.asarray(ref, dtype="float64")
-    nq, nr = len(q), len(r)
+    r = q if ref is query else np.asarray(ref, dtype="float64")
     if m < 3:
         raise ValueError(f"stomp_ab: window must be >= 3, got {m}")
-    lq, lr = nq - m + 1, nr - m + 1
-    if lq < 1 or lr < 1:
+    lq = len(q) - m + 1
+    if lq < 1 or len(r) < m:
         return np.full(max(lq, 0), np.nan), np.full(max(lq, 0), -1, dtype="int64")
     if np.isnan(q).any() or np.isnan(r).any():
         raise ValueError("stomp_ab: null values in series (fill first)")
-    mu_q, sig_q, flat_q = _window_stats(q, m)
-    mu_r, sig_r, flat_r = _window_stats(r, m)
-
-    qt_first = _sliding_dot(q[:m], r)  # dot(q[0:m], r[j:j+m]) for all j
-    qt = qt_first.copy()
-    dist = np.empty(lq)
-    pos = np.empty(lq, dtype="int64")
-    sqrt_m = math.sqrt(m)
-    for i in range(lq):
-        if i > 0:
-            if recompute_every and i % recompute_every == 0:
-                qt = _sliding_dot(q[i : i + m], r)
-            else:
-                qt[1:] = qt[:-1] - r[: lr - 1] * q[i - 1] + r[m : m + lr - 1] * q[i + m - 1]
-                qt[0] = _first_col_ab(q, r, i, m, qt_first)
-        if flat_q[i]:
-            d = np.where(flat_r, 0.0, sqrt_m)
-        else:
-            corr = (qt - m * mu_q[i] * mu_r) / (m * sig_q[i] * sig_r)
-            d2 = 2.0 * m * (1.0 - corr)
-            d = np.sqrt(np.maximum(d2, 0.0))
-            d = np.where(flat_r, sqrt_m, d)
-        j = int(np.argmin(d))
-        dist[i] = d[j]
-        pos[i] = j
-    return dist, pos
-
-
-def _first_col_ab(q, r, i, m, qt_first):
-    """QT_i[0] = dot(q[i:i+m], r[0:m]) via the column recurrence
-    anchored on the exact first row is not available in the AB case
-    (qt_first indexes REF positions), so compute it directly —
-    O(m) per row, O(n*m) total, dominated by the O(n_q * n_r) join."""
-    import numpy as np
-
-    return float(np.dot(q[i : i + m], r[:m]))
+    return stomp_ab_excl_numpy(q, r, m, 0, 0, 0, recompute_every=recompute_every)
 
 
 def mp_shape_search(
@@ -344,7 +293,8 @@ def mp_shape_search(
     Same bounded-broadcast contract as ``operators.dtw.dtw_match``:
     the template library is collected driver-side (``max_refs``
     enforced — unbounded all-pairs joins are refused by design), the
-    big side stays distributed, one ``applyInPandas`` per series.
+    big side stays distributed, one pass of the template stage
+    :func:`~.series.per_template` per series.
 
     Output: series keys + ``ref`` + ``best_dist`` (min AB-profile
     value), ``query_pos`` (subsequence start index in the series, time
@@ -353,116 +303,79 @@ def mp_shape_search(
     ties to lexicographic ref). Series shorter than ``window`` emit
     null distances.
     """
-    import numpy as _np
-
-    keys = list(series_cols)
-    rts = ref_ts_col or ts_col
-    rval = ref_value_col or value_col
-    ref_pdf = refs.select(ref_key, rts, rval).toPandas()
-    ref_names = sorted(ref_pdf[ref_key].unique().tolist())
-    if len(ref_names) == 0:
-        raise ValueError("mp_shape_search: refs is empty")
-    if len(ref_names) > int(max_refs):
-        raise ValueError(
-            f"mp_shape_search: {len(ref_names)} templates exceeds max_refs="
-            f"{max_refs} — raise it deliberately or use the LSH family"
-        )
-    m = int(window)
-    ref_arrays = {}
-    for name in ref_names:
-        g = ref_pdf[ref_pdf[ref_key] == name].sort_values(rts)
-        ref_arrays[str(name)] = g[rval].to_numpy(dtype="float64")
-
-    out_schema = (
-        ddl(df.schema, keys) + ", ref string, best_dist double, query_pos int, ref_pos int"
+    return per_template(
+        df, series_cols, ts_col, value_col, refs, ref_key, ref_ts_col, ref_value_col,
+        partial(_shape_columns, m=int(window)),
+        "best_dist double, query_pos int, ref_pos int",
+        name="mp_shape_search",
+        max_refs=max_refs,
+        refusal="{count} templates exceeds max_refs={max_refs} — raise it "
+        "deliberately or use the LSH family",
+        best_by="best_dist",
     )
 
-    def search(pdf):
-        import numpy as np
-        import pandas as pd
 
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        first = pdf[keys].iloc[0]
-        rows = []
-        for name, arr in ref_arrays.items():
-            if len(y) < m or len(arr) < m:
-                rows.append(
-                    {**{k: first[k] for k in keys}, "ref": name,
-                     "best_dist": None, "query_pos": None, "ref_pos": None}
-                )
-                continue
-            dist, pos = stomp_ab_numpy(y, arr, m)
-            i = int(np.argmin(dist))
-            rows.append(
-                {**{k: first[k] for k in keys}, "ref": name,
-                 "best_dist": float(dist[i]), "query_pos": i,
-                 "ref_pos": int(pos[i])}
-            )
-        return pd.DataFrame(rows)
+def _shape_columns(y, template, m):
+    """:func:`mp_shape_search`'s columns for one (series, template)
+    pair: the AB-join profile's minimum (null when either side is
+    shorter than the window)."""
+    import numpy as np
 
-    out = (
-        df.select(*keys, ts_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(search, out_schema)
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(*keys).orderBy(
-        F.col("best_dist").asc_nulls_last(), F.col("ref").asc()
-    )
-    return out.withColumn("is_best", F.row_number().over(w) == 1)
+    if len(y) < m or len(template) < m:
+        return {"best_dist": None, "query_pos": None, "ref_pos": None}
+    dist, pos = stomp_ab_numpy(y, template, m)
+    i = int(np.argmin(dist))
+    return {"best_dist": float(dist[i]), "query_pos": i, "ref_pos": int(pos[i])}
 
 
-def stomp_ab_excl_numpy(query, ref, m, q_offset, r_offset, excl):
-    """AB-join profile WITH the self-join trivial-match exclusion: for
+def stomp_ab_excl_numpy(query, ref, m, q_offset, r_offset, excl, recompute_every=512):
+    """The STOMP recurrence (Zhu et al., ICDM 2016), written once: an
+    AB-join profile WITH the self-join trivial-match exclusion. For
     every length-``m`` subsequence of ``query`` (global start positions
     ``q_offset + i``), the distance to its nearest subsequence of
     ``ref`` (global starts ``r_offset + j``) SKIPPING pairs with
-    ``|global_i - global_j| < excl``. This is the per-block kernel of
-    :func:`matrix_profile_chunked`: the self-join distance matrix cut
-    into (query-chunk, ref-chunk) tiles, each tile masking only the
-    part of the exclusion diagonal that crosses it.
+    ``|global_i - global_j| < excl``. :func:`stomp_numpy` is the whole
+    series on both sides, :func:`stomp_ab_numpy` is ``excl=0``, and
+    :func:`matrix_profile_chunked` runs one call per (query-chunk,
+    ref-chunk) tile of the self-join distance matrix, each tile masking
+    only the part of the exclusion diagonal that crosses it.
 
     Returns ``(dist, pos)`` with ``pos`` in GLOBAL coordinates (-1 and
-    ``inf`` distance when a row is fully excluded). Conventions match
-    :func:`stomp_numpy` exactly (flat-window limits, exclusion
-    half-open bounds ``[i-excl+1, i+excl-1]``).
+    ``inf`` distance when a row is fully excluded). Flat windows take
+    the z-norm limits (0 between two flat windows, sqrt(m) between a
+    flat and a non-flat one); the exclusion bounds are
+    ``[i-excl+1, i+excl-1]``. Each row's first dot product comes from
+    the exact FFT row when ``query is ref`` (a self-join: QT is
+    symmetric), else from one direct O(m) dot product.
     """
     import numpy as np
 
+    self_join = query is ref
     q = np.asarray(query, dtype="float64")
-    r = np.asarray(ref, dtype="float64")
-    nq, nr = len(q), len(r)
+    r = q if self_join else np.asarray(ref, dtype="float64")
     if m < 3:
         raise ValueError(f"stomp_ab_excl: window must be >= 3, got {m}")
-    lq, lr = nq - m + 1, nr - m + 1
+    lq, lr = len(q) - m + 1, len(r) - m + 1
     if lq < 1 or lr < 1:
-        return (
-            np.full(max(lq, 0), np.inf),
-            np.full(max(lq, 0), -1, dtype="int64"),
-        )
+        return np.full(max(lq, 0), np.inf), np.full(max(lq, 0), -1, dtype="int64")
     if np.isnan(q).any() or np.isnan(r).any():
         raise ValueError("stomp_ab_excl: null values in series (fill first)")
     mu_q, sig_q, flat_q = _window_stats(q, m)
-    mu_r, sig_r, flat_r = _window_stats(r, m)
+    mu_r, sig_r, flat_r = (mu_q, sig_q, flat_q) if self_join else _window_stats(r, m)
 
-    qt_first = _sliding_dot(q[:m], r)
+    qt_first = _sliding_dot(q[:m], r)  # dot(q[0:m], r[j:j+m]) for all j
     qt = qt_first.copy()
-    dist = np.empty(lq)
-    pos = np.empty(lq, dtype="int64")
+    dist = np.full(lq, np.inf)
+    pos = np.full(lq, -1, dtype="int64")
     sqrt_m = math.sqrt(m)
     for i in range(lq):
         if i > 0:
-            if i % 512 == 0:
+            if recompute_every and i % recompute_every == 0:
                 qt = _sliding_dot(q[i : i + m], r)
             else:
-                qt[1:] = (
-                    qt[:-1]
-                    - r[: lr - 1] * q[i - 1]
-                    + r[m : m + lr - 1] * q[i + m - 1]
-                )
-                qt[0] = _first_col_ab(q, r, i, m, qt_first)
+                # QT_i[j] = QT_{i-1}[j-1] - r[j-1]*q[i-1] + r[j+m-1]*q[i+m-1]
+                qt[1:] = qt[:-1] - r[: lr - 1] * q[i - 1] + r[m : m + lr - 1] * q[i + m - 1]
+                qt[0] = qt_first[i] if self_join else np.dot(q[i : i + m], r[:m])
         if flat_q[i]:
             d = np.where(flat_r, 0.0, sqrt_m)
         else:
@@ -471,21 +384,16 @@ def stomp_ab_excl_numpy(query, ref, m, q_offset, r_offset, excl):
             d2 = 2.0 * m * (1.0 - corr)
             d = np.sqrt(np.maximum(d2, 0.0))
             d = np.where(flat_r, sqrt_m, d)
-        # trivial-match mask in this tile's local coordinates: ref
-        # positions j with |(q_offset+i) - (r_offset+j)| < excl, i.e.
-        # j in (i + q_offset - r_offset - excl, i + q_offset - r_offset + excl)
+        # trivial-match mask in local ref coordinates: the j with
+        # |(q_offset+i) - (r_offset+j)| < excl
         ctr = i + q_offset - r_offset
         lo, hi = max(0, ctr - excl + 1), min(lr, ctr + excl)
         if lo < hi:
-            d = d.copy()
             d[lo:hi] = np.inf
         j = int(np.argmin(d))
         if np.isfinite(d[j]):
             dist[i] = d[j]
             pos[i] = j + r_offset
-        else:
-            dist[i] = np.inf
-            pos[i] = -1
     return dist, pos
 
 
@@ -531,7 +439,7 @@ def matrix_profile_chunked(
         raise ValueError(
             f"matrix_profile_chunked: chunk_size ({s_len}) must be >= window ({m})"
         )
-    excl = int(exclusion) if exclusion is not None else int(math.ceil(m / 2))
+    excl = _exclusion(m, exclusion)
 
     from pyspark.sql import Window as W
 

@@ -678,47 +678,57 @@ def holt_winters(
         ddl(df.schema, [*keys, ts_col, value_col])
         + ", hw_forecast double, abs_err double, hw_mae double, is_future boolean"
     )
-    m, h = season_rows, horizon
-    a, b_, g, ph = float(alpha), float(beta), float(gamma), float(phi)
-
-    def fit(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype="float64")
-        n = len(y)
-        if np.isnan(y).any():
-            raise ValueError(
-                "holt_winters: null values in series — fill the grid first"
-            )
-        fc, err, mae, level, trend, seas = hw_numpy(y, m, a, b_, g, ph)
-        out = pdf[keys + [ts_col, value_col]].copy()
-        out["hw_forecast"] = fc
-        out["abs_err"] = err
-        out["hw_mae"] = mae
-        out["is_future"] = False
-        if h > 0 and n >= 2 * m:
-            step = pdf[ts_col].iloc[1] - pdf[ts_col].iloc[0]
-            fut = {k: [pdf[k].iloc[0]] * h for k in keys}
-            fut[ts_col] = [pdf[ts_col].iloc[-1] + step * k for k in range(1, h + 1)]
-            fut[value_col] = [None] * h
-            # damped h-step trend term: (phi + ... + phi^k) * b;
-            # phi=1 reduces to the classic k * b exactly
-            phis = np.cumsum([ph**j for j in range(1, h + 1)])
-            fut["hw_forecast"] = [
-                level + phis[k - 1] * trend + seas[(n + k - 1) % m]
-                for k in range(1, h + 1)
-            ]
-            fut["abs_err"] = [None] * h
-            fut["hw_mae"] = [None] * h
-            fut["is_future"] = [True] * h
-            out = pd.concat([out, pd.DataFrame(fut)], ignore_index=True)
-        return out
-
+    fit = partial(
+        _hw_fit, keys=keys, ts_col=ts_col, value_col=value_col, m=season_rows,
+        params=(float(alpha), float(beta), float(gamma), float(phi)), h=horizon,
+    )
     return df.select(*keys, ts_col, value_col).groupBy(*keys).applyInPandas(
         fit, out_schema
     )
+
+
+def _hw_fit(pdf, *, keys, ts_col, value_col, m, params, h):
+    """:func:`holt_winters`' output frame for one series ``pdf``: its
+    rows in time order with the in-sample columns, then ``h`` future
+    rows."""
+    import numpy as np
+    import pandas as pd
+
+    ph = params[-1]
+    pdf = pdf.sort_values(ts_col).reset_index(drop=True)
+    y = pdf[value_col].to_numpy(dtype="float64")
+    n = len(y)
+    if np.isnan(y).any():
+        raise ValueError(
+            "holt_winters: null values in series — fill the grid first"
+        )
+    fc, err, mae, level, trend, seas = hw_numpy(y, m, *params)
+    out = pdf[keys + [ts_col, value_col]].copy()
+    out["hw_forecast"] = fc
+    out["abs_err"] = err
+    out["hw_mae"] = mae
+    out["is_future"] = False
+    if h > 0 and n >= 2 * m:
+        step = pdf[ts_col].iloc[1] - pdf[ts_col].iloc[0]
+        fut = {k: [pdf[k].iloc[0]] * h for k in keys}
+        fut[ts_col] = [pdf[ts_col].iloc[-1] + step * k for k in range(1, h + 1)]
+        # nulls of the column's own float dtype, not None: pd.concat
+        # warns that it will stop ignoring an all-None float column's
+        # object dtype (an integer column takes None without a warning)
+        kind = out[value_col].dtype
+        fut[value_col] = np.full(h, np.nan, dtype=kind) if kind.kind == "f" else [None] * h
+        # damped h-step trend term: (phi + ... + phi^k) * b;
+        # phi=1 reduces to the classic k * b exactly
+        phis = np.cumsum([ph**j for j in range(1, h + 1)])
+        fut["hw_forecast"] = [
+            level + phis[k - 1] * trend + seas[(n + k - 1) % m]
+            for k in range(1, h + 1)
+        ]
+        fut["abs_err"] = np.full(h, np.nan)
+        fut["hw_mae"] = np.full(h, np.nan)
+        fut["is_future"] = [True] * h
+        out = pd.concat([out, pd.DataFrame(fut)], ignore_index=True)
+    return out
 
 
 def m4_downsample(

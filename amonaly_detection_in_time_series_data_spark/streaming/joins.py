@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import ident
+
 __all__ = ["interval_join"]
 
 
@@ -76,9 +78,9 @@ def interval_join(
     l = left.withColumnRenamed(left_ts, lts)
     r = right.withColumnRenamed(right_ts, rts)
     if left.isStreaming:
-        l = l.withWatermark(lts, watermark)
+        l = l.withWatermark(ident(lts), watermark)
     if right.isStreaming:
-        r = r.withWatermark(rts, watermark)
+        r = r.withWatermark(ident(rts), watermark)
     cond = (
         (l[on] == r[on])
         & (F.col(rts) >= F.col(lts) - F.expr(f"INTERVAL {lower}"))

@@ -172,7 +172,7 @@ def sessionized_stats(
     state is per-(key, open-session) and evicted at the watermark; the
     aggregation shuffles once on the key like any streaming agg.
     """
-    src = events.withWatermark(ts_col, watermark) if events.isStreaming else events
+    src = events.withWatermark(ident(ts_col), watermark) if events.isStreaming else events
     return (
         src.groupBy(
             F.col(key), F.session_window(F.col(ts_col), gap).alias("sw")
@@ -268,7 +268,7 @@ def _keyed_fold(
     )
     return (
         events.select(*dict.fromkeys([*keys, ts_col, *order, *cols]))
-        .withWatermark(ts_col, "2 hours")
+        .withWatermark(ident(ts_col), "2 hours")
         .groupBy(*keys)
         .applyInPandasWithState(
             handle,
@@ -724,7 +724,7 @@ def streaming_episode_assign(
         state_schema="last_us long, counter long",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
-            f"{flag_col} int, episode_id bigint"
+            f"{ident(flag_col)} int, episode_id bigint"
         ),
         timeout_minutes=timeout_minutes,
     )
@@ -809,7 +809,7 @@ def streaming_quantiles(
         state_schema="vs array<double>, gs array<long>, ds array<long>, n long",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
-            + ", ".join(f"{c} double" for c in qcols)
+            + ", ".join(f"{ident(c)} double" for c in qcols)
         ),
         timeout_minutes=timeout_minutes,
     )
@@ -869,7 +869,7 @@ def streaming_throttle_alerts(
         state_schema="last_alert double, last_delivered double",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, "
-            f"{flag_col} int, alert_delivered int"
+            f"{ident(flag_col)} int, alert_delivered int"
         ),
         timeout_minutes=timeout_minutes,
     )

@@ -3431,6 +3431,29 @@ class TestHoltWinters:
         assert len(b) == 3
         assert all(r["hw_forecast"] is None and not r["is_future"] for r in b)
 
+    def test_future_rows_assemble_without_future_warning(self):
+        """The per-series frame (no Spark): pandas' all-NA concat
+        deprecation must not fire, so a pandas upgrade cannot change the
+        dtypes the grouped map returns."""
+        import warnings
+
+        from amonaly_detection_in_time_series_data_spark.operators.timeseries import _hw_fit
+
+        pdf = pd.DataFrame({"sid": "s", "t": [5, 0, 3, 1, 4, 2]})
+        pdf["v"] = pdf["t"] + 1.0  # y = 1..6 in time order
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", FutureWarning)
+            out = _hw_fit(
+                pdf, keys=["sid"], ts_col="t", value_col="v", m=2,
+                params=(0.5, 0.5, 0.5, 1.0), h=3,
+            )
+        fut = out[out["is_future"]]
+        assert fut["t"].tolist() == [6, 7, 8]
+        assert fut["hw_forecast"].iloc[0] == pytest.approx(6.92578125, abs=1e-12)
+        assert fut["hw_forecast"].iloc[1] == pytest.approx(8.083984375, abs=1e-12)
+        assert out.dtypes["v"] == out.dtypes["abs_err"] == out.dtypes["hw_mae"] == "float64"
+        assert fut[["v", "abs_err", "hw_mae"]].isna().all().all()
+
     def test_null_value_raises_and_param_validation(self, spark):
         from amonaly_detection_in_time_series_data_spark.operators.timeseries import holt_winters
 

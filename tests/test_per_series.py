@@ -2,13 +2,15 @@
 stages.
 
 - ``operators.series.per_series`` sorts each series by time, emits its
-  first ``n`` sorted rows of key + carry ahead of the kernel's columns,
-  and names the operator when a value is null or (for the matrix
-  profile) a timestamp repeats;
+  key repeated and the first ``n`` sorted rows of carry ahead of the
+  kernel's columns, and names the operator when a value is null or
+  (for the matrix profile) a timestamp repeats;
+- the template stage ``operators.series.per_template`` emits one row
+  per template, also for a series with fewer points than templates;
 - a caller-chosen column name with a space builds and runs: a batch
   per-series operator (key, timestamp and value), and the streaming
-  twins whose key or value column the caller names (built on a file
-  stream that is never started).
+  twins whose key, value, timestamp or flag column the caller names
+  (built on a file stream that is never started).
 """
 
 from __future__ import annotations
@@ -19,17 +21,23 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from amonaly_detection_in_time_series_data_spark.operators.dtw import dtw_match
 from amonaly_detection_in_time_series_data_spark.operators.kalman import (
     kalman_level,
     kalman_numpy,
 )
 from amonaly_detection_in_time_series_data_spark.operators.matrixprofile import (
     matrix_profile,
+    mp_shape_search,
     stomp_numpy,
 )
+from amonaly_detection_in_time_series_data_spark.streaming.joins import interval_join
 from amonaly_detection_in_time_series_data_spark.streaming.rolling import (
+    sessionized_stats,
+    streaming_episode_assign,
     streaming_kmv,
     streaming_theta,
+    streaming_throttle_alerts,
 )
 
 T0 = dt.datetime(2024, 1, 1)
@@ -87,6 +95,34 @@ def test_profile_rows_and_named_errors(spark):
         matrix_profile(holes, "my ts", "my value", ["my key"], window=6).collect()
 
 
+def test_template_stage_with_more_templates_than_points(spark):
+    df, _ = _series(spark, [("a b", 3), ("c d", 8)])
+    rng = np.random.default_rng(5)
+    refs = spark.createDataFrame(
+        [
+            (f"r{t}", T0 + dt.timedelta(hours=i), float(v))
+            for t in range(5)
+            for i, v in enumerate(rng.normal(0.0, 1.0, 6))
+        ],
+        "tname string, `my ts` timestamp, `my value` double",
+    )
+    keys = ["my key", "g"]
+    dtw = dtw_match(df, "my ts", "my value", keys, refs, "tname")
+    shape = mp_shape_search(df, "my ts", "my value", keys, refs, "tname", window=3)
+    assert dtw.columns == [*keys, "ref", "dtw_dist", "is_best"]
+    assert shape.columns == [*keys, "ref", "best_dist", "query_pos", "ref_pos", "is_best"]
+    for out in (dtw.toPandas(), shape.toPandas()):
+        out = out.sort_values(keys + ["ref"])
+        # one row per template, each carrying its series' key intact
+        assert out["my key"].tolist() == ["a b"] * 5 + ["c d"] * 5
+        assert out["g"].tolist() == [0] * 5 + [1] * 5
+        assert out["ref"].tolist() == [f"r{t}" for t in range(5)] * 2
+        assert out.groupby("my key")["is_best"].sum().tolist() == [1, 1]
+    # the 3-point series holds one window: every template matches at 0
+    short = shape.where(F.col("my key") == "a b").toPandas()
+    assert short["query_pos"].tolist() == [0] * 5
+
+
 @pytest.fixture
 def file_stream(spark, tmp_path):
     def make(ddl):
@@ -107,3 +143,25 @@ def test_twin_with_spaced_value_builds(file_stream):
     out = streaming_theta(events, value_col="my value")
     assert out.isStreaming
     assert out.columns[:3] == ["user_id", "ts", "my value"]
+
+
+def test_twin_with_spaced_ts_builds(file_stream):
+    events = file_stream("user_id bigint, `my ts` timestamp, value double")
+    out = streaming_theta(events, ts_col="my ts")
+    assert out.isStreaming
+    assert out.columns[:3] == ["user_id", "my ts", "value"]
+    assert sessionized_stats(events, ts_col="my ts").isStreaming
+    other = file_stream("user_id bigint, `my ts` timestamp, b double")
+    joined = interval_join(events, other, "user_id", "my ts", "my ts")
+    assert joined.isStreaming
+    assert joined.columns == ["user_id", "my ts", "value", "right_my ts", "b"]
+
+
+def test_twin_with_spaced_flag_builds(file_stream):
+    events = file_stream(
+        "user_id bigint, event_id bigint, ts timestamp, value double, `my flag` int"
+    )
+    for twin in (streaming_episode_assign, streaming_throttle_alerts):
+        out = twin(events, flag_col="my flag")
+        assert out.isStreaming
+        assert "my flag" in out.columns

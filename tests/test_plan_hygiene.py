@@ -22,8 +22,8 @@ in ``streaming.rolling._keyed_fold``. Its batch counterpart: the only
 another shape, and ``simpleString()`` (the type half of an output DDL)
 is called in ``functions.sqltext`` alone. Another pins that the detector
 battery's shared arithmetic has one source: the robust-alarm constant,
-the OLS residual standard error and the integer-unit snap each appear
-once in the package. A last one pins that the package patches the
+the OLS residual standard error, the integer-unit snap and the STOMP
+sliding-dot update each appear once in the package. A last one pins that the package patches the
 standard library's ``zipimport`` in one function, installed only in
 PySpark worker processes.
 """
@@ -109,8 +109,6 @@ GROUPED_MAP_SITES = {
     ("operators/series.py", "per_series"),
     ("operators/timeseries.py", "holt_winters"),
     ("operators/changepoint.py", "pelt_changepoints"),
-    ("operators/dtw.py", "dtw_match"),
-    ("operators/matrixprofile.py", "mp_shape_search"),
     ("operators/matrixprofile.py", "matrix_profile_chunked"),
     ("operators/anomaly.py", "throttle_alerts"),
 }
@@ -132,7 +130,8 @@ def test_one_per_series_runner_and_one_ddl_builder():
     assert types == ["functions/sqltext.py"]
 
 
-#: formulas the detector battery shares, each written once as SQL text
+#: formulas the detectors share, each written once (the battery's as
+#: SQL text, the matrix profile's as numpy)
 ONE_SOURCE = {
     # the integer robust alarm 0.6745 * dev / mad > 3.5 cross-multiplied
     "robust alarm": re.compile(r"\b26980\b"),
@@ -143,6 +142,8 @@ ONE_SOURCE = {
     "unit snap": re.compile(
         r"round\((?:(?!round\().)*?\* \{?scale\}?\)\s*(?:as bigint|\.cast\(\s*\"bigint\")"
     ),
+    # the STOMP sliding-dot update QT_i[j] = QT_{i-1}[j-1] - ... + ...
+    "STOMP update": re.compile(r"qt\[1:\] = \(? ?qt\[:-1\] -"),
 }
 
 
@@ -157,6 +158,7 @@ def test_battery_formulas_have_one_source():
         "robust alarm": ["operators/anomaly.py"],
         "OLS stderr": ["operators/anomaly.py"],
         "unit snap": ["functions/sqltext.py"],
+        "STOMP update": ["operators/matrixprofile.py"],
     }
 
 

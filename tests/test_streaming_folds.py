@@ -25,6 +25,7 @@ The Spark replay-parity family (stream == batch operator) lives in
 from __future__ import annotations
 
 import inspect
+import re
 from functools import partial
 
 import numpy as np
@@ -300,6 +301,13 @@ def test_handler_timeout_evicts_state_and_emits_nothing():
 
 
 RUNNER = inspect.signature(R._keyed_fold)
+#: a DDL field's name: a backtick-quoted identifier or a bare word
+DDL_NAME = re.compile(r"(?:^|, )(?:`((?:[^`]|``)+)`|([^\s`]+)) ")
+
+
+def _ddl_names(schema):
+    """The field names of the DDL string ``schema``, unquoted."""
+    return [q.replace("``", "`") if q else bare for q, bare in DDL_NAME.findall(schema)]
 
 
 def _twin_handler(monkeypatch, twin, *args, **kwargs):
@@ -320,7 +328,7 @@ def _twin_handler(monkeypatch, twin, *args, **kwargs):
         cols=captured["cols"],
         order=captured["order"],
         init=captured["init"],
-        out_cols=[f.split()[0] for f in captured["out_schema"].split(", ")],
+        out_cols=_ddl_names(captured["out_schema"]),
         timeout_minutes=captured["timeout_minutes"],
     )
 
@@ -397,6 +405,19 @@ def test_episode_and_throttle_accept_null_flags(monkeypatch):
     (out,) = list(throttle((7,), iter([pdf]), FakeState()))
     assert out["is_alert"].tolist() == [1, 0, 1, 0]
     assert out["alert_delivered"].tolist() == [1, 0, 1, 0]
+
+
+def test_flag_and_quantile_names_are_quoted(monkeypatch):
+    pdf = _events(range(3)).assign(**{"my `flag`": [1, 1, 0]})
+    throttle = _twin_handler(
+        monkeypatch, R.streaming_throttle_alerts, flag_col="my `flag`"
+    )
+    (out,) = list(throttle((7,), iter([pdf]), FakeState()))
+    assert list(out.columns) == ["user_id", "event_id", "ts", "my `flag`", "alert_delivered"]
+    assert out["alert_delivered"].tolist() == [1, 0, 0]
+    quantiles = _twin_handler(monkeypatch, R.streaming_quantiles, quantiles=(0.5,))
+    (out,) = list(quantiles((7,), iter([_events(range(3))]), FakeState()))
+    assert list(out.columns)[-1] == "q0_5"
 
 
 def test_sequences_null_is_a_null_element(monkeypatch):
