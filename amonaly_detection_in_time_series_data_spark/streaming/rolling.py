@@ -16,30 +16,45 @@ Kalman, episodes, ADWIN, GK quantiles, throttle, KMV, theta, Croston,
 transitions, attribution, funnel, journey paths, SAX — and
 ``streaming.sequences.streaming_sequences``) runs on ONE runner,
 :func:`_keyed_fold`. The runner owns all of the
-``applyInPandasWithState`` plumbing: the 2-hour watermark, the
-``groupBy`` on the key, the idle-key timeout (a timed-out key's state is
-removed and nothing is emitted), joining ALL of a key's Arrow chunks in
-a micro-batch and sorting them ONCE with a stable sort on the twin's
-order columns (a key whose rows span several chunks, e.g. past
-``spark.sql.execution.arrow.maxRecordsPerBatch`` in a backfill, is still
-folded in order), the state read/write, the timeout re-arm and the
-output frame. A twin holds only its parameter checks and a fold::
+``applyInPandasWithState`` plumbing, and a twin holds only its
+parameter checks and a fold::
 
     fold(state, rows) -> (state, out_rows)
 
-- ``state`` is the twin's state tuple as the state store hands it back
-  (arrays as lists), or the twin's ``init`` for a key with no state;
-- ``rows`` iterates once over the micro-batch's rows of the twin's
-  input columns as plain tuples, in order, with SQL NULL as ``None`` —
-  never ``NaN``;
+- ``state`` is the state the fold returned for the key in an earlier
+  micro-batch, or the twin's ``init`` for a key with none;
+- ``rows`` iterates once over the micro-batch's rows of the key, as
+  plain tuples of the twin's input columns, in order, with SQL NULL as
+  ``None`` — never ``NaN``;
 - each out row holds the output columns AFTER the key columns, which
   the runner prepends.
 
 A fold is a pure function of (state, rows), so folding any in-order
-split of a series through a state round trip equals one pass (pinned
-for every fold by ``tests/test_streaming_folds.py``); the replay-parity
-tests in ``tests/slow/test_streaming.py`` pin each twin against its
-batch operator.
+split of a series equals one pass (pinned for every fold by
+``tests/test_streaming_folds.py``); the replay-parity tests in
+``tests/slow/test_streaming.py`` pin each twin against its batch
+operator.
+
+The runner groups rows by a BUCKET of the key, ``pmod(xxhash64(keys),
+B)`` with ``B`` = ``spark.sql.shuffle.partitions`` at plan build (the
+stateful operator's partition count), so PySpark's per-group plumbing
+runs once per bucket, not per key; rows with a NULL key go to bucket
+``-1``, so the other buckets' integer keys reach pandas as int64. Each
+bucket keeps one state row ``(buckets int, book binary)``, the book a
+pickle (fixed protocol) of ``{key: (fold state, processing-time ms of
+its last rows)}``: at most ``B + 1`` rows, a book rewritten whenever
+any of its keys has rows. The handler sorts the bucket's rows once,
+stably, on ``(*keys, *order)`` (a key spanning Arrow chunks still folds
+in order; ties keep arrival order) and folds each key's run. No Spark
+timeout is armed: a key whose last rows are older than
+``timeout_minutes`` on the batch clock folds from ``init``, and expired
+keys leave the book when their bucket runs (a bucket none of whose keys
+returns keeps its book); ``None`` never expires. So no no-data batches
+run, and an ``availableNow`` query stops once drained. A checkpoint
+holds pickles, so resume only from one you trust; resuming with another
+``spark.sql.shuffle.partitions`` raises a ``ValueError`` naming both
+counts, and a checkpoint of the earlier per-key runner cannot be
+resumed.
 
 Where the batch operator is itself a per-key recursion, the arithmetic
 lives once, as a resumable kernel ``(state, values) -> (state,
@@ -57,9 +72,12 @@ operators.
 from __future__ import annotations
 
 import math
+import operator
 import os
+import pickle
 from collections.abc import Callable, Iterable, Sequence
-from functools import partial
+from functools import partial, reduce
+from itertools import groupby
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -193,45 +211,53 @@ def sessionized_stats(
 
 Fold = Callable[[tuple, Iterable[tuple]], tuple[tuple, list]]
 
+#: the pickle protocol of a bucket's book, fixed so that a later Python
+#: still writes what an earlier one reads
+BOOK_PROTOCOL = 5
+
 
 def _fold_handler(
-    fold: Fold,
-    *,
-    cols: Sequence[str],
-    order: Sequence[str],
-    init: tuple,
-    out_cols: Sequence[str],
-    timeout_minutes: int | None,
+    fold: Fold, *, keys: Sequence[str], cols: Sequence[str], order: Sequence[str],
+    init: tuple, out_cols: Sequence[str], timeout_minutes: int | None, buckets: int,
 ):
-    """The per-key ``(key, pdf_iter, state)`` function that
+    """The per-bucket ``(bucket, pdf_iter, state)`` function that
     :func:`_keyed_fold` hands to ``applyInPandasWithState``."""
-    cols, order, out_cols = list(cols), list(order), list(out_cols)
+    nk = len(keys)
+    by = list(dict.fromkeys([*keys, *order]))
+    picked = [*keys, *cols]
+    timeout_ms = None if timeout_minutes is None else timeout_minutes * 60_000
 
-    def handle(key, pdf_iter, state):
-        # ProcessingTimeTimeout fired for an idle key: evict its state
-        # and emit nothing. Without this, the handler would run on the
-        # empty iterator, re-save the state and re-arm the timeout, so
-        # per-key state would never be evicted (unbounded with key
-        # cardinality).
-        if state.hasTimedOut:
-            state.remove()
-            return
-        # one stable sort over ALL of the key's chunks: sorting each
-        # Arrow chunk on its own folds a key that spans chunks out of order
+    def handle(bucket, pdf_iter, state):
+        now = state.getCurrentProcessingTimeMs()
+        book = {}
+        if state.exists:
+            stored, blob = state.get
+            if stored != buckets:
+                raise ValueError(
+                    f"_keyed_fold: the checkpoint's state holds {stored} key "
+                    f"buckets but this query runs {buckets} "
+                    "(spark.sql.shuffle.partitions); resume it with "
+                    f"{stored} shuffle partitions or start a new checkpoint"
+                )
+            book = pickle.loads(blob)
+        if timeout_ms is not None:  # expired keys leave, and fold from init
+            book = {k: v for k, v in book.items() if now - v[1] <= timeout_ms}
+        # one concat and one stable sort for every key of the bucket: a
+        # key's rows may span Arrow chunks, and ties keep arrival order
         pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        if order:
-            pdf = pdf.sort_values(order, kind="stable")
-        pdf = pdf[cols]
+        pdf = pdf.sort_values(by, kind="stable")[picked]
+        pdf.columns = range(len(picked))
         # Spark hands a NULL double to pandas as NaN; folds see None
         rows = pdf.astype(object).where(pdf.notna(), None)
-        new_state, out = fold(
-            state.get if state.exists else init,
-            rows.itertuples(index=False, name=None),
-        )
-        state.update(new_state)
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame([(*key, *r) for r in out], columns=out_cols)
+        out = []
+        for key, run in groupby(
+            rows.itertuples(index=False, name=None), key=lambda r: r[:nk]
+        ):
+            st, key_out = fold(book.get(key, (init,))[0], (r[nk:] for r in run))
+            book[key] = (st, now)
+            out.extend((*key, *r) for r in key_out)
+        state.update((buckets, pickle.dumps(book, protocol=BOOK_PROTOCOL)))
+        yield pd.DataFrame(out, columns=out_cols)
 
     return handle
 
@@ -242,7 +268,6 @@ def _keyed_fold(
     *,
     cols: Sequence[str],
     init: tuple,
-    state_schema: str,
     out_schema: str,
     timeout_minutes: int | None,
     keys: Sequence[str] = ("user_id",),
@@ -250,36 +275,37 @@ def _keyed_fold(
     ts_col: str = "ts",
 ) -> DataFrame:
     """Run ``fold`` per key over a stream (the module docstring has the
-    fold contract). ``cols`` are the input columns of each row tuple,
-    ``order`` the sort columns (``()`` leaves rows unsorted), and
-    ``out_schema`` the full output DDL, key columns first.
-    ``timeout_minutes=None`` keeps idle keys' state forever."""
+    fold contract and the bucket book). ``cols`` are the input columns
+    of each row tuple, ``order`` the sort columns within a key (``()``
+    keeps arrival order), and ``out_schema`` the full output DDL, key
+    columns first. ``timeout_minutes=None`` keeps idle keys forever."""
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import StructType
 
+    buckets = int(events.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     out_type = StructType.fromDDL(out_schema)
     handle = _fold_handler(
-        fold,
-        cols=cols,
-        order=order,
-        init=init,
-        out_cols=out_type.fieldNames(),
-        timeout_minutes=timeout_minutes,
+        fold, keys=keys, cols=cols, order=order, init=init,
+        out_cols=out_type.fieldNames(), timeout_minutes=timeout_minutes,
+        buckets=buckets,
     )
+    key_cols = [F.col(k) for k in keys]
+    bucket = F.when(  # a NULL in any key column: bucket -1
+        reduce(operator.or_, [c.isNull() for c in key_cols]), -1
+    ).otherwise(F.pmod(F.xxhash64(*key_cols), F.lit(buckets)))
     return (
-        events.select(*dict.fromkeys([*keys, ts_col, *order, *cols]))
+        events.select(
+            *dict.fromkeys([*keys, ts_col, *order, *cols]),
+            bucket.alias("__bucket"),
+        )
         .withWatermark(ident(ts_col), "2 hours")
-        .groupBy(*keys)
+        .groupBy("__bucket")
         .applyInPandasWithState(
             handle,
             outputStructType=out_type,
-            stateStructType=state_schema,
+            stateStructType="buckets int, book binary",
             outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -334,7 +360,6 @@ def streaming_zscore_flags(
         partial(_zscore_fold, window_rows=window_rows, threshold=threshold),
         cols=("event_id", "ts", "value"),
         init=([],),
-        state_schema="values array<double>",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
             "zscore double, is_anomaly int"
@@ -400,9 +425,6 @@ def streaming_page_hinkley(
         ),
         cols=("event_id", "ts", "value"),
         init=(0, 0, 0, 0, 0, 0),
-        state_schema=(
-            "n bigint, s bigint, u bigint, minu bigint, d bigint, maxd bigint"
-        ),
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
             "ph_inc double, ph_dec double, ph_alarm int"
@@ -465,7 +487,6 @@ def streaming_ewma_deviation(
         ),
         cols=("event_id", "ts", "value"),
         init=([],),
-        state_schema="values array<double>",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
             "ewma double, ewma_dev double, ewma_alarm int"
@@ -524,7 +545,6 @@ def streaming_hampel_flags(
         partial(_hampel_fold, window_rows=window_rows, k=k),
         cols=("event_id", "ts", "value"),
         init=([],),
-        state_schema="values array<double>",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
             "hampel_median double, hampel_mad double, hampel_flag int"
@@ -605,10 +625,6 @@ def streaming_trend_ols(
         ),
         cols=("event_id", "ts", "value"),
         init=(0, 0, 0, 0, 0, 0, 0),
-        state_schema=(
-            "rn bigint, n bigint, sx bigint, sy bigint, "
-            "sxx bigint, sxy bigint, syy bigint"
-        ),
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
             "trend_run_slope double, trend_run_fit double, "
@@ -667,7 +683,6 @@ def streaming_kalman_level(
         partial(_kalman_fold, Q=float(q_var), R=float(r_var), thr=float(threshold)),
         cols=("event_id", "ts", "value"),
         init=KALMAN_INIT,
-        state_schema="level double, var double",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
             "kf_pred double, kf_level double, kf_innov_sd double, "
@@ -721,7 +736,6 @@ def streaming_episode_assign(
         partial(_episode_fold, gap_us=int(round(float(gap_seconds) * 1_000_000))),
         cols=("event_id", "ts", "value", flag_col),
         init=(-1, 0),
-        state_schema="last_us long, counter long",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
             f"{ident(flag_col)} int, episode_id bigint"
@@ -763,7 +777,6 @@ def streaming_adwin(
         partial(_adwin_fold, delta=delta, max_buckets=max_buckets),
         cols=("event_id", "ts", "value"),
         init=ADWIN_INIT,
-        state_schema="sums array<double>, sqs array<double>, counts array<long>",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
             "adwin_n bigint, adwin_mean double, adwin_change boolean"
@@ -806,7 +819,6 @@ def streaming_quantiles(
         partial(_quantiles_fold, eps=eps, qs=qs),
         cols=("event_id", "ts", "value"),
         init=([], [], [], 0),
-        state_schema="vs array<double>, gs array<long>, ds array<long>, n long",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, value double, "
             + ", ".join(f"{ident(c)} double" for c in qcols)
@@ -866,7 +878,6 @@ def streaming_throttle_alerts(
         partial(_throttle_fold, cooldown_seconds=cooldown_seconds, policy=policy),
         cols=("event_id", "ts", flag_col),
         init=(None, None),
-        state_schema="last_alert double, last_delivered double",
         out_schema=(
             "user_id bigint, event_id bigint, ts timestamp, "
             f"{ident(flag_col)} int, alert_delivered int"
@@ -966,7 +977,6 @@ def streaming_kmv(
         ts_col=ts_col,
         cols=("__h",),
         init=([],),
-        state_schema="mins array<bigint>",
         out_schema=(
             f"{ddl(events.schema, keys)}, kmv array<bigint>, kmv_size int, kmv_est double"
         ),
@@ -1025,10 +1035,6 @@ def streaming_theta(
         ts_col=ts_col,
         cols=(ts_col, value_col),
         init=THETA_INIT,
-        state_schema=(
-            "cnt bigint, sx double, sy double, sxx double, sxy double, "
-            "ses double, err_sum double, err_n bigint"
-        ),
         out_schema=(
             f"{ddl(events.schema, keys)}, {ident(ts_col)} timestamp, {ident(value_col)} double, "
             "theta_forecast double, abs_err double, theta_mae double"
@@ -1086,10 +1092,6 @@ def streaming_croston(
         ts_col=ts_col,
         cols=(ts_col, value_col),
         init=CROSTON_INIT,
-        state_schema=(
-            "z double, p double, has_z boolean, has_p boolean, "
-            "gap bigint, err_sum double, err_n bigint"
-        ),
         out_schema=(
             f"{ddl(events.schema, keys)}, {ident(ts_col)} timestamp, {ident(value_col)} double, "
             "croston_forecast double, abs_err double, croston_mae double"
@@ -1178,7 +1180,6 @@ def streaming_transitions(
         ts_col=ts_col,
         cols=(*order, type_col),
         init=(False, None),
-        state_schema="has_last boolean, last_type string",
         out_schema=(
             f"{ddl(events.schema, keys)}, {ddl(events.schema, order)}, "
             "from_type string, to_type string"
@@ -1309,7 +1310,6 @@ def streaming_attribution(
         ts_col=ts_col,
         cols=(ts_col, channel_col),
         init=([], []),
-        state_schema="tus array<bigint>, chs array<string>",
         out_schema=(
             f"{ddl(events.schema, keys)}, {ident(ts_col)} timestamp, model string, "
             "channel string, ppm bigint"
@@ -1374,7 +1374,7 @@ def streaming_funnel(
     (asserted in the parity test).
 
     Timeout caveat (r13 ADVICE): the default
-    ``timeout_minutes=60`` bounds per-user state, but eviction
+    ``timeout_minutes=60`` bounds per-user state, but expiry
     mid-funnel resets ``done``/``anchor`` to 0 — a user whose funnel
     spans longer than the timeout re-walks from step 1 and can stream
     depths the batch operator (anchored at the FIRST step-1) would
@@ -1400,7 +1400,6 @@ def streaming_funnel(
         ts_col=ts_col,
         cols=(ts_col, event_col),
         init=(0, 0, 0),
-        state_schema="done int, anchor bigint, last bigint",
         out_schema=f"{ddl(events.schema, keys)}, {ident(ts_col)} timestamp, funnel_depth int",
         timeout_minutes=timeout_minutes,
     )
@@ -1461,7 +1460,6 @@ def streaming_journey_paths(
         ts_col=ts_col,
         cols=(*order, type_col),
         init=([], []),
-        state_schema="vals array<string>, nulls array<boolean>",
         out_schema=f"{ddl(events.schema, keys)}, {ddl(events.schema, order)}, path string",
         timeout_minutes=timeout_minutes,
     )
@@ -1561,8 +1559,8 @@ def streaming_sax(
     poisoned window's word (pinned by a NULL-bearing replay test).
 
     Timeout caveat (the :func:`streaming_funnel` convention): the
-    default 60-min ProcessingTimeTimeout frees dead keys, but eviction
-    mid-window drops the pending partial window AND resets the window
+    default 60-min expiry frees dead keys, but expiry mid-window drops
+    the pending partial window AND resets the window
     counter, so a revived key re-numbers from win 0; replay parity
     holds unconditionally only with ``timeout_minutes=None``.
     """
@@ -1593,10 +1591,6 @@ def streaming_sax(
         ts_col=ts_col,
         cols=(ts_col, value_col),
         init=(0, 0, False, [], []),
-        state_schema=(
-            "win bigint, seen int, poisoned boolean, "
-            "xs array<bigint>, tss array<bigint>"
-        ),
         out_schema=f"{ddl(events.schema, keys)}, win bigint, win_start timestamp, word string",
         timeout_minutes=timeout_minutes,
     )

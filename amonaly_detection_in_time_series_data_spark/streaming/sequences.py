@@ -9,7 +9,7 @@ exactly the batch output when the stream is replayed in order.
 
 State is bounded (L values + timestamps per key), so this scales to any
 key cardinality; it runs on the shared keyed-state runner
-(``streaming.rolling._keyed_fold``), which also evicts idle keys.
+(``streaming.rolling._keyed_fold``), which also expires idle keys.
 """
 
 from __future__ import annotations
@@ -55,7 +55,6 @@ def streaming_sequences(
         partial(_sequences_fold, seq_len=seq_len),
         cols=("ts", value_col),
         init=([], []),
-        state_schema="vals array<double>, tss array<timestamp>",
         out_schema=(
             "user_id bigint, start_ts timestamp, end_ts timestamp, "
             "seq array<double>"

@@ -34,12 +34,10 @@ def write_anomaly_alerts(
     ``available_now`` the query drains everything available and stops,
     which is also the replay-verification mode used in tests.
 
-    availableNow caveat: an upstream stateful operator with a
-    PROCESSING-TIME timeout keeps the query alive to fire those timeouts
-    — it never self-terminates. Build the upstream with
-    ``timeout_minutes=None`` (NoTimeout) for drain-and-stop runs; keep
-    the timeout for continuous production queries, where it is the state
-    GC.
+    availableNow: the stateful twins arm no Spark timeout (an idle
+    key expires inside the state function, when its bucket next has
+    rows), so the query runs no no-data micro-batches and stops once
+    it has drained its input, whatever the upstream ``timeout_minutes``.
     """
     alerts = flags.filter(F.col(flag_col) == 1).withColumn(
         "alert_date", F.to_date(F.col(ts_col))

@@ -31,10 +31,8 @@ def _run_stream_to_memory(stream_df, name, output_mode):
         .trigger(availableNow=True)
         .start()
     )
-    # stateful queries with processing-time timeouts stay active after
-    # draining the input (timeout bookkeeping batches), so wait for the
-    # data explicitly and stop — awaitTermination would burn its full
-    # timeout on every test
+    # wait for the data explicitly and stop, so a query that does not
+    # stop by itself cannot burn a test's whole timeout
     q.processAllAvailable()
     q.stop()
     q.awaitTermination(60)
@@ -131,7 +129,7 @@ class TestStreamingParity:
 
     def test_stateful_zscore_matches_batch(self, spark, sf_dir):
         stream = replay_events_stream(spark, sf_dir)
-        flags = streaming_zscore_flags(stream, window_rows=24, threshold=3.0, timeout_minutes=None)
+        flags = streaming_zscore_flags(stream, window_rows=24, threshold=3.0)
         _run_stream_to_memory(flags, "z_flags", "append")
         streamed = {
             r["event_id"]: (r["zscore"], r["is_anomaly"])
@@ -164,7 +162,7 @@ class TestStreamingParity:
 
         stream = replay_events_stream(spark, sf_dir)
         out = streaming_ewma_deviation(
-            stream, window_rows=8, alpha=0.5, timeout_minutes=None
+            stream, window_rows=8, alpha=0.5
         )
         _run_stream_to_memory(out, "ewma_flags", "append")
         streamed = {
@@ -200,7 +198,7 @@ class TestStreamingParity:
 
         stream = replay_events_stream(spark, sf_dir)
         ph = streaming_page_hinkley(
-            stream, lam=10.0, unit_digits=2, timeout_minutes=None
+            stream, lam=10.0, unit_digits=2
         )
         _run_stream_to_memory(ph, "ph_flags", "append")
         streamed = {
@@ -221,7 +219,7 @@ class TestStreamingParity:
 
     def test_stateful_sequences_match_batch(self, spark, sf_dir):
         stream = replay_events_stream(spark, sf_dir)
-        seqs = streaming_sequences(stream, value_col="value", seq_len=8, timeout_minutes=None)
+        seqs = streaming_sequences(stream, value_col="value", seq_len=8)
         _run_stream_to_memory(seqs, "seqs", "append")
         streamed = {
             (r["user_id"], r["end_ts"]): r["seq"]
@@ -312,10 +310,8 @@ class TestStreamingSinks:
         )
 
         stream = replay_events_stream(spark, sf_dir)
-        # NoTimeout state: with a processing-time timeout the availableNow
-        # query stays alive to fire timeouts and never self-terminates
         flags = streaming_zscore_flags(
-            stream, window_rows=24, threshold=2.0, timeout_minutes=None
+            stream, window_rows=24, threshold=2.0
         )
         out = str(tmp_path / "alerts")
         q = write_anomaly_alerts(
@@ -339,6 +335,34 @@ class TestStreamingSinks:
         assert "PartitionFilters: [" in plan and "alert_date" in plan.split(
             "PartitionFilters"
         )[1][:160]
+
+
+    def test_default_alert_composition_stops_by_itself(
+        self, spark, sf_dir, tmp_path
+    ):
+        """``write_anomaly_alerts(streaming_zscore_flags(replay))`` with
+        every default drains its input and stops under availableNow: the
+        twin's idle-key expiry runs inside the state function, so no
+        Spark timeout keeps the query running no-data batches."""
+        from amonaly_detection_in_time_series_data_spark.streaming.rolling import (
+            replay_events_stream,
+            streaming_zscore_flags,
+        )
+        from amonaly_detection_in_time_series_data_spark.streaming.sinks import (
+            write_anomaly_alerts,
+        )
+
+        q = write_anomaly_alerts(
+            streaming_zscore_flags(replay_events_stream(spark, sf_dir)),
+            str(tmp_path / "alerts"),
+            str(tmp_path / "ckpt"),
+        )
+        try:
+            assert q.awaitTermination(240), "the default composition did not stop"
+        finally:
+            q.stop()
+        assert q.exception() is None
+        assert spark.read.parquet(str(tmp_path / "alerts")).count() > 0
 
 
 class TestStreamingCorpus:
@@ -398,7 +422,7 @@ class TestStreamingEndToEnd:
 
         stream = replay_events_stream(spark, sf_dir)
         flags = streaming_zscore_flags(
-            stream, window_rows=24, threshold=3.0, timeout_minutes=None
+            stream, window_rows=24, threshold=3.0
         )
         out = str(tmp_path / "alerts")
         q = write_anomaly_alerts(
@@ -449,7 +473,7 @@ class TestStreamingModelScoring:
                              n_layers=2, seed=11)
         stream = replay_events_stream(spark, sf_dir)
         seqs = streaming_sequences(
-            stream, value_col="value", seq_len=6, timeout_minutes=None
+            stream, value_col="value", seq_len=6
         )
         scored = streaming_sequence_scores(seqs, model, threshold=0.5)
         _run_stream_to_memory(scored, "lstm_stream_scores", "append")
@@ -812,7 +836,6 @@ class TestStreamingThrottle:
             )
             out = streaming_throttle_alerts(
                 stream, cooldown_seconds=2 * 3600.0, policy=policy,
-                timeout_minutes=None,
             )
             _run_stream_to_memory(out, f"throttle_{policy.replace('-','_')}", "append")
             streamed = {
@@ -843,7 +866,7 @@ class TestStreamingHampel:
         )
 
         stream = replay_events_stream(spark, sf_dir)
-        out = streaming_hampel_flags(stream, window_rows=11, timeout_minutes=None)
+        out = streaming_hampel_flags(stream, window_rows=11)
         _run_stream_to_memory(out, "hampel", "append")
         streamed = {
             r["event_id"]: (r["hampel_median"], r["hampel_mad"], r["hampel_flag"])
@@ -882,7 +905,7 @@ class TestStreamingTrendOls:
         )
 
         stream = replay_events_stream(spark, sf_dir)
-        out = streaming_trend_ols(stream, timeout_minutes=None)
+        out = streaming_trend_ols(stream)
         _run_stream_to_memory(out, "trend_ols_s", "append")
         streamed = {
             r["event_id"]: (
@@ -932,7 +955,7 @@ class TestStreamingKalman:
 
         Q, R = 0.05, 1.0
         stream = replay_events_stream(spark, sf_dir)
-        out = streaming_kalman_level(stream, q_var=Q, r_var=R, timeout_minutes=None)
+        out = streaming_kalman_level(stream, q_var=Q, r_var=R)
         _run_stream_to_memory(out, "kf_stream", "append")
         streamed = {
             (r["user_id"], r["ts"]): (
@@ -987,7 +1010,7 @@ class TestStreamingEpisodes:
             "is_alert", (F.col("value") > 100).cast("int")
         ).select("user_id", "event_id", "ts", "value", "is_alert")
         out = streaming_episode_assign(
-            stream, gap_seconds=7200.0, timeout_minutes=None
+            stream, gap_seconds=7200.0
         )
         _run_stream_to_memory(out, "episodes_s", "append")
         streamed = {
@@ -1032,7 +1055,7 @@ class TestStreamingAdwin:
         )
 
         stream = replay_events_stream(spark, sf_dir)
-        out = streaming_adwin(stream, delta=0.01, timeout_minutes=None)
+        out = streaming_adwin(stream, delta=0.01)
         _run_stream_to_memory(out, "adwin_s", "append")
         streamed = {
             (r["user_id"], r["ts"]): (r["adwin_n"], r["adwin_mean"], r["adwin_change"])
@@ -1069,7 +1092,7 @@ class TestStreamingQuantiles:
         eps = 0.02
         stream = replay_events_stream(spark, sf_dir)
         out = streaming_quantiles(
-            stream, quantiles=(0.5, 0.9), eps=eps, timeout_minutes=None
+            stream, quantiles=(0.5, 0.9), eps=eps
         )
         _run_stream_to_memory(out, "gkq", "append")
         rows = spark.sql(
@@ -1164,7 +1187,7 @@ class TestStreamingForecast:
         expected = self._by_key(batch.collect(), cols)
 
         stream = self._replay_grid(spark, grid, tmp_path, "theta_g")
-        out = streaming_theta(stream, timeout_minutes=None)
+        out = streaming_theta(stream)
         _run_stream_to_memory(out, "theta_s", "append")
         streamed = self._by_key(
             spark.sql("SELECT * FROM theta_s").collect(), cols
@@ -1209,7 +1232,7 @@ class TestStreamingForecast:
         expected = self._by_key(batch.collect(), cols)
 
         stream = self._replay_grid(spark, counts, tmp_path, "croston_g")
-        out = streaming_croston(stream, timeout_minutes=None)
+        out = streaming_croston(stream)
         _run_stream_to_memory(out, "croston_s", "append")
         streamed = self._by_key(
             spark.sql("SELECT * FROM croston_s").collect(), cols
@@ -1249,7 +1272,6 @@ class TestStreamingForecast:
         stream = self._replay_grid(spark, ev, tmp_path, "kmv_g")
         out = streaming_kmv(
             stream, "value", k=K, key_cols=["user_id"],
-            timeout_minutes=None,
         )
         _run_stream_to_memory(out, "kmv_s", "append")
         # progressive snapshots: the LAST emitted row per key is the
@@ -1302,7 +1324,7 @@ class TestStreamingForecast:
 
         stream = self._replay_grid(spark, ev, tmp_path, "kmv_null_g")
         out = streaming_kmv(
-            stream, "value", k=16, key_cols=["user_id"], timeout_minutes=None
+            stream, "value", k=16, key_cols=["user_id"]
         )
         _run_stream_to_memory(out, "kmv_null_s", "append")
         got = {
@@ -1384,7 +1406,7 @@ class TestStreamingForecast:
 
         stream = self._replay_grid(spark, grid, tmp_path, "theta_sk")
         out = streaming_theta(
-            stream, timeout_minutes=None, key_cols=["series"]
+            stream, key_cols=["series"]
         )
         assert out.schema["series"].dataType.simpleString() == "string"
         _run_stream_to_memory(out, "theta_sk_s", "append")
@@ -1446,7 +1468,6 @@ class TestStreamingTransitions:
             session_cols=["user_id"],
             order_cols=["ts", "event_id"],
             type_col="event_type",
-            timeout_minutes=None,
         )
         assert out.isStreaming
         _run_stream_to_memory(out, "trans_s", "append")
@@ -1501,7 +1522,6 @@ class TestStreamingTransitions:
             stream,
             session_cols=["user_id"],
             order_cols=["ts", "event_id"],
-            timeout_minutes=None,
         )
         _run_stream_to_memory(out, "trans_null_s", "append")
         got_rows = spark.sql("SELECT * FROM trans_null_s").collect()
@@ -1554,7 +1574,6 @@ class TestStreamingAttribution:
             conversion_types=("purchase",),
             models=MODELS,
             key_cols=["user_id"],
-            timeout_minutes=None,
         )
         assert out.isStreaming
         _run_stream_to_memory(out, "attr_s", "append")
@@ -1618,7 +1637,7 @@ class TestStreamingFunnel:
         )
         out = streaming_funnel(
             stream, list(self.STEPS), within_us=within_us,
-            key_cols=["user_id"], timeout_minutes=None,
+            key_cols=["user_id"],
         )
         assert out.isStreaming
         _run_stream_to_memory(out, f"funnel_s_{tag}", "append")
@@ -1679,7 +1698,7 @@ class TestStreamingJourneyPaths:
         )
         out = streaming_journey_paths(
             stream, k=k, session_cols=["user_id"],
-            order_cols=["ts", "event_id"], timeout_minutes=None,
+            order_cols=["ts", "event_id"],
         )
         assert out.isStreaming
         _run_stream_to_memory(out, f"jp_s_{tag}", "append")
@@ -1766,7 +1785,7 @@ class TestStreamingSax:
         out = streaming_sax(
             stream, series_cols=["user_id"], value_col="value",
             ts_col="ts", order_tiebreak=["event_id"],
-            timeout_minutes=None, **kw,
+            **kw,
         )
         assert out.isStreaming
         _run_stream_to_memory(out, f"sax_s_{tag}", "append")
@@ -1839,8 +1858,11 @@ class TestStreamingSax:
 class TestStreamingKeyedRunner:
     """The shared keyed-state runner (``streaming.rolling._keyed_fold``)
     end to end: a key's rows are folded in event order even when one
-    micro-batch hands them to Python in several Arrow chunks, and a
-    NULL value does not switch the z-score twin off for a window."""
+    micro-batch hands them to Python in several Arrow chunks, a NULL
+    value does not switch the z-score twin off for a window, many keys
+    sharing a bucket each fold on their own, NULL keys do not cost the
+    other keys their integer type, and a checkpoint resumed with
+    another bucket count is refused."""
 
     SCHEMA = "user_id bigint, event_id bigint, ts timestamp, value double"
 
@@ -1850,7 +1872,7 @@ class TestStreamingKeyedRunner:
         spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.parquet(path)
         stream = spark.readStream.schema(self.SCHEMA).parquet(path)
         flags = streaming_zscore_flags(
-            stream, window_rows=24, threshold=3.0, timeout_minutes=None
+            stream, window_rows=24, threshold=3.0
         )
         _run_stream_to_memory(flags, name, "append")
         streamed = {
@@ -1907,3 +1929,100 @@ class TestStreamingKeyedRunner:
         streamed = self._stream_vs_batch(spark, rows, tmp_path, "z_null_spike")
         assert streamed[30][1] == 1
         assert all(streamed[j][0] is not None for j in range(11, 35))
+
+    def _with_partitions(self, spark, n, fn):
+        key = "spark.sql.shuffle.partitions"
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(n))
+        try:
+            return fn()
+        finally:
+            spark.conf.set(key, old)
+
+    def test_many_keys_sharing_buckets_match_batch(self, spark, tmp_path):
+        """60 keys, rows interleaved and shuffled, in 2 key buckets: each
+        bucket's book holds ~30 keys folded in one call, and every key
+        still equals the batch rolling_zscore."""
+        import datetime as dt
+        import random
+
+        rng = random.Random(23)
+        B = dt.datetime(2024, 1, 1)
+        rows = [
+            (u, u * 1000 + j, B + dt.timedelta(hours=j),
+             10.0 + rng.randint(-300, 300) / 100 if j != 40 else 90.0)
+            for u in range(60)
+            for j in range(48)
+        ]
+        rng.shuffle(rows)
+        streamed = self._with_partitions(
+            spark, 2,
+            lambda: self._stream_vs_batch(spark, rows, tmp_path, "z_buckets"),
+        )
+        assert len(streamed) == 60 * 48
+        assert sum(flag for _, flag in streamed.values()) >= 60
+
+    def test_big_keys_stay_exact_beside_null_keys(self, spark, tmp_path):
+        """bigint keys >= 2**60 come out exactly while the same
+        micro-batch holds NULL-key rows: those go to a bucket of their
+        own, so no key column of the other buckets reaches pandas as
+        float64."""
+        import datetime as dt
+
+        B = dt.datetime(2024, 1, 1)
+        users = [2**60 + k for k in (1, 3, 5)] + [None]
+        rows = [
+            (u, i * 100 + j, B + dt.timedelta(hours=j), float(j % 7))
+            for i, u in enumerate(users)
+            for j in range(30)
+        ]
+        self._stream_vs_batch(spark, rows, tmp_path, "z_big_keys")
+        got = {
+            r["event_id"]: r["user_id"]
+            for r in spark.sql("SELECT event_id, user_id FROM z_big_keys").collect()
+        }
+        assert got == {eid: u for u, eid, _, _ in rows}
+
+    def test_resume_with_other_partition_count_is_refused(self, spark, tmp_path):
+        """A checkpoint written with 2 key buckets, resumed with 3: the
+        keys would hash to other buckets and restart silently, so the
+        state function refuses the book instead of emitting wrong rows."""
+        import datetime as dt
+
+        from pyspark.errors import StreamingQueryException
+
+        from amonaly_detection_in_time_series_data_spark.streaming.sinks import (
+            write_anomaly_alerts,
+        )
+
+        B = dt.datetime(2024, 1, 1)
+        src, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+
+        def land(hours):
+            rows = [
+                (u, u * 1000 + j, B + dt.timedelta(hours=j), float(j % 5))
+                for u in range(20)
+                for j in hours
+            ]
+            spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+
+        def drain():
+            stream = spark.readStream.schema(self.SCHEMA).parquet(src)
+            q = write_anomaly_alerts(
+                streaming_zscore_flags(stream, threshold=1.0),
+                str(tmp_path / "alerts"), ckpt,
+            )
+            try:
+                q.awaitTermination(240)
+            finally:
+                q.stop()
+
+        land(range(0, 10))
+        self._with_partitions(spark, 2, drain)
+        land(range(10, 20))
+        with pytest.raises(
+            StreamingQueryException, match="holds 2 key buckets but this query runs 3"
+        ):
+            self._with_partitions(spark, 3, drain)

@@ -16,7 +16,8 @@ smallest SF — only the plan is inspected; nothing large executes.
 A source sweep pins the same for the package code: no ``iterrows``
 anywhere, and one stateful-streaming runner — the only
 ``applyInPandasWithState`` / ``transformWithStateInPandas`` call is
-in ``streaming.rolling._keyed_fold``. Its batch counterpart: the only
+in ``streaming.rolling._keyed_fold``, which arms no Spark timeout and
+takes no typed state schema. Its batch counterpart: the only
 ``applyInPandas`` calls are the per-series runner
 ``operators.series.per_series`` and the operators whose output has
 another shape, and ``simpleString()`` (the type half of an output DDL)
@@ -100,6 +101,26 @@ def test_no_iterrows_and_one_stateful_runner():
     assert found == [
         ("streaming/rolling.py", "applyInPandasWithState", "_keyed_fold")
     ]
+
+
+def test_stateful_runner_arms_no_spark_timeout_and_no_typed_state():
+    """Idle-key expiry lives in ``_keyed_fold``'s state function, against
+    the batch clock: the package arms no Spark timeout (each one runs
+    no-data micro-batches and keeps an availableNow query alive), and
+    no twin declares a typed state schema, since a bucket's state is
+    one pickled book."""
+    timeouts, schemas = [], []
+    for path in sorted(PKG_DIR.rglob("*.py")):
+        rel = path.relative_to(PKG_DIR).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            if name in ("ProcessingTimeTimeout", "EventTimeTimeout"):
+                timeouts.append((rel, name))
+            if isinstance(node, ast.keyword) and node.arg == "state_schema":
+                schemas.append(rel)
+            if isinstance(node, ast.arg) and node.arg == "state_schema":
+                schemas.append(rel)
+    assert timeouts == [] and schemas == []
 
 
 #: the grouped-map Arrow stages: the per-series runner, and the

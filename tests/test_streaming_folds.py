@@ -2,17 +2,19 @@
 
 The stateful twins in ``streaming.rolling`` / ``streaming.sequences``
 are a pure fold ``(state, rows) -> (state, out_rows)`` run by one
-runner (``_keyed_fold``). Two things are pinned here, both in pure
+runner (``_keyed_fold``). Three things are pinned here, in pure
 Python:
 
 - the split-fold property: folding an in-order series in any
-  micro-batch split, with the state round-tripped between batches as
-  the state store returns it (tuples of plain values and lists), gives
-  exactly the output and final state of one pass;
-- the runner's per-key handler, driven with a fake ``GroupState``:
-  idle-key eviction, one stable sort over all Arrow chunks of a key,
-  NULL reaching the fold as ``None``, and the state/timeout/output
-  protocol;
+  micro-batch split gives exactly the output and final state of one
+  pass, both with the state handed back exactly as the fold returned
+  it (what the runner's pickled book does) and round-tripped as a
+  typed state store would (tuples of plain values and lists);
+- the runner's per-bucket handler, driven with a fake ``GroupState``:
+  one stable sort over all Arrow chunks of a bucket, interleaved keys
+  each folded on their own, NULL keys and values reaching the fold as
+  ``None``, idle-key expiry against the batch clock, the bucket-count
+  guard, and the book/output protocol;
 - batch == stream for the five recursions written once as a kernel in
   the batch operator's module (Kalman, theta, Croston, ADWIN,
   fixed-cooldown throttle): the fold over any split of a seeded series
@@ -25,6 +27,7 @@ The Spark replay-parity family (stream == batch operator) lives in
 from __future__ import annotations
 
 import inspect
+import pickle
 import re
 from functools import partial
 
@@ -127,26 +130,23 @@ RECORDS = st.lists(
 
 
 def _store_roundtrip(state: tuple) -> tuple:
-    """What the state store hands back: a fresh tuple, arrays as lists."""
+    """What a typed state store hands back: a fresh tuple, arrays as lists."""
     return tuple(list(x) if isinstance(x, (list, tuple)) else x for x in state)
 
 
-def _fold_batches(fold, init, batches):
+def _fold_batches(fold, init, batches, handback=_store_roundtrip):
     state, out = init, []
     for batch in batches:
-        state, rows = fold(_store_roundtrip(state), iter(batch))
+        state, rows = fold(handback(state), iter(batch))
         out.extend(rows)
-    return _store_roundtrip(state), out
+    return handback(state), out
 
 
-@pytest.mark.parametrize(
-    "fold,init,to_row,compare",
-    [f[1:] for f in FOLDS],
-    ids=[f[0] for f in FOLDS],
-)
-@settings(max_examples=60, deadline=None)
-@given(records=RECORDS, cuts=st.lists(st.integers(0, 40), max_size=6))
-def test_split_fold_equals_one_pass(fold, init, to_row, compare, records, cuts):
+def _same(state):
+    return state
+
+
+def _check_split_equals_one_pass(fold, init, to_row, compare, records, cuts, handback):
     rows = [
         to_row(i, T0 + pd.Timedelta(hours=i), v, e, f)
         for i, (v, e, f) in enumerate(records)
@@ -154,8 +154,8 @@ def test_split_fold_equals_one_pass(fold, init, to_row, compare, records, cuts):
     bounds = sorted({0, len(rows), *(c for c in cuts if c < len(rows))})
     batches = [rows[a:b] for a, b in zip(bounds, bounds[1:])]
 
-    one_state, one_out = _fold_batches(fold, init, [rows])
-    split_state, split_out = _fold_batches(fold, init, batches)
+    one_state, one_out = _fold_batches(fold, init, [rows], handback)
+    split_state, split_out = _fold_batches(fold, init, batches, handback)
 
     assert split_state == one_state
     if compare == "last":
@@ -164,18 +164,49 @@ def test_split_fold_equals_one_pass(fold, init, to_row, compare, records, cuts):
         assert split_out == one_out
 
 
-# --- the runner's per-key handler, with a fake GroupState -----------------
+FOLD_PARAMS = pytest.mark.parametrize(
+    "fold,init,to_row,compare",
+    [f[1:] for f in FOLDS],
+    ids=[f[0] for f in FOLDS],
+)
+
+
+@FOLD_PARAMS
+@settings(max_examples=60, deadline=None)
+@given(records=RECORDS, cuts=st.lists(st.integers(0, 40), max_size=6))
+def test_split_fold_equals_one_pass(fold, init, to_row, compare, records, cuts):
+    _check_split_equals_one_pass(
+        fold, init, to_row, compare, records, cuts, _store_roundtrip
+    )
+
+
+@FOLD_PARAMS
+@settings(max_examples=60, deadline=None)
+@given(records=RECORDS, cuts=st.lists(st.integers(0, 40), max_size=6))
+def test_split_fold_equals_one_pass_without_store_roundtrip(
+    fold, init, to_row, compare, records, cuts
+):
+    """The runner's book hands a fold back the very state it returned
+    (a pickle round trip keeps tuples, arrays and timestamps as they
+    were), and every key of a bucket starts from the same ``init``
+    object: a fold must neither need the store's list coercion nor
+    mutate the state it is handed."""
+    _check_split_equals_one_pass(fold, init, to_row, compare, records, cuts, _same)
+
+
+# --- the runner's per-bucket handler, with a fake GroupState --------------
+
+BUCKETS = 8
+MINUTE_MS = 60_000
 
 
 class FakeState:
     """The slice of ``pyspark.sql.streaming.state.GroupState`` the
-    runner uses."""
+    runner uses: the bucket's state row and the batch clock."""
 
-    def __init__(self, value=None, timed_out=False):
+    def __init__(self, value=None, now_ms=0):
         self.value = value
-        self.hasTimedOut = timed_out
-        self.removed = False
-        self.timeout_ms = None
+        self.now_ms = now_ms
 
     @property
     def exists(self):
@@ -183,16 +214,24 @@ class FakeState:
 
     @property
     def get(self):
-        return _store_roundtrip(self.value)
+        return tuple(self.value)
 
     def update(self, value):
         self.value = tuple(value)
 
-    def remove(self):
-        self.value, self.removed = None, True
+    def getCurrentProcessingTimeMs(self):
+        return self.now_ms
 
-    def setTimeoutDuration(self, ms):
-        self.timeout_ms = ms
+
+def _book(state):
+    """The bucket's book: key tuple -> (fold state, time of its last rows)."""
+    buckets, blob = state.value
+    assert buckets == BUCKETS
+    return pickle.loads(blob)
+
+
+def _stored(book, buckets=BUCKETS):
+    return (buckets, pickle.dumps(book, protocol=R.BOOK_PROTOCOL))
 
 
 def _recording_fold(state, rows):
@@ -201,22 +240,24 @@ def _recording_fold(state, rows):
 
 
 def _handler(fold, cols, order=("ts", "event_id"), init=(0,), out_cols=None,
-             timeout_minutes=60):
+             timeout_minutes=60, keys=("user_id",)):
     return R._fold_handler(
         fold,
+        keys=keys,
         cols=cols,
         order=order,
         init=init,
-        out_cols=out_cols or ["user_id", *cols],
+        out_cols=out_cols or [*keys, *cols],
         timeout_minutes=timeout_minutes,
+        buckets=BUCKETS,
     )
 
 
-def _events(ids, values=None):
+def _events(ids, values=None, user=7):
     """One key's rows with event_id i at hour i."""
     return pd.DataFrame(
         {
-            "user_id": np.int64(7),
+            "user_id": np.int64(user),
             "event_id": np.asarray(ids, dtype="int64"),
             "ts": [T0 + pd.Timedelta(hours=int(i)) for i in ids],
             "value": (
@@ -228,27 +269,33 @@ def _events(ids, values=None):
     )
 
 
+def _run(handle, chunks, state):
+    """One micro-batch of one bucket: the handler's one output frame."""
+    (out,) = list(handle((3,), iter(chunks), state))
+    return out
+
+
 def test_handler_sorts_all_chunks_of_a_key_once():
     handle = _handler(_recording_fold, ["event_id"])
     state = FakeState()
     # two out-of-order Arrow chunks of the same key, interleaved in time
     chunks = [_events([5, 1, 3]), _events([4, 0, 2])]
-    (out,) = list(handle((7,), iter(chunks), state))
+    out = _run(handle, chunks, state)
     assert out["event_id"].tolist() == [0, 1, 2, 3, 4, 5]
     assert out["user_id"].tolist() == [7] * 6
-    assert state.value == (6,)
+    assert _book(state) == {(7,): ((6,), 0)}
 
 
 def test_handler_stable_sort_keeps_arrival_order_of_ties():
     handle = _handler(_recording_fold, ["event_id"], order=("ts",))
     tied = _events([3, 1, 2]).assign(ts=T0)
-    (out,) = list(handle((7,), iter([tied]), FakeState()))
+    out = _run(handle, [tied], FakeState())
     assert out["event_id"].tolist() == [3, 1, 2]
 
 
 def test_handler_empty_order_leaves_rows_unsorted():
     handle = _handler(_recording_fold, ["event_id"], order=())
-    (out,) = list(handle((7,), iter([_events([2, 0, 1])]), FakeState()))
+    out = _run(handle, [_events([2, 0, 1])], FakeState())
     assert out["event_id"].tolist() == [2, 0, 1]
 
 
@@ -262,7 +309,7 @@ def test_handler_passes_nulls_as_none_and_plain_tuples():
     handle = _handler(fold, ["event_id", "ts", "value"])
     pdf = _events([0, 1], values=[np.nan, 2.5])
     pdf.loc[1, "ts"] = pd.NaT
-    out = list(handle((7,), iter([pdf]), FakeState()))
+    out = list(handle((3,), iter([pdf]), FakeState()))
     assert seen == [(0, T0, None), (1, None, 2.5)]
     assert all(type(r) is tuple for r in seen)
     assert out[0].empty and list(out[0].columns) == [
@@ -270,34 +317,119 @@ def test_handler_passes_nulls_as_none_and_plain_tuples():
     ]
 
 
-def test_handler_reads_init_then_state_and_arms_timeout():
+def test_handler_reads_init_then_its_book_entry():
     handle = _handler(_recording_fold, ["event_id"], init=(100,))
-    state = FakeState()
-    list(handle((7,), iter([_events([0, 1])]), state))
-    assert state.value == (102,) and state.timeout_ms == 60 * 60 * 1000
-    list(handle((7,), iter([_events([2])]), state))
-    assert state.value == (103,)
+    state = FakeState(now_ms=5)
+    _run(handle, [_events([0, 1])], state)
+    assert _book(state) == {(7,): ((102,), 5)}
+    state.now_ms = 9
+    _run(handle, [_events([2])], state)
+    assert _book(state) == {(7,): ((103,), 9)}
 
 
-def test_handler_without_timeout_never_arms_one():
+def test_handler_without_timeout_never_expires():
     handle = _handler(_recording_fold, ["event_id"], timeout_minutes=None)
     state = FakeState()
-    list(handle((7,), iter([_events([0])]), state))
-    assert state.timeout_ms is None and state.value == (1,)
+    _run(handle, [_events([0])], state)
+    state.now_ms = 10 * 365 * 24 * 60 * MINUTE_MS
+    _run(handle, [_events([1], user=8)], state)
+    assert _book(state) == {(7,): ((1,), 0), (8,): ((1,), state.now_ms)}
+    _run(handle, [_events([2])], state)
+    assert _book(state)[(7,)] == ((2,), state.now_ms)
 
 
 def test_handler_timeout_evicts_state_and_emits_nothing():
     calls = []
 
     def fold(state, rows):
-        calls.append(state)
-        return state, []
+        rows = list(rows)
+        calls.append((state, rows))
+        return state, rows
 
     handle = _handler(fold, ["event_id"])
-    state = FakeState(value=(5,), timed_out=True)
-    assert list(handle((7,), iter([_events([])]), state)) == []
-    assert state.removed and not state.exists
-    assert calls == [] and state.timeout_ms is None
+    # key 7 last had rows 61 minutes ago; only key 8 has rows now
+    state = FakeState(value=_stored({(7,): ((5,), 0)}), now_ms=61 * MINUTE_MS)
+    out = _run(handle, [_events([0], user=8)], state)
+    assert out["user_id"].tolist() == [8]
+    assert _book(state) == {(8,): ((0,), 61 * MINUTE_MS)}
+    assert calls == [((0,), [(0,)])]
+
+
+def test_handler_key_past_timeout_restarts_from_init():
+    handle = _handler(_recording_fold, ["event_id"], init=(100,))
+    state = FakeState(
+        value=_stored({(7,): ((5,), 0), (8,): ((6,), 0)}), now_ms=60 * MINUTE_MS
+    )
+    # idle exactly timeout_minutes: not expired yet
+    _run(handle, [_events([0])], state)
+    assert _book(state) == {(7,): ((6,), 60 * MINUTE_MS), (8,): ((6,), 0)}
+    # one millisecond later key 8 is past it: it folds from init
+    state.now_ms += 1
+    out = _run(handle, [_events([1], user=8)], state)
+    assert out["event_id"].tolist() == [1]
+    assert _book(state) == {
+        (7,): ((6,), 60 * MINUTE_MS), (8,): ((101,), 60 * MINUTE_MS + 1),
+    }
+
+
+def test_handler_folds_interleaved_keys_each_on_their_own():
+    """Keys sharing a bucket, their rows shuffled together over two Arrow
+    chunks: each key's output rows and book entry equal its own fold."""
+    fold = partial(R._zscore_fold, window_rows=5, threshold=1.5)
+    rng = np.random.default_rng(0)
+    users = [3, 11, 2**60 + 1, 7]
+    frames = [
+        _events(range(12), np.round(rng.normal(10.0, 3.0, 12), 2), user=u)
+        for u in users
+    ]
+    shuffled = pd.concat(frames, ignore_index=True).sample(frac=1.0, random_state=1)
+    cols = ["event_id", "ts", "value"]
+    out_cols = ["user_id", *cols, "zscore", "is_anomaly"]
+    handle = _handler(fold, cols, init=([],), out_cols=out_cols)
+    state = FakeState(now_ms=42)
+    out = _run(handle, [shuffled.iloc[:20], shuffled.iloc[20:]], state)
+
+    assert out["user_id"].dtype == np.int64
+    book = _book(state)
+    for u, f in zip(users, frames):
+        want_state, want = fold(
+            ([],), f[cols].astype(object).itertuples(index=False, name=None)
+        )
+        assert book[(u,)] == (want_state, 42)
+        pd.testing.assert_frame_equal(
+            out[out["user_id"] == u].reset_index(drop=True),
+            pd.DataFrame([(u, *r) for r in want], columns=out_cols),
+        )
+    assert len(out) == 48 and out["is_anomaly"].sum() > 0
+
+
+def test_handler_folds_null_keys_as_none():
+    """Rows with a NULL in any key column share bucket -1, where an
+    integer key column may arrive as float64 with NaN: a NULL key is
+    ``None`` in the book and NULL in the output."""
+    handle = _handler(_recording_fold, ["event_id"], keys=("user_id", "region"))
+    pdf = _events([0, 1, 2, 3]).assign(
+        user_id=[np.nan, np.nan, 5.0, np.nan], region=["a", None, None, "a"]
+    )
+    state = FakeState()
+    out = _run(handle, [pdf], state)
+    assert out["event_id"].tolist() == [2, 0, 3, 1]
+    assert out["user_id"].isna().tolist() == [False, True, True, True]
+    assert out["region"].tolist() == [None, "a", "a", None]
+    assert _book(state) == {
+        (5.0, None): ((1,), 0), (None, "a"): ((2,), 0), (None, None): ((1,), 0),
+    }
+    _run(handle, [_events([4]).assign(user_id=np.nan, region="a")], state)
+    assert _book(state)[(None, "a")] == ((3,), 0)
+
+
+def test_handler_refuses_a_book_of_another_bucket_count():
+    """A query resumed with another ``spark.sql.shuffle.partitions``
+    would hash its keys to other buckets and silently restart them."""
+    handle = _handler(_recording_fold, ["event_id"])
+    state = FakeState(value=_stored({(7,): ((5,), 0)}, buckets=2))
+    with pytest.raises(ValueError, match="holds 2 key buckets but this query runs 8"):
+        _run(handle, [_events([0])], state)
 
 
 RUNNER = inspect.signature(R._keyed_fold)
@@ -311,9 +443,10 @@ def _ddl_names(schema):
 
 
 def _twin_handler(monkeypatch, twin, *args, **kwargs):
-    """The per-key handler ``twin`` runs on, built from the arguments it
-    passes to ``_keyed_fold`` (captured by a stand-in: no Spark plan is
-    made, so only twins whose schemas need no input DataFrame qualify)."""
+    """The per-bucket handler ``twin`` runs on, built from the arguments
+    it passes to ``_keyed_fold`` (captured by a stand-in: no Spark plan
+    is made, so only twins whose schemas need no input DataFrame
+    qualify)."""
     captured = {}
 
     def record(events, fold, **kw):
@@ -325,26 +458,27 @@ def _twin_handler(monkeypatch, twin, *args, **kwargs):
     twin(None, *args, **kwargs)
     return R._fold_handler(
         captured["fold"],
+        keys=captured["keys"],
         cols=captured["cols"],
         order=captured["order"],
         init=captured["init"],
         out_cols=_ddl_names(captured["out_schema"]),
         timeout_minutes=captured["timeout_minutes"],
+        buckets=BUCKETS,
     )
 
 
 def test_streaming_sequences_evicts_idle_keys(monkeypatch):
     handle = _twin_handler(monkeypatch, S.streaming_sequences, seq_len=3)
     state = FakeState()
-    (out,) = list(handle((7,), iter([_events([0, 1, 2, 3])]), state))
-    assert len(out) == 2 and state.timeout_ms == 60 * 60 * 1000
-    assert state.value[0] == [2.0, 3.0]
-    # the processing-time timeout fires for the idle key: the state is
-    # removed and nothing is emitted (it used to be re-saved and re-armed)
-    state.hasTimedOut = True
-    state.timeout_ms = None
-    assert list(handle((7,), iter([_events([])]), state)) == []
-    assert state.removed and state.timeout_ms is None
+    out = _run(handle, [_events([0, 1, 2, 3])], state)
+    assert len(out) == 2
+    assert _book(state)[(7,)][0][0] == [2.0, 3.0]
+    # past the 60-minute default the idle key leaves the book the next
+    # time its bucket runs (it used to be re-saved forever)
+    state.now_ms = 61 * MINUTE_MS
+    assert _run(handle, [_events([4], user=8)], state).empty
+    assert list(_book(state)) == [(8,)]
 
 
 def _zscore_reference(values, w, threshold):
@@ -365,7 +499,7 @@ def test_zscore_null_then_spike_is_still_scored_and_flagged(monkeypatch):
     values[10] = np.nan
     values[30] = 60.0
     handle = _twin_handler(monkeypatch, R.streaming_zscore_flags, window_rows=24)
-    (out,) = list(handle((7,), iter([_events(range(40), values)]), FakeState()))
+    out = _run(handle, [_events(range(40), values)], FakeState())
 
     z_ref, flag_ref = _zscore_reference(values, 24, 3.0)
     assert out["zscore"].notna().sum() == z_ref.notna().sum() == 37
@@ -381,13 +515,13 @@ def test_zscore_null_then_spike_is_still_scored_and_flagged(monkeypatch):
 def test_ewma_and_hampel_null_keeps_its_slot(monkeypatch):
     pdf = _events(range(6), [1.0, 2.0, np.nan, 4.0, 5.0, 100.0])
     ewma = _twin_handler(monkeypatch, R.streaming_ewma_deviation, window_rows=3)
-    (out,) = list(ewma((7,), iter([pdf]), FakeState()))
+    out = _run(ewma, [pdf], FakeState())
     # row 5's frame is rows 2..4 = (NULL, 4, 5): lag weights 1 and 0.5
     # on 5 and 4, nothing for the NULL
     assert out.loc[5, "ewma"] == pytest.approx((5.0 + 0.5 * 4.0) / 1.5)
     assert out.loc[5, "ewma_alarm"] == 1
     hampel = _twin_handler(monkeypatch, R.streaming_hampel_flags, window_rows=3)
-    (out,) = list(hampel((7,), iter([pdf]), FakeState()))
+    out = _run(hampel, [pdf], FakeState())
     assert out.loc[5, "hampel_median"] == 4.5
     assert out.loc[5, "hampel_flag"] == 1
 
@@ -395,14 +529,14 @@ def test_ewma_and_hampel_null_keeps_its_slot(monkeypatch):
 def test_episode_and_throttle_accept_null_flags(monkeypatch):
     pdf = _events(range(4)).assign(is_alert=[1.0, np.nan, 1.0, 0.0])
     episodes = _twin_handler(monkeypatch, R.streaming_episode_assign)
-    (out,) = list(episodes((7,), iter([pdf]), FakeState()))
+    out = _run(episodes, [pdf], FakeState())
     assert out["episode_id"].iloc[[0, 2]].tolist() == [1, 1]
     assert out["episode_id"].iloc[[1, 3]].isna().all()
     assert pd.isna(out["is_alert"].iloc[1])
     throttle = _twin_handler(
         monkeypatch, R.streaming_throttle_alerts, flag_col="is_alert"
     )
-    (out,) = list(throttle((7,), iter([pdf]), FakeState()))
+    out = _run(throttle, [pdf], FakeState())
     assert out["is_alert"].tolist() == [1, 0, 1, 0]
     assert out["alert_delivered"].tolist() == [1, 0, 1, 0]
 
@@ -412,18 +546,18 @@ def test_flag_and_quantile_names_are_quoted(monkeypatch):
     throttle = _twin_handler(
         monkeypatch, R.streaming_throttle_alerts, flag_col="my `flag`"
     )
-    (out,) = list(throttle((7,), iter([pdf]), FakeState()))
+    out = _run(throttle, [pdf], FakeState())
     assert list(out.columns) == ["user_id", "event_id", "ts", "my `flag`", "alert_delivered"]
     assert out["alert_delivered"].tolist() == [1, 0, 0]
     quantiles = _twin_handler(monkeypatch, R.streaming_quantiles, quantiles=(0.5,))
-    (out,) = list(quantiles((7,), iter([_events(range(3))]), FakeState()))
+    out = _run(quantiles, [_events(range(3))], FakeState())
     assert list(out.columns)[-1] == "q0_5"
 
 
 def test_sequences_null_is_a_null_element(monkeypatch):
     pdf = _events(range(3), [1.0, np.nan, 3.0])
     handle = _twin_handler(monkeypatch, S.streaming_sequences, seq_len=3)
-    (out,) = list(handle((7,), iter([pdf]), FakeState()))
+    out = _run(handle, [pdf], FakeState())
     assert out["seq"].tolist() == [[1.0, None, 3.0]]
 
 
