@@ -75,6 +75,7 @@ import math
 import operator
 import os
 import pickle
+import zlib
 from collections.abc import Callable, Iterable, Sequence
 from functools import partial, reduce
 from itertools import groupby
@@ -86,6 +87,17 @@ from pyspark.sql import functions as F
 from ..functions.sqltext import ddl, ident
 
 
+def _replay_dir(sf_dir: str, table: str) -> str:
+    """The scratch directory that :func:`replay_table_stream` watches for
+    ``table`` of ``sf_dir``: the same in every process (a CRC-32 of the
+    path, not the per-interpreter salted ``hash``), so a query resumed
+    from its checkpoint in a new process watches the files it read."""
+    import tempfile
+
+    digest = zlib.crc32(os.fsencode(sf_dir))
+    return os.path.join(tempfile.gettempdir(), f"{table}_stream_{digest:08x}")
+
+
 def replay_table_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -95,15 +107,12 @@ def replay_table_stream(
     """Replay any testdata table as a bounded file stream.
 
     The file stream source requires a directory, so the single parquet
-    file is symlinked into a scratch dir. No type fixing — callers that
-    need the events ns-timestamp rule use :func:`replay_events_stream`.
+    file is symlinked into a scratch dir, named by :func:`_replay_dir`.
+    No type fixing — callers that need the events ns-timestamp rule use
+    :func:`replay_events_stream`.
     """
-    import tempfile
-
     src = os.path.join(sf_dir, f"{table}.parquet")
-    stream_dir = os.path.join(
-        tempfile.gettempdir(), f"{table}_stream_{abs(hash(sf_dir)) % 10**8}"
-    )
+    stream_dir = _replay_dir(sf_dir, table)
     os.makedirs(stream_dir, exist_ok=True)
     link = os.path.join(stream_dir, f"{table}.parquet")
     if not os.path.exists(link):

@@ -6,6 +6,7 @@ replayed — the parity contract that makes the streaming tier trustworthy.
 from __future__ import annotations
 
 import math
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -1861,8 +1862,9 @@ class TestStreamingKeyedRunner:
     micro-batch hands them to Python in several Arrow chunks, a NULL
     value does not switch the z-score twin off for a window, many keys
     sharing a bucket each fold on their own, NULL keys do not cost the
-    other keys their integer type, and a checkpoint resumed with
-    another bucket count is refused."""
+    other keys their integer type, a checkpoint resumed with the same
+    bucket count keeps every key's window, and one resumed with another
+    bucket count is refused."""
 
     SCHEMA = "user_id bigint, event_id bigint, ts timestamp, value double"
 
@@ -1983,45 +1985,89 @@ class TestStreamingKeyedRunner:
         }
         assert got == {eid: u for u, eid, _, _ in rows}
 
-    def test_resume_with_other_partition_count_is_refused(self, spark, tmp_path):
-        """A checkpoint written with 2 key buckets, resumed with 3: the
-        keys would hash to other buckets and restart silently, so the
-        state function refuses the book instead of emitting wrong rows."""
+    def _land(self, spark, src, hours, value):
         import datetime as dt
 
-        from pyspark.errors import StreamingQueryException
+        B = dt.datetime(2024, 1, 1)
+        rows = [
+            (u, u * 1000 + j, B + dt.timedelta(hours=j), value(u, j))
+            for u in range(20)
+            for j in hours
+        ]
+        spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        return rows
 
+    def _drain_alerts(self, spark, src, tmp_path):
         from amonaly_detection_in_time_series_data_spark.streaming.sinks import (
             write_anomaly_alerts,
         )
 
-        B = dt.datetime(2024, 1, 1)
-        src, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+        stream = spark.readStream.schema(self.SCHEMA).parquet(src)
+        q = write_anomaly_alerts(
+            streaming_zscore_flags(stream, threshold=1.0),
+            str(tmp_path / "alerts"), str(tmp_path / "ckpt"),
+        )
+        try:
+            assert q.awaitTermination(240), "the alert query did not drain"
+        finally:
+            q.stop()
 
-        def land(hours):
-            rows = [
-                (u, u * 1000 + j, B + dt.timedelta(hours=j), float(j % 5))
-                for u in range(20)
-                for j in hours
-            ]
-            spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
+    def test_resume_from_own_checkpoint_keeps_windows(self, spark, tmp_path):
+        """Hours 0-9 drained, hours 10-19 landed and drained again from
+        the same checkpoint with the same partition count: the second
+        run loads every bucket's book back (its state delta and checksum
+        companion, written through the session's checkpoint manager),
+        so the alerts of both runs equal the batch rolling_zscore flags
+        over all 20 hours, each exactly once."""
+        import random
 
-        def drain():
-            stream = spark.readStream.schema(self.SCHEMA).parquet(src)
-            q = write_anomaly_alerts(
-                streaming_zscore_flags(stream, threshold=1.0),
-                str(tmp_path / "alerts"), ckpt,
-            )
-            try:
-                q.awaitTermination(240)
-            finally:
-                q.stop()
+        rng = random.Random(31)
+        src = str(tmp_path / "in")
+        vals = {(u, j): rng.randint(0, 1000) / 100 for u in range(20) for j in range(20)}
+        value = lambda u, j: vals[u, j]  # noqa: E731
 
-        land(range(0, 10))
+        drain = partial(self._drain_alerts, spark, src, tmp_path)
+        rows = self._land(spark, src, range(0, 10), value)
         self._with_partitions(spark, 2, drain)
-        land(range(10, 20))
+        rows += self._land(spark, src, range(10, 20), value)
+        self._with_partitions(spark, 2, drain)
+
+        def flagged(rs):
+            return {
+                r["event_id"]
+                for r in rolling_zscore(
+                    spark.createDataFrame(rs, self.SCHEMA), "value", 24,
+                    ["user_id"], ["ts", "event_id"], 1.0,
+                ).filter("is_anomaly = 1").collect()
+            }
+
+        want = flagged(rows)
+        # a twin that lost its books would score hours 10-19 from empty
+        # windows, which flags another set
+        late = [r for r in rows if r[2].hour >= 10]
+        assert flagged(late) != {e for e in want if e % 1000 >= 10}
+        got = [
+            r["event_id"]
+            for r in spark.read.parquet(str(tmp_path / "alerts")).collect()
+        ]
+        assert len(got) == len(set(got))
+        assert set(got) == want
+
+    def test_resume_with_other_partition_count_is_refused(self, spark, tmp_path):
+        """A checkpoint written with 2 key buckets, resumed with 3: the
+        keys would hash to other buckets and restart silently, so the
+        state function refuses the book instead of emitting wrong rows."""
+        from pyspark.errors import StreamingQueryException
+
+        src = str(tmp_path / "in")
+        drain = partial(self._drain_alerts, spark, src, tmp_path)
+        value = lambda u, j: float(j % 5)  # noqa: E731
+
+        self._land(spark, src, range(0, 10), value)
+        self._with_partitions(spark, 2, drain)
+        self._land(spark, src, range(10, 20), value)
         with pytest.raises(
             StreamingQueryException, match="holds 2 key buckets but this query runs 3"
         ):

@@ -217,3 +217,22 @@ class TestSessionDebuggingDefault:
             spark.range(1).select(F.col("no_such_column"))
         with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
             spark.range(1).select(F.lit(1) / F.lit(0)).collect()
+
+
+class TestSessionCheckpointManagerDefault:
+    """Streams checkpoint through Spark's FileSystem-based manager (the
+    session module doc says why), and the class it names exists in the
+    running JVM: a missing class would fail every stream at start."""
+
+    NAME = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+    def test_hadoop_conf_names_the_filesystem_manager(self, spark):
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        assert conf.get("spark.sql.streaming.checkpointFileManagerClass") == self.NAME
+
+    def test_class_resolves_in_the_jvm(self, spark):
+        cls = spark._jvm.java.lang.Class.forName(self.NAME)
+        assert cls.getName() == self.NAME

@@ -709,3 +709,32 @@ def test_batch_faces_share_the_null_check():
         kalman_numpy(y, q_var=0.5, r_var=2.0)
     with pytest.raises(ValueError, match="adwin_changes: null values in series"):
         adwin_numpy(y, 0.002, 5)
+
+
+def test_replay_dir_is_the_same_in_every_interpreter():
+    """Two interpreters with different string-hash salts name the same
+    replay directory, so a query resumed from its checkpoint in a new
+    process watches the files it has already read."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from amonaly_detection_in_time_series_data_spark.streaming.rolling "
+        "import _replay_dir\n"
+        "print(_replay_dir('/data/sf0.01', 'events'), hash('/data/sf0.01'))"
+    )
+
+    def run(seed):
+        env = dict(os.environ, PYTHONHASHSEED=seed)
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=repo, env=env,
+            capture_output=True, text=True, check=True,
+        )
+        return out.stdout.split()
+
+    (dir_a, hash_a), (dir_b, hash_b) = run("1"), run("2")
+    assert hash_a != hash_b  # the salts differ, so str hashes do too
+    assert dir_a == dir_b
+    assert os.path.basename(dir_a).startswith("events_stream_")
