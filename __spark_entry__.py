@@ -1073,12 +1073,12 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact Jaccard) — it shares no algorithmic structure with the
     # prefix-filter plan, so agreement proves the filters are lossless,
     # not merely replayed.
-    # pin=False here (r12): declared queries are PLANS ONLY — no
-    # side-effecting localCheckpoint job inside queries(). pin=True
-    # stays the documented knob for long sessions that re-consume the
-    # shingled table (see prefix_jaccard_join's docstring).
+    # The inline join builds a plan and starts no job; a long session
+    # that re-joins the same corpus persists the ordered table once
+    # (ordered_tokens_build + prefix_jaccard_join_indexed, the
+    # ngram_jaccard_indexed query).
     pp = prefix_jaccard_join(
-        docs, "text", "doc_id", threshold_num=1, threshold_den=2, pin=False
+        docs, "text", "doc_id", threshold_num=1, threshold_den=2
     )
     pp_rows = pp.select(
         F.lit("ppjoin").alias("tier"),

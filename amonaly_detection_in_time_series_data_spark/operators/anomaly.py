@@ -1169,13 +1169,12 @@ def anomaly_battery(
     ph_lam: float = 10.0,
     tukey_k: float = 1.5,
     unit_digits: int = 2,
-    trend: bool = True,
     trend_threshold: float = 3.0,
 ) -> DataFrame:
     """The full model-free detector battery in ONE fused plan:
     :func:`rolling_zscore` + :func:`page_hinkley` +
-    :func:`ewma_deviation` + :func:`tukey_robust_flags` (+
-    :func:`trend_ols_flags` when ``trend``), value-identical to the
+    :func:`ewma_deviation` + :func:`tukey_robust_flags` +
+    :func:`trend_ols_flags`, value-identical to the
     sequential composition (differential-tested) but built in the
     MINIMUM number of analysis layers, from the same SQL-text builders
     the detectors ship.
@@ -1227,18 +1226,16 @@ def anomaly_battery(
         {**ph[2]},
         {**ph[3]},
     ]
-    if trend:
-        layers[0]["__x"] = f"cast(row_number() {over(keys, order_cols)} - 1 as bigint)"
+    layers[0]["__x"] = f"cast(row_number() {over(keys, order_cols)} - 1 as bigint)"
     outputs = {
         **ph[4],
         **tukey_fence_sql(target, tukey_k, unit_digits),
         **robust_z_sql(target, 3.5, unit_digits),
-    }
-    if trend:
-        outputs.update(trend_flag_sql(
+        **trend_flag_sql(
             f"cast({unit_snap(col_ref(target), scale)} as double)",
             "cast(__x as double)", trend_threshold, 6, scale,
-        ))
+        ),
+    }
     # FUSED stats (r14): the per-key aggregates ride the main (key,
     # order) exchange as partition-window aggregates instead of
     # aggregate + broadcast-join subtrees, which re-scanned the source 3
@@ -1253,11 +1250,10 @@ def anomaly_battery(
     layers[1].update(order_stats_sql("__pcts", unit_digits))
     layers[2].update(mad[0])
     layers[3].update(mad[1])
-    if trend:
-        fit = ols_fit_sql()
-        layers[1].update(ols_sums_sql("__x", "__m", wpart))
-        layers[2].update(fit[0])
-        layers[3].update(fit[1])
+    fit = ols_fit_sql()
+    layers[1].update(ols_sums_sql("__x", "__m", wpart))
+    layers[2].update(fit[0])
+    layers[3].update(fit[1])
     chain, prev = [], "{df}"
     for i, layer in enumerate(layers, 1):
         chain.append(f"__l{i} AS (SELECT *, {', '.join(aliased(layer))} FROM {prev})")

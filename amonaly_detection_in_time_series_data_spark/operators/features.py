@@ -117,7 +117,6 @@ def featurize(
     lags: Sequence[int] = (1, 2, 3, 24, 48, 168),
     windows: Sequence[int] = (3, 6, 12, 24),
     aggs: Sequence[str] = ("mean", "std", "min", "max"),
-    with_time_features: bool = True,
     ts_col: str = "ts",
     dropna: bool = True,
 ) -> DataFrame:
@@ -135,13 +134,12 @@ def featurize(
     exprs = lag_sql(target, lags, key_cols, order_cols)
     exprs.update(rolling_sql(target, windows, aggs, key_cols, order_cols))
     out = df
-    if with_time_features:
-        feats = time_feature_sql(ts_col)
-        read = {c.lower() for c in (target, *key_cols, *order_cols)}
-        if read & set(TIME_FEATURES):
-            out = out.selectExpr(*with_columns(out.columns, feats))
-        else:
-            exprs = {**feats, **exprs}
+    feats = time_feature_sql(ts_col)
+    read = {c.lower() for c in (target, *key_cols, *order_cols)}
+    if read & set(TIME_FEATURES):
+        out = out.selectExpr(*with_columns(out.columns, feats))
+    else:
+        exprs = {**feats, **exprs}
     out = out.selectExpr(*with_columns(out.columns, exprs))
     if dropna:
         out = out.where(complete_rows_sql(out.schema))

@@ -55,9 +55,9 @@ from amonaly_detection_in_time_series_data_spark.operators.similarity import (
     _ordered_under_index,
     _read_artifact_if_exists,
     _read_gram_df_index,
+    _refuse_compat,
     _refuse_null_gids,
     band_buckets,
-    gram_ids_build,
     gram_ids_update,
     minhash_jaccard_est,
     minhash_signatures,
@@ -361,14 +361,14 @@ def similarity_index_update(
     drifted-index refusal can never strand a half-updated pair.
 
     Layout: :func:`similarity_index_paths`. Bootstraps all four
-    artifacts from the first batch (ids-native: the tokens rows carry
-    ``toks_id`` and consumers get the string-free exact-id tail); a
-    store bootstrapped before the id dictionary existed keeps working
-    as a legacy hash-tail store — its updates never mix markers.
-    Per-batch fold order with ids: dictionary first (append-only,
-    naturally idempotent AND crash-safe mid-append — partially
-    appended ids are valid assignments and the retry anti-join
-    assigns only the remainder), then tokens, then the df fold.
+    artifacts from the first batch: the tokens rows carry ``toks_id``
+    and consumers get the string-free exact-id tail. A store without a
+    gram-id dictionary (a hash-tail store from before the dictionary
+    existed) is refused before any write: rebuild the store.
+    Per-batch fold order: dictionary first (append-only, naturally
+    idempotent AND crash-safe mid-append — partially appended ids are
+    valid assignments and the retry anti-join assigns only the
+    remainder), then tokens, then the df fold.
 
     **Idempotency under foreachBatch redelivery** (caller owns
     monotone ``batch_id``, the store convention): the EXACTNESS-
@@ -396,11 +396,11 @@ def similarity_index_update(
     spark = batch.sparkSession
     df_p, ord_p, ids_p, tok_p = similarity_index_paths(base_path)
     compat = _gram_df_compat_tag(shingle_n)
-    order = _read_artifact_if_exists(spark, ord_p)
 
-    if order is None:
-        # ---- bootstrap: live index, frozen order snapshot, id
-        # dictionary, tokens ----
+    if _read_artifact_if_exists(spark, ord_p) is None:
+        # ---- bootstrap: the live index and its frozen order snapshot;
+        # the dictionary and the tokens follow below, exactly as for a
+        # retry of this batch that crashed before its tokens write ----
         merged = _gram_df_merged(
             batch, text_col, id_col, shingle_n
         ).withColumn("compat", F.lit(compat))
@@ -413,22 +413,11 @@ def similarity_index_update(
         spark.read.parquet(df_p).drop("last_batch").write.mode(
             "overwrite"
         ).parquet(ord_p)
-        idx = _read_gram_df_index(spark, ord_p, shingle_n)
-        ids = gram_ids_build(batch, ids_p, text_col, id_col, shingle_n)
-        _write_tokens_partition(
-            batch, idx, tok_p, batch_id, text_col, id_col, shingle_n,
-            ids=ids,
-        )
-        return
 
     # ---- validate EVERYTHING before any write (atomic refusal) ----
     idx = _read_gram_df_index(spark, ord_p, shingle_n)  # compat check
-    # a store bootstrapped before the id dictionary existed stays a
-    # legacy (hash-tail) store — its tokens tag lacks ``:ids`` and
-    # every update keeps matching it; new bootstraps are ids-native
-    with_ids = _read_artifact_if_exists(spark, ids_p) is not None
     tag = _ord_tok_tag(
-        shingle_n, _gram_index_fingerprint(idx), with_ids=with_ids
+        shingle_n, _gram_index_fingerprint(idx), with_ids=True
     )
     live = _read_gram_df_index(spark, df_p, shingle_n)  # compat check
     last_applied = None
@@ -438,9 +427,9 @@ def similarity_index_update(
             last_applied = int(head[0]["last_batch"])
     toks_old = _read_artifact_if_exists(spark, tok_p)
     if toks_old is None:
-        # crash window between the bootstrap's order-snapshot write and
-        # its tokens write: completable iff THIS is the same batch
-        # retrying (the df fold already holds its counts)
+        # the bootstrap, or its crash window between the order-snapshot
+        # write and the tokens write: completable iff THIS is the same
+        # batch (the df fold already holds its counts)
         if last_applied != int(batch_id):
             raise ValueError(
                 f"similarity store at {base_path!r} has an order "
@@ -449,45 +438,29 @@ def similarity_index_update(
                 f"is batch {int(batch_id)}) — the store is "
                 "inconsistent; rebuild it from the corpus"
             )
-        ids = (
-            gram_ids_update(
-                spark, ids_p, batch, text_col, id_col, shingle_n
-            )
-            if with_ids
-            else gram_ids_build(batch, ids_p, text_col, id_col, shingle_n)
-        )
-        _write_tokens_partition(
-            batch, idx, tok_p, batch_id, text_col, id_col, shingle_n,
-            tag=_ord_tok_tag(
-                shingle_n, _gram_index_fingerprint(idx), with_ids=True
-            ),
-            ids=ids,
-        )
-        return
-    head = toks_old.select("compat").limit(1).collect()
-    if head and head[0]["compat"] != tag:
+    elif _read_artifact_if_exists(spark, ids_p) is None:
         raise ValueError(
-            f"ordered-tokens artifact at {tok_p!r} has compat tag "
-            f"{head[0]['compat']!r}, but the frozen order snapshot at "
-            f"{ord_p!r} yields {tag!r} — the order drifted (or the "
-            ":ids marker differs: a gram_ids dir appeared beside a "
-            "legacy artifact, or vice versa); REFUSING before any "
+            f"similarity store at {base_path!r} has a tokens artifact "
+            f"but no gram-id dictionary at {ids_p!r} (a hash-tail "
+            "store, which is no longer updated); REFUSING before any "
             "write (no artifact was touched); rebuild the store"
+        )
+    else:
+        _refuse_compat(
+            toks_old, "ordered-tokens artifact", tok_p, tag,
+            f"the frozen order snapshot at {ord_p!r} drifted (or the "
+            "tokens lack the :ids marker); REFUSING before any write "
+            "(no artifact was touched); rebuild the store",
         )
 
     # ---- id dictionary fold FIRST (append-only, naturally idempotent
     # — a redelivered batch's anti-join finds nothing unseen), so the
     # tokens write below can never hit a dictionary gap ----
-    ids = (
-        gram_ids_update(spark, ids_p, batch, text_col, id_col, shingle_n)
-        if with_ids
-        else None
-    )
+    ids = gram_ids_update(spark, ids_p, batch, text_col, id_col, shingle_n)
 
     # ---- tokens: batch_id-partitioned dynamic overwrite (idempotent) --
     _write_tokens_partition(
-        batch, idx, tok_p, batch_id, text_col, id_col, shingle_n,
-        tag=tag, ids=ids,
+        batch, idx, ids, tok_p, batch_id, tag, text_col, id_col, shingle_n
     )
 
     # ---- live df fold, skipped on redelivery ----
@@ -510,27 +483,22 @@ def similarity_index_update(
 def _write_tokens_partition(
     batch: DataFrame,
     idx: DataFrame,
+    ids: DataFrame,
     tok_p: str,
     batch_id: int,
+    tag: str,
     text_col: str,
     id_col: str,
     shingle_n: int,
-    tag: str | None = None,
-    ids: DataFrame | None = None,
 ) -> None:
-    """One batch's ordered-token rows into its own ``batch_id``
-    partition (dynamic overwrite — redelivery rewrites, never
-    double-appends). With ``ids`` the rows carry ``toks_id``; a
-    dictionary gap is refused AFTER the write via a columnar
-    null-scan of just this batch's partition — the partition is
-    rewritable by the same redelivery contract, so the refusal
-    leaves the store repairable (extend the dictionary, re-run the
-    batch) and the df fold below it never runs on poisoned tokens."""
-    if tag is None:
-        tag = _ord_tok_tag(
-            shingle_n, _gram_index_fingerprint(idx),
-            with_ids=ids is not None,
-        )
+    """One batch's ordered-token rows, carrying ``toks_id`` from the
+    dictionary ``ids``, into its own ``batch_id`` partition (dynamic
+    overwrite — redelivery rewrites, never double-appends). A
+    dictionary gap is refused AFTER the write via a columnar null-scan
+    of just this batch's partition — the partition is rewritable by
+    the same redelivery contract, so the refusal leaves the store
+    repairable (extend the dictionary, re-run the batch) and the df
+    fold below it never runs on poisoned tokens."""
     toks = _ordered_under_index(
         batch, idx, text_col, id_col, shingle_n, ids=ids
     ).withColumn("compat", F.lit(tag))
@@ -541,11 +509,10 @@ def _write_tokens_partition(
         .option("partitionOverwriteMode", "dynamic")
         .parquet(tok_p)
     )
-    if ids is not None:
-        part = batch.sparkSession.read.parquet(
-            f"{tok_p}/batch_id={int(batch_id)}"
-        )
-        _refuse_null_gids(part, tok_p)
+    part = batch.sparkSession.read.parquet(
+        f"{tok_p}/batch_id={int(batch_id)}"
+    )
+    _refuse_null_gids(part, tok_p)
 
 
 def similarity_index_rebuild_df(

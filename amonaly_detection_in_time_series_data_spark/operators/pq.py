@@ -27,9 +27,10 @@ Division of labor (all engine-portable / deterministic):
   encoded codes. No corpus shuffle; ranking is the usual per-query
   top-k window over candidates.
 
-L2 ADC over L2-NORMALIZED vectors ranks identically to cosine
-(||a-b||² = 2-2cosθ), which keeps this tier comparable with the
-brute/LSH/IVF cosine tiers in recall tests.
+Every stage L2-normalizes its input vectors, and L2 ADC over
+normalized vectors ranks identically to cosine (||a-b||² = 2-2cosθ),
+which keeps this tier comparable with the brute/LSH/IVF cosine tiers in
+recall tests.
 """
 
 from __future__ import annotations
@@ -55,7 +56,6 @@ def pq_train(
     order_cols: list[str] | None = None,
     n_iter: int = 20,
     seed: int = 42,
-    normalize: bool = True,
 ) -> list[list[list[float]]]:
     """Train PQ codebooks: split the d-dim space into ``m`` subspaces and
     run seeded Lloyd k-means (k centroids each) on a bounded sample.
@@ -64,7 +64,7 @@ def pq_train(
     model is ~m*k*(d/m) doubles of driver state, broadcast as one
     literal by encode/search). Deterministic given ``order_cols``.
     """
-    v = l2_normalize(F.col(vec_col)) if normalize else F.col(vec_col)
+    v = l2_normalize(F.col(vec_col))
     s = df.select(v.alias("__v"))
     if order_cols:
         s = df.orderBy(*order_cols).select(v.alias("__v"))
@@ -102,7 +102,6 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str,
     code_col: str = "pq_code",
-    normalize: bool = True,
 ) -> DataFrame:
     """Encode vectors to ``array<int>`` PQ codes — map-only Catalyst.
 
@@ -112,7 +111,7 @@ def pq_encode(
     m = len(codebooks)
     k = len(codebooks[0])
     dsub = len(codebooks[0][0])
-    v = l2_normalize(F.col(vec_col)) if normalize else F.col(vec_col)
+    v = l2_normalize(F.col(vec_col))
     d = df.withColumn("__nv", v)
     nv = F.col("__nv")
 
@@ -156,7 +155,6 @@ def pq_topk(
     vec_col: str = "embedding",
     code_col: str = "pq_code",
     query_id_col: str = "query_id",
-    normalize: bool = True,
     rerank_with: DataFrame | None = None,
     shortlist: int = 50,
 ) -> DataFrame:
@@ -182,7 +180,7 @@ def pq_topk(
     kcent = len(codebooks[0])
     dsub = len(codebooks[0][0])
     cb = nested_double_literal(codebooks)
-    qv = l2_normalize(F.col(vec_col)) if normalize else F.col(vec_col)
+    qv = l2_normalize(F.col(vec_col))
     qn = queries.select(
         F.col(id_col).alias(query_id_col), qv.alias("__qv")
     )

@@ -1012,8 +1012,6 @@ def prefix_jaccard_join(
     threshold_num: int = 1,
     threshold_den: int = 2,
     shingle_n: int = 3,
-    positional: bool = True,
-    pin: bool = True,
     max_gram_df: int | None = None,
     return_excluded: bool = False,
     gram_order_path: str | None = None,
@@ -1090,31 +1088,30 @@ def prefix_jaccard_join(
     corpus lacks (r13 ADVICE — the prefix anti-join itself keeps the
     full index hot list, which is report-invisible and conservative).
 
-    Two measured engineering choices (sf0.1, 5k docs, 308k candidates):
+    The plan is purely declarative: building it starts no Spark job.
+    The interpreted-HOF lambdas in tokenize/shingles block Spark's
+    exchange reuse (canonicalization keeps lambda ids, the token_counts
+    finding), so the shingling+ordering lineage executes once per
+    consumer (prefix side a, side b, both verify sides). A session that
+    joins the same corpus repeatedly persists that table once instead —
+    :func:`ordered_tokens_build` + :func:`prefix_jaccard_join_indexed`
+    (SCALING §10a0e-idx) — rather than pinning it in executor memory
+    per call.
 
-    - ``pin=True`` localCheckpoints the ordered-gram table once — the
-      interpreted-HOF lambdas in tokenize/shingles block Spark's
-      exchange reuse (canonicalization keeps lambda ids, the
-      token_counts finding), so WITHOUT pinning the shingling+ordering
-      lineage executes once per consumer (prefix side a, side b, both
-      verify sides = 4-5x per action). The pinned table is
-      O(corpus) executor storage — exactly what a working
-      ReusedExchange would have held in shuffle files. Pass
-      ``pin=False`` for a purely declarative plan.
-    - verification is TWO-stage: a 64-bit-hash intersect screen first
-      (``xxhash64`` arrays — long comparisons, no string equality),
-      then the exact string intersect only on its survivors. A shared
-      gram always matches its own hash, so collisions between
-      NON-shared grams only inflate the screen's intersect; the one
-      theoretical exception is two DISTINCT shared grams colliding to
-      the same 64-bit hash — ``array_intersect`` deduplicates, so the
-      hash intersect would then undercount the string intersect by
-      one and a pair sitting exactly at the threshold could be
-      screened out (probability ~2^-64 per gram pair — astronomically
-      unlikely, but the screen is "lossless" only up to that caveat;
-      the string stage keeps every SURVIVOR exact). Measured: the
-      screen passes ~the true result set and cuts verify 4.2 s ->
-      1.8 s; end-to-end warm 6.1 s -> ~3.5 s.
+    Verification is TWO-stage: a 64-bit-hash intersect screen first
+    (``xxhash64`` arrays — long comparisons, no string equality), then
+    the exact string intersect only on its survivors. A shared gram
+    always matches its own hash, so collisions between NON-shared grams
+    only inflate the screen's intersect; the one theoretical exception
+    is two DISTINCT shared grams colliding to the same 64-bit hash —
+    ``array_intersect`` deduplicates, so the hash intersect would then
+    undercount the string intersect by one and a pair sitting exactly
+    at the threshold could be screened out (probability ~2^-64 per gram
+    pair — astronomically unlikely, but the screen is "lossless" only up
+    to that caveat; the string stage keeps every SURVIVOR exact).
+    Measured at sf0.1 (5k docs, 308k candidates) with the ordered table
+    pinned: the screen passes ~the true result set and cuts verify
+    4.2 s -> 1.8 s (SCALING §10a0d).
     """
     p, q = int(threshold_num), int(threshold_den)
     if not 0 < p <= q:
@@ -1200,8 +1197,6 @@ def prefix_jaccard_join(
         )
         .withColumn("toks_h", F.transform("toks", lambda t: F.xxhash64(t)))
     )
-    if pin:
-        ordered = ordered.localCheckpoint(eager=True)
     # prefix length |x| - ceil(p*|x|/q) + 1, pure integer arithmetic
     excluded = None
     hot = None
@@ -1224,7 +1219,7 @@ def prefix_jaccard_join(
             excluded = excluded.join(
                 exploded.select("gram").distinct(), "gram", "left_semi"
             )
-    pairs = _ppjoin_tail(ordered, p, q, positional, hot_grams=hot)
+    pairs = _ppjoin_tail(ordered, p, q, hot_grams=hot)
     if return_excluded:
         return pairs, excluded
     return pairs
@@ -1234,7 +1229,6 @@ def _ppjoin_tail(
     ordered: DataFrame,
     p: int,
     q: int,
-    positional: bool,
     hot_grams: DataFrame | None = None,
 ) -> DataFrame:
     """The order-agnostic back half of :func:`prefix_jaccard_join`:
@@ -1307,16 +1301,15 @@ def _ppjoin_tail(
         (F.lit(p) * (F.col("sz_a") + F.col("sz_b")) + F.lit(p + q - 1))
         / F.lit(p + q)
     )
-    if positional:
-        ubound = (
-            F.least(F.col("pos_a"), F.col("pos_b"))
-            - 1
-            + 1
-            + F.least(
-                F.col("sz_a") - F.col("pos_a"), F.col("sz_b") - F.col("pos_b")
-            )
+    ubound = (
+        F.least(F.col("pos_a"), F.col("pos_b"))
+        - 1
+        + 1
+        + F.least(
+            F.col("sz_a") - F.col("pos_a"), F.col("sz_b") - F.col("pos_b")
         )
-        cand = cand.filter(ubound >= alpha)
+    )
+    cand = cand.filter(ubound >= alpha)
     cand_ids = cand.select("id_a", "id_b").distinct()
     # stage 1: hash-intersect screen — inflate-only, so the >= filter
     # cannot drop a qualifying pair; longs compare ~an order of
@@ -1429,6 +1422,22 @@ def _read_artifact_if_exists(spark, path: str) -> DataFrame | None:
         raise
 
 
+def _refuse_compat(
+    artifact: DataFrame, kind: str, path: str, expected: str, why: str = ""
+) -> None:
+    """Refuse a persisted artifact whose ``compat`` tag is not
+    ``expected`` (an empty artifact carries no tag and passes). The
+    message names the artifact kind, its path, the tag found and the
+    tag expected, then ``why``: what the mismatch means and what to
+    rebuild. One bounded action: the first row's tag."""
+    head = artifact.select("compat").limit(1).collect()
+    if head and head[0]["compat"] != expected:
+        raise ValueError(
+            f"{kind} at {path!r} has compat tag {head[0]['compat']!r}, "
+            f"expected {expected!r}" + (f" — {why}" if why else "")
+        )
+
+
 def _read_gram_df_index(
     spark, index_path: str, shingle_n: int
 ) -> DataFrame:
@@ -1437,14 +1446,10 @@ def _read_gram_df_index(
     would describe a DIFFERENT gram universe (the signature-store
     compat-tag convention, operators/ingest.py)."""
     idx = spark.read.parquet(index_path)
-    expected = _gram_df_compat_tag(shingle_n)
-    head = idx.select("compat").limit(1).collect()
-    if head and head[0]["compat"] != expected:
-        raise ValueError(
-            f"gram-df index at {index_path!r} has compat tag "
-            f"{head[0]['compat']!r}, caller expects {expected!r} — "
-            "rebuild the index with the caller's shingle_n"
-        )
+    _refuse_compat(
+        idx, "gram-df index", index_path, _gram_df_compat_tag(shingle_n),
+        "rebuild the index with the caller's shingle_n",
+    )
     return idx
 
 
@@ -1513,13 +1518,12 @@ def ordered_tokens_build(
     """Persist the ORDERED-TOKENS table — the per-doc half of
     :func:`prefix_jaccard_join` — as a parquet artifact
     ``(id, sz, toks, toks_h, compat)``, sorted under the FROZEN gram
-    order at ``gram_order_path``. This is the materialization the
-    `pin=True` localCheckpoint provided, made durable: every consumer
-    of the join (prefix side a/b, hash screen a/b, verify a/b) scans
-    columnar parquet instead of re-executing the
-    tokenize→shingle→order lineage per consumer (measured ~6x per
-    action at 500k docs, SCALING §10a0e-idx), with NO executor-storage
-    residency and reuse ACROSS sessions.
+    order at ``gram_order_path``. This is how a session reuses the
+    join's ordered table: every consumer of the join (prefix side a/b,
+    hash screen a/b, verify a/b) scans columnar parquet instead of
+    re-executing the tokenize→shingle→order lineage per consumer
+    (measured ~6x per action at 500k docs, SCALING §10a0e-idx), with
+    NO executor-storage residency and reuse ACROSS sessions.
 
     Why the frozen index is REQUIRED (not optional like the join's own
     ``gram_order_path``): incremental appends
@@ -1647,17 +1651,13 @@ def ordered_tokens_update(
             text_col, id_col, shingle_n, gram_ids_path,
         )
     expected = _ord_tok_tag(shingle_n, fp, with_ids=ids is not None)
-    head = old.select("compat").limit(1).collect()
-    if head and head[0]["compat"] != expected:
-        raise ValueError(
-            f"ordered-tokens artifact at {tokens_path!r} has compat tag "
-            f"{head[0]['compat']!r}, but the index at "
-            f"{gram_order_path!r} yields {expected!r} — the gram order "
-            "drifted (or the :ids marker differs — with-ids and "
-            "without-ids batches can never mix); rebuild the artifact "
-            "(appending under a different total order would break "
-            "prefix-filter exactness)"
-        )
+    _refuse_compat(
+        old, "ordered-tokens artifact", tokens_path, expected,
+        f"the gram order at {gram_order_path!r} drifted (or the :ids "
+        "marker differs — with-ids and without-ids batches can never "
+        "mix); rebuild the artifact (appending under a different total "
+        "order would break prefix-filter exactness)",
+    )
     batch = _ordered_under_index(
         new_docs, idx, text_col, id_col, shingle_n, ids=ids
     ).withColumn("compat", F.lit(expected))
@@ -1675,8 +1675,6 @@ def prefix_jaccard_join_indexed(
     tokens_path: str,
     threshold_num: int = 1,
     threshold_den: int = 2,
-    positional: bool = True,
-    use_ids: bool | None = None,
     max_gram_df: int | None = None,
     gram_df_path: str | None = None,
     gram_ids_path: str | None = None,
@@ -1695,13 +1693,13 @@ def prefix_jaccard_join_indexed(
     theorem needs. The threshold is a QUERY-time parameter — one
     artifact serves any p/q.
 
-    ``use_ids`` (r14): ``None`` auto-detects — a with-ids artifact
+    The artifact's columns pick the tail: a with-ids artifact
     (``toks_id`` column, :func:`ordered_tokens_build` with
     ``gram_ids_path``) runs the string-free exact-id tail
-    (:func:`_ppjoin_tail_ids`); otherwise the hash tail.
-    ``positional`` applies to the hash tail only: the id tail's aggregated bound IS its positional
-    filter (strictly tighter, pure pruning either way — the result
-    set is identical by the exactness contract).
+    (:func:`_ppjoin_tail_ids`), whose aggregated bound is its positional
+    filter; one without ids runs the hash tail (:func:`_ppjoin_tail`) —
+    the route for a vocabulary past the int32 id bound (``_GID_MAX``).
+    The result set is identical either way, by the exactness contract.
 
     ``max_gram_df`` (r14): the skew-cap defense for the FLAGSHIP
     path — the same mega-bucket adversary (a high-df, prefix-resident
@@ -1750,21 +1748,13 @@ def prefix_jaccard_join_indexed(
                 "the hot list — a composed store's live index)"
             )
     art = spark.read.parquet(tokens_path)
-    if use_ids is None:
-        use_ids = "toks_id" in art.columns
     hot = None
     excluded = None
     if max_gram_df is not None:
         idx = _read_gram_df_index(spark, gram_df_path, shingle_n)
         hot = idx.filter(F.col("df") > max_gram_df)
         excluded = hot.select("gram", "df")
-    if use_ids:
-        if "toks_id" not in art.columns:
-            raise ValueError(
-                f"prefix_jaccard_join_indexed: use_ids=True but the "
-                f"artifact at {tokens_path!r} has no toks_id column — "
-                "rebuild it with gram_ids_path"
-            )
+    if "toks_id" in art.columns:
         hot_gids = None
         if hot is not None:
             if gram_ids_path is None:
@@ -1784,7 +1774,7 @@ def prefix_jaccard_join_indexed(
         )
     else:
         ordered = art.select("id", "sz", "toks", "toks_h")
-        pairs = _ppjoin_tail(ordered, p, q, positional, hot_grams=hot)
+        pairs = _ppjoin_tail(ordered, p, q, hot_grams=hot)
     if return_excluded:
         return pairs, excluded
     return pairs
@@ -1868,12 +1858,7 @@ def gram_df_index_update(
             new_docs, index_path, text_col, id_col, shingle_n
         )
     expected = _gram_df_compat_tag(shingle_n)
-    head = old.select("compat").limit(1).collect()
-    if head and head[0]["compat"] != expected:
-        raise ValueError(
-            f"gram-df index at {index_path!r} has compat tag "
-            f"{head[0]['compat']!r}, update expects {expected!r}"
-        )
+    _refuse_compat(old, "gram-df index", index_path, expected)
     batch = _gram_df_merged(new_docs, text_col, id_col, shingle_n)
     merged = (
         old.select("__h", "df", "gram")
@@ -2031,12 +2016,7 @@ def gram_ids_update(
             new_docs, ids_path, text_col, id_col, shingle_n
         )
     expected = _gram_ids_tag(shingle_n)
-    head = old.select("compat").limit(1).collect()
-    if head and head[0]["compat"] != expected:
-        raise ValueError(
-            f"gram-id dictionary at {ids_path!r} has compat tag "
-            f"{head[0]['compat']!r}, update expects {expected!r}"
-        )
+    _refuse_compat(old, "gram-id dictionary", ids_path, expected)
     new_grams = (
         _batch_vocab(new_docs, text_col, id_col, shingle_n)
         .join(old.select("gram"), "gram", "left_anti")
@@ -2066,13 +2046,9 @@ def _read_gram_ids(spark, ids_path: str, shingle_n: int) -> DataFrame:
     a dictionary built at a different shingle width describes a
     different gram universe)."""
     ids = spark.read.parquet(ids_path)
-    expected = _gram_ids_tag(shingle_n)
-    head = ids.select("compat").limit(1).collect()
-    if head and head[0]["compat"] != expected:
-        raise ValueError(
-            f"gram-id dictionary at {ids_path!r} has compat tag "
-            f"{head[0]['compat']!r}, caller expects {expected!r}"
-        )
+    _refuse_compat(
+        ids, "gram-id dictionary", ids_path, _gram_ids_tag(shingle_n)
+    )
     return ids
 
 

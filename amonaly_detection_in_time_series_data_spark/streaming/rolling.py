@@ -50,7 +50,11 @@ timeout is armed: a key whose last rows are older than
 ``timeout_minutes`` on the batch clock folds from ``init``, and expired
 keys leave the book when their bucket runs (a bucket none of whose keys
 returns keeps its book); ``None`` never expires. So no no-data batches
-run, and an ``availableNow`` query stops once drained. A checkpoint
+run, and an ``availableNow`` query stops once drained. Late rows: the
+twins drop nothing at the watermark. ``_keyed_fold`` runs with
+``NoTimeout``, and Spark removes rows behind the watermark only under
+``EventTimeTimeout``, so rows behind the watermark fold in arrival order
+with no signal; no late-row policy is defined yet. A checkpoint
 holds pickles, so resume only from one you trust; resuming with another
 ``spark.sql.shuffle.partitions`` raises a ``ValueError`` naming both
 counts, and a checkpoint of the earlier per-key runner cannot be

@@ -41,11 +41,10 @@ def _brute(rows: list[tuple[int, str]], p: int, q: int, n: int = 3):
     return out
 
 
-def _run(spark, rows, p, q, positional=True):
+def _run(spark, rows, p, q):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = prefix_jaccard_join(
-        df, "text", "doc_id", threshold_num=p, threshold_den=q,
-        positional=positional,
+        df, "text", "doc_id", threshold_num=p, threshold_den=q
     ).collect()
     return {
         (r["id_a"], r["id_b"]): (r["inter"], r["size_a"], r["size_b"])
@@ -87,15 +86,6 @@ class TestPrefixJaccardJoin:
         ]
         assert set(_run(spark, rows, 1, 3)) == {(1, 2)}
         assert set(_run(spark, rows, 34, 100)) == set()
-
-    def test_positional_filter_is_pure_pruning(self, spark):
-        rows = [
-            (i, " ".join(WORDS[j % 8] for j in range(i % 5, i % 5 + 6)))
-            for i in range(30)
-        ]
-        assert _run(spark, rows, 2, 5, positional=True) == _run(
-            spark, rows, 2, 5, positional=False
-        )
 
     def test_short_docs_dropped(self, spark):
         rows = [(1, "a b"), (2, "a b"), (3, "a b c"), (4, "a b c")]
@@ -245,9 +235,9 @@ class TestGramDfIndex:
         path = str(tmp_path / "gramdf_plan")
         df = spark.createDataFrame(self.CORPUS, ["doc_id", "text"])
         gram_df_index_build(df, path)
-        fresh = prefix_jaccard_join(df, "text", "doc_id", 1, 2, pin=False)
+        fresh = prefix_jaccard_join(df, "text", "doc_id", 1, 2)
         indexed = prefix_jaccard_join(
-            df, "text", "doc_id", 1, 2, pin=False, gram_order_path=path
+            df, "text", "doc_id", 1, 2, gram_order_path=path
         )
         fplan = fresh._jdf.queryExecution().optimizedPlan().toString()
         iplan = indexed._jdf.queryExecution().optimizedPlan().toString()
@@ -499,6 +489,37 @@ class TestComposedSimilarityStore:
         # neither artifact was touched by the refused update
         assert snap() == before
 
+    def test_store_without_dictionary_refused(self, spark, tmp_path):
+        # a hash-tail store (tokens but no gram-id dictionary) is no
+        # longer updated: refused before any write
+        import os
+        import shutil
+
+        from amonaly_detection_in_time_series_data_spark.operators.ingest import (
+            similarity_index_paths,
+            similarity_index_update,
+        )
+
+        base = str(tmp_path / "nstore")
+        self._ingest_all(spark, base, [self.CORPUS[:3]])
+        df_p, _, ids_p, tok_p = similarity_index_paths(base)
+        shutil.rmtree(ids_p)
+        before = (
+            sorted(map(tuple, spark.read.parquet(tok_p).collect())),
+            sorted(map(tuple, spark.read.parquet(df_p).collect())),
+        )
+        with pytest.raises(ValueError, match="rebuild the store"):
+            similarity_index_update(
+                spark.createDataFrame(self.CORPUS[3:], ["doc_id", "text"]),
+                base, 1,
+            )
+        after = (
+            sorted(map(tuple, spark.read.parquet(tok_p).collect())),
+            sorted(map(tuple, spark.read.parquet(df_p).collect())),
+        )
+        assert after == before
+        assert not os.path.exists(ids_p)  # no dictionary rebuilt
+
     def test_redelivery_idempotent(self, spark, tmp_path):
         from amonaly_detection_in_time_series_data_spark.operators.ingest import (
             similarity_index_paths,
@@ -699,10 +720,20 @@ class TestGramIdDictionary:
         assert again.count() == len(after)
 
     def test_id_tail_equals_hash_tail_and_brute(self, spark, tmp_path):
-        _, _, t = self._build_ids_native(spark, tmp_path, self.CORPUS)
+        from amonaly_detection_in_time_series_data_spark.operators.similarity import (
+            ordered_tokens_build,
+        )
+
+        g, _, t_ids = self._build_ids_native(spark, tmp_path, self.CORPUS)
+        # the same corpus under the same order, without ids: hash tail
+        t_hash = str(tmp_path / "s" / "th")
+        ordered_tokens_build(
+            spark.createDataFrame(self.CORPUS, ["doc_id", "text"]),
+            t_hash, g,
+        )
         for p, q in ((1, 2), (1, 3), (2, 3)):
-            got_ids = self._join(spark, t, p, q)  # auto-detects toks_id
-            got_hash = self._join(spark, t, p, q, use_ids=False)
+            got_ids = self._join(spark, t_ids, p, q)
+            got_hash = self._join(spark, t_hash, p, q)
             assert got_ids == got_hash == _brute(self.CORPUS, p, q)
 
     def test_id_tail_plan_is_string_free(self, spark, tmp_path):
@@ -946,7 +977,7 @@ class TestIndexedCap:
         df = spark.createDataFrame(rows, ["doc_id", "text"])
         key = lambda r: (r["id_a"], r["id_b"], r["inter"])
         inline = prefix_jaccard_join(
-            df, "text", "doc_id", 1, 2, pin=False,
+            df, "text", "doc_id", 1, 2,
             gram_order_path=g, max_gram_df=self.CAP,
         )
         idx_ids = prefix_jaccard_join_indexed(

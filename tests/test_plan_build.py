@@ -3,9 +3,10 @@
 - ``anomaly_pipeline`` runs on ONE hash exchange and ONE sort: the series
   exchange sits under the dedup, whose row-number window it satisfies.
 - Building ``anomaly_pipeline`` makes at most 125 py4j round trips.
-- Building ``anomaly_pipeline`` or ``load_table`` starts no job:
-  ``load_table`` takes a single parquet file's schema from its footer, and
-  that schema is exactly what Spark's inference job would have returned.
+- Building ``anomaly_pipeline``, ``load_table`` or the inline
+  ``prefix_jaccard_join`` starts no job: ``load_table`` takes a single
+  parquet file's schema from its footer, and that schema is exactly what
+  Spark's inference job would have returned.
 - A driver-side parameter check fires before any job runs.
 - The fixed-cooldown throttle's interval is evaluated inside the plan.
 - ``triangle_counts`` pins its shared edge frames lazily (``persist``).
@@ -26,6 +27,9 @@ import pytest
 from pyspark.errors import AnalysisException, ArithmeticException
 from pyspark.sql import functions as F
 
+from amonaly_detection_in_time_series_data_spark.operators.similarity import (
+    prefix_jaccard_join,
+)
 from amonaly_detection_in_time_series_data_spark.plans.pipeline import anomaly_pipeline
 from amonaly_detection_in_time_series_data_spark.sources.readers import (
     TESTDATA_TABLES,
@@ -88,6 +92,16 @@ class TestAnomalyPipelinePlan:
             del client.send_command
         built = [c for c in sent if not c.startswith("m\n")]
         assert len(built) <= 125, len(built)
+
+
+def test_prefix_jaccard_join_build_starts_no_job(spark):
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y z w")],
+        ["doc_id", "text"],
+    )
+    with jobs_started(spark) as ids:
+        _plan(prefix_jaccard_join(docs))
+    assert ids == []
 
 
 class TestLoadTableSchema:

@@ -24,9 +24,11 @@ another shape, and ``simpleString()`` (the type half of an output DDL)
 is called in ``functions.sqltext`` alone. Another pins that the detector
 battery's shared arithmetic has one source: the robust-alarm constant,
 the OLS residual standard error, the integer-unit snap and the STOMP
-sliding-dot update each appear once in the package. A last one pins that the package patches the
-standard library's ``zipimport`` in one function, installed only in
-PySpark worker processes.
+sliding-dot update each appear once in the package. One lists the
+package's eager ``localCheckpoint`` pins by enclosing function, so a new
+pin shows up as an edit of that list. A last one pins that the package
+patches the standard library's ``zipimport`` in one function, installed
+only in PySpark worker processes.
 """
 
 from __future__ import annotations
@@ -181,6 +183,36 @@ def test_battery_formulas_have_one_source():
         "unit snap": ["functions/sqltext.py"],
         "STOMP update": ["operators/matrixprofile.py"],
     }
+
+
+#: the package's eager ``localCheckpoint`` pins, by enclosing function:
+#: the graph iterations cut their lineage each round, and the
+#: incremental stores materialize a result before overwriting the files
+#: its lineage reads
+PIN_SITES = [
+    ("operators/graph.py", "connected_components"),
+    ("operators/graph.py", "connected_components"),
+    ("operators/graph.py", "pagerank"),
+    ("operators/graph.py", "pagerank"),
+    ("operators/graph.py", "pagerank"),
+    ("operators/ingest.py", "incremental_neardup_batch"),
+    ("operators/ingest.py", "similarity_index_rebuild_df"),
+    ("operators/ingest.py", "similarity_index_update"),
+    ("operators/maintenance.py", "file_stats_index_update"),
+    ("operators/similarity.py", "gram_df_index_update"),
+]
+
+
+def test_local_checkpoint_sites():
+    """Each pin runs a Spark job where it is called; none sits in a
+    function that only builds a plan."""
+    sites = []
+    for path in sorted(PKG_DIR.rglob("*.py")):
+        rel = path.relative_to(PKG_DIR).as_posix()
+        for attr, func in _attribute_calls(ast.parse(path.read_text())):
+            if attr == "localCheckpoint":
+                sites.append((rel, func))
+    assert sorted(sites) == PIN_SITES
 
 
 #: names of the standard-library import machinery the package patches

@@ -156,7 +156,7 @@ class TestHighDfPrefixGrams:
         docs = spark.createDataFrame(flood + pair, ["doc_id", "text"])
         pairs, excluded = prefix_jaccard_join(
             docs, "text", "doc_id", threshold_num=1, threshold_den=2,
-            pin=False, max_gram_df=CAP, return_excluded=True,
+            max_gram_df=CAP, return_excluded=True,
         )
         ex = excluded.collect()
         assert len(ex) == 1 and ex[0]["df"] == FLOOD
@@ -176,9 +176,9 @@ class TestHighDfPrefixGrams:
             ["doc_id", "text"],
         )
         capped = prefix_jaccard_join(
-            docs, "text", "doc_id", 1, 2, pin=False, max_gram_df=1000
+            docs, "text", "doc_id", 1, 2, max_gram_df=1000
         )
-        plain = prefix_jaccard_join(docs, "text", "doc_id", 1, 2, pin=False)
+        plain = prefix_jaccard_join(docs, "text", "doc_id", 1, 2)
         key = lambda r: (r["id_a"], r["id_b"], r["inter"])
         assert sorted(map(key, capped.collect())) == sorted(
             map(key, plain.collect())
